@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark harness. Prints ONE compact JSON line for the driver and
   * writes the complete per-query map to `bench_full.json`.
@@ -22,7 +23,7 @@ object Bench {
     val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     // Warm the session (FS listing, parquet footers, codegen infra)
     // so the first measured query isn't charged for JVM startup.
-    Tables.names.foreach(n => try Tables(spark, sfDir, n).count() catch { case _: Throwable => () })
+    Tables.names.foreach(n => try Tables(spark, sfDir, n).count() catch { case NonFatal(_) => () })
     // Materialize through the noop sink — unlike count(), it cannot
     // elide top-level sorts/projections. Staged queries (Q.staged)
     // re-run their table-staging setup before EACH iteration OUTSIDE
@@ -106,7 +107,9 @@ object Bench {
     }
     val line = head + sb.toString +
       s"""},"omitted":${results.size - failed.size - taken},"sf":"$sfDir"}"""
-    spark.stop()
+    // a failing stop must not swallow the JSON line printed below
+    try spark.stop()
+    catch { case NonFatal(e) => System.err.println(s"[bench] spark.stop failed: $e") }
     println(line)
   }
 }

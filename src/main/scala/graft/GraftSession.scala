@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Tuned SparkSession factory — the engine's entry point. Mirrors the
   * role of the reference's Kyuubi engine config (reference:
@@ -54,7 +55,7 @@ object GraftSession {
   def registerViews(spark: SparkSession, dir: String): Unit =
     Tables.names.foreach { n =>
       try Tables(spark, dir, n).createOrReplaceTempView(n)
-      catch { case _: Throwable => () } // table absent in this dir
+      catch { case NonFatal(_) => () } // table absent in this dir
     }
 
   /** The SQL-gateway surface (what a Kyuubi user has): register every

@@ -43,9 +43,6 @@ object Tables {
     * which can flip the last ULP of a summed DOUBLE.
     */
   def fan(df: DataFrame): DataFrame = {
-    // Kill switch (default on): lets a deployment pin the raw scan
-    // layout, and lets the A/B bench time both variants in one JVM.
-    if (df.sparkSession.conf.get("spark.graft.fan.enabled", "true") != "true") return df
     // SCAN-SHAPED INPUTS ONLY: under AQE, .rdd on a plan containing an
     // Exchange materializes every upstream query stage just to count
     // partitions, and the repartition then re-executes them. AQE wraps
@@ -61,6 +58,16 @@ object Tables {
     val cur = try df.rdd.getNumPartitions
       catch { case scala.util.control.NonFatal(_) => target }
     if (cur >= target) df else df.repartition(target)
+  }
+
+  /** Bytes under `path`: a file's length or a directory's total, 0
+    * when the path is absent. The observed input size the adaptive
+    * rules (shingle checkpoint, stream state partitions) decide on.
+    */
+  def pathBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -43,7 +43,6 @@ object DedupGuard {
   val ModeKey = "spark.graft.dedup.guardrail"
   val FactorKey = "spark.graft.dedup.budgetFactor"
   val DfCapKey = "spark.graft.dedup.dfCap"
-  val EstimateCacheKey = "spark.graft.dedup.estimateCache"
 
   /** What the pre-flight measured and decided, per verb — the audit
     * record a pipeline operator reads after a route/fail.
@@ -65,25 +64,8 @@ object DedupGuard {
 
   def mode(s: SparkSession): String = s.conf.get(ModeKey, "route")
 
-  /** Run `f` with the guardrail pinned off. For ORACLE DEVICES — exact
-    * pair sets a companion row compares against an uncapped DuckDB
-    * mirror — which must stay the uncapped exact plan even on a
-    * profile the guardrail would route. (Production dedup rows keep
-    * the guardrail: on a routed corpus the capped universe IS their
-    * documented answer.)
-    */
-  def withGuardrailOff[A](s: SparkSession)(f: => A): A = {
-    val before = s.conf.getOption(ModeKey)
-    s.conf.set(ModeKey, "off")
-    try f finally before match {
-      case Some(v) => s.conf.set(ModeKey, v)
-      case None => s.conf.unset(ModeKey)
-    }
-  }
   def budgetFactor(s: SparkSession): Long = s.conf.get(FactorKey, "16").toLong
   def dfCap(s: SparkSession): Int = s.conf.get(DfCapKey, "50").toInt
-  def estimateCacheOn(s: SparkSession): Boolean =
-    s.conf.get(EstimateCacheKey, "true").toBoolean
 
   // ---- pre-flight estimate cache ------------------------------------
   //
@@ -125,9 +107,7 @@ object DedupGuard {
     * clear past 512 keys (corpus fingerprints are few and the
     * aggregates are re-computable — simplicity over an LRU).
     */
-  def cachedEstimate(s: SparkSession, key: String)(
-      compute: => (Long, Long)): (Long, Long) = {
-    if (!estimateCacheOn(s)) return compute
+  def cachedEstimate(key: String)(compute: => (Long, Long)): (Long, Long) = {
     if (estimates.size > 512) estimates.clear()
     estimates.computeIfAbsent(key, _ => compute)
   }

@@ -95,27 +95,14 @@ object DedupOps {
     * (0.6 MB of documents) recompute ahead by ~0.5 s over the 4 pair
     * rows; at sf1 (6.7 MB) materialization ahead by +15.7 s
     * (q_dedup_ngram +6.8, q_dedup_pipeline_bounds +6.0,
-    * q_dedup_clusters +3.1). `spark.graft.dedup.shingleCheckpoint`
-    * = true | false | auto (default), where auto switches on above
-    * `spark.graft.dedup.shingleCheckpointMinBytes` of documents
-    * source — 2 MB, the geometric midpoint of the measured inversion.
+    * q_dedup_clusters +3.1). So the checkpoint switches on at
+    * [[ShingleCheckpointMinBytes]] of documents source — 2 MB, the
+    * geometric midpoint of the measured inversion.
     * The checkpointed rows are (doc_id, 8B hash) — MEMORY_AND_DISK,
     * spilling to executor disk, never the driver.
     */
   private def sharedShingles(s: SparkSession, d: String): Option[DataFrame] = {
-    val share = s.conf.get("spark.graft.dedup.shingleCheckpoint", "auto") match {
-      case "true" => true
-      case "false" => false
-      case _ =>
-        val min = s.conf.get(
-          "spark.graft.dedup.shingleCheckpointMinBytes", (2L << 20).toString).toLong
-        (try {
-          val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.getFileStatus(p).isDirectory) fs.getContentSummary(p).getLength
-          else fs.getFileStatus(p).getLen
-        } catch { case scala.util.control.NonFatal(_) => 0L }) >= min
-    }
+    val share = Tables.pathBytes(s, s"$d/documents.parquet") >= ShingleCheckpointMinBytes
     // fan=true: the single materialization pass is exactly the heavy
     // single-pass map the fan exists for; branches then read the
     // checkpointed RDD, so the round-12 "fan multiplies with prefix
@@ -123,8 +110,17 @@ object DedupOps {
     if (share) Some(shingleTable(s, d).localCheckpoint(true)) else None
   }
 
-  def ngramPairs(s: SparkSession, d: String, threshold: Double): DataFrame = {
-    if (DedupGuard.mode(s) == "off")
+  private val ShingleCheckpointMinBytes = 2L << 20
+
+  /** `guardrail = false` skips the pre-flight for this call only — for
+    * ORACLE DEVICES, exact pair sets a companion row compares against
+    * an uncapped DuckDB mirror, which must stay the uncapped exact plan
+    * even on a profile the guardrail would route. A parameter, not a
+    * session setting, so a concurrent call keeps its own guardrail.
+    */
+  def ngramPairs(s: SparkSession, d: String, threshold: Double,
+      guardrail: Boolean = true): DataFrame = {
+    if (!guardrail || DedupGuard.mode(s) == "off")
       // No estimates to dispatch on: classic threshold regime — the
       // prefix filter only has leverage where (1−t) is small. Measured
       // at sf1 (clean JVMs): t=0.5 direct 22.1 s vs prefix 86.3 s;
@@ -152,13 +148,13 @@ object DedupOps {
     // once, not once per verb (the cluster row was absorbing a full
     // repeat of the shingle scan + aggregate).
     val fp = DedupGuard.fingerprint(s, s"$d/documents.parquet")
-    val (coarse, rows) = DedupGuard.cachedEstimate(s, s"$fp|coarse") {
+    val (coarse, rows) = DedupGuard.cachedEstimate(s"$fp|coarse") {
       DedupGuard.pairEstimate(sh.groupBy("h").agg(count(lit(1)).as("df")))
     }
     val dec = DedupGuard.admitUncapped(s, "ngramPairs", coarse, rows,
       refined =
         if (threshold < 0.5) None // prefixes can't cover below 0.5 usefully
-        else Some(DedupGuard.cachedEstimate(s, s"$fp|prefix|$threshold") {
+        else Some(DedupGuard.cachedEstimate(s"$fp|prefix|$threshold") {
           (DedupGuard.pairEstimate(
             prefixRows(sh, threshold).groupBy("h").agg(count(lit(1)).as("df")))._1, 0L)
         }._1))
@@ -516,7 +512,7 @@ object DedupOps {
           // DedupGuard.pairEstimate; memoized per corpus fingerprint
           // (the routed path still re-evaluates `parts` for the
           // hot-shingle drop — only the admit scalar is cached).
-          val (est, rows) = DedupGuard.cachedEstimate(s,
+          val (est, rows) = DedupGuard.cachedEstimate(
             DedupGuard.fingerprint(s, s"$d/documents.parquet") + "|contam") {
             val r = parts.agg(
               sum(col("dfe").cast("decimal(38,0)") * col("dft").cast("decimal(38,0)")),

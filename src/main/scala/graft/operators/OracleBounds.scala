@@ -387,8 +387,8 @@ object OracleBounds {
     Q("q_dedup_simhash_recall",
       (s, d) => {
         // oracle device: must match the uncapped DuckDB mirror exactly
-        val exact = DedupGuard.withGuardrailOff(s) {
-          DedupOps.ngramPairs(s, d, 0.9) }.select("doc_a", "doc_b")
+        val exact = DedupOps.ngramPairs(s, d, 0.9, guardrail = false)
+          .select("doc_a", "doc_b")
         val sim = graft.Registry.byName("q_dedup_simhash").run(s, d)
           .select(col("doc_a"), col("doc_b"), lit(1L).as("found"))
         exact.join(sim, Seq("doc_a", "doc_b"), "left")
@@ -480,10 +480,8 @@ object OracleBounds {
         // ORACLE DEVICE mirrored exactly in DuckDB — it must stay the
         // uncapped exact plan even when the candidate-budget guardrail
         // (DedupGuard) would route a production call on this profile.
-        val losers = DedupGuard.withGuardrailOff(s) {
-          DedupOps.ngramPairs(s, d, 0.5)
-            .select("doc_b").distinct().agg(count(lit(1)).as("max_losers"))
-        }
+        val losers = DedupOps.ngramPairs(s, d, 0.5, guardrail = false)
+          .select("doc_b").distinct().agg(count(lit(1)).as("max_losers"))
         res.crossJoin(ceiling).crossJoin(losers)
           .select(col("ceiling"), col("max_losers"),
             (col("survivors") <= col("ceiling")

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -126,13 +127,11 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     * (the Delta optimized-write shape), so files-per-write ∝ P.
     * Gated off when the incoming columns don't carry the partition
     * names (positional VALUES inserts — the distribution expression
-    * could not resolve) and by spark.graft.write.clusterByPartitions.
+    * could not resolve).
     */
   private val clusterCols: Seq[String] = {
     val spark = org.apache.spark.sql.graftglue.Glue.activeSession
-    val enabled = spark.conf
-      .getOption("spark.graft.write.clusterByPartitions").forall(_.toBoolean)
-    if (!enabled || LakeTable.currentVersion(spark, path).isEmpty) Nil
+    if (LakeTable.currentVersion(spark, path).isEmpty) Nil
     else {
       val parts = LakeTable.tablePartitioning(spark, path)
       val names = info.schema().fieldNames
@@ -424,11 +423,11 @@ final class GraftDataWriter(tablePath: String, stagedDir: String,
   }
 
   override def abort(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Throwable => () })
+    writers.values.foreach(w => try w.close() catch { case NonFatal(_) => () })
     val fs = new Path(tablePath).getFileSystem(conf)
     filesWritten.foreach { rel =>
       try fs.delete(new Path(new Path(tablePath, stagedDir), rel), false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
   }
 

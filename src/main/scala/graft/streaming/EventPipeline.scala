@@ -24,108 +24,85 @@ object EventPipeline {
 
   final case class UserAgg(user_id: Long, cnt: Long, sum_val: Double)
 
-  /** Streaming view of the events table. File stream sources need an
-    * explicit schema; events.ts is parquet TIMESTAMP(NANOS), read as
-    * long (SPARK-40819) and rescaled, mirroring graft.Tables.
+  /** Resolve the stream-source path IN PLACE and measure its bytes.
+    * The source may be a single parquet FILE (the generated test
+    * tables) or a Spark-written DIRECTORY of part files (the sf1
+    * scale corpus, any production landing dir). A directory streams
+    * as-is (part files sit directly inside — file stream sources do
+    * not recurse, but need not); a single file streams through a
+    * `{name}` glob so the source's basePath (the parent) is the
+    * directory the file-stream source requires. Every glob
+    * metacharacter in the path is escaped, so a directory or file
+    * name containing `[` or `{` still names only itself. Earlier
+    * rounds COPIED the source into a scratch landing dir first — a
+    * driver-side, single-threaded byte copy charged to every stream
+    * row, and a non-starter at 100 TB where the landing dir must be
+    * read in place. The byte count sizes state partitions
+    * ([[withStreamPartitions]]).
     */
-  /** Resolve the stream-source path IN PLACE. The source may be a
-    * single parquet FILE (driver-generated testdata) or a Spark-written
-    * DIRECTORY of part files (the sf1 scale corpus, any production
-    * landing dir). A directory streams as-is (part files sit directly
-    * inside — file stream sources do not recurse, but need not); a
-    * single file streams through a `{name}` glob so the source's
-    * basePath (the parent) is the directory the file-stream source
-    * requires. Earlier rounds COPIED the source into a scratch landing
-    * dir first — a driver-side, single-threaded byte copy charged to
-    * every stream row, and a non-starter at 100 TB where the landing
-    * dir must be read in place. Also records the source's size in
-    * `spark.graft.stream.inputBytes` so [[withStreamPartitions]] can
-    * size state partitions to the stream's actual volume.
-    */
-  private def streamSource(spark: SparkSession, src: org.apache.hadoop.fs.Path): String = {
+  private def streamSource(spark: SparkSession, src: org.apache.hadoop.fs.Path): (String, Long) = {
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(src)
-    val (path, bytes) =
-      if (st.isDirectory) (src.toString, fs.getContentSummary(src).getLength)
-      else (s"${src.getParent}/{${src.getName}}", st.getLen)
-    spark.conf.set("spark.graft.stream.inputBytes", bytes.toString)
-    path
+    val path =
+      if (fs.getFileStatus(src).isDirectory) globEscape(src.toString)
+      else s"${globEscape(src.getParent.toString)}/{${globEscape(src.getName)}}"
+    (path, graft.Tables.pathBytes(spark, src.toString))
   }
 
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+  private def globEscape(p: String): String = p.replaceAll("""([\\*?\[\]{},])""", """\\$1""")
+
+  /** Streaming view of the events table plus its source bytes. File
+    * stream sources need an explicit schema; events.ts is parquet
+    * TIMESTAMP(NANOS), read as long (SPARK-40819) and rescaled,
+    * mirroring graft.Tables.
+    */
+  def eventsStream(spark: SparkSession, dir: String): (DataFrame, Long) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val ingest = streamSource(spark, src)
-    val raw: StructType = spark.read.parquet(src.toString).schema
+    val (ingest, bytes) = streamSource(spark, new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+    val raw: StructType = spark.read.parquet(ingest).schema
     // Event-time ops (withWatermark, window, session_window) require
     // TIMESTAMP (LTZ); the generated parquet may carry ts as NANOS-long
     // or TIMESTAMP_NTZ depending on writer version. Session tz is UTC,
     // so the NTZ->LTZ cast is wall-clock lossless; windowed outputs
     // cast back to NTZ to match the oracle's naive timestamps.
-    spark.readStream.schema(raw).parquet(ingest)
+    val ev = spark.readStream.schema(raw).parquet(ingest)
       .withColumn("ts", raw("ts").dataType match {
         case LongType => expr("timestamp_micros(ts div 1000)")
         case org.apache.spark.sql.types.TimestampNTZType => col("ts").cast("timestamp")
         case _ => col("ts")
       })
+    (ev, bytes)
   }
 
-  /** Stateful streaming operators pay per-state-store-instance
-    * overhead (a store per shuffle partition per stateful operator —
-    * a stream-stream join keeps four). Size state partitions to the
-    * stream's OBSERVED VOLUME instead of pinning the round-12 fixed 8:
-    * one partition per ~32 MB of pending input, FLOORED at 8 (the
-    * measured local optimum — an interleaved A/B at sf0.1 showed a
-    * volume-only rule collapsing to 1 partition loses 2.9 s across the
-    * block: per-batch COMPUTE parallelism matters before state volume
-    * does), capped at the configured batch setting (the deployment's
+  /** State partitions for a stream with `bytes` pending: one per
+    * ~32 MB, FLOORED at 8 (the measured local optimum — an
+    * interleaved A/B at sf0.1 showed a volume-only rule collapsing to
+    * 1 partition loses 2.9 s across the block: per-batch COMPUTE
+    * parallelism matters before state volume does), capped at `cap`,
+    * the deployment's batch shuffle-partition setting (its
     * parallelism ceiling — a 100 TB landing dir saturates the cap).
-    * Checkpoints here are fresh per run, so the partition count may
-    * differ from batch safely. `GRAFT_STREAM_PARTITIONS` still pins an
-    * explicit count; `spark.graft.stream.adaptivePartitions=false`
-    * falls back to the fixed 8 (the A/B lever — at gate volumes the
-    * two coincide by construction).
     */
-  private def withStreamPartitions[T](spark: SparkSession,
-      inputBytes: Option[Long] = None)(f: => T): T = {
+  private[graft] def statePartitions(bytes: Long, cap: Int): Int =
+    math.min(cap.toLong, math.max(8L, bytes / (32L << 20) + 1)).toInt
+
+  /** Run `f` with `spark.sql.shuffle.partitions` at
+    * [[statePartitions]] for `inputBytes` of pending input. Stateful
+    * streaming operators pay per-state-store-instance overhead (a
+    * store per shuffle partition per stateful operator — a
+    * stream-stream join keeps four), so the count follows the stream's
+    * OBSERVED VOLUME. Checkpoints here are fresh per run, so the
+    * partition count may differ from batch safely.
+    */
+  private def withStreamPartitions[T](spark: SparkSession, inputBytes: Long)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
-    val target = sys.env.get("GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse {
-      val bytes = inputBytes.getOrElse(
-        spark.conf.get("spark.graft.stream.inputBytes", "-1").toLong)
-      val adaptive =
-        spark.conf.get("spark.graft.stream.adaptivePartitions", "true") == "true"
-      if (adaptive && bytes >= 0)
-        math.min(old.toLong, math.max(8L, bytes / (32L << 20) + 1)).toInt
-      else 8
-    }
-    spark.conf.set(key, math.min(old.toInt, target).toString)
-    try f finally {
-      spark.conf.set(key, old)
-      // one-shot: a verb that forgets to record its volume falls back
-      // to the fixed default instead of inheriting a neighbor's
-      spark.conf.unset("spark.graft.stream.inputBytes")
-    }
+    spark.conf.set(key, statePartitions(inputBytes, old.toInt).toString)
+    try f finally spark.conf.set(key, old)
   }
 
-  /** Size in bytes of a source file/dir (0 when absent). */
-  private def sourceBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-  }
-
-  /** Record a lake/table dir's size as the pending stream volume for
-    * [[withStreamPartitions]] (the file-stream sources record theirs
-    * in [[streamSource]]).
-    */
-  private def noteStreamVolume(spark: SparkSession, path: String): Unit =
-    spark.conf.set("spark.graft.stream.inputBytes",
-      sourceBytes(spark, path).toString)
-
-  /** Run `streamed` to completion into a memory sink, return the sink
-    * table. AvailableNow processes every pending file then stops —
-    * the bounded-input harness for an unbounded pipeline.
+  /** Run `streamed` (with `inputBytes` pending at its source) to
+    * completion into a memory sink, return the sink table.
+    * AvailableNow processes every pending file then stops — the
+    * bounded-input harness for an unbounded pipeline.
     *
     * The closing NO-DATA micro-batch is skipped ONLY where measured
     * to win AND provably output-neutral: the interleaved sf0.1 A/B
@@ -136,22 +113,19 @@ object EventPipeline {
     * emitting nothing (inner joins emit on match arrival; eviction
     * only discards state). Outer joins MUST keep the batch — their
     * unmatched rows emit on eviction. `skipNoDataBatch = true` is the
-    * per-query opt-in; `spark.graft.stream.skipNoDataBatch` (default
-    * true) is the kill switch / A/B lever for the opted-in rows.
+    * per-query opt-in.
     */
-  private def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
-      mode: OutputMode, skipNoDataBatch: Boolean = false): DataFrame =
-    withStreamPartitions(spark) {
+  private def runToMemory(spark: SparkSession, streamed: DataFrame, inputBytes: Long,
+      name: String, mode: OutputMode, skipNoDataBatch: Boolean = false): DataFrame =
+    withStreamPartitions(spark, inputBytes) {
       val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
       val ndOld = spark.conf.getOption(ndKey)
-      val skip = skipNoDataBatch &&
-        spark.conf.get("spark.graft.stream.skipNoDataBatch", "true") == "true"
-      if (skip) spark.conf.set(ndKey, "false")
+      if (skipNoDataBatch) spark.conf.set(ndKey, "false")
       try {
         val q = streamed.writeStream.format("memory").queryName(name)
           .outputMode(mode).trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally if (skip) ndOld match {
+      } finally if (skipNoDataBatch) ndOld match {
         case Some(v) => spark.conf.set(ndKey, v)
         case None => spark.conf.unset(ndKey)
       }
@@ -163,11 +137,12 @@ object EventPipeline {
     * append + the same watermark to bound state and finalize windows.
     */
   def tumbling(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    val agg = ev
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_val"))
-    runToMemory(spark, agg, "graft_stream_tumbling", OutputMode.Complete())
+    runToMemory(spark, agg, bytes, "graft_stream_tumbling", OutputMode.Complete())
       .select(col("window.start").cast("timestamp_ntz").as("wstart"),
         col("event_type"), col("cnt"), col("sum_val"))
       .orderBy("wstart", "event_type")
@@ -178,10 +153,11 @@ object EventPipeline {
     * key-width (watermark would bound it in unbounded runs).
     */
   def dedup(spark: SparkSession, dir: String): DataFrame = {
-    val dd = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    val dd = ev
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")
-    runToMemory(spark, dd, "graft_stream_dedup", OutputMode.Append())
+    runToMemory(spark, dd, bytes, "graft_stream_dedup", OutputMode.Append())
       .orderBy("user_id", "event_type")
   }
 
@@ -194,19 +170,21 @@ object EventPipeline {
     * is gateable against exact batch DISTINCT — a genuine cross-engine
     * check that the checkpoint holds exactly the right state.
     */
-  def stateReader(spark: SparkSession, dir: String): DataFrame = withStreamPartitions(
-      spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
+  def stateReader(spark: SparkSession, dir: String): DataFrame = {
     val ckpt = s"${graft.operators.Lakehouse.scratch}/stream_state_reader_ckpt"
     val p = new org.apache.hadoop.fs.Path(ckpt)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    val dd = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    val dd = ev
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")
-    val q = dd.writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    withStreamPartitions(spark, bytes) {
+      val q = dd.writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
     spark.read.format("statestore").load(ckpt)
       .select(col("key.user_id").as("user_id"),
         col("key.event_type").as("event_type"))
@@ -224,11 +202,12 @@ object EventPipeline {
     * of bounded state.
     */
   def dedupWithinWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val dd = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    val dd = ev
       .withWatermark("ts", "800 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type")
-    runToMemory(spark, dd, "graft_stream_dedup_wm", OutputMode.Append())
+    runToMemory(spark, dd, bytes, "graft_stream_dedup_wm", OutputMode.Append())
       .orderBy("user_id", "event_type")
   }
 
@@ -238,7 +217,8 @@ object EventPipeline {
     */
   def userState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val updates = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    val updates = ev
       .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
@@ -248,7 +228,7 @@ object EventPipeline {
           state.update(next)
           Iterator.single(next)
         })
-    val sink = runToMemory(spark, updates.toDF(), "graft_stream_state", OutputMode.Update())
+    val sink = runToMemory(spark, updates.toDF(), bytes, "graft_stream_state", OutputMode.Update())
     // Multiple micro-batches emit one update each; the final state per
     // user is the row with the highest running count.
     val w = org.apache.spark.sql.expressions.Window
@@ -299,12 +279,13 @@ object EventPipeline {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val updates = eventsStream(spark, dir)
+      val (ev, bytes) = eventsStream(spark, dir)
+      val updates = ev
         .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
         .groupByKey(_.user_id)
         .transformWithState(new UserStatsProcessor,
           TimeMode.None(), OutputMode.Update(), implicitly[org.apache.spark.sql.Encoder[UserTypes]])
-      val sink = runToMemory(spark, updates.toDF(), "graft_stream_tws", OutputMode.Update())
+      val sink = runToMemory(spark, updates.toDF(), bytes, "graft_stream_tws", OutputMode.Update())
       // one update per user per micro-batch: the final state has max cnt
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(desc("cnt"))
@@ -329,8 +310,9 @@ object EventPipeline {
     val fs = new org.apache.hadoop.fs.Path(lake)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(lake), true)
-    withStreamPartitions(spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
-    val q = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    withStreamPartitions(spark, bytes) {
+    val q = ev
       .select("user_id", "ts", "value")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -372,7 +354,7 @@ object EventPipeline {
     */
   def streamStreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
     val cutoff = java.sql.Timestamp.valueOf("2024-01-30 00:00:00")
-    val ev = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
@@ -387,7 +369,7 @@ object EventPipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"),
       "full_outer")
-    runToMemory(spark, joined, "graft_stream_join_full", OutputMode.Append())
+    runToMemory(spark, joined, bytes, "graft_stream_join_full", OutputMode.Append())
       .groupBy(coalesce(col("p_user"), col("c_user")).as("user_id"))
       .agg(sum(when(col("p_id").isNotNull && col("c_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
         sum(when(col("c_id").isNull, 1L).otherwise(0L)).as("n_p_alone"),
@@ -412,8 +394,8 @@ object EventPipeline {
     // incoming docs stream from the source in place (the eventsStream device)
     val conf = spark.sparkContext.hadoopConfiguration
     val src = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val ingest = streamSource(spark, src)
-    val raw: StructType = spark.read.parquet(src.toString).schema
+    val (ingest, bytes) = streamSource(spark, src)
+    val raw: StructType = spark.read.parquet(ingest).schema
     val idx = graft.sources.LakeTable.read(spark, s"${Curation.indexPath}/shingles")
       .select(col("doc_id").as("corpus_id"), col("h"))
     // STATELESS micro-batches: a file-stream doc lands in exactly one
@@ -431,7 +413,7 @@ object EventPipeline {
     val outDir = s"${graft.operators.Lakehouse.scratch}/stream_dedup_index_out"
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     outPath.getFileSystem(conf).delete(outPath, true)
-    withStreamPartitions(spark) {
+    withStreamPartitions(spark, bytes) {
       val q = spark.readStream.schema(raw).parquet(ingest)
         .where(col("doc_id") % 10 === 0)
         .writeStream
@@ -475,7 +457,7 @@ object EventPipeline {
   }
 
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"), col("value").as("p_val"))
@@ -487,7 +469,7 @@ object EventPipeline {
       col("p_user") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"))
-    runToMemory(spark, joined, "graft_stream_join", OutputMode.Append(),
+    runToMemory(spark, joined, bytes, "graft_stream_join", OutputMode.Append(),
       skipNoDataBatch = true)
       .groupBy(col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("p_id")).as("n_purchases"))
@@ -506,7 +488,7 @@ object EventPipeline {
     * simply trail the watermark delay.
     */
   def streamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
@@ -525,7 +507,7 @@ object EventPipeline {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("c_ts") <= col("p_ts"),
       "left_outer")
-    runToMemory(spark, joined, "graft_stream_join_left", OutputMode.Append())
+    runToMemory(spark, joined, bytes, "graft_stream_join_left", OutputMode.Append())
       .groupBy(col("p_user").as("user_id"))
       .agg(count(col("c_id")).as("n_pairs"),
         sum(when(col("c_id").isNull, 1L).otherwise(0L)).as("n_unmatched"))
@@ -542,11 +524,12 @@ object EventPipeline {
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
     val dim = graft.Tables(spark, dir, "customer")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    val enriched = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    val enriched = ev
       .join(broadcast(dim), Seq("user_id"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_val"))
-    runToMemory(spark, enriched, "graft_stream_enrich", OutputMode.Complete())
+    runToMemory(spark, enriched, bytes, "graft_stream_enrich", OutputMode.Complete())
       .orderBy("c_mktsegment")
   }
 
@@ -578,14 +561,15 @@ object EventPipeline {
         struct(lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00")).as("vf"),
           concat(lit("S"), pmod(col("user_id") + 1, lit(5))).as("seg")))).as("v"))
       .select(col("k"), col("v.vf").as("vf"), col("v.seg").as("seg"))
-    val ev = eventsStream(spark, dir)
+    val (events, bytes) = eventsStream(spark, dir)
+    val ev = events
       .select(col("event_id"), col("ts"), col("user_id"))
       .withWatermark("ts", "1 hour")
     val asOf = ev.join(broadcast(dimv),
         ev("user_id") === dimv("k") && col("vf") <= col("ts"))
       .groupBy(col("event_id"), col("ts"))
       .agg(max_by(col("seg"), col("vf")).as("seg"))
-    runToMemory(spark, asOf, "graft_stream_temporal", OutputMode.Complete())
+    runToMemory(spark, asOf, bytes, "graft_stream_temporal", OutputMode.Complete())
       .select("event_id", "seg")
       .orderBy("event_id")
   }
@@ -616,11 +600,11 @@ object EventPipeline {
 
   def lakeStream(spark: SparkSession, dir: String): DataFrame = {
     val lake = s"${graft.operators.Lakehouse.scratch}/stream_lake_orders"
-    noteStreamVolume(spark, lake)
     val agg = graft.sources.LakeTable.streamAppends(spark, lake)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice") + lit(1e-6), 2).as("rev"))
-    runToMemory(spark, agg, "graft_stream_lake", OutputMode.Complete())
+    runToMemory(spark, agg, graft.Tables.pathBytes(spark, lake), "graft_stream_lake",
+      OutputMode.Complete())
       .orderBy("o_orderpriority")
   }
 
@@ -640,17 +624,19 @@ object EventPipeline {
     graft.sources.LakeTable.create(spark, lake,
       graft.Tables(spark, dir, "events")
         .select("event_id", "user_id", "value").limit(0))
-    def runOnce(): Unit = withStreamPartitions(
-        spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
-      val q = eventsStream(spark, dir)
-        .select("event_id", "user_id", "value")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.sources.LakeTable.appendOnce(spark, lake, batch, "ao-sink", id)
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    def runOnce(): Unit = {
+      val (ev, bytes) = eventsStream(spark, dir)
+      withStreamPartitions(spark, bytes) {
+        val q = ev
+          .select("event_id", "user_id", "value")
+          .writeStream
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            graft.sources.LakeTable.appendOnce(spark, lake, batch, "ao-sink", id)
+            ()
+          }
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
     }
     runOnce()
     runOnce() // full replay: same batch ids, all no-ops
@@ -677,8 +663,9 @@ object EventPipeline {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(conf).delete(hp, true)
     }
-    withStreamPartitions(spark, Some(sourceBytes(spark, s"$dir/events.parquet"))) {
-      val q = eventsStream(spark, dir)
+    val (ev, bytes) = eventsStream(spark, dir)
+    withStreamPartitions(spark, bytes) {
+      val q = ev
         .select("event_id", "user_id", "value")
         .writeStream.format("graft")
         .option("path", lake).option("checkpointLocation", ckpt)
@@ -713,11 +700,11 @@ object EventPipeline {
 
   def lakeStreamV2(spark: SparkSession, dir: String): DataFrame = {
     val lake = s"${graft.operators.Lakehouse.scratch}/stream_lake_v2_orders"
-    noteStreamVolume(spark, lake)
     val agg = spark.readStream.format("graft").load(lake)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice") + lit(1e-6), 2).as("rev"))
-    runToMemory(spark, agg, "graft_stream_lake_v2", OutputMode.Complete())
+    runToMemory(spark, agg, graft.Tables.pathBytes(spark, lake), "graft_stream_lake_v2",
+      OutputMode.Complete())
       .orderBy("o_orderpriority")
   }
 
@@ -752,14 +739,14 @@ object EventPipeline {
 
   def cdcStream(spark: SparkSession, dir: String): DataFrame = {
     val lake = s"${graft.operators.Lakehouse.scratch}/stream_cdc_orders"
-    noteStreamVolume(spark, lake)
     val sign = when(col("change_type").isin("insert", "update_postimage"), 1).otherwise(-1)
     val agg = spark.readStream.format("graft")
       .option("readChangeFeed", "true").load(lake)
       .groupBy("o_orderpriority")
       .agg(sum(sign).cast("long").as("cnt"),
         round(sum(sign * col("o_totalprice")) + lit(1e-6), 2).as("rev"))
-    runToMemory(spark, agg, "graft_stream_cdc", OutputMode.Complete())
+    runToMemory(spark, agg, graft.Tables.pathBytes(spark, lake), "graft_stream_cdc",
+      OutputMode.Complete())
       .where(col("cnt") > 0) // fully-deleted groups net to zero and drop out
       .orderBy("o_orderpriority")
   }
@@ -851,11 +838,12 @@ object EventPipeline {
              |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     Q("stream_session", (s, d) => {
-      val agg = eventsStream(s, d)
+      val (ev, bytes) = eventsStream(s, d)
+      val agg = ev
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_val"))
-      runToMemory(s, agg, "graft_stream_session", OutputMode.Complete())
+      runToMemory(s, agg, bytes, "graft_stream_session", OutputMode.Complete())
         .select(col("user_id"),
           col("session_window.start").cast("timestamp_ntz").as("session_start"),
           col("n_events"), col("sum_val"))

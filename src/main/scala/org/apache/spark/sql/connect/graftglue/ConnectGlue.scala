@@ -2,6 +2,7 @@ package org.apache.spark.sql.connect.graftglue
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connect.service.{SessionKey, SparkConnectService}
+import scala.util.control.NonFatal
 
 /** Package-placement shim (the graftglue pattern): the Connect
   * service's session registry is `private[connect]`, and the
@@ -22,5 +23,5 @@ object ConnectGlue {
           .find(_.session eq spark)
           .map(_.userId)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.hive.thriftserver.graftglue
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hive.service.cli.{CLIService, HiveSQLException, OperationHandle}
 import org.apache.hive.service.cli.operation.ExecuteStatementOperation
@@ -136,6 +137,6 @@ object ThriftGlue {
         gom.sessionToContexts.asScala
           .collectFirst { case (handle, s) if s eq spark => handle }
           .flatMap(h => Option(sm.getSession(h)).map(_.getUsername))
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     }
 }

@@ -110,6 +110,47 @@ class DedupGuardSpec extends AnyFunSuite {
     } finally spark.conf.unset(DedupGuard.ModeKey)
   }
 
+  /** 250 copies of one 50-word body, each with a unique trailing
+    * token: every pair is a true near-dup (J = 48/50), and both
+    * estimates trip (coarse 48·C(250,2), refined 9·C(250,2), against
+    * a budget of 16 × 12 250 rows) — yet small enough to run uncapped.
+    */
+  private lazy val smallCliqueDir: String = {
+    val body = (0 until 50).map(k => s"cw$k").mkString(" ")
+    writeDocs("clique_small", (0L until 250L).map(id => (id, s"$body uniq$id")))
+  }
+
+  test("guardrail = false is per call: a concurrent guarded call still fails") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    spark.conf.set(DedupGuard.ModeKey, "fail")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val uncapped = Future {
+        start.await()
+        (1 to 3).map(_ => DedupOps.ngramPairs(spark, smallCliqueDir, 0.8, guardrail = false)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+      }
+      val guarded = Future {
+        start.await()
+        (1 to 20).map { _ =>
+          try { DedupOps.ngramPairs(spark, smallCliqueDir, 0.8); false }
+          catch { case _: DedupGuard.CandidateBudgetExceeded => true }
+        }
+      }
+      start.countDown()
+      val want = (for (a <- 0L until 250L; b <- a + 1 until 250L) yield (a, b, 0.96)).toSet
+      Await.result(uncapped, 10.minutes).foreach(got => assert(got == want))
+      assert(Await.result(guarded, 10.minutes).forall(identity),
+        "a guarded call ran uncapped while another call had its guardrail off")
+    } finally {
+      pool.shutdownNow()
+      spark.conf.unset(DedupGuard.ModeKey)
+    }
+  }
+
   test("contamination: pre-flights its containment candidate stream") {
     // sane corpus: no trip
     Registry.byName("q_contamination").run(spark, sf).count()
@@ -130,12 +171,8 @@ class DedupGuardSpec extends AnyFunSuite {
     // memoization: compute runs once per key
     var computes = 0
     def probe(): (Long, Long) =
-      DedupGuard.cachedEstimate(spark, s"$fp1|spec-probe") { computes += 1; (7L, 3L) }
+      DedupGuard.cachedEstimate(s"$fp1|spec-probe") { computes += 1; (7L, 3L) }
     assert(probe() == ((7L, 3L)) && probe() == ((7L, 3L)) && computes == 1)
-    // conf off → every call computes
-    spark.conf.set(DedupGuard.EstimateCacheKey, "false")
-    try { probe(); probe(); assert(computes == 3) }
-    finally spark.conf.unset(DedupGuard.EstimateCacheKey)
     // a rewrite (new part files) changes the fingerprint, so a stale
     // estimate can never admit a plan for a corpus that changed
     val dir = writeDocs("cachebust", (0L until 10L).map(id => (id, s"a b c d$id")))

@@ -553,9 +553,5 @@ class PlanSpec extends AnyFunSuite {
     // (the 100 TB case: no extra exchange of the payload)
     val wide = docs.repartition(spark.sparkContext.defaultParallelism + 4)
     assert(Tables.fan(wide) eq wide)
-    // kill switch pins the raw layout
-    spark.conf.set("spark.graft.fan.enabled", "false")
-    try assert(Tables.fan(docs) eq docs)
-    finally spark.conf.unset("spark.graft.fan.enabled")
   }
 }

@@ -182,6 +182,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(raw.select("partition_id").distinct().count() > 1)
   }
 
+  test("state partitions follow stream volume: floor 8, one per 32 MB, capped") {
+    assert(EventPipeline.statePartitions(0L, 200) == 8)
+    assert(EventPipeline.statePartitions(300L << 20, 200) == 10)
+    assert(EventPipeline.statePartitions(100L << 30, 200) == 200)
+    assert(EventPipeline.statePartitions(0L, 4) == 4) // a cap below the floor wins
+  }
+
+  test("stream sources under glob metacharacters name only themselves") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = s"${graft.operators.Lakehouse.scratch}/glob_src"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    fs.delete(new Path(root), true)
+    // unescaped, `ev [a]{b,c}` would match these decoys, never itself
+    val odd = s"$root/ev [a]{b,c}"
+    val events = Tables(spark, sf, "events")
+    Seq("ab", "ac").foreach(k => events.limit(1).write.parquet(s"$root/ev $k/events.parquet"))
+    // a single-file source (the gate tables' shape)...
+    FileUtil.copy(fs, new Path(s"$sf/events.parquet"), fs, new Path(s"$odd/events.parquet"),
+      false, conf)
+    val want = EventPipeline.tumbling(spark, sf).collect().toSeq
+    assert(EventPipeline.tumbling(spark, odd).collect().toSeq == want)
+    // ...and a directory of part files under the same name
+    val oddDir = s"$root/dir [a]{b,c}"
+    events.write.parquet(s"$oddDir/events.parquet")
+    assert(EventPipeline.tumbling(spark, oddDir).collect().toSeq == want)
+  }
+
   test("registry streaming queries match their batch equivalents") {
     val streamRes = EventPipeline.tumbling(spark, sf).collect()
     val batchRes = Registry.byName("q_events_tumbling").run(spark, sf)
