@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.util.control.NonFatal
 
 /** Benchmark harness. Prints ONE compact JSON line for the driver and
@@ -16,6 +17,11 @@ import scala.util.control.NonFatal
   * failures are never averaged into a success time.
   */
 object Bench {
+  /** One timed call: seconds (-1 on failure), and the Janino compiles
+    * and compile ms Spark's codegen counters saw during it.
+    */
+  private final case class Run(sec: Double, compiles: Long, compileMs: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -30,11 +36,11 @@ object Bench {
     // the timer, so the reported number is the operator verb alone
     // (a compaction of already-compacted files, or a point lookup
     // charged for the table write, would both be lies).
-    def once(q: Q): Double = {
+    def once(q: Q): Run = {
       try q.setup.foreach(_(spark, sfDir))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] ${q.name} setup failed: ${e.toString.take(500)}")
-        return -1.0
+        return Run(-1.0, 0L, 0.0)
       }
       val fn = q.verb.getOrElse(q.run)
       // Drain the previous query's garbage OUTSIDE the timer: without
@@ -49,20 +55,24 @@ object Bench {
       // in-suite vs 1.2 s standalone, same build).
       org.apache.spark.sql.graftglue.Glue.unloadStateStores()
       System.gc()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
+      def run(sec: Double) = Run(sec, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+        (CodeGenerator.compileTime - compileNs0) / 1e6)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] ${q.name} failed: ${e.toString.take(500)}")
-        return -1.0
+        return run(-1.0)
       }
-      (System.nanoTime() - t0) / 1e9
+      run((System.nanoTime() - t0) / 1e9)
     }
     // Optional first arg: comma-separated query-name filter (local iteration).
     val wanted = args.headOption.map(_.split(",").map(_.trim).toSet)
     val selected = wanted.fold(Registry.all)(w => Registry.all.filter(q => w(q.name)))
-    val samples: Map[String, Seq[Double]] = selected.map { q =>
-      q.name -> (1 to runs).map(_ => once(q)).filter(_ >= 0.0).sorted
-    }.toMap
+    val measured: Map[String, Seq[Run]] = selected.map(q => q.name -> (1 to runs).map(_ => once(q))).toMap
+    val samples: Map[String, Seq[Double]] =
+      measured.map { case (k, rs) => k -> rs.map(_.sec).filter(_ >= 0.0).sorted }
     val results: Map[String, Double] =
       samples.map { case (k, ok) => k -> (if (ok.isEmpty) -1.0 else ok(ok.size / 2)) }
     val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
@@ -77,9 +87,16 @@ object Bench {
     val spreadMap = samples.toSeq.filter(_._2.nonEmpty).sortBy(_._1)
       .map { case (k, ok) => "\"" + k + f"""\":[${ok.head}%.3f,${ok.last}%.3f]""" }
       .mkString("{", ",", "}")
+    // Per-run Janino compiles and compile ms around each timed call:
+    // the codegen layer. A warm row that still compiles has lost
+    // CodeGenerator cache reuse.
+    val codegenMap = measured.toSeq.sortBy(_._1).map { case (k, rs) =>
+      "\"" + k + "\":{\"compiles\":" + rs.map(_.compiles).mkString("[", ",", "]") +
+        ",\"ms\":" + rs.map(r => f"${r.compileMs}%.1f").mkString("[", ",", "]") + "}"
+    }.mkString("{", ",", "}")
     val fullJson = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n":${results.size},""" +
       s""""runs":$runs,"failed":${failed.mkString("[\"", "\",\"", "\"]").replace("[\"\"]", "[]")},""" +
-      s""""queries":$fullMap,"spread":$spreadMap,"sf":"$sfDir"}"""
+      s""""queries":$fullMap,"spread":$spreadMap,"codegen":$codegenMap,"sf":"$sfDir"}"""
     val fullPath = java.nio.file.Paths.get("bench_full.json").toAbsolutePath
     java.nio.file.Files.write(fullPath, fullJson.getBytes("UTF-8"))
 

@@ -67,12 +67,13 @@ object GraftMysqlServer {
   def started: Boolean = server.isDefined
 
   /** Start the MySQL endpoint (default 9030 — the Doris FE query
-    * port). Idempotent; daemon accept loop for the JVM's lifetime,
-    * like the Thrift endpoint.
+    * port; 0 binds an ephemeral one) and return the bound port.
+    * Idempotent; daemon accept loop for the JVM's lifetime, like the
+    * Thrift endpoint.
     */
   def start(spark: SparkSession, port: Int = 9030,
-      bindHost: String = "localhost"): Unit = synchronized {
-    if (server.isDefined) return
+      bindHost: String = "localhost"): Int = synchronized {
+    if (server.isDefined) return server.get.getLocalPort
     val ss = new ServerSocket(port, 50, java.net.InetAddress.getByName(bindHost))
     server = Some(ss)
     val acceptor = new Thread(() => {
@@ -86,6 +87,7 @@ object GraftMysqlServer {
     }, "graft-mysql-acceptor")
     acceptor.setDaemon(true)
     acceptor.start()
+    ss.getLocalPort
   }
 
   /** Stop accepting (test hygiene; live connections drain on close). */

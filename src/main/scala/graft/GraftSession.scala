@@ -35,6 +35,20 @@ object GraftSession {
       // same-key partitioned tables join with no exchange.
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // Compile generated code once per engine. CodeGenerator caches
+      // classes by (context classloader, source); with artifact
+      // isolation on, every session UUID — including the clone each
+      // streaming query runs on — gets its own executor classloader
+      // and recompiles everything. Graft adds no session artifacts.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // The default 100 entries (Guava segments of ~25) are fewer than
+      // the engine's working set of classes, so even a long-lived
+      // session evicts and recompiles.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // events.ts may be parquet TIMESTAMP(NANOS), which vanilla Spark
+      // reads only as a long (SPARK-40819); graft.Tables and
+      // EventPipeline.eventsStream rescale it.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Connect-gateway credential gate (pass-through until
       // ConnectAuth.enable configures a credential query — the
       // Kyuubi-parity JDBC-auth leg).

@@ -71,10 +71,9 @@ object Tables {
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS), which vanilla Spark only
-    // reads as a long (SPARK-40819). Values are µs-aligned, so the
-    // ns→µs rescale below is lossless.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts may be parquet TIMESTAMP(NANOS), read as a long under
+    // the nanosAsLong setting GraftSession fixes (SPARK-40819). Values
+    // are µs-aligned, so the ns→µs rescale below is lossless.
     val df = spark.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (acc, f) =>
       if (f.name == "ts" && f.dataType == LongType)

@@ -52,11 +52,10 @@ object EventPipeline {
 
   /** Streaming view of the events table plus its source bytes. File
     * stream sources need an explicit schema; events.ts is parquet
-    * TIMESTAMP(NANOS), read as long (SPARK-40819) and rescaled,
-    * mirroring graft.Tables.
+    * TIMESTAMP(NANOS), read as long (SPARK-40819, under the setting
+    * GraftSession fixes) and rescaled, mirroring graft.Tables.
     */
   def eventsStream(spark: SparkSession, dir: String): (DataFrame, Long) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val (ingest, bytes) = streamSource(spark, new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
     val raw: StructType = spark.read.parquet(ingest).schema
     // Event-time ops (withWatermark, window, session_window) require

@@ -16,8 +16,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class MysqlGatewaySpec extends AnyFunSuite {
   import SharedSpark.spark
 
-  private val port = 14997
-
   // ---- minimal wire client (public protocol) -----------------------
 
   private final class Wire(host: String, portN: Int) {
@@ -332,7 +330,7 @@ class MysqlGatewaySpec extends AnyFunSuite {
       "SELECT 1 FROM gateway_users WHERE user_name = ? AND token = ?",
       maxConcurrentPerUser = 4)
     GraftAuthz.enable(url, superusers = Set(spark.sparkContext.sparkUser))
-    GraftMysqlServer.start(spark, port)
+    val port = GraftMysqlServer.start(spark, 0)
     try {
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.my_a")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.my_b")
@@ -408,7 +406,7 @@ class MysqlGatewaySpec extends AnyFunSuite {
   }
 
   test("mysql binary protocol: prepare/execute with typed params and binary rows") {
-    GraftMysqlServer.start(spark, port)
+    val port = GraftMysqlServer.start(spark, 0)
     val c = new Wire("localhost", port)
     try {
       assert(c.login("carol", "").isRight) // auth not enforced here
@@ -478,7 +476,7 @@ class MysqlGatewaySpec extends AnyFunSuite {
   }
 
   test("mysql binary protocol hardening: long data, registry cap, TIME, unknown types") {
-    GraftMysqlServer.start(spark, port)
+    val port = GraftMysqlServer.start(spark, 0)
     val c = new Wire("localhost", port)
     try {
       assert(c.login("dave", "").isRight)
