@@ -49,6 +49,11 @@ object GraftSession {
       // reads only as a long (SPARK-40819); graft.Tables and
       // EventPipeline.eventsStream rescale it.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Local files through java.nio (graft.sources.NioLocalFs): without
+      // libhadoop, Hadoop forks chmod/readlink/ls per call. Both APIs:
+      // streaming checkpoints and state stores commit through FileContext.
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.NioLocalFs].getName)
       // Connect-gateway credential gate (pass-through until
       // ConnectAuth.enable configures a credential query — the
       // Kyuubi-parity JDBC-auth leg).

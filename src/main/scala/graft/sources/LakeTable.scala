@@ -1930,10 +1930,18 @@ object LakeTable {
   private def tableMetaBody(spark: SparkSession, path: String): Option[String] = {
     val p = tableMetaFile(path)
     val fs = fsOf(spark, p)
+    // A checksummed file system (the local one) renames the body and its
+    // .crc sidecar one after the other, so a read racing a publish can
+    // pair one version's body with the other's checksum. A re-read sees
+    // a matched pair; real corruption fails every attempt.
+    def read(retries: Int): String =
+      try {
+        val in = fs.open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      } catch { case _: org.apache.hadoop.fs.ChecksumException if retries > 0 => read(retries - 1) }
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val body = read(retries = 3)
       if (!(body.startsWith("{") && body.trim.endsWith("}")))
         throw new IllegalStateException(
           s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}")
