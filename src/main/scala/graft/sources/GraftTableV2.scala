@@ -282,17 +282,19 @@ final class GraftTable(path: String, version: Option[Long],
   }
 }
 
-/** Scan builder for DV'd snapshots (B46): the merge-on-read serving
-  * mode. The scan keeps the lakehouse fast-path behaviors even while
-  * vectors exist — it negotiates V1 filter pushdown and column
-  * pruning, mines the pushed conjuncts for bounds and SKIPS whole
-  * files via the min/max sidecar stats (plus partition-dir values),
-  * and builds its result as a DataFrame over only the surviving
-  * files: parquet row-group pushdown, vectorized read and whole-stage
-  * codegen all run INSIDE the relation, with the broadcast
-  * deletion-vector filter applied per (file, row_index). Only the
-  * relation boundary itself is row-based (V1Scan), and it carries
-  * just the filtered, projected rows.
+/** Scan builder for DV'd snapshots (B46) and renamed tables: the
+  * merge-on-read serving mode. The scan keeps the lakehouse fast-path
+  * behaviors even while vectors exist — it negotiates V1 filter
+  * pushdown and column pruning, takes its file bounds from
+  * `LakeTable.boundsOf` (the pushed conjunction, analyzed against the
+  * snapshot schema) and SKIPS whole files via the min/max sidecar
+  * stats (plus partition-dir values), and builds its result with
+  * `LakeTable.readKept` over only the surviving files — the same
+  * mapping, tombstone and deletion-vector assembly as a full read:
+  * parquet row-group pushdown, vectorized read and whole-stage
+  * codegen all run INSIDE the relation. Only the relation boundary
+  * itself is row-based (V1Scan), and it carries just the filtered,
+  * projected rows.
   *
   * Safety stance: every pushed filter is ALSO returned as a residual
   * (`pushFilters` returns its input), so Spark re-evaluates the
@@ -342,46 +344,14 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
     case _ => None
   }
 
-  /** Inclusive per-column bounds from the pushed conjuncts (the
-    * top-level array is a conjunction), for sidecar-stats file
-    * skipping; unrecognized shapes contribute no bound (sound).
-    */
-  private def boundsOf(filters: Array[Filter]): Map[String, LakeTable.ColumnBounds] = {
-    val bounds = scala.collection.mutable.Map.empty[String, LakeTable.ColumnBounds]
-    def ok(value: Any): Option[Any] = value match {
-      case s: String => Some(s)
-      case n: Number => Some(n)
-      case _ => None
-    }
-    def tightenLo(c: String, value: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.lo.isEmpty => Some(b.copy(lo = Some(value)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(Some(value), None)))
-    }
-    def tightenHi(c: String, value: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.hi.isEmpty => Some(b.copy(hi = Some(value)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(None, Some(value))))
-    }
-    def walk(f: Filter): Unit = f match {
-      case And(l, r) => walk(l); walk(r)
-      case EqualTo(a, value) => ok(value).foreach { w => tightenLo(a, w); tightenHi(a, w) }
-      case GreaterThan(a, value) => ok(value).foreach(tightenLo(a, _))
-      case GreaterThanOrEqual(a, value) => ok(value).foreach(tightenLo(a, _))
-      case LessThan(a, value) => ok(value).foreach(tightenHi(a, _))
-      case LessThanOrEqual(a, value) => ok(value).foreach(tightenHi(a, _))
-      case _ => ()
-    }
-    filters.foreach(walk)
-    bounds.toMap
-  }
-
   override def build(): org.apache.spark.sql.connector.read.Scan = {
-    val commit = LakeTable.readCommit(spark, path, v)
-    val (pruned, flat) = LakeTable.pruneFilesByDir(spark, path, commit.dirs,
-      boundsOf(pushed))
+    val filterCol = pushed.flatMap(toColumn(_)).reduceOption(_ && _)
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, path,
+      LakeTable.readCommit(spark, path, v).dirs,
+      filterCol.fold(Map.empty[String, LakeTable.ColumnBounds])(
+        LakeTable.predicateBounds(spark, tableSchema, _)))
     val total = pruned.map(_.files.size).sum
     val kept = pruned.map(_.kept.size).sum
-    val dv = LakeTable.dvFor(spark, path, v, commit.dirs)
-    val filterCol = pushed.flatMap(toColumn(_)).reduceOption(_ && _)
     val reqCols = required.fieldNames.toIndexedSeq
     val reqSchema = required
     // Kept-file bytes were listed during pruning — the stats report is
@@ -434,7 +404,7 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
           override def sqlContext: org.apache.spark.sql.SQLContext = ctx
           override def schema: StructType = reqSchema
           override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val base = LakeTable.readPrunedDv(spark, path, pruned, flat, dv, tableSchema)
+            val base = LakeTable.readKept(spark, path, v, tableSchema, pruned)
             val filtered = filterCol.fold(base)(base.where)
             filtered.select(reqCols.map(col): _*).rdd
           }
@@ -508,8 +478,9 @@ final class GraftCdcTable(path: String) extends Table with SupportsRead {
 }
 
 /** V2 scan builder that adds LakeTable FILE SKIPPING in front of the
-  * parquet scan: conjunctive pushed filters are mined for per-column
-  * bounds, intersected with the per-file min/max sidecars (B18), and
+  * parquet scan: the pushed conjunction's per-column bounds come from
+  * `LakeTable.boundsOf`, are intersected with the per-file min/max
+  * sidecars (B18), and
   * the inner parquet scan is rebuilt over only the surviving files —
   * so a catalog SQL point query (`WHERE key = 42`) opens a handful of
   * files with no API beyond plain SQL. Everything else (residual
@@ -529,8 +500,7 @@ final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String
     extends org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
-  import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-  import org.apache.spark.unsafe.types.UTF8String
+  import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 
   private val partCols = LakeTable.tablePartitioning(spark, path)
 
@@ -566,46 +536,9 @@ final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String
     probe.pruneColumns(requiredSchema)
   }
 
-  /** Mine inclusive per-column bounds from conjunctive comparisons;
-    * anything unrecognized simply contributes no bound (sound).
-    */
-  private def boundsOf(filters: Seq[Expression]): Map[String, LakeTable.ColumnBounds] = {
-    def valueOf(l: Literal): Option[Any] = l.value match {
-      case s: UTF8String => Some(s.toString)
-      case n: Number => Some(n)
-      case _ => None
-    }
-    val bounds = scala.collection.mutable.Map.empty[String, LakeTable.ColumnBounds]
-    def tightenLo(c: String, v: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.lo.isEmpty => Some(b.copy(lo = Some(v)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(Some(v), None)))
-    }
-    def tightenHi(c: String, v: Any): Unit = bounds.updateWith(c) {
-      case Some(b) if b.hi.isEmpty => Some(b.copy(hi = Some(v)))
-      case other => other.orElse(Some(LakeTable.ColumnBounds(None, Some(v))))
-    }
-    def walk(e: Expression): Unit = e match {
-      case CAnd(l, r) => walk(l); walk(r)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        valueOf(l).foreach { v => tightenLo(a.name, v); tightenHi(a.name, v) }
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        valueOf(l).foreach { v => tightenLo(a.name, v); tightenHi(a.name, v) }
-      case GreaterThan(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenLo(a.name, _))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenLo(a.name, _))
-      case LessThan(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenHi(a.name, _))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => valueOf(l).foreach(tightenHi(a.name, _))
-      case LessThan(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenLo(a.name, _))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenLo(a.name, _))
-      case GreaterThan(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenHi(a.name, _))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => valueOf(l).foreach(tightenHi(a.name, _))
-      case _ => ()
-    }
-    filters.foreach(walk)
-    bounds.toMap
-  }
-
   override def build(): org.apache.spark.sql.connector.read.Scan = {
-    val bounds = boundsOf(pushed)
+    val bounds = pushed.reduceOption(And(_, _)).fold(Map.empty[String, LakeTable.ColumnBounds])(
+      LakeTable.boundsOf)
     val all = dirs.map(d => new Path(path, d).toString)
     val paths =
       if (bounds.isEmpty) all

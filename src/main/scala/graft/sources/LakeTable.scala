@@ -426,27 +426,36 @@ object LakeTable {
     catch { case _: NumberFormatException =>
       java.lang.Double.compare(a.toDouble, b.toDouble) }
 
+  /** A bound number as an exact BigDecimal: integral and decimal
+    * values never detour through double; throws NumberFormatException
+    * on a non-finite floating value.
+    */
+  private def exactOf(n: Number): java.math.BigDecimal = n match {
+    case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte =>
+      java.math.BigDecimal.valueOf(n.longValue())
+    case bi: java.math.BigInteger => new java.math.BigDecimal(bi)
+    case bd: java.math.BigDecimal => bd
+    case _ => java.math.BigDecimal.valueOf(n.doubleValue())
+  }
+
   /** Exact comparison of a sidecar stat string to a query-bound
-    * Number: integral bound types stay in BigDecimal (no double
-    * detour); throws NumberFormatException if `v` is not numeric —
+    * Number; throws NumberFormatException if `v` is not numeric —
     * callers treat that as "unknown, keep the file".
     */
   private[graft] def cmpStatToNumber(v: String, n: Number): Int =
-    try {
-      val nb = n match {
-        case l: java.lang.Long    => java.math.BigDecimal.valueOf(l.longValue())
-        case i: java.lang.Integer => java.math.BigDecimal.valueOf(i.longValue())
-        case s: java.lang.Short   => java.math.BigDecimal.valueOf(s.longValue())
-        case b: java.lang.Byte    => java.math.BigDecimal.valueOf(b.longValue())
-        case bi: java.math.BigInteger => new java.math.BigDecimal(bi)
-        case bd: java.math.BigDecimal => bd
-        case _ => java.math.BigDecimal.valueOf(n.doubleValue()) // throws on NaN/Inf
-      }
-      new java.math.BigDecimal(v).compareTo(nb)
-    } catch { case _: NumberFormatException if isNumeric(v) =>
+    try new java.math.BigDecimal(v).compareTo(exactOf(n))
+    catch { case _: NumberFormatException if isNumeric(v) =>
       // non-finite on either side: IEEE ordering is still the right
       // conservative answer (NaN sorts greatest, matches nothing real)
       java.lang.Double.compare(v.toDouble, n.doubleValue()) }
+
+  /** Exact comparison of two bound numbers (IEEE ordering only for a
+    * non-finite floating value), so bounds past 2^53 stay distinct.
+    */
+  private def cmpNumbers(a: Number, b: Number): Int =
+    try exactOf(a).compareTo(exactOf(b))
+    catch { case _: NumberFormatException =>
+      java.lang.Double.compare(a.doubleValue(), b.doubleValue()) }
 
   private def isNumeric(s: String): Boolean =
     try { s.toDouble; true } catch { case _: NumberFormatException => false }
@@ -1002,21 +1011,39 @@ object LakeTable {
     if (flat) Some(pruned.flatMap(_.kept)) else None
   }
 
-  /** Read the surviving files of a prune: flat layouts as one file
-    * list, partition-encoded layouts per dir under its `basePath` so
-    * the partition columns are recovered from the paths.
+  /** File-skipping snapshot read at version `v`: only the files a
+    * [[pruneFilesByDir]] result keeps, assembled exactly like a full
+    * read by [[readDirsDv]] — mapping chain, tombstone projection and
+    * deletion vectors (sound: vectors key by (file, row), so a skipped
+    * file takes its marks with it) — and shaped to the snapshot's
+    * `schema`, a column no surviving file carries reading as NULL.
     */
-  private def readPruned(spark: SparkSession, path: String, pruned: Seq[PrunedDir],
-      flat: Boolean, version: Option[Long]): DataFrame = {
-    val nonEmpty = pruned.filter(_.kept.nonEmpty)
-    if (nonEmpty.isEmpty) read(spark, path, version).limit(0)
-    else if (flat)
-      spark.read.option("mergeSchema", "true").parquet(nonEmpty.flatMap(_.kept): _*)
-    else nonEmpty.map { pd =>
-      spark.read.option("mergeSchema", "true").option("basePath", pd.base)
-        .parquet(pd.kept: _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+  private[graft] def readKept(spark: SparkSession, path: String, v: Long,
+      schema: org.apache.spark.sql.types.StructType, pruned: Seq[PrunedDir]): DataFrame = {
+    val live = pruned.filter(_.kept.nonEmpty)
+    if (live.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val dirs = live.map(_.dir)
+    val df = readDirsDv(spark, path, dirs, dvFor(spark, path, v, dirs), withPos = false,
+      kept = Some(live.map(pd => pd.dir -> pd.kept).toMap))
+    if (df.columns.toSeq == schema.fieldNames.toSeq) df
+    else {
+      val have = df.columns.toSet
+      df.select(schema.fields.toIndexedSeq.map(f =>
+        if (have(f.name)) col("`" + f.name.replace("`", "``") + "`")
+        else lit(null).cast(f.dataType).as(f.name)): _*)
+    }
   }
+
+  /** Snapshot `v` (of `schema`) pruned by the bounds
+    * [[predicateBounds]] mines from `predicate` (see
+    * [[pruneFilesByDir]] for the `flat` flag).
+    */
+  private def pruneFor(spark: SparkSession, path: String, v: Long,
+      schema: org.apache.spark.sql.types.StructType,
+      predicate: org.apache.spark.sql.Column): (Seq[PrunedDir], Boolean) =
+    pruneFilesByDir(spark, path, readCommit(spark, path, v).dirs,
+      predicateBounds(spark, schema, predicate))
 
   /** File-skipping range read: keep only the files of the snapshot
     * whose `[min,max]` for `column` intersects `[lo, hi]` (both
@@ -1027,21 +1054,12 @@ object LakeTable {
     */
   def readRange(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, v)
-    val (pruned, flat) = pruneFilesByDir(spark, path, c.dirs,
-      Map(column -> ColumnBounds(Some(lo), Some(hi))))
-    // A DV'd snapshot (B46) keeps the same file skipping — vectors key
-    // by (file, row) so pruning whole files is sound — with the
-    // vector filter applied on the surviving files.
-    val dv = dvFor(spark, path, v, c.dirs)
-    val base =
-      if (dv.nonEmpty) readPrunedDv(spark, path, pruned, flat, dv,
-        tableSchema(spark, path, Some(v)))
-      else readPruned(spark, path, pruned, flat, Some(v))
-    base.where(col(column) >= lit(lo) && col(column) <= lit(hi))
+    val schema = tableSchema(spark, path, Some(v))
+    val predicate = col(column) >= lit(lo) && col(column) <= lit(hi)
+    readKept(spark, path, v, schema, pruneFor(spark, path, v, schema, predicate)._1)
+      .where(predicate)
   }
 
   // ---- per-file bloom sidecars (point lookups on UNCLUSTERED columns) --
@@ -1141,19 +1159,9 @@ object LakeTable {
       version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val base = pointCandidateFiles(spark, path, column, value, Some(v)) match {
-      case Some(files) if files.isEmpty => read(spark, path, Some(v)).limit(0)
-      case Some(files) => spark.read.option("mergeSchema", "true").parquet(files: _*)
-      case None =>
-        // Partition-encoded layout: no bloom tier, but stats +
-        // partition-value pruning still apply (basePath read keeps
-        // the partition columns).
-        val c = readCommit(spark, path, v)
-        val (pruned, flat) = pruneFilesByDir(spark, path, c.dirs,
-          Map(column -> ColumnBounds(Some(value), Some(value))))
-        readPruned(spark, path, pruned, flat, Some(v))
-    }
-    base.where(col(column) === lit(value))
+    val schema = tableSchema(spark, path, Some(v))
+    readKept(spark, path, v, schema, prunePoint(spark, path, schema, column, value, v)._1)
+      .where(col(column) === lit(value))
   }
 
   /** Files a point lookup must open: footer-stats prune, then bloom
@@ -1162,9 +1170,21 @@ object LakeTable {
     */
   private[graft] def pointCandidateFiles(spark: SparkSession, path: String,
       column: String, value: Any, version: Option[Long] = None): Option[Seq[String]] = {
-    import org.apache.spark.util.sketch.BloomFilter
     val v = version.orElse(currentVersion(spark, path)).get
-    val c = readCommit(spark, path, v)
+    val (pruned, flat) = prunePoint(spark, path, tableSchema(spark, path, Some(v)),
+      column, value, v)
+    if (flat) Some(pruned.flatMap(_.kept)) else None
+  }
+
+  /** The point lookup's prune: stats/partition values, then — in a
+    * flat layout, where the sidecars key each file — the bloom tier.
+    */
+  private def prunePoint(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType, column: String, value: Any,
+      v: Long): (Seq[PrunedDir], Boolean) = {
+    import org.apache.spark.util.sketch.BloomFilter
+    val (pruned, flat) = pruneFor(spark, path, v, schema, col(column) === lit(value))
+    if (!flat) return (pruned, flat)
     // cache per-dir sidecar parses: (dir -> (rel, column) -> bloom b64)
     val sidecars = scala.collection.mutable.Map.empty[String, Map[(String, String), String]]
     def sidecarOf(dirPath: Path, fs: FileSystem): Map[(String, String), String] =
@@ -1178,27 +1198,26 @@ object LakeTable {
             .collect { case Array(r, cn, b64) => (dec(r), dec(cn)) -> b64 }.toMap
         }
       })
-    pruneFiles(spark, path, c.dirs, Map(column -> ColumnBounds(Some(value), Some(value))))
-      .map { files =>
-        files.filter { f =>
-          val fp = new Path(f)
-          val fs = fsOf(spark, fp.getParent)
-          val base = fs.makeQualified(fp.getParent).toString
-          val rel = fs.makeQualified(fp).toString.stripPrefix(base + "/")
-          sidecarOf(fp.getParent, fs).get((rel, column)) match {
-            case None => true // no bloom: must read the file
-            case Some(b64) =>
-              val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-                java.util.Base64.getDecoder.decode(b64)))
-              value match {
-                case l: java.lang.Long => bf.mightContainLong(l)
-                case n: java.lang.Integer => bf.mightContainLong(n.longValue())
-                case s: String => bf.mightContainString(s)
-                case other => bf.mightContainString(other.toString)
-              }
+    def mightContain(f: String): Boolean = {
+      val fp = new Path(f)
+      val fs = fsOf(spark, fp.getParent)
+      val base = fs.makeQualified(fp.getParent).toString
+      val rel = fs.makeQualified(fp).toString.stripPrefix(base + "/")
+      sidecarOf(fp.getParent, fs).get((rel, column)) match {
+        case None => true // no bloom: must read the file
+        case Some(b64) =>
+          val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
+            java.util.Base64.getDecoder.decode(b64)))
+          value match {
+            case l: java.lang.Long => bf.mightContainLong(l)
+            case n: java.lang.Integer => bf.mightContainLong(n.longValue())
+            case s: String => bf.mightContainString(s)
+            case other => bf.mightContainString(other.toString)
           }
-        }
       }
+    }
+    (pruned.map(pd => pd.copy(files = pd.files.map(f =>
+      if (f.kept && !mightContain(f.file)) f.copy(kept = false) else f))), flat)
   }
 
   /** Append-driven STREAMING read of the table (the Delta
@@ -2540,7 +2559,7 @@ object LakeTable {
             writeCommit(spark, path, Commit(v, "overwrite", Seq(stagedDir), cdc, txn = txn))
           case ReplaceWhere(pred) =>
             val (touched, untouched) = splitDirs(spark, path, c.dirs,
-              predicateBounds(read(spark, path, Some(prev)), pred))
+              predicateBounds(spark, tableSchema(spark, path, Some(prev)), pred))
             val old =
               if (touched.isEmpty) read(spark, path, Some(prev)).limit(0)
               else readDirsLive(spark, path, touched, prev)
@@ -3197,8 +3216,9 @@ object LakeTable {
 
   /** min/max of the mutation source's key columns — the bounds a keyed
     * MERGE can possibly touch. One tiny aggregate over the (small,
-    * relative to the table) source; non-numeric/non-string keys yield
-    * no bound and fall back to full rewrite.
+    * relative to the table) source; keys other than integral, floating
+    * or string yield no bound and fall back to full rewrite — DECIMAL
+    * included, since its sidecar stats are parquet's unscaled integers.
     */
   private def keyBounds(source: DataFrame, keys: Seq[String]): Map[String, ColumnBounds] = {
     val row = source.agg(
@@ -3208,7 +3228,7 @@ object LakeTable {
       }): _*).head()
     keys.zipWithIndex.map { case (k, i) =>
       def side(v: Any): Option[Any] = v match {
-        case null => None
+        case null | _: java.math.BigDecimal => None
         case n: Number => Some(n)
         case s: String => Some(s)
         case _ => None
@@ -3217,93 +3237,87 @@ object LakeTable {
     }.toMap
   }
 
-  /** Conservative bounds from a DELETE/UPDATE predicate: top-level AND
-    * of {=, <, <=, >, >=, IN, BETWEEN-ish} comparisons between a column
-    * and literals, read from the ANALYZED filter over the snapshot (so
-    * Spark's own resolution and implicit casts are honored). Any
-    * conjunct we cannot read contributes nothing; an OR (or any other
-    * root) yields no bounds → full rewrite. A column reached through a
-    * cast counts only when the cast is a loss-free up-cast (order
-    * preserving — a truncating cast could prune a file that matches).
+  /** [[boundsOf]] a Column predicate, analyzed against a relation of
+    * the snapshot `schema` (logical names; Spark's own resolution and
+    * implicit casts) — no scan is planned.
     */
-  private def predicateBounds(base: DataFrame,
+  private[graft] def predicateBounds(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
       predicate: org.apache.spark.sql.Column): Map[String, ColumnBounds] = {
+    import org.apache.spark.sql.graftglue.Glue
+    boundsOf(Glue.analyzeCondition(spark, predicate, schema).condition)
+  }
+
+  /** The one predicate → file-bounds miner, over an ANALYZED Catalyst
+    * condition: comparisons of a column with a foldable value in either
+    * order, `<=>`, IN and InSet. AND tightens; OR keeps the sound
+    * ENVELOPE of a column bounded on both branches (a column bounded
+    * on one branch only is free — rows of the other branch may hold
+    * any value), which is what lets an OR of partition tuples (dynamic
+    * partition overwrite, IN-tuple deletes) still prune. A column
+    * reached through a cast counts only for a loss-free, non-string
+    * up-cast (order preserving). A DECIMAL column never bounds: its
+    * sidecar stats are parquet's unscaled integers. Numbers compare
+    * exactly, strings only under the default (binary) collation. Any other
+    * shape contributes nothing — skipping is an optimization, never a
+    * filter.
+    */
+  private[graft] def boundsOf(cond: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Map[String, ColumnBounds] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    import org.apache.spark.sql.types.StringType
-    val condOpt = base.where(predicate).queryExecution.analyzed.collectFirst {
-      case f: LFilter => f.condition
-    }
-    if (condOpt.isEmpty) return Map.empty
+    import org.apache.spark.sql.types.{DataType, DecimalType, StringType}
     def nameOf(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case c: Cast if Cast.canUpCast(c.child.dataType, c.dataType) => nameOf(c.child)
+      case a: AttributeReference if !a.dataType.isInstanceOf[DecimalType] => Some(a.name)
+      case c: Cast if !c.dataType.isInstanceOf[StringType]
+          && Cast.canUpCast(c.child.dataType, c.dataType) => nameOf(c.child)
       case _ => None
     }
-    def valueOf(e: Expression): Option[Any] =
-      if (!e.foldable) None
-      else e.eval() match {
-        case null => None
-        case v if e.dataType == StringType => Some(v.toString)
-        case n: Number => Some(n)
-        case _ => None
-      }
-    val eqB = (n: String, v: Any) => n -> ColumnBounds(Some(v), Some(v))
-    val loB = (n: String, v: Any) => n -> ColumnBounds(Some(v), None)
-    val hiB = (n: String, v: Any) => n -> ColumnBounds(None, Some(v))
-    // Try attr-op-literal, then literal-op-attr with the bound flipped.
-    def cmp(l: Expression, r: Expression,
-        attrLeft: (String, Any) => (String, ColumnBounds),
-        attrRight: (String, Any) => (String, ColumnBounds)): Option[(String, ColumnBounds)] =
-      (for (n <- nameOf(l); v <- valueOf(r)) yield attrLeft(n, v))
-        .orElse(for (n <- nameOf(r); v <- valueOf(l)) yield attrRight(n, v))
-    def boundOf(e: Expression): Option[(String, ColumnBounds)] = e match {
-      case EqualTo(a, b) => cmp(a, b, eqB, eqB)
-      case EqualNullSafe(a, b) => cmp(a, b, eqB, eqB)
-      case GreaterThan(a, b) => cmp(a, b, loB, hiB)
-      case GreaterThanOrEqual(a, b) => cmp(a, b, loB, hiB)
-      case LessThan(a, b) => cmp(a, b, hiB, loB)
-      case LessThanOrEqual(a, b) => cmp(a, b, hiB, loB)
-      case In(a, vs) =>
-        val lits = vs.flatMap(valueOf)
-        if (lits.size != vs.size || lits.isEmpty) None
-        else nameOf(a).map { n =>
-          val nums = lits.collect { case x: Number => x.doubleValue() }
-          if (nums.size == lits.size)
-            n -> ColumnBounds(Some(Double.box(nums.min)), Some(Double.box(nums.max)))
-          else {
-            val ss = lits.map(_.toString)
-            n -> ColumnBounds(Some(ss.min), Some(ss.max))
-          }
-        }
+    def valueOf(v: Any, dt: DataType): Option[Any] = (v, dt) match {
+      case (s: org.apache.spark.unsafe.types.UTF8String, StringType) => Some(s.toString)
+      case (n: Number, _) => Some(n) // a Catalyst Decimal is not a Number
       case _ => None
     }
-    // Conjunction: using any one conjunct's bounds is a SUPERSET of the
-    // true matching range — safe; intersecting tightens it.
+    def folded(e: Expression): Option[Any] =
+      if (e.foldable) valueOf(e.eval(), e.dataType) else None
+    def order(x: Any, y: Any): Option[Int] = (x, y) match {
+      case (p: Number, q: Number) => Some(cmpNumbers(p, q))
+      case (p: String, q: String) => Some(p.compareTo(q))
+      case _ => None
+    }
+    // Conjunction: either bound alone is a sound SUPERSET of the
+    // matching range; keep the tighter one.
     def tighter(a: ColumnBounds, b: ColumnBounds): ColumnBounds = {
-      def pick(x: Option[Any], y: Option[Any], wantMax: Boolean) = (x, y) match {
-        case (Some(p: Number), Some(q: Number)) =>
-          if ((p.doubleValue > q.doubleValue) == wantMax) x else y
-        case (Some(p: String), Some(q: String)) => if ((p > q) == wantMax) x else y
-        case (Some(_), _) => x
-        case (None, o) => o
+      def pick(x: Option[Any], y: Option[Any], wantMax: Boolean): Option[Any] = (x, y) match {
+        case (Some(p), Some(q)) => order(p, q).fold(x)(c => if ((c > 0) == wantMax) x else y)
+        case _ => x.orElse(y)
       }
       ColumnBounds(pick(a.lo, b.lo, wantMax = true), pick(a.hi, b.hi, wantMax = false))
     }
-    // Disjunction: the sound ENVELOPE — a column bounded on BOTH
-    // branches keeps the wider [min(lo), max(hi)]; bounded on one
-    // branch only → unbounded (rows from the other branch are free).
-    // This is what makes an OR-of-partition-tuples predicate (dynamic
-    // partition overwrite, IN-tuple deletes) still prune.
+    // Disjunction: the envelope [min(lo), max(hi)], unbounded on a side
+    // either branch leaves open.
     def wider(a: ColumnBounds, b: ColumnBounds): ColumnBounds = {
       def pick(x: Option[Any], y: Option[Any], wantMax: Boolean): Option[Any] = (x, y) match {
-        case (Some(p: Number), Some(q: Number)) =>
-          if ((p.doubleValue > q.doubleValue) == wantMax) x else y
-        case (Some(p: String), Some(q: String)) => if ((p > q) == wantMax) x else y
+        case (Some(p), Some(q)) => order(p, q).map(c => if ((c > 0) == wantMax) p else q)
         case _ => None
       }
       ColumnBounds(pick(a.lo, b.lo, wantMax = false), pick(a.hi, b.hi, wantMax = true))
     }
+    def bounded(m: Map[String, ColumnBounds]) =
+      m.filter { case (_, b) => b.lo.nonEmpty || b.hi.nonEmpty }
+    val point = (n: String, v: Any) => Map(n -> ColumnBounds(Some(v), Some(v)))
+    val lower = (n: String, v: Any) => Map(n -> ColumnBounds(Some(v), None))
+    val upper = (n: String, v: Any) => Map(n -> ColumnBounds(None, Some(v)))
+    // attr-op-value, then value-op-attr with the bound flipped
+    def cmp(l: Expression, r: Expression, attrLeft: (String, Any) => Map[String, ColumnBounds],
+        attrRight: (String, Any) => Map[String, ColumnBounds]): Map[String, ColumnBounds] =
+      (for (n <- nameOf(l); v <- folded(r)) yield attrLeft(n, v))
+        .orElse(for (n <- nameOf(r); v <- folded(l)) yield attrRight(n, v))
+        .getOrElse(Map.empty)
+    def anyOf(a: Expression, vs: Seq[Option[Any]]): Map[String, ColumnBounds] =
+      if (vs.isEmpty || vs.exists(_.isEmpty)) Map.empty
+      else nameOf(a).fold(Map.empty[String, ColumnBounds]) { n =>
+        bounded(Map(n -> vs.flatten.map(v => ColumnBounds(Some(v), Some(v))).reduce(wider)))
+      }
     def walk(e: Expression): Map[String, ColumnBounds] = e match {
       case And(l, r) =>
         val (bl, br) = (walk(l), walk(r))
@@ -3315,12 +3329,18 @@ object LakeTable {
         }.toMap
       case Or(l, r) =>
         val (bl, br) = (walk(l), walk(r))
-        bl.keySet.intersect(br.keySet).iterator
-          .map(k => k -> wider(bl(k), br(k)))
-          .filter { case (_, b) => b.lo.nonEmpty || b.hi.nonEmpty }.toMap
-      case other => boundOf(other).toMap
+        bounded(bl.keySet.intersect(br.keySet).iterator.map(k => k -> wider(bl(k), br(k))).toMap)
+      case EqualTo(a, b) => cmp(a, b, point, point)
+      case EqualNullSafe(a, b) => cmp(a, b, point, point)
+      case GreaterThan(a, b) => cmp(a, b, lower, upper)
+      case GreaterThanOrEqual(a, b) => cmp(a, b, lower, upper)
+      case LessThan(a, b) => cmp(a, b, upper, lower)
+      case LessThanOrEqual(a, b) => cmp(a, b, upper, lower)
+      case In(a, vs) => anyOf(a, vs.map(folded))
+      case InSet(a, hset) => anyOf(a, hset.toSeq.map(valueOf(_, a.dataType)))
+      case _ => Map.empty
     }
-    walk(condOpt.get)
+    walk(cond)
   }
 
   /** Snapshot-subset read. Partitioned layouts with MULTIPLE groups
@@ -3351,7 +3371,8 @@ object LakeTable {
     * the common non-MOR table).
     */
   private def readDirsDv(spark: SparkSession, path: String, dirs: Seq[String],
-      dv: Map[String, Map[String, Array[Byte]]], withPos: Boolean): DataFrame = {
+      dv: Map[String, Map[String, Array[Byte]]], withPos: Boolean,
+      kept: Option[Map[String, Seq[String]]] = None): DataFrame = {
     // ONE broadcast of the full vector set per read plan (executors
     // fetch it once); every DV'd frame filter references the same
     // handle instead of shipping blobs inside each task's plan bytes.
@@ -3372,6 +3393,14 @@ object LakeTable {
         if (withPos) filtered else filtered.drop("__file", "__pos")
       }
     }
+    // What the entries read: their surviving files when `kept` carries
+    // a pruneFilesByDir result ([[readKept]]), else the entry dirs
+    // (`nonEmpty` drops the empty dir of a schema-only create).
+    def sources(entries: Seq[String], nonEmpty: Boolean): Seq[String] = kept match {
+      case Some(files) => entries.flatMap(files)
+      case None => entries.map(e => new Path(path, e).toString)
+        .filter(p => !nonEmpty || hasParquet(spark, new Path(p)))
+    }
     val mappings = tableMappings(spark, path)
     val flatEntries = dirs.forall(d => groupRoot(d) == d)
     // Footer merge across groups fails hard on PHYSICAL type skew (a
@@ -3389,11 +3418,11 @@ object LakeTable {
       // marked mixed and routed below, so any chain here predates
       // every dir — the min version stands in for all of them.
       try finish(applyMappings(spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(d => new Path(path, d).toString): _*), mappings,
+        .parquet(sources(dirs, nonEmpty = false): _*), mappings,
         dirs.map(groupVersionOf).min),
         dirs.map(groupKey))
       catch { case e: Throwable if mergeConflict(e) =>
-        readDirsUnion(spark, path, dirs, mappings, finish) }
+        readDirsUnion(spark, path, dirs, mappings, sources(_, nonEmpty = true), finish) }
     } else {
       // Partitioned (or subdir-entry) layout. CLEAN snapshots (no
       // deletion vectors, no mapping chain, no position columns) read
@@ -3406,7 +3435,7 @@ object LakeTable {
       // schema (authoritative — the catalog path's source), never
       // re-inferred from path strings.
       val partCols = tablePartitioning(spark, path)
-      if (dv.isEmpty && !withPos && mappings.isEmpty && partCols.nonEmpty) {
+      if (dv.isEmpty && !withPos && mappings.isEmpty && partCols.nonEmpty && kept.isEmpty) {
         val meta = metaSchema(spark, path)
         if (meta.exists(m => partCols.forall(m.fieldNames.contains))) {
           val m = meta.get
@@ -3429,7 +3458,7 @@ object LakeTable {
           catch { case e: Throwable if mergeConflict(e) => () } // union coerces
         }
       }
-      readDirsUnion(spark, path, dirs, mappings, finish)
+      readDirsUnion(spark, path, dirs, mappings, sources(_, nonEmpty = true), finish)
     }
   }
 
@@ -3437,16 +3466,17 @@ object LakeTable {
     * ROOT (each group carries the physical names of its write time —
     * the union lines logical columns up by name), when DVs / position
     * columns ride the per-scan `_metadata` struct, when no meta schema
-    * records the partition column types, or as the type-coercing
-    * fallback for physically type-skewed legacy groups. Plan size here
-    * is the ROOT count; compaction collapses it to one.
+    * records the partition column types, for a pruned file subset, or
+    * as the type-coercing fallback for physically type-skewed legacy
+    * groups. `sources` names the paths a root's entries read. Plan size
+    * here is the ROOT count; compaction collapses it to one.
     */
   private def readDirsUnion(spark: SparkSession, path: String, dirs: Seq[String],
-      mappings: Seq[MapRec], finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+      mappings: Seq[MapRec], sources: Seq[String] => Seq[String],
+      finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     val byRoot = dirs.groupBy(groupRoot).toSeq.sortBy(_._1)
     val reads = byRoot.flatMap { case (root, entries) =>
-      val entryPaths = entries.map(e => new Path(path, e).toString)
-        .filter(p => hasParquet(spark, new Path(p)))
+      val entryPaths = sources(entries)
       if (entryPaths.isEmpty) None
       else Some(finish(applyMappings(spark.read.option("mergeSchema", "true")
         .option("basePath", new Path(path, root).toString)
@@ -3464,43 +3494,6 @@ object LakeTable {
       case None => spark.read.option("mergeSchema", "true")
         .parquet(dirs.map(d => new Path(path, d).toString): _*)
     }
-  }
-
-  /** DV-applying read over a PRUNED file subset — the merge-on-read
-    * catalog-SQL serving path (B46): the same broadcast-vector filter
-    * as [[readDirsDv]], over only the files that survived
-    * stats/partition pruning. Sound because vectors key by
-    * (file_path, row_index): dropping a whole file drops its marks
-    * with it, and marks never make a row MATCH a predicate.
-    */
-  private[graft] def readPrunedDv(spark: SparkSession, path: String,
-      pruned: Seq[PrunedDir], flat: Boolean,
-      dv: Map[String, Map[String, Array[Byte]]],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    lazy val dvBc = spark.sparkContext.broadcast(dv.values.flatten.toMap)
-    def finish(df: DataFrame, groups: Seq[String]): DataFrame = {
-      val hasDv = groups.exists(g => dv.get(g).exists(_.nonEmpty))
-      if (!hasDv) df
-      else df
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .where(!org.apache.spark.sql.graftglue.Glue.column(
-          graft.plans.DvDeleted(
-            org.apache.spark.sql.graftglue.Glue.expression(col("__file")),
-            org.apache.spark.sql.graftglue.Glue.expression(col("__pos")), dvBc)))
-        .drop("__file", "__pos")
-    }
-    val mappings = tableMappings(spark, path)
-    val nonEmpty = pruned.filter(_.kept.nonEmpty)
-    if (nonEmpty.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (flat && mappings.isEmpty)
-      finish(spark.read.option("mergeSchema", "true")
-        .parquet(nonEmpty.flatMap(_.kept): _*), nonEmpty.map(p => groupKey(p.dir)))
-    else nonEmpty.map { pd =>
-      finish(applyMappings(spark.read.option("mergeSchema", "true").option("basePath", pd.base)
-        .parquet(pd.kept: _*), mappings, groupVersionOf(pd.dir)), Seq(groupKey(pd.dir)))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** MERGE INTO (copy-on-write upsert): rows of `source` replace
@@ -3781,7 +3774,7 @@ object LakeTable {
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
     val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(read(spark, path, Some(prev)), predicate))
+      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
     val old =
       if (touched.isEmpty) read(spark, path, Some(prev)).limit(0)
       else readDirsLive(spark, path, touched, prev)
@@ -3808,7 +3801,7 @@ object LakeTable {
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
     val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(read(spark, path, Some(prev)), predicate))
+      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       // Nothing can match: the commit is pure metadata, zero data moved.
@@ -3836,7 +3829,7 @@ object LakeTable {
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
     val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(read(spark, path, Some(prev)), predicate))
+      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       writeCommit(spark, path, Commit(v, "update", c.dirs))
@@ -3957,7 +3950,7 @@ object LakeTable {
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
     val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(read(spark, path, Some(prev)), predicate))
+      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       writeCommit(spark, path, Commit(v, "compact", c.dirs))

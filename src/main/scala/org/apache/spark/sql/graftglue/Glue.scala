@@ -111,6 +111,20 @@ object Glue {
     new ParquetOutputWriter(file, new TaskAttemptContextImpl(c, attempt))
   }
 
+  /** Analyze a boolean Column as a filter over a relation of
+    * `schema`: names resolve and implicit casts land exactly as in a
+    * query over a table of that schema, without planning a scan.
+    */
+  def analyzeCondition(spark: org.apache.spark.sql.SparkSession, cond: Column,
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.catalyst.plans.logical.Filter = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    spark.sessionState.analyzer.execute(Filter(
+      org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(cond.node),
+      LocalRelation(attrs))).asInstanceOf[Filter]
+  }
+
   /** Parse + analyze a SQL boolean expression against `schema` and
     * return it BOUND by ordinal — a serializable Expression a task can
     * wrap in `Predicate.create` for per-row evaluation (the CHECK
@@ -118,14 +132,10 @@ object Glue {
     */
   def boundExpression(spark: org.apache.spark.sql.SparkSession, sql: String,
       schema: org.apache.spark.sql.types.StructType): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.BindReferences
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val parsed = classic.sessionState.sqlParser.parseExpression(sql)
-    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
-    val analyzed = classic.sessionState.analyzer.execute(Filter(parsed, LocalRelation(attrs)))
-      .asInstanceOf[Filter]
-    BindReferences.bindReference(analyzed.condition, analyzed.child.output)
+    val analyzed = analyzeCondition(spark,
+      column(spark.sessionState.sqlParser.parseExpression(sql)), schema)
+    org.apache.spark.sql.catalyst.expressions.BindReferences
+      .bindReference(analyzed.condition, analyzed.child.output)
   }
 
   /** Hive-style partition-path escaping (matches what

@@ -514,4 +514,35 @@ class ColumnRenameSpec extends AnyFunSuite {
     }
     assert(sources.LakeTable.read(spark, p).select("value").as[Long].collect().toSeq == Seq(10L))
   }
+
+  test("readRange and readPoint assemble renamed groups under the logical names") {
+    val p = freshPath("lookups")
+    sources.LakeTable.create(spark, p,
+      spark.range(0, 100).select(col("id").as("k"), (col("id") * 10).as("amount"))
+        .repartitionByRange(2, col("k")))
+    sources.LakeTable.renameColumn(spark, p, "amount", "value")
+    val ranged = sources.LakeTable.readRange(spark, p, "value", 100L, 120L)
+    assert(ranged.columns.toSeq == Seq("k", "value"))
+    assert(ranged.select("k").as[Long].collect().sorted.toSeq == Seq(10L, 11L, 12L))
+    val point = sources.LakeTable.readPoint(spark, p, "value", 500L)
+    assert(point.columns.toSeq == Seq("k", "value"))
+    assert(point.as[(Long, Long)].collect().toSeq == Seq((50L, 500L)))
+    // lookups on an unrenamed column show the logical name too
+    assert(sources.LakeTable.readRange(spark, p, "k", 7L, 7L).columns.toSeq == Seq("k", "value"))
+    assert(sources.LakeTable.readPoint(spark, p, "k", 7L).as[(Long, Long)].collect().toSeq ==
+      Seq((7L, 70L)))
+  }
+
+  test("readRange and readPoint never return a dropped column") {
+    val p = freshPath("lookups_drop")
+    sources.LakeTable.create(spark, p,
+      Seq((1L, 10L, 100L), (2L, 20L, 200L)).toDF("k", "a", "b"))
+    sources.LakeTable.dropColumn(spark, p, "b")
+    val ranged = sources.LakeTable.readRange(spark, p, "k", 1L, 1L)
+    assert(ranged.columns.toSeq == Seq("k", "a"))
+    assert(ranged.as[(Long, Long)].collect().toSeq == Seq((1L, 10L)))
+    val point = sources.LakeTable.readPoint(spark, p, "k", 2L)
+    assert(point.columns.toSeq == Seq("k", "a"))
+    assert(point.as[(Long, Long)].collect().toSeq == Seq((2L, 20L)))
+  }
 }
