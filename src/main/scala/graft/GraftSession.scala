@@ -12,16 +12,10 @@ import scala.util.control.NonFatal
   */
 object GraftSession {
 
-  /** Root of every lake table the engine writes on its own (registry
-    * rows, stream sinks, the catalog warehouse): `GRAFT_LAKE_DIR`, else
-    * the build scratch dir `target/lake` under the working directory —
-    * the checkout, for sbt-forked runs.
+  /** Warehouse root served by the `graft_cat` catalog plugin, under
+    * the lake root [[graft.operators.Lakehouse.scratch]].
     */
-  def lakeRoot: String =
-    sys.env.getOrElse("GRAFT_LAKE_DIR", new java.io.File("target/lake").getAbsolutePath)
-
-  /** Warehouse root served by the `graft_cat` catalog plugin. */
-  def catalogRoot: String = lakeRoot + "/graft_cat"
+  def catalogRoot: String = graft.operators.Lakehouse.scratch + "/graft_cat"
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()

@@ -14,8 +14,10 @@ object Lakehouse {
 
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
 
-  /** Scratch root for lake writes ([[graft.GraftSession.lakeRoot]]). */
-  def scratch: String = graft.GraftSession.lakeRoot
+  /** Scratch root for lake writes (driver contract: stay inside the
+    * repo; target/ is build scratch).
+    */
+  def scratch: String = sys.env.getOrElse("GRAFT_LAKE_DIR", "/root/repo/target/lake")
 
   val qs: Seq[Q] = Seq(
 

@@ -1016,7 +1016,9 @@ object LakeTable {
     * read by [[readDirsDv]] — mapping chain, tombstone projection and
     * deletion vectors (sound: vectors key by (file, row), so a skipped
     * file takes its marks with it) — and shaped to the snapshot's
-    * `schema`, a column no surviving file carries reading as NULL.
+    * `schema`: its column order and types (a subset of files may merge
+    * to a narrower type), a column no surviving file carries reading
+    * as NULL.
     */
   private[graft] def readKept(spark: SparkSession, path: String, v: Long,
       schema: org.apache.spark.sql.types.StructType, pruned: Seq[PrunedDir]): DataFrame = {
@@ -1026,13 +1028,17 @@ object LakeTable {
     val dirs = live.map(_.dir)
     val df = readDirsDv(spark, path, dirs, dvFor(spark, path, v, dirs), withPos = false,
       kept = Some(live.map(pd => pd.dir -> pd.kept).toMap))
-    if (df.columns.toSeq == schema.fieldNames.toSeq) df
-    else {
-      val have = df.columns.toSet
-      df.select(schema.fields.toIndexedSeq.map(f =>
-        if (have(f.name)) col("`" + f.name.replace("`", "``") + "`")
-        else lit(null).cast(f.dataType).as(f.name)): _*)
-    }
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    def same(f: org.apache.spark.sql.types.StructField) =
+      have.get(f.name).exists(DataTypeUtils.sameType(_, f.dataType))
+    if (df.columns.toSeq == schema.fieldNames.toSeq && schema.fields.forall(same)) df
+    else df.select(schema.fields.toIndexedSeq.map { f =>
+      val c = col("`" + f.name.replace("`", "``") + "`")
+      if (same(f)) c
+      else if (have.contains(f.name)) c.cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
   }
 
   /** Snapshot `v` (of `schema`) pruned by the bounds
@@ -1952,15 +1958,20 @@ object LakeTable {
     // A checksummed file system (the local one) renames the body and its
     // .crc sidecar one after the other, so a read racing a publish can
     // pair one version's body with the other's checksum. A re-read sees
-    // a matched pair; real corruption fails every attempt.
+    // a matched pair once the publisher's second rename lands (backing
+    // off, since the publisher may be descheduled between the two);
+    // real corruption fails every attempt.
     def read(retries: Int): String =
       try {
         val in = fs.open(p)
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      } catch { case _: org.apache.hadoop.fs.ChecksumException if retries > 0 => read(retries - 1) }
+      } catch { case _: org.apache.hadoop.fs.ChecksumException if retries > 0 =>
+        Thread.sleep(1L << (6 - retries))
+        read(retries - 1)
+      }
     if (!fs.exists(p)) None
     else {
-      val body = read(retries = 3)
+      val body = read(retries = 6)
       if (!(body.startsWith("{") && body.trim.endsWith("}")))
         throw new IllegalStateException(
           s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}")
@@ -3255,21 +3266,29 @@ object LakeTable {
     * on one branch only is free — rows of the other branch may hold
     * any value), which is what lets an OR of partition tuples (dynamic
     * partition overwrite, IN-tuple deletes) still prune. A column
-    * reached through a cast counts only for a loss-free, non-string
-    * up-cast (order preserving). A DECIMAL column never bounds: its
-    * sidecar stats are parquet's unscaled integers. Numbers compare
-    * exactly, strings only under the default (binary) collation. Any other
-    * shape contributes nothing — skipping is an optimization, never a
-    * filter.
+    * reached through a cast counts only for an EXACT widening —
+    * integral to a wider integral, float to double — under which the
+    * bound means the same value on the column: a datetime cast shifts
+    * units or zones, and an integral → floating one rounds past 2^53
+    * (why Spark leaves it unwrapped), so neither bounds. A DECIMAL
+    * column never bounds: its sidecar stats are parquet's unscaled
+    * integers. Numbers compare exactly, strings only under the default
+    * (binary) collation. Any other shape contributes nothing —
+    * skipping is an optimization, never a filter.
     */
   private[graft] def boundsOf(cond: org.apache.spark.sql.catalyst.expressions.Expression)
       : Map[String, ColumnBounds] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{DataType, DecimalType, StringType}
+    import org.apache.spark.sql.types._
+    def exactWidening(from: DataType, to: DataType): Boolean = (from, to) match {
+      case (ByteType | ShortType | IntegerType | LongType, ByteType | ShortType | IntegerType |
+          LongType) => from.defaultSize <= to.defaultSize
+      case (FloatType, DoubleType) => true
+      case _ => false
+    }
     def nameOf(e: Expression): Option[String] = e match {
       case a: AttributeReference if !a.dataType.isInstanceOf[DecimalType] => Some(a.name)
-      case c: Cast if !c.dataType.isInstanceOf[StringType]
-          && Cast.canUpCast(c.child.dataType, c.dataType) => nameOf(c.child)
+      case c: Cast if exactWidening(c.child.dataType, c.dataType) => nameOf(c.child)
       case _ => None
     }
     def valueOf(v: Any, dt: DataType): Option[Any] = (v, dt) match {
@@ -3474,14 +3493,34 @@ object LakeTable {
   private def readDirsUnion(spark: SparkSession, path: String, dirs: Seq[String],
       mappings: Seq[MapRec], sources: Seq[String] => Seq[String],
       finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    // Partition columns take the meta-recorded types, as the clean
+    // explicit-spec read does: discovery from path strings would read
+    // a STRING value `01` as the int 1. A root whose discovered types
+    // differ re-reads with them fixed (a listing; no second footer merge).
+    lazy val recorded = metaSchema(spark, path).fold(Map.empty[String, DataType])(
+      _.fields.map(f => f.name -> f.dataType).toMap)
+    def readRoot(root: String, paths: Seq[String]): DataFrame = {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      val reader = spark.read.option("mergeSchema", "true")
+        .option("basePath", new Path(path, root).toString)
+      val df = reader.parquet(paths: _*)
+      val discovered = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation =>
+        l.relation }.collect { case h: HadoopFsRelation => h.partitionSchema.fieldNames.toSet }
+        .getOrElse(Set.empty[String])
+      if (discovered.isEmpty) return df
+      val typed = StructType(df.schema.fields.map(f => recorded.get(f.name) match {
+        case Some(t) if discovered(f.name) && t != f.dataType => f.copy(dataType = t)
+        case _ => f
+      }))
+      if (typed == df.schema) df else reader.schema(typed).parquet(paths: _*)
+    }
     val byRoot = dirs.groupBy(groupRoot).toSeq.sortBy(_._1)
     val reads = byRoot.flatMap { case (root, entries) =>
       val entryPaths = sources(entries)
       if (entryPaths.isEmpty) None
-      else Some(finish(applyMappings(spark.read.option("mergeSchema", "true")
-        .option("basePath", new Path(path, root).toString)
-        .parquet(entryPaths: _*), mappings, groupVersionOf(root)),
-        Seq(groupKey(root))))
+      else Some(finish(applyMappings(readRoot(root, entryPaths), mappings,
+        groupVersionOf(root)), Seq(groupKey(root))))
     }
     if (reads.nonEmpty) reads.reduce(_.unionByName(_, allowMissingColumns = true))
     else metaSchema(spark, path) match {

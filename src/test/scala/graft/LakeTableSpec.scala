@@ -2183,4 +2183,48 @@ class LakeTableSpec extends AnyFunSuite {
     assert(t.where(col("k") === lit(new java.math.BigDecimal("1.50"))).select("v").as[Long]
       .collect().toSeq === Seq(-1L))
   }
+
+  test("a column under a lossy or datetime cast never bounds: SQL and DELETE find the rows") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+    spark.sql("DROP TABLE IF EXISTS graft_cat.db.cast_serve")
+    val p = GraftSession.catalogRoot + "/db/cast_serve"
+    val big = 9007199254740993L // 2^53 + 1: rounds to 2^53 as a double
+    // two groups: the DATE stats are INT32 days, the BIGINT ones exact
+    def twoGroups(): Unit = {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))
+      LakeTable.create(spark, p, Seq((big, java.sql.Date.valueOf("2024-01-02"))).toDF("k", "d"))
+      LakeTable.append(spark, p, Seq((1L, java.sql.Date.valueOf("2023-06-01"))).toDF("k", "d"))
+    }
+    twoGroups()
+    def ks(where: String) = spark.sql(s"SELECT k FROM graft_cat.db.cast_serve WHERE $where")
+      .as[Long].collect().toSeq.sorted
+    // compares cast(d AS TIMESTAMP) with micros; as a bound on d it would
+    // meet INT32-day stats
+    assert(ks("d >= TIMESTAMP '2024-01-01 00:00:00'") === Seq(big))
+    // cast(k AS DOUBLE) <= 2^53 holds for 2^53 + 1
+    assert(ks("k <= 9.007199254740992E15") === Seq(1L, big))
+    LakeTable.delete(spark, p, col("k") <= lit(9.007199254740992E15))
+    assert(LakeTable.read(spark, p).count() === 0)
+    twoGroups()
+    LakeTable.delete(spark, p, col("d") >= lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+    assert(LakeTable.read(spark, p).select("k").as[Long].collect().toSeq === Seq(1L))
+    spark.sql("DROP TABLE IF EXISTS graft_cat.db.cast_serve")
+  }
+
+  test("a zero-padded STRING partition value reads back as the string") {
+    val p = s"$root/padded_part"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))
+    LakeTable.create(spark, p, Seq((1L, "01"), (2L, "02"), (3L, "10")).toDF("k", "p"),
+      partitionBy = Seq("p"))
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.schema("p").dataType === org.apache.spark.sql.types.StringType)
+      df.select("k", "p").as[(Long, String)].collect().toSeq.sorted
+    }
+    assert(rows(LakeTable.readRange(spark, p, "k", 1L, 1L)) === Seq((1L, "01")))
+    assert(rows(LakeTable.readPoint(spark, p, "p", "02")) === Seq((2L, "02")))
+    // vectors live: the full read takes the per-group-root path too
+    LakeTable.deleteMor(spark, p, col("k") === 3L)
+    assert(rows(LakeTable.read(spark, p)) === Seq((1L, "01"), (2L, "02")))
+    assert(rows(LakeTable.readRange(spark, p, "k", 1L, 2L)) === Seq((1L, "01"), (2L, "02")))
+  }
 }
