@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Glue
-import graft.plans.{AdcDistance, CosineSimilarity, HyperplaneSketch, MinHashSignature, NearestCentroid, SimHash64}
+import graft.plans.{AdcDistance, CosineSimilarity, HyperplaneSketch, MinHashSignature, NearestCentroid, NgramHashes, SimHash64}
 
 /** Column-API wrappers for graft's native expressions plus
   * HOF-composed reference implementations (used by specs to
@@ -25,6 +25,13 @@ object Vectors {
     val nb = aggregate(b, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double"))
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot / (sqrt(na) * sqrt(nb)))
   }
+
+  /** `xxhash64` of every `n` consecutive tokens of a string-array
+    * column, as one native loop per row (`distinct`: first occurrence
+    * of each hash only, in order). Shorter than `n` → empty array.
+    */
+  def ngramHashes(ws: Column, n: Int, distinct: Boolean): Column =
+    Glue.column(NgramHashes(Glue.expression(ws), n, distinct))
 
   def minhash(hashes: Column, numHashes: Int): Column =
     Glue.column(MinHashSignature(Glue.expression(hashes), numHashes))

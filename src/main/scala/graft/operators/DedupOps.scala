@@ -37,19 +37,25 @@ object DedupOps {
   }
 
   /** Distinct 3-gram word-shingle hashes from a MATERIALIZED token
-    * array column (must be an attribute, not an expression — the
-    * lambda references it three times per shingle). The coalesce makes
-    * the result NON-NULLABLE: downstream explodes/joins otherwise
-    * infer isnotnull(sh), and constraint pushdown inlines this whole
-    * tree into a pre-projection scan FILTER that re-executes it per
-    * row (the q_dedup_simhash pathology — measured 3.3 s → 0.45 s for
-    * one 500-doc shingle pass when the constraint dies here).
+    * array column (must be an attribute, not an expression — the tree
+    * references it three times). Each hash is `xxhash64(w_i, w_i+1,
+    * w_i+2)`, first occurrences in order, computed by the native
+    * [[graft.plans.NgramHashes]] kernel in one generated loop per row
+    * (a `transform(sequence(…), i -> xxhash64(…))` lambda gives the
+    * same array but is a `CodegenFallback`, interpreted per shingle
+    * with boxed indices and hashes; PlanSpec keeps it out).
+    * Documents under three tokens, and a null token array, hash as one
+    * shingle: `xxhash64` of the space-joined tokens (`""` for null).
+    * The coalesce makes the result NON-NULLABLE: downstream
+    * explodes/joins otherwise infer isnotnull(sh), and constraint
+    * pushdown inlines this whole tree into a pre-projection scan
+    * FILTER that re-executes it per row (the q_dedup_simhash pathology
+    * — measured 3.3 s → 0.45 s for one 500-doc shingle pass when the
+    * constraint dies here).
     */
   def shingleHashes(ws: Column): Column =
     coalesce(
-      when(size(ws) >= 3,
-        array_distinct(transform(sequence(lit(0), size(ws) - 3),
-          i => xxhash64(element_at(ws, i + 1), element_at(ws, i + 2), element_at(ws, i + 3)))))
+      when(size(ws) >= 3, Vectors.ngramHashes(ws, 3, distinct = true))
         .otherwise(array(xxhash64(concat_ws(" ", ws)))),
       array().cast("array<bigint>"))
 
@@ -415,7 +421,7 @@ object DedupOps {
         val docs = tokenized(s, d)
           .select(col("doc_id"),
             coalesce(Vectors.simhash(when(size(col("ws")) >= 2,
-              expr("transform(sequence(0, size(ws)-2), i -> xxhash64(ws[i], ws[i+1]))"))
+              Vectors.ngramHashes(col("ws"), 2, distinct = false))
               .otherwise(array(xxhash64(concat_ws(" ", col("ws")))))), lit(0L)).as("sh"))
         val bands = docs
           .select(col("doc_id"), col("sh"), explode(sequence(lit(0), lit(3))).as("band"))

@@ -4,12 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.Vectors
 
 /** D-block text analysis for LLM training-data pipelines. Everything
-  * here is built from codegen'd built-in functions (split/transform/
-  * filter/aggregate higher-order functions) — no Scala UDFs in the
-  * per-row path — so whole-stage codegen covers the hot loop and the
-  * operators scale linearly with input bytes.
+  * here is built from built-in functions (split/transform/filter/
+  * aggregate higher-order functions) and graft's native expressions
+  * (n-gram hashes come from `Vectors.ngramHashes`, one generated loop
+  * per row) — no Scala UDFs in the per-row path — so the operators
+  * scale linearly with input bytes.
   */
 object TextOps {
 
@@ -30,8 +32,8 @@ object TextOps {
   def fingerprints(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .withColumn("ws", split(col("text"), " "))
-      .withColumn("grams", when(size(col("ws")) >= 4, expr(
-        "transform(sequence(0, size(ws)-4), i -> xxhash64(ws[i], ws[i+1], ws[i+2], ws[i+3]))"))
+      .withColumn("grams", when(size(col("ws")) >= 4,
+        Vectors.ngramHashes(col("ws"), 4, distinct = false))
         .otherwise(array(xxhash64(col("text")))))
       .select(col("doc_id"), col("text"),
         xxhash64(concat_ws(",", transform(slice(array_sort(col("grams")), 1, 8), _.cast("string"))))

@@ -2,17 +2,100 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Native codegen expressions for the vector / hashing hot paths
   * (SURVEY.md E03/E04). Each stays inside whole-stage codegen — a
   * single fused loop per row instead of the N passes a
   * higher-order-function composition would make, and no Scala-UDF
-  * ser/de boundary.
+  * ser/de boundary. That includes the word n-gram hashes every dedup,
+  * MinHash, SimHash and fingerprint plan starts from
+  * ([[NgramHashes]]): a `transform(sequence(…), i -> xxhash64(…))`
+  * lambda is a `CodegenFallback`, interpreted per shingle with boxed
+  * indices and hashes.
   */
+
+/** Hashes of every run of `n` consecutive tokens of a string array,
+  * each equal to Spark's `xxhash64(t_i, …, t_{i+n-1})`: seed 42,
+  * `XXH64.hashUnsafeBytes` chained over each token's UTF-8 bytes, null
+  * tokens skipped. `distinct` keeps only the first occurrence of each
+  * hash, in order — what `array_distinct` over the same array gives.
+  * An array shorter than `n` yields an empty array; callers keep
+  * their own short-document fallback. One loop per row over the
+  * tokens into a primitive long array; the dedup set is open
+  * addressing over primitive longs, so nothing is boxed.
+  */
+case class NgramHashes(child: Expression, n: Int, distinct: Boolean)
+    extends UnaryExpression {
+
+  override def prettyName: String = "ngram_hashes"
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    // other collations hash a collation key, not the bytes
+    case ArrayType(st: StringType, _) if st.collationId == StringType.collationId =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"ngram_hashes expects array<string>, got $t")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    NgramHashKernel.hashes(input.asInstanceOf[ArrayData], n, distinct)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, ws => s"graft.plans.NgramHashKernel.hashes($ws, $n, $distinct)")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** The loop behind [[NgramHashes]], shared by its generated code and
+  * its interpreted `eval`, so the two cannot disagree.
+  */
+object NgramHashKernel {
+
+  /** XxHash64's default seed — `xxhash64(...)` in SQL. */
+  private val Seed = 42L
+
+  def hashes(ws: ArrayData, n: Int, distinct: Boolean): ArrayData = {
+    val m = ws.numElements() - n + 1
+    if (m <= 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    val out = new Array[Long](m)
+    // distinct: open-addressing set at load <= 1/2; `used` marks slots,
+    // so every long value (0 included) is a valid key
+    val mask = if (distinct) Integer.highestOneBit(m) * 4 - 1 else 0
+    val slots = if (distinct) new Array[Long](mask + 1) else null
+    val used = if (distinct) new Array[Boolean](mask + 1) else null
+    var k = 0
+    var i = 0
+    while (i < m) {
+      var h = Seed
+      var j = i
+      while (j < i + n) {
+        if (!ws.isNullAt(j)) {
+          val t = ws.getUTF8String(j)
+          h = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, h)
+        }
+        j += 1
+      }
+      if (distinct) {
+        var slot = (h ^ (h >>> 32)).toInt & mask
+        while (used(slot) && slots(slot) != h) slot = (slot + 1) & mask
+        if (!used(slot)) {
+          used(slot) = true; slots(slot) = h
+          out(k) = h; k += 1
+        }
+      } else {
+        out(k) = h; k += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out, Platform.LONG_ARRAY_OFFSET, k, 8)
+  }
+}
 
 /** Cosine similarity of two float vectors, accumulated in double.
   * Returns 0.0 when either norm is zero. Used by q_knn_* and

@@ -218,4 +218,21 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(fast.nonEmpty)
     } finally spark.conf.unset("spark.graft.cc.driverEdgeLimit")
   }
+
+  test("clustering releases its checkpoints: no persisted RDD outlives the call") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val clusters = operators.Clustering.dedupClusters(spark, sf).collect()
+    assert(clusters.nonEmpty)
+    assert(persisted -- before == Set.empty, "driver path left RDDs behind")
+    // The distributed loop keeps only the checkpoint its returned
+    // labels read; the edges and every superseded labels set are gone.
+    spark.conf.set("spark.graft.cc.driverEdgeLimit", "0")
+    try {
+      val before2 = persisted
+      val loop = operators.Clustering.dedupClusters(spark, sf).collect()
+      assert(loop.toSeq == clusters.toSeq)
+      assert((persisted -- before2).size == 1, s"loop left ${persisted -- before2}")
+    } finally spark.conf.unset("spark.graft.cc.driverEdgeLimit")
+  }
 }

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.NgramHashes
 import graft.sources.LakeTable
 
 /** Plan-shape assertions: the properties that make queries survive a
@@ -236,6 +239,24 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Generate explode"), p.take(3000))
     assert(!p.contains("array_intersect") && !p.contains("array_union"),
       s"shingle arrays resurfaced in the join:\n${p.take(3000)}")
+  }
+
+  test("dedup shingles hash natively: no interpreted lambda in the shingle or MinHash plans") {
+    // The n-gram hashes were a transform(sequence(…), i -> xxhash64(…))
+    // lambda — a CodegenFallback interpreted per shingle on the
+    // hottest dedup path. The kernel replaced it; this keeps it out.
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq("shingleTable" -> operators.DedupOps.shingleTable(spark, sf),
+        "minhashSignatures" -> operators.DedupOps.minhashSignatures(spark, sf)).foreach {
+      case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        val exprs = helper.collectWithSubqueries(plan) { case p => p.expressions }.flatten
+        val lambdas = exprs.flatMap(_.collect {
+          case e @ (_: ArrayTransform | _: LambdaFunction) => e
+        })
+        assert(lambdas.isEmpty, s"$name evaluates a lambda:\n$plan")
+        assert(exprs.exists(_.exists(_.isInstanceOf[NgramHashes])), s"$name:\n$plan")
+    }
   }
 
   test("q_lateral pushes the customer-range filter into the orders window") {
