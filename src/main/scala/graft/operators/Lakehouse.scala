@@ -227,10 +227,9 @@ object Lakehouse {
         t(s, d, "orders").select("o_orderkey", "o_orderpriority", "o_orderstatus")),
       verb = (s, _) => {
         val lake = s"$scratch/orders_analyze"
-        LakeTable.analyze(s, lake,
+        val ndv = LakeTable.analyze(s, lake,
           Seq("o_orderkey", "o_orderpriority", "o_orderstatus"))
         import s.implicits._
-        val ndv = LakeTable.tableNdv(s, lake)
         Seq(("o_orderpriority", ndv("o_orderpriority").ndv),
             ("o_orderstatus", ndv("o_orderstatus").ndv))
           .toDF("col_name", "ndv").orderBy("col_name")

@@ -171,7 +171,7 @@ case class GraftUpdateCommand(path: String,
   override def run(spark: SparkSession): Seq[Row] = {
     // DV-mode tables (Delta enableDeletionVectors): merge-on-read
     // update — vectors over old positions + one appended image group.
-    if (LakeTable.dvEnabled(spark, path))
+    if (LakeTable.meta(spark, path).dvMode)
       LakeTable.updateMor(spark, path, condition.getOrElse(lit(true)), set.toMap)
     else
       LakeTable.update(spark, path, condition.getOrElse(lit(true)), set.toMap)

@@ -259,25 +259,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // then the mapping records, the folded schema and the renamed-
     // through partition/sort specs land in ONE table-meta CAS. A
     // clause that fails leaves the table exactly as it was.
-    // CAS token FIRST — before ANY of the meta reads this statement
-    // folds over (writeTableMeta's contract): a concurrent DDL
-    // publishing after these reads must fail this commit's CAS rather
-    // than be silently overwritten.
-    val expect = LakeTable.metaCasToken(spark, p)
-    val parts0 = LakeTable.tablePartitioning(spark, p)
-    val sort0 = LakeTable.tableSortBy(spark, p)
-    val checks = LakeTable.tableChecks(spark, p)
-    var parts = parts0
-    var sortBy = sort0
+    val base = LakeTable.meta(spark, p)
+    var parts = base.partitionBy
+    var sortBy = base.sortBy
     val recs = Seq.newBuilder[LakeTable.MapRec]
     def refGuard(verb: String, name: String): Unit = {
       val ref = ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-      checks.foreach { case (cn, sql) =>
+      base.checks.foreach { case (cn, sql) =>
         require(ref.findFirstIn(sql).isEmpty,
           s"cannot $verb $name: CHECK constraint $cn references it ($sql)")
       }
     }
-    val updated = changes.foldLeft(LakeTable.tableSchema(spark, p)) {
+    val updated = changes.foldLeft(LakeTable.headSchema(spark, p, base)) {
       case (_, add: TableChange.AddColumn) if add.defaultValue() != null =>
         throw new UnsupportedOperationException(
           "ADD COLUMN with DEFAULT is not metadata-only here: existing rows " +
@@ -359,7 +352,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // The fold's OWN parts/sortBy (renamed clause by clause) publish —
     // never a re-derivation from disk, which would mis-follow chained
     // renames (a→b→c in one or across statements).
-    LakeTable.alterColumnsAtomic(spark, p, recs.result(), updated, parts, sortBy, expect)
+    LakeTable.alterColumnsAtomic(spark, p, recs.result(), updated, parts, sortBy, base)
     new GraftTable(p, None, Some(updated))
   }
 

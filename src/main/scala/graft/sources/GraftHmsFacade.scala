@@ -138,9 +138,8 @@ final class GraftRawStore extends RawStore {
     case t => t.catalogString
   }
 
-  private def colsOf(spark: SparkSession, path: String,
+  private def colsOf(schema: org.apache.spark.sql.types.StructType,
       partCols: Seq[String]): (java.util.List[FieldSchema], java.util.List[FieldSchema]) = {
-    val schema = LakeTable.tableSchema(spark, path)
     val (parts, data) = schema.fields.partition(f => partCols.contains(f.name))
     def fs(f: org.apache.spark.sql.types.StructField) =
       new FieldSchema(f.name, hiveType(f.dataType), f.getComment().orNull)
@@ -252,13 +251,14 @@ final class GraftRawStore extends RawStore {
     } else st.tableLocation(s, db, name) match {
       case None => null // handler translates to NoSuchObjectException
       case Some(loc) =>
-        val partCols = LakeTable.tablePartitioning(s, loc)
-        val (cols, partKeys) = colsOf(s, loc, partCols)
+        val v = LakeTable.currentVersion(s, loc)
+          .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $loc"))
+        val m = LakeTable.meta(s, loc)
+        val (cols, partKeys) = colsOf(LakeTable.tableSchema(s, loc, m, v), m.partitionBy)
         val params = new java.util.HashMap[String, String]()
         params.put("spark.sql.sources.provider", "graft")
         params.put("EXTERNAL", "TRUE")
-        LakeTable.currentVersion(s, loc).foreach(v =>
-          params.put("graft.version", v.toString))
+        params.put("graft.version", v.toString)
         new Table(name, db, "graft", nowSecs, 0, 0,
           placeholderSd(cols, loc), partKeys, params, null, null, "EXTERNAL_TABLE")
     }
@@ -309,12 +309,15 @@ final class GraftRawStore extends RawStore {
 
   // ---- partitions (read-only, from the current snapshot) ----------
 
+  /** (location, partition columns, visible leaves, the meta read). */
   private def leaves(s: SparkSession, st: CatalogStore, db: String, tbl: String)
-      : (String, Seq[String], Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)]) = {
+      : (String, Seq[String], Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)],
+        LakeTable.TableMeta) = {
     val loc = st.tableLocation(s, db, tbl)
       .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
-    val partCols = LakeTable.tablePartitioning(s, loc)
-    if (partCols.isEmpty) return (loc, Nil, Nil)
+    val m = LakeTable.meta(s, loc)
+    val partCols = m.partitionBy
+    if (partCols.isEmpty) return (loc, Nil, Nil, m)
     val v = LakeTable.currentVersion(s, loc)
       .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
     val dirs = LakeTable.readCommit(s, loc, v).dirs
@@ -322,7 +325,7 @@ final class GraftRawStore extends RawStore {
     val all = LakeTable.partitionLeaves(s, dirs, partCols)
     (loc, partCols,
       all.filterNot(l => GraftHmsFacade.droppedParts.contains(
-        partKey(s, db, tbl, loc, partName(partCols, l._1)))))
+        partKey(s, db, tbl, loc, partName(partCols, l._1)))), m)
   }
 
   /** Visibility-mark key, scoped to the table's LOCATION and commit-log
@@ -357,7 +360,7 @@ final class GraftRawStore extends RawStore {
 
   override def listPartitionNames(db: String, tbl: String,
       max: Short): java.util.List[String] = io { (s, st) =>
-    val (_, cols, ls) = leaves(s, st, db, tbl)
+    val (_, cols, ls, _) = leaves(s, st, db, tbl)
     val names = ls.map(_._1).distinct.map(partName(cols, _)).sorted
     (if (max >= 0) names.take(max.toInt) else names).toList.asJava
   }
@@ -372,7 +375,7 @@ final class GraftRawStore extends RawStore {
 
   override def getPartitions(db: String, tbl: String,
       max: Int): java.util.List[Partition] = io { (s, st) =>
-    val (_, cols, ls) = leaves(s, st, db, tbl)
+    val (_, cols, ls, _) = leaves(s, st, db, tbl)
     val distinct = ls.groupBy(_._1).map { case (vs, group) => (vs, group.head._2) }
       .toSeq.sortBy(p => partName(cols, p._1))
     val lim = if (max >= 0) distinct.take(max) else distinct
@@ -381,7 +384,7 @@ final class GraftRawStore extends RawStore {
 
   override def getPartition(db: String, tbl: String,
       vals: java.util.List[String]): Partition = io { (s, st) =>
-    val (_, cols, ls) = leaves(s, st, db, tbl)
+    val (_, cols, ls, _) = leaves(s, st, db, tbl)
     val want = vals.asScala.toSeq
     ls.find(_._1.map(_.getOrElse("__HIVE_DEFAULT_PARTITION__")) == want)
       .map { case (vs, dir) => mkPartition(db, tbl, cols, vs, dir) }
@@ -391,7 +394,7 @@ final class GraftRawStore extends RawStore {
 
   override def getPartitionsByNames(db: String, tbl: String,
       names: java.util.List[String]): java.util.List[Partition] = io { (s, st) =>
-    val (_, cols, ls) = leaves(s, st, db, tbl)
+    val (_, cols, ls, _) = leaves(s, st, db, tbl)
     val byName = ls.groupBy(p => partName(cols, p._1))
     names.asScala.flatMap(n => byName.get(n).map(g =>
       mkPartition(db, tbl, cols, g.head._1, g.head._2))).toList.asJava
@@ -423,11 +426,11 @@ final class GraftRawStore extends RawStore {
   private def filteredLeaves(s: SparkSession, st: CatalogStore, db: String,
       tbl: String, filter: String)
       : (Seq[String], Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)]) = {
-    val (loc, cols, ls) = leaves(s, st, db, tbl)
+    val (loc, cols, ls, m) = leaves(s, st, db, tbl)
     if (filter == null || filter.trim.isEmpty) return (cols, ls)
     val tree = org.apache.hadoop.hive.metastore.PartFilterExprUtil
       .getFilterParser(filter).tree
-    val schema = LakeTable.tableSchema(s, loc)
+    val schema = LakeTable.headSchema(s, loc, m)
     val numeric = cols.filter(c => schema.fields.exists(f =>
       f.name.equalsIgnoreCase(c) && (f.dataType match {
         case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
@@ -627,7 +630,7 @@ final class GraftRawStore extends RawStore {
   override def listPartitionNamesPs(db: String, tbl: String,
       spec: java.util.List[String], max: Short): java.util.List[String] =
     io { (s, st) =>
-      val (_, cols, ls) = leaves(s, st, db, tbl)
+      val (_, cols, ls, _) = leaves(s, st, db, tbl)
       val want = spec.asScala.toSeq
       val names = ls.map(_._1).distinct.filter(psMatches(want, _))
         .map(partName(cols, _)).sorted
@@ -638,7 +641,7 @@ final class GraftRawStore extends RawStore {
       spec: java.util.List[String], max: Short, user: String,
       groups: java.util.List[String]): java.util.List[Partition] =
     io { (s, st) =>
-      val (_, cols, ls) = leaves(s, st, db, tbl)
+      val (_, cols, ls, _) = leaves(s, st, db, tbl)
       val want = spec.asScala.toSeq
       val distinct = ls.filter(l => psMatches(want, l._1))
         .groupBy(_._1).map { case (vs, g) => (vs, g.head._2) }
@@ -721,7 +724,7 @@ final class GraftRawStore extends RawStore {
       // the canonical Hive partition name: the desc carries it when the
       // client set one; otherwise derive it from partVals + the spec
       val pn = Option(desc.getPartName).filter(_.nonEmpty).getOrElse {
-        val (_, pcols, _) = leaves(s, st, desc.getDbName, desc.getTableName)
+        val (_, pcols, _, _) = leaves(s, st, desc.getDbName, desc.getTableName)
         partName(pcols, partVals.asScala.toSeq.map(Option(_)))
       }
       val fresh = decodeStatsObjs(s, loc, cs)
@@ -753,8 +756,9 @@ final class GraftRawStore extends RawStore {
         case Some(loc) =>
           val agg = LakeTable.aggregatedColumnStats(s, loc)
           val nullsAgg = LakeTable.aggregatedColumnNulls(s, loc)
-          val ndvMap = LakeTable.tableNdv(s, loc)
-          val schema = LakeTable.tableSchema(s, loc)
+          val m = LakeTable.meta(s, loc)
+          val ndvMap = m.ndv
+          val schema = LakeTable.headSchema(s, loc, m)
           def bd(v: String) = new java.math.BigDecimal(v)
           val objs = cols.asScala.flatMap { c =>
             val stringData = // ANALYZE-backed string stats (lengths + NDV)
@@ -818,10 +822,10 @@ final class GraftRawStore extends RawStore {
       import org.apache.hadoop.hive.metastore.api.{ColumnStatistics, ColumnStatisticsData, ColumnStatisticsDesc, ColumnStatisticsObj, DoubleColumnStatsData, LongColumnStatsData}
       val loc = st.tableLocation(s, db, tbl)
         .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
-      val (_, pcols, ls) = leaves(s, st, db, tbl)
+      val (_, pcols, ls, m) = leaves(s, st, db, tbl)
       val byName = ls.groupBy(p => partName(pcols, p._1))
-      val schema = LakeTable.tableSchema(s, loc)
-      val pndvAll = LakeTable.partitionNdv(s, loc)
+      val schema = LakeTable.headSchema(s, loc, m)
+      val pndvAll = m.pndv
       def bd(v: String) = new java.math.BigDecimal(v)
       partNames.asScala.flatMap { pn =>
         byName.get(pn).flatMap { group =>
@@ -897,7 +901,7 @@ final class GraftRawStore extends RawStore {
       val loc = st.tableLocation(s, db, tbl)
         .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
       if (colName == null)
-        LakeTable.tableNdv(s, loc).keys.foreach(LakeTable.dropNdv(s, loc, _))
+        LakeTable.meta(s, loc).ndv.keys.foreach(LakeTable.dropNdv(s, loc, _))
       else LakeTable.dropNdv(s, loc, colName)
       true
     }

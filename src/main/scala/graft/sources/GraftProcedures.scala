@@ -102,8 +102,7 @@ object GraftProcedures {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
           val cols = in.getUTF8String(1).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-          LakeTable.setSortBy(spark, p, cols)
-          row(UTF8String.fromString(LakeTable.tableSortBy(spark, p).mkString(",")))
+          row(UTF8String.fromString(LakeTable.setSortBy(spark, p, cols).sortBy.mkString(",")))
         }
       }
       case "set_partitioning" => new Proc("set_partitioning",
@@ -112,8 +111,8 @@ object GraftProcedures {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
           val cols = in.getUTF8String(1).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-          LakeTable.setPartitioning(spark, p, cols)
-          row(UTF8String.fromString(LakeTable.tablePartitioning(spark, p).mkString(",")))
+          row(UTF8String.fromString(
+            LakeTable.setPartitioning(spark, p, cols).partitionBy.mkString(",")))
         }
       }
       case "cluster_by" => new Proc("cluster_by",
@@ -158,10 +157,9 @@ object GraftProcedures {
           StructType(Seq(StructField("checks", StringType)))) {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
-          LakeTable.addCheck(spark, p, in.getUTF8String(1).toString,
+          val m = LakeTable.addCheck(spark, p, in.getUTF8String(1).toString,
             in.getUTF8String(2).toString)
-          row(UTF8String.fromString(
-            LakeTable.tableChecks(spark, p).map(_._1).mkString(",")))
+          row(UTF8String.fromString(m.checks.map(_._1).mkString(",")))
         }
       }
       case "drop_check" => new Proc("drop_check",
@@ -169,9 +167,8 @@ object GraftProcedures {
           StructType(Seq(StructField("checks", StringType)))) {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
-          LakeTable.dropCheck(spark, p, in.getUTF8String(1).toString)
-          row(UTF8String.fromString(
-            LakeTable.tableChecks(spark, p).map(_._1).mkString(",")))
+          val m = LakeTable.dropCheck(spark, p, in.getUTF8String(1).toString)
+          row(UTF8String.fromString(m.checks.map(_._1).mkString(",")))
         }
       }
       case "delete_mor" => new Proc("delete_mor",
@@ -276,8 +273,7 @@ object GraftProcedures {
           StructType(Seq(StructField("dv_mode", BooleanType)))) {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
-          LakeTable.setDvMode(spark, p, in.getBoolean(1))
-          row(java.lang.Boolean.valueOf(LakeTable.dvEnabled(spark, p)))
+          row(java.lang.Boolean.valueOf(LakeTable.setDvMode(spark, p, in.getBoolean(1)).dvMode))
         }
       }
       // ---- grant management (C24) — the Kyuubi/Hive `GRANT` surface

@@ -77,19 +77,28 @@ final class GraftTable(path: String, version: Option[Long],
 
   import org.apache.spark.sql.catalyst.InternalRow
 
-  private def partitionCols: Seq[String] = LakeTable.tablePartitioning(spark, path)
-
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
-    partitionCols.map(org.apache.spark.sql.connector.expressions.Expressions.identity).toArray
+    LakeTable.meta(spark, path).partitionBy
+      .map(org.apache.spark.sql.connector.expressions.Expressions.identity).toArray
 
-  override def partitionSchema(): StructType =
-    StructType(partitionCols.map(c => schema()(c)))
+  override def partitionSchema(): StructType = partitionState()._2
+
+  /** The partition columns and their types, from one meta read. */
+  private def partitionState(): (Seq[String], StructType) =
+    version.orElse(LakeTable.currentVersion(spark, path)) match {
+      case None => (Nil, new StructType())
+      case Some(v) =>
+        val m = LakeTable.meta(spark, path)
+        val s = providedSchema.filter(_.nonEmpty)
+          .getOrElse(LakeTable.tableSchema(spark, path, m, v))
+        (m.partitionBy, StructType(m.partitionBy.map(s(_))))
+    }
 
   /** Partition values of every leaf dir in the current snapshot (one
     * row per distinct partition tuple across all file groups).
     */
   private def partitionRows(): Seq[(Seq[Option[String]], InternalRow)] = {
-    val pSchema = partitionSchema()
+    val (partitionCols, pSchema) = partitionState()
     val v = version.orElse(LakeTable.currentVersion(spark, path))
       .getOrElse(return Nil)
     val c = LakeTable.readCommit(spark, path, v)
@@ -175,7 +184,7 @@ final class GraftTable(path: String, version: Option[Long],
       .reduceOption(_ && _).getOrElse(lit(true))
     // Delta's enableDeletionVectors semantics: DV-mode tables take the
     // merge-on-read path (B46) — no group rewrite, cost ∝ deleted rows.
-    if (LakeTable.dvEnabled(spark, path)) LakeTable.deleteMor(spark, path, cond)
+    if (LakeTable.meta(spark, path).dvMode) LakeTable.deleteMor(spark, path, cond)
     else LakeTable.delete(spark, path, cond)
   }
 
@@ -193,12 +202,10 @@ final class GraftTable(path: String, version: Option[Long],
       LakeTable.currentVersion(spark, path).foreach { v =>
         m.put("current-version", v.toString)
       }
-      val sb = LakeTable.tableSortBy(spark, path)
-      if (sb.nonEmpty) m.put("write.sort.by", sb.mkString(","))
-      LakeTable.tableChecks(spark, path).foreach { case (n, sql) =>
-        m.put(s"check.$n", sql)
-      }
-      if (LakeTable.dvEnabled(spark, path)) m.put("deletion-vectors", "enabled")
+      val meta = LakeTable.meta(spark, path)
+      if (meta.sortBy.nonEmpty) m.put("write.sort.by", meta.sortBy.mkString(","))
+      meta.checks.foreach { case (n, sql) => m.put(s"check.$n", sql) }
+      if (meta.dvMode) m.put("deletion-vectors", "enabled")
       val tags = LakeTable.tags(spark, path)
       if (tags.nonEmpty)
         m.put("tags", tags.toSeq.sortBy(_._1)
@@ -206,9 +213,8 @@ final class GraftTable(path: String, version: Option[Long],
       LakeTable.cdcKey(spark, path).foreach(k => m.put("cdc.key", k))
       // ANALYZE results at a glance: which columns carry stats and the
       // snapshot they measured (staleness is visible, not hidden)
-      val ndv = LakeTable.tableNdv(spark, path)
-      if (ndv.nonEmpty)
-        m.put("stats.analyzed", ndv.toSeq.sortBy(_._1)
+      if (meta.ndv.nonEmpty)
+        m.put("stats.analyzed", meta.ndv.toSeq.sortBy(_._1)
           .map { case (c, r) => s"$c=${r.ndv}@v${r.asOf}" }.mkString(","))
     } catch { case _: Exception => () } // a fresh CTAS target has no state yet
     m
@@ -216,9 +222,9 @@ final class GraftTable(path: String, version: Option[Long],
 
   override def schema(): StructType =
     providedSchema.filter(_.nonEmpty).getOrElse {
-      if (LakeTable.currentVersion(spark, path).isDefined)
-        LakeTable.tableSchema(spark, path, version)
-      else new StructType() // not-yet-created target of a first write
+      version.orElse(LakeTable.currentVersion(spark, path))
+        // no version: the not-yet-created target of a first write
+        .fold(new StructType())(v => LakeTable.tableSchema(spark, path, Some(v)))
     }
 
   override def capabilities(): util.Set[TableCapability] = {
@@ -249,6 +255,8 @@ final class GraftTable(path: String, version: Option[Long],
       .orElse(LakeTable.currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val commit = LakeTable.readCommit(spark, path, v)
+    val m = LakeTable.meta(spark, path)
+    val schema = LakeTable.tableSchema(spark, path, m, v)
     // A snapshot carrying deletion vectors (B46 merge-on-read) serves
     // through GraftDvScanBuilder: V1 filter pushdown + column pruning
     // + sidecar-stats file skipping, vectors applied inside the
@@ -262,14 +270,11 @@ final class GraftTable(path: String, version: Option[Long],
     // (see GraftDvScanBuilder); compaction migrates groups to the
     // current physical names and vector-free files, restoring the
     // fully-V2 path.
-    if (LakeTable.dvFor(spark, path, v, commit.dirs).nonEmpty
-        || LakeTable.tableMappings(spark, path).nonEmpty)
-      return new GraftDvScanBuilder(spark, path, v,
-        LakeTable.tableSchema(spark, path, Some(v)))
+    if (LakeTable.dvFor(spark, path, v, commit.dirs).nonEmpty || m.mappings.nonEmpty)
+      return new GraftDvScanBuilder(spark, path, m, v, schema)
     val scanOpts = new CaseInsensitiveStringMap(
       (options.asCaseSensitiveMap().asScala.toMap ++ Map("mergeSchema" -> "true")).asJava)
-    new GraftScanBuilder(spark, path, commit.dirs,
-      LakeTable.tableSchema(spark, path, Some(v)), scanOpts,
+    new GraftScanBuilder(spark, path, m, commit.dirs, schema, scanOpts,
       atHead = LakeTable.currentVersion(spark, path).contains(v))
   }
 
@@ -303,8 +308,8 @@ final class GraftTable(path: String, version: Option[Long],
   * `CALL system.compact` still purges vectors and restores the fully
   * columnar V2 scan.
   */
-final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
-    tableSchema: StructType) extends ScanBuilder
+final class GraftDvScanBuilder(spark: SparkSession, path: String, meta: LakeTable.TableMeta,
+    v: Long, tableSchema: StructType) extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
@@ -346,7 +351,7 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
 
   override def build(): org.apache.spark.sql.connector.read.Scan = {
     val filterCol = pushed.flatMap(toColumn(_)).reduceOption(_ && _)
-    val (pruned, _) = LakeTable.pruneFilesByDir(spark, path,
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, path, meta.renames,
       LakeTable.readCommit(spark, path, v).dirs,
       filterCol.fold(Map.empty[String, LakeTable.ColumnBounds])(
         LakeTable.predicateBounds(spark, tableSchema, _)))
@@ -379,7 +384,7 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
           .fold(java.util.OptionalLong.empty())(t => java.util.OptionalLong.of(t._1))
       else java.util.OptionalLong.empty()
     val colStatsMap =
-      if (unpruned) LakeTable.v2ColumnStats(spark, path, required.fieldNames.toSeq)
+      if (unpruned) LakeTable.v2ColumnStats(spark, path, meta, required.fieldNames.toSeq)
       else new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
@@ -404,7 +409,7 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, v: Long,
           override def sqlContext: org.apache.spark.sql.SQLContext = ctx
           override def schema: StructType = reqSchema
           override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val base = LakeTable.readKept(spark, path, v, tableSchema, pruned)
+            val base = LakeTable.readKept(spark, path, meta, v, tableSchema, pruned)
             val filtered = filterCol.fold(base)(base.where)
             filtered.select(reqCols.map(col): _*).rdd
           }
@@ -495,14 +500,15 @@ final class GraftCdcTable(path: String) extends Table with SupportsRead {
   * deliberately not layered on top (the API read paths still apply
   * it via pruneFilesByDir).
   */
-final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String],
-    schema: StructType, options: CaseInsensitiveStringMap, atHead: Boolean = true)
+final class GraftScanBuilder(spark: SparkSession, path: String, meta: LakeTable.TableMeta,
+    dirs: Seq[String], schema: StructType, options: CaseInsensitiveStringMap,
+    atHead: Boolean = true)
     extends org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
   import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 
-  private val partCols = LakeTable.tablePartitioning(spark, path)
+  private val partCols = meta.partitionBy
 
   private def mkInner(paths: Seq[String])
       : org.apache.spark.sql.connector.read.ScanBuilder
@@ -542,7 +548,7 @@ final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String
     val all = dirs.map(d => new Path(path, d).toString)
     val paths =
       if (bounds.isEmpty) all
-      else LakeTable.pruneFiles(spark, path, dirs, bounds).getOrElse(all)
+      else LakeTable.pruneFiles(spark, path, meta.renames, dirs, bounds).getOrElse(all)
     val inner = mkInner(paths)
     if (pushed.nonEmpty) inner.pushFilters(pushed)
     prunedSchema.foreach(inner.pruneColumns)
@@ -553,7 +559,7 @@ final class GraftScanBuilder(spark: SparkSession, path: String, dirs: Seq[String
     // row-count/NDV aggregates always describe currentVersion, so a
     // VERSION/TIMESTAMP AS OF scan must not claim them as its own
     // (plans only — results were always version-correct).
-    new GraftStreamableScan(inner.build(), spark, path, schema, options,
+    new GraftStreamableScan(inner.build(), spark, path, meta, schema, options,
       org.apache.spark.sql.types.StructType(partCols.map(c => schema(c))),
       snapshotStats = (paths eq all) && atHead)
   }

@@ -43,9 +43,12 @@ private[sources] object GraftWriteUtil {
     * (schema evolution by name keeps working); otherwise same-arity
     * writes align BY POSITION and cast to the table's column types.
     */
-  def targetSchema(spark: SparkSession, path: String, incoming: StructType): StructType = {
-    if (LakeTable.currentVersion(spark, path).isEmpty) return incoming
-    val t = LakeTable.tableSchema(spark, path)
+  def targetSchema(spark: SparkSession, path: String, m: LakeTable.TableMeta,
+      incoming: StructType): StructType = {
+    val t = LakeTable.currentVersion(spark, path) match {
+      case None => return incoming
+      case Some(v) => LakeTable.tableSchema(spark, path, m, v)
+    }
     val byName = incoming.fieldNames.forall(c => t.fieldNames.exists(_.equalsIgnoreCase(c)))
     if (byName)
       // Name-matched writes still NORMALIZE each column to the table's
@@ -72,10 +75,9 @@ private[sources] object GraftWriteUtil {
     * coercion need the session), shipped to tasks as serializable
     * Expressions for per-row Predicate evaluation. NULL passes.
     */
-  def boundChecks(spark: SparkSession, path: String, target: StructType)
+  def boundChecks(spark: SparkSession, m: LakeTable.TableMeta, target: StructType)
       : Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] =
-    if (LakeTable.currentVersion(spark, path).isEmpty) Nil
-    else LakeTable.tableChecks(spark, path).map { case (n, sql) =>
+    m.checks.map { case (n, sql) =>
       n -> Glue.boundExpression(spark, s"coalesce(($sql), true)", target)
     }
 }
@@ -119,6 +121,15 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
+  /** The table meta this write plans and stages under (empty for the
+    * first write to a fresh path).
+    */
+  private val meta: LakeTable.TableMeta = {
+    val spark = org.apache.spark.sql.graftglue.Glue.activeSession
+    if (LakeTable.currentVersion(spark, path).isEmpty) LakeTable.TableMeta.empty
+    else LakeTable.meta(spark, path)
+  }
+
   /** Writes to a PARTITIONED table request a clustered distribution on
     * the partition columns: without it every task holds an open writer
     * for every partition it sees — at 1000 executors × P partitions
@@ -130,16 +141,11 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     * could not resolve).
     */
   private val clusterCols: Seq[String] = {
-    val spark = org.apache.spark.sql.graftglue.Glue.activeSession
-    if (LakeTable.currentVersion(spark, path).isEmpty) Nil
-    else {
-      val parts = LakeTable.tablePartitioning(spark, path)
-      val names = info.schema().fieldNames
-      // use the INCOMING spelling of each partition column so the
-      // distribution expressions resolve against the query output
-      val resolved = parts.flatMap(p => names.find(_.equalsIgnoreCase(p)))
-      if (resolved.length == parts.length) resolved else Nil
-    }
+    val names = info.schema().fieldNames
+    // use the INCOMING spelling of each partition column so the
+    // distribution expressions resolve against the query output
+    val resolved = meta.partitionBy.flatMap(p => names.find(_.equalsIgnoreCase(p)))
+    if (resolved.length == meta.partitionBy.length) resolved else Nil
   }
 
   /** Columns of the recorded write sort order (B43, the Iceberg
@@ -147,14 +153,9 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     * empty when unset or unresolvable (positional inserts).
     */
   private val sortCols: Seq[String] = {
-    val spark = org.apache.spark.sql.graftglue.Glue.activeSession
-    if (LakeTable.currentVersion(spark, path).isEmpty) Nil
-    else {
-      val sb = LakeTable.tableSortBy(spark, path)
-      val names = info.schema().fieldNames
-      val resolved = sb.flatMap(c => names.find(_.equalsIgnoreCase(c)))
-      if (resolved.length == sb.length) resolved else Nil
-    }
+    val names = info.schema().fieldNames
+    val resolved = meta.sortBy.flatMap(c => names.find(_.equalsIgnoreCase(c)))
+    if (resolved.length == meta.sortBy.length) resolved else Nil
   }
 
   private def sortOrderOf(c: String) =
@@ -197,20 +198,17 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     org.apache.spark.sql.graftglue.Glue.activeSession.conf
       .getOption("spark.graft.write.advisoryPartitionBytes").map(_.toLong).getOrElse(0L)
 
-  override def toBatch: BatchWrite = new GraftBatchWrite(path, info, mode)
-  override def toStreaming: StreamingWrite = new GraftStreamingWrite(path, info, mode)
+  override def toBatch: BatchWrite = new GraftBatchWrite(path, info, mode, meta)
+  override def toStreaming: StreamingWrite = new GraftStreamingWrite(path, info, mode, meta)
 }
 
-final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMode)
-    extends BatchWrite {
+final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMode,
+    meta: LakeTable.TableMeta) extends BatchWrite {
 
   private def spark: SparkSession = org.apache.spark.sql.graftglue.Glue.activeSession
   private val incoming = info.schema()
-  private val target = GraftWriteUtil.targetSchema(spark, path, incoming)
-  private val partCols =
-    if (LakeTable.currentVersion(spark, path).isDefined)
-      LakeTable.tablePartitioning(spark, path)
-    else Nil
+  private val target = GraftWriteUtil.targetSchema(spark, path, meta, incoming)
+  private val partCols = meta.partitionBy
   // Fail at planning, not as an opaque task failure on an executor.
   partCols.foreach { c =>
     require(target.fieldNames.exists(_.equalsIgnoreCase(c)),
@@ -226,7 +224,7 @@ final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWri
     new GraftWriterFactory(path, stagedDir, incoming, target, partCols,
       spark.conf.get("spark.sql.session.timeZone"),
       Glue.broadcastConf(spark.sparkContext, Glue.sessionHadoopConf(spark)),
-      GraftWriteUtil.boundChecks(spark, path, target))
+      GraftWriteUtil.boundChecks(spark, meta, target))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.toSeq.flatMap {
@@ -239,8 +237,7 @@ final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWri
       case GraftWriteMode.OverwritePred(p) => LakeTable.StagedMode.ReplaceWhere(p)
       case GraftWriteMode.Dynamic => LakeTable.StagedMode.DynamicPartitions
     }
-    LakeTable.commitStaged(spark, path, stagedDir, files, staged,
-      createSchema = Some(target))
+    LakeTable.commitStaged(spark, path, stagedDir, files, staged)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -254,16 +251,13 @@ final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWri
   * sink. Append mode appends each epoch; Complete (truncate) mode
   * replaces the table each epoch (history-preserving).
   */
-final class GraftStreamingWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMode)
-    extends StreamingWrite {
+final class GraftStreamingWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMode,
+    meta: LakeTable.TableMeta) extends StreamingWrite {
 
   private def spark: SparkSession = org.apache.spark.sql.graftglue.Glue.activeSession
   private val incoming = info.schema()
-  private val target = GraftWriteUtil.targetSchema(spark, path, incoming)
-  private val partCols =
-    if (LakeTable.currentVersion(spark, path).isDefined)
-      LakeTable.tablePartitioning(spark, path)
-    else Nil
+  private val target = GraftWriteUtil.targetSchema(spark, path, meta, incoming)
+  private val partCols = meta.partitionBy
   partCols.foreach { c =>
     require(target.fieldNames.exists(_.equalsIgnoreCase(c)),
       s"streaming write to partitioned table $path must supply partition column $c; " +
@@ -278,7 +272,7 @@ final class GraftStreamingWrite(path: String, info: LogicalWriteInfo, mode: Graf
     new GraftWriterFactory(path, base, incoming, target, partCols,
       spark.conf.get("spark.sql.session.timeZone"),
       Glue.broadcastConf(spark.sparkContext, Glue.sessionHadoopConf(spark)),
-      GraftWriteUtil.boundChecks(spark, path, target))
+      GraftWriteUtil.boundChecks(spark, meta, target))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val dir = epochDir(epochId)
@@ -298,8 +292,7 @@ final class GraftStreamingWrite(path: String, info: LogicalWriteInfo, mode: Graf
         return
       }
       try {
-        LakeTable.commitStaged(spark, path, dir, files, staged,
-          txn = Some(appId -> epochId), createSchema = Some(target))
+        LakeTable.commitStaged(spark, path, dir, files, staged, txn = Some(appId -> epochId))
         return
       } catch {
         case e: IllegalStateException =>

@@ -94,7 +94,7 @@ final class LakeMicroBatchStream(spark: SparkSession, path: String,
   override protected def admissionOptions: CaseInsensitiveStringMap = options
 
   private def innerBatch(dirPaths: Seq[String]): Batch = {
-    val partCols = LakeTable.tablePartitioning(spark, path)
+    val partCols = LakeTable.meta(spark, path).partitionBy
     if (partCols.isEmpty)
       ParquetTable(s"graft.`$path`", spark, options, dirPaths, Some(schema),
         classOf[ParquetFileFormat]).newScanBuilder(options).build().toBatch
@@ -461,7 +461,7 @@ final class GraftKeyedFilePartition(index: Int,
   * storage partition, so partition sizing governs parallelism.
   */
 final class GraftStreamableScan(val inner: Scan, spark: SparkSession, val path: String,
-    schema: StructType, options: CaseInsensitiveStringMap,
+    meta: LakeTable.TableMeta, schema: StructType, options: CaseInsensitiveStringMap,
     partSchema: StructType = new StructType(),
     snapshotStats: Boolean = false) extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -494,7 +494,7 @@ final class GraftStreamableScan(val inner: Scan, spark: SparkSession, val path: 
       else base.fold(java.util.OptionalLong.empty())(_.numRows())
     val cstats =
       if (snapshotStats)
-        graft.sources.LakeTable.v2ColumnStats(spark, path,
+        graft.sources.LakeTable.v2ColumnStats(spark, path, meta,
           inner.readSchema().fieldNames.toSeq)
       else new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,

@@ -80,6 +80,9 @@ object LakeTable {
     */
   private[graft] val logOps = new java.util.concurrent.atomic.LongAdder
 
+  /** Diagnostic/test hook: every open of a table's `_table.json`. */
+  private[graft] val metaReads = new java.util.concurrent.atomic.LongAdder
+
   private def checkpointFile(path: String) = new Path(logDir(path), "_checkpoint.json")
 
   private def writeCheckpoint(spark: SparkSession, path: String, v: Long): Unit =
@@ -298,18 +301,18 @@ object LakeTable {
       } finally in.close()
     } catch { case _: java.io.IOException => None }
 
-  private def writeGroup(spark: SparkSession, path: String, v: Long, df: DataFrame,
-      partitionBy: Seq[String]): String = {
+  private def writeGroup(spark: SparkSession, path: String, m: TableMeta, v: Long,
+      df: DataFrame, partitionBy: Seq[String]): String = {
     // Type normalization: a column arriving NARROWER than the table's
     // recorded type (an INT literal into a BIGINT column) up-casts
     // in-stream (codegen'd, lossless only) — storing the narrower
     // physical type would poison later mergeSchema reads with
     // CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE. First write (create) has
     // no schema to align to and passes through.
-    val aligned =
-      if (currentVersion(spark, path).isEmpty) df
-      else {
-        val t = tableSchema(spark, path)
+    val aligned = currentVersion(spark, path) match {
+      case None => df
+      case Some(head) =>
+        val t = tableSchema(spark, path, m, head)
         df.schema.fields.foldLeft(df) { case (d, f) =>
           t.fields.find(_.name.equalsIgnoreCase(f.name)) match {
             case Some(tf) if tf.dataType != f.dataType &&
@@ -319,12 +322,12 @@ object LakeTable {
             case _ => d
           }
         }
-      }
+    }
     // CHECK constraints guard every API-verb write in-stream: an
     // assert_true filter per constraint (codegen'd, no extra pass) —
     // the first violating row fails the job before anything commits.
     // SQL semantics: NULL passes (coalesce to true).
-    val guarded = tableChecks(spark, path).foldLeft(aligned) { case (d, (n, sql)) =>
+    val guarded = m.checks.foldLeft(aligned) { case (d, (n, sql)) =>
       import org.apache.spark.sql.functions.{assert_true, expr, lit}
       d.filter(assert_true(expr(s"coalesce(($sql), true)"),
         lit(s"CHECK constraint $n violated: $sql")).isNull)
@@ -868,13 +871,13 @@ object LakeTable {
     * stats are always kept: skipping is an optimization, never a
     * filter.
     */
-  private[graft] def pruneFilesByDir(spark: SparkSession, path: String, dirs: Seq[String],
+  private[graft] def pruneFilesByDir(spark: SparkSession, path: String,
+      renameChain: Seq[RenameRec], dirs: Seq[String],
       bounds: Map[String, ColumnBounds]): (Seq[PrunedDir], Boolean) = {
     // Groups written before a RENAME COLUMN carry stats (and possibly
     // partition dirs) under the old physical name — resolve each bound
     // column's prior names once so those files still prune instead of
     // degrading to must-read.
-    val renameChain = tableRenames(spark, path)
     val priorNames: Map[String, Seq[String]] =
       if (renameChain.isEmpty) Map.empty
       else bounds.keys.map { c =>
@@ -1005,9 +1008,9 @@ object LakeTable {
     * layout is partition-encoded and a bare file list would lose the
     * partition columns.
     */
-  private[graft] def pruneFiles(spark: SparkSession, path: String, dirs: Seq[String],
-      bounds: Map[String, ColumnBounds]): Option[Seq[String]] = {
-    val (pruned, flat) = pruneFilesByDir(spark, path, dirs, bounds)
+  private[graft] def pruneFiles(spark: SparkSession, path: String, renameChain: Seq[RenameRec],
+      dirs: Seq[String], bounds: Map[String, ColumnBounds]): Option[Seq[String]] = {
+    val (pruned, flat) = pruneFilesByDir(spark, path, renameChain, dirs, bounds)
     if (flat) Some(pruned.flatMap(_.kept)) else None
   }
 
@@ -1020,13 +1023,13 @@ object LakeTable {
     * to a narrower type), a column no surviving file carries reading
     * as NULL.
     */
-  private[graft] def readKept(spark: SparkSession, path: String, v: Long,
+  private[graft] def readKept(spark: SparkSession, path: String, m: TableMeta, v: Long,
       schema: org.apache.spark.sql.types.StructType, pruned: Seq[PrunedDir]): DataFrame = {
     val live = pruned.filter(_.kept.nonEmpty)
     if (live.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val dirs = live.map(_.dir)
-    val df = readDirsDv(spark, path, dirs, dvFor(spark, path, v, dirs), withPos = false,
+    val df = readDirsDv(spark, path, m, dirs, dvFor(spark, path, v, dirs), withPos = false,
       kept = Some(live.map(pd => pd.dir -> pd.kept).toMap))
     import org.apache.spark.sql.catalyst.types.DataTypeUtils
     val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -1045,10 +1048,10 @@ object LakeTable {
     * [[predicateBounds]] mines from `predicate` (see
     * [[pruneFilesByDir]] for the `flat` flag).
     */
-  private def pruneFor(spark: SparkSession, path: String, v: Long,
+  private def pruneFor(spark: SparkSession, path: String, m: TableMeta, v: Long,
       schema: org.apache.spark.sql.types.StructType,
       predicate: org.apache.spark.sql.Column): (Seq[PrunedDir], Boolean) =
-    pruneFilesByDir(spark, path, readCommit(spark, path, v).dirs,
+    pruneFilesByDir(spark, path, m.renames, readCommit(spark, path, v).dirs,
       predicateBounds(spark, schema, predicate))
 
   /** File-skipping range read: keep only the files of the snapshot
@@ -1062,9 +1065,10 @@ object LakeTable {
       lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val schema = tableSchema(spark, path, Some(v))
+    val m = meta(spark, path)
+    val schema = tableSchema(spark, path, m, v)
     val predicate = col(column) >= lit(lo) && col(column) <= lit(hi)
-    readKept(spark, path, v, schema, pruneFor(spark, path, v, schema, predicate)._1)
+    readKept(spark, path, m, v, schema, pruneFor(spark, path, m, v, schema, predicate)._1)
       .where(predicate)
   }
 
@@ -1165,8 +1169,9 @@ object LakeTable {
       version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val schema = tableSchema(spark, path, Some(v))
-    readKept(spark, path, v, schema, prunePoint(spark, path, schema, column, value, v)._1)
+    val m = meta(spark, path)
+    val schema = tableSchema(spark, path, m, v)
+    readKept(spark, path, m, v, schema, prunePoint(spark, path, m, schema, column, value, v)._1)
       .where(col(column) === lit(value))
   }
 
@@ -1177,7 +1182,8 @@ object LakeTable {
   private[graft] def pointCandidateFiles(spark: SparkSession, path: String,
       column: String, value: Any, version: Option[Long] = None): Option[Seq[String]] = {
     val v = version.orElse(currentVersion(spark, path)).get
-    val (pruned, flat) = prunePoint(spark, path, tableSchema(spark, path, Some(v)),
+    val m = meta(spark, path)
+    val (pruned, flat) = prunePoint(spark, path, m, tableSchema(spark, path, m, v),
       column, value, v)
     if (flat) Some(pruned.flatMap(_.kept)) else None
   }
@@ -1185,11 +1191,11 @@ object LakeTable {
   /** The point lookup's prune: stats/partition values, then — in a
     * flat layout, where the sidecars key each file — the bloom tier.
     */
-  private def prunePoint(spark: SparkSession, path: String,
+  private def prunePoint(spark: SparkSession, path: String, m: TableMeta,
       schema: org.apache.spark.sql.types.StructType, column: String, value: Any,
       v: Long): (Seq[PrunedDir], Boolean) = {
     import org.apache.spark.util.sketch.BloomFilter
-    val (pruned, flat) = pruneFor(spark, path, v, schema, col(column) === lit(value))
+    val (pruned, flat) = pruneFor(spark, path, m, v, schema, col(column) === lit(value))
     if (!flat) return (pruned, flat)
     // cache per-dir sidecar parses: (dir -> (rel, column) -> bloom b64)
     val sidecars = scala.collection.mutable.Map.empty[String, Map[(String, String), String]]
@@ -1284,8 +1290,9 @@ object LakeTable {
     // base) postdates the whole copied chain. Starting the clone at 0
     // instead would put fresh clone data "before" copied stamps and a
     // copied DROP tombstone would capture it.
+    val srcMeta = meta(spark, sourcePath)
     val base = (Seq(v) ++ c.dirs.map(groupVersionOf).filter(_ > 0) ++
-      tableMappings(spark, sourcePath).map(_.stamp)).max + 1
+      srcMeta.mappings.map(_.stamp)).max + 1
     val p = new Path(targetPath)
     val fs = fsOf(spark, p)
     if (fs.exists(p)) fs.delete(p, true)
@@ -1304,14 +1311,7 @@ object LakeTable {
     // physical schema. Clone-side reads apply copied mappings to the
     // source-named dirs under the copied stamps (groupVersionOf parses
     // source version numbers out of the absolute refs).
-    val srcMeta = tableMetaFile(sourcePath)
-    if (srcFs.exists(srcMeta)) {
-      val in = srcFs.open(srcMeta)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      fs.mkdirs(logDir(targetPath))
-      val out = fs.create(tableMetaFile(targetPath), true)
-      try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
+    if (srcMeta != TableMeta.empty) updateMeta(spark, targetPath, TableMeta.empty, srcMeta)
     writeCommit(spark, targetPath, Commit(base, "clone", absDirs, dvFiles = dvNames))
     base
   }
@@ -1332,45 +1332,145 @@ object LakeTable {
     val p = new Path(targetPath)
     val fs = fsOf(spark, p)
     if (fs.exists(p)) fs.delete(p, true)
-    create(spark, targetPath, read(spark, sourcePath, Some(v)),
-      partitionBy = tablePartitioning(spark, sourcePath))
-    val sort = tableSortBy(spark, sourcePath)
-    if (sort.nonEmpty) setSortBy(spark, targetPath, sort)
-    tableChecks(spark, sourcePath).foreach { case (n, sql) =>
-      addCheck(spark, targetPath, n, sql) }
+    val src = meta(spark, sourcePath)
+    create(spark, targetPath, read(spark, sourcePath, src, v), partitionBy = src.partitionBy)
+    // The copy satisfies the source's CHECKs (it IS the source's rows).
     // ANALYZE results stay valid (identical data, logical names) —
     // re-stamped to the clone's own create version.
-    val ndv = tableNdv(spark, sourcePath)
-    if (ndv.nonEmpty)
-      writeTableMeta(spark, targetPath, tablePartitioning(spark, targetPath),
-        metaSchema(spark, targetPath), tableSortBy(spark, targetPath),
-        tableChecks(spark, targetPath), dvEnabled(spark, targetPath),
-        ndv = Some(ndv.map { case (c, r) => c -> r.copy(asOf = 0L) }),
-        expectVer = Some(currentMetaVer(spark, targetPath)))
+    val base = meta(spark, targetPath)
+    val next = base.copy(sortBy = src.sortBy, checks = src.checks,
+      ndv = src.ndv.map { case (c, r) => c -> r.copy(asOf = 0L) })
+    if (next != base) updateMeta(spark, targetPath, base, next)
     0L
   }
 
-  // Table-level partitioning, recorded at create: every COW rewrite
-  // (merge/delete/update/replace/agg-merge/compact) re-applies it, so
-  // DML never silently degrades a partition-pruned layout into flat
-  // files — the pruning a reader relies on survives mutations.
+  // ---- table meta (`_graft_log/_table.json`) -------------------------
+  //
+  // The metastore half of the format: the partition spec, write sort
+  // order, recorded schema, CHECK constraints, DV mode and column-
+  // mapping chain every verb needs beside the commit log. [[meta]] is
+  // its one reader and [[updateMeta]] its one writer; a verb reads the
+  // value once and passes it down, so everything it does sees ONE meta.
+
   private def tableMetaFile(path: String) = new Path(logDir(path), "_table.json")
 
-  /** Partition columns the table was created with (empty = flat). */
-  def tablePartitioning(spark: SparkSession, path: String): Seq[String] =
-    tableMetaBody(spark, path).flatMap(
-      """"partitionBy"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(_)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq))
-      .getOrElse(Nil)
+  /** One table's meta, as recorded at metaVer `ver` (0 = none yet, or a
+    * file from before meta versioning).
+    *
+    * @param partitionBy partition columns new groups are written under
+    *   (empty = flat): every COW rewrite re-applies them, so DML never
+    *   degrades a partition-pruned layout into flat files
+    * @param sortBy write sort order for native writes and compaction
+    * @param schema the DDL-recorded schema: an empty partitioned create
+    *   writes no parquet, and ADD COLUMNS, DEFAULTs and comments live
+    *   only here
+    * @param checks CHECK constraints as (name, boolean SQL), enforced on
+    *   every write path (SQL semantics: NULL passes)
+    * @param dvMode Delta's enableDeletionVectors: SQL DELETE/UPDATE/MERGE
+    *   take the merge-on-read verbs
+    * @param mixedLayouts set once a spec change or a data-era column DDL
+    *   may have left groups of different layouts (monotonic)
+    * @param mappings the column-mapping chain (renames, drops, widenings)
+    *   — metadata-only; readers apply each group the entries that
+    *   postdate it
+    * @param ndv stored ANALYZE / write-back results by column
+    * @param pndv the same per Hive partition name ("col=v/col2=v2")
+    */
+  final case class TableMeta(ver: Long = 0L, partitionBy: Seq[String] = Nil,
+      sortBy: Seq[String] = Nil,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      checks: Seq[(String, String)] = Nil, dvMode: Boolean = false,
+      mixedLayouts: Boolean = false, mappings: Seq[MapRec] = Nil,
+      ndv: Map[String, ColumnNdv] = Map.empty,
+      pndv: Map[String, Map[String, ColumnNdv]] = Map.empty) {
+    /** Rename/drop entries only — what prior-name resolution consumes. */
+    def renames: Seq[RenameRec] = mappings.collect { case r: RenameRec => r }
+  }
 
-  /** Sort-order columns recorded for native writes (empty = none). */
-  def tableSortBy(spark: SparkSession, path: String): Seq[String] =
-    tableMetaBody(spark, path).flatMap(
-      """"sortBy"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(_)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq))
-      .getOrElse(Nil)
+  /** The `_table.json` body format: a JSON object whose free-text
+    * entries (stats, mapping records, CHECK SQL, the schema) are base64
+    * of tab-separated fields, so they never touch the JSON syntax.
+    * Keys are omitted when empty (`partitionBy` and `metaVer` always
+    * appear).
+    */
+  object TableMeta {
+    import org.json4s.{JArray, JBool, JInt, JObject, JString, JValue}
+
+    val empty: TableMeta = TableMeta()
+
+    private def b64(s: String): JString = JString(java.util.Base64.getEncoder
+      .encodeToString(s.getBytes(StandardCharsets.UTF_8)))
+    private def unb64(s: String): String =
+      new String(java.util.Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
+    private def ndvLine(r: ColumnNdv): String = s"${r.ndv}\t${r.maxLen}\t${r.avgLen}\t${r.asOf}"
+    private def ndvAt(a: Array[String], i: Int): ColumnNdv =
+      ColumnNdv(a(i).toLong, a(i + 1).toLong, a(i + 2).toDouble, a(i + 3).toLong)
+
+    def render(m: TableMeta): String = {
+      def arr(vs: Seq[JValue]) = JArray(vs.toList)
+      val fields: Seq[Option[(String, JValue)]] = Seq(
+        Some("partitionBy" -> arr(m.partitionBy.map(JString(_)))),
+        Option.when(m.ndv.nonEmpty)("ndvB64" -> arr(m.ndv.toSeq.sortBy(_._1).map {
+          case (c, r) => b64(s"$c\t${ndvLine(r)}") })),
+        Option.when(m.pndv.nonEmpty)("pndvB64" -> arr(m.pndv.toSeq.sortBy(_._1).flatMap {
+          case (part, cols) =>
+            val pb = b64(part).s
+            cols.toSeq.sortBy(_._1).map { case (c, r) => b64(s"$pb\t$c\t${ndvLine(r)}") }
+        })),
+        Option.when(m.mappings.nonEmpty)("mappingsB64" -> arr(m.mappings.map {
+          case RenameRec(o, n, v) => b64(s"r\t$o\t$n\t$v")
+          case WidenRec(c, t, v) => b64(s"w\t$c\t$t\t$v")
+        })),
+        Option.when(m.mixedLayouts)("mixedLayouts" -> JBool(true)),
+        Option.when(m.dvMode)("dvMode" -> JBool(true)),
+        Option.when(m.sortBy.nonEmpty)("sortBy" -> arr(m.sortBy.map(JString(_)))),
+        Option.when(m.checks.nonEmpty)("checksB64" -> arr(m.checks.map {
+          case (n, sql) => b64(s"$n\t$sql") })),
+        m.schema.map(s => "schemaB64" -> b64(s.json)),
+        Some("metaVer" -> JInt(m.ver)))
+      org.json4s.jackson.JsonMethods.compact(JObject(fields.flatten.toList))
+    }
+
+    def parse(body: String): TableMeta = {
+      val fields = org.json4s.jackson.JsonMethods.parse(body) match {
+        case JObject(fs) => fs.toMap
+        case other => throw new IllegalArgumentException(s"not a JSON object: $other")
+      }
+      def strings(k: String): Seq[String] = fields.get(k).toSeq.flatMap {
+        case JArray(vs) => vs.map { case JString(s) => s
+          case v => throw new IllegalArgumentException(s"$k holds $v") }
+        case v => throw new IllegalArgumentException(s"$k holds $v")
+      }
+      def flag(k: String): Boolean = fields.get(k).contains(JBool(true))
+      TableMeta(
+        ver = fields.get("metaVer").collect { case JInt(v) => v.toLong }.getOrElse(0L),
+        partitionBy = strings("partitionBy"),
+        sortBy = strings("sortBy"),
+        schema = fields.get("schemaB64").collect { case JString(s) =>
+          org.apache.spark.sql.types.DataType.fromJson(unb64(s))
+            .asInstanceOf[org.apache.spark.sql.types.StructType] },
+        checks = strings("checksB64").map(unb64).map { s =>
+          val i = s.indexOf('\t')
+          (s.substring(0, i), s.substring(i + 1))
+        },
+        dvMode = flag("dvMode"),
+        mixedLayouts = flag("mixedLayouts"),
+        mappings = strings("mappingsB64").map(unb64).map(_.split("\t") match {
+          case Array("r", o, n, v) => RenameRec(o, n, v.toLong)
+          case Array("w", c, t, v) => WidenRec(c, t, v.toLong)
+          case other => throw new IllegalArgumentException(
+            s"bad mapping record '${other.mkString("\\t")}'")
+        }),
+        ndv = strings("ndvB64").map(unb64).map { s =>
+          val a = s.split("\t")
+          a(0) -> ndvAt(a, 1)
+        }.toMap,
+        pndv = strings("pndvB64").map(unb64).map { s =>
+          val a = s.split("\t")
+          (unb64(a(0)), a(1), ndvAt(a, 2))
+        }.groupBy(_._1).map { case (p, g) => p -> g.map(t => t._2 -> t._3).toMap })
+    }
+  }
 
   /** Record a write sort order (the Iceberg `write.sort.by` table
     * property): subsequent NATIVE writes range-distribute flat tables
@@ -1380,11 +1480,9 @@ object LakeTable {
     * point/range read can match. Metadata-only — existing files are
     * untouched until rewritten.
     */
-  def setSortBy(spark: SparkSession, path: String, cols: Seq[String]): Unit = {
-    val expect = currentMetaVer(spark, path)
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), cols, tableChecks(spark, path), dvEnabled(spark, path),
-      expectVer = Some(expect))
+  def setSortBy(spark: SparkSession, path: String, cols: Seq[String]): TableMeta = {
+    val base = meta(spark, path)
+    updateMeta(spark, path, base, base.copy(sortBy = cols))
   }
 
   /** DSv2 per-column statistics for SupportsReportStatistics scans —
@@ -1393,14 +1491,14 @@ object LakeTable {
     * ANALYZE results, null counts footer-exact from the sidecars.
     * Snapshot-level, so callers must only attach it to UNPRUNED scans.
     */
-  private[graft] def v2ColumnStats(spark: SparkSession, path: String,
+  private[graft] def v2ColumnStats(spark: SparkSession, path: String, tm: TableMeta,
       cols: Seq[String]): java.util.Map[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
     val m = new java.util.HashMap[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    val ndv = tableNdv(spark, path)
+    val ndv = tm.ndv
     val nulls = aggregatedColumnNulls(spark, path)
       .map(_._2).getOrElse(Map.empty[String, Long])
     cols.foreach { c =>
@@ -1434,19 +1532,6 @@ object LakeTable {
     */
   final case class ColumnNdv(ndv: Long, maxLen: Long, avgLen: Double, asOf: Long)
 
-  /** Stored ANALYZE results by column (empty until [[analyze]] runs). */
-  def tableNdv(spark: SparkSession, path: String): Map[String, ColumnNdv] =
-    tableMetaBody(spark, path).flatMap(
-      """"ndvB64"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(_)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-          .map { b64 =>
-            val s = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
-            val a = s.split("\t")
-            a(0) -> ColumnNdv(a(1).toLong, a(2).toLong, a(3).toDouble, a(4).toLong)
-          }.toMap))
-      .getOrElse(Map.empty)
-
   /** ANALYZE TABLE: one distributed aggregate pass collecting
     * approx_count_distinct per column (HLL — exact below its sparse
     * threshold, ~2-5% beyond) plus max/avg byte length for strings,
@@ -1464,16 +1549,10 @@ object LakeTable {
   def analyze(spark: SparkSession, path: String,
       cols: Seq[String] = Nil): Map[String, ColumnNdv] = {
     import org.apache.spark.sql.functions._
-    // CAS token BEFORE the first read (writeTableMeta's contract): the
-    // stats are keyed by the column names read HERE, so a concurrent
-    // rename publishing during the aggregate must fail this publish
-    // (retryable) — capturing the token at the end would let the stale
-    // pre-rename names overwrite the renamed meta (caught by the
-    // MetaIntegritySpec analyze-vs-rename race).
-    val expect = currentMetaVer(spark, path)
+    val base = meta(spark, path)
     val v = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val df = read(spark, path, Some(v))
+    val df = read(spark, path, base, v)
     val atomic: org.apache.spark.sql.types.DataType => Boolean = {
       case _: org.apache.spark.sql.types.NumericType => true
       case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.BooleanType |
@@ -1485,14 +1564,14 @@ object LakeTable {
       (if (cols.isEmpty) df.schema.fields.toSeq
        else cols.flatMap(c => df.schema.fields.find(_.name.equalsIgnoreCase(c))))
         .filter(f => atomic(f.dataType))
-    if (targets.isEmpty) return tableNdv(spark, path)
+    if (targets.isEmpty) return base.ndv
     val aggs = targets.zipWithIndex.flatMap { case (f, i) =>
-      val base = approx_count_distinct(col(f.name)).as(s"__ndv$i")
+      val ndvAgg = approx_count_distinct(col(f.name)).as(s"__ndv$i")
       f.dataType match {
         case org.apache.spark.sql.types.StringType =>
-          Seq(base, max(octet_length(col(f.name))).cast("long").as(s"__max$i"),
+          Seq(ndvAgg, max(octet_length(col(f.name))).cast("long").as(s"__max$i"),
             avg(octet_length(col(f.name))).as(s"__avg$i"))
-        case _ => Seq(base)
+        case _ => Seq(ndvAgg)
       }
     }
     val row = df.agg(aggs.head, aggs.drop(1): _*).head()
@@ -1508,81 +1587,58 @@ object LakeTable {
       }
       f.name -> ColumnNdv(ndv, mx, av, v)
     }.toMap
-    val merged = tableNdv(spark, path) ++ fresh
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), tableChecks(spark, path),
-      dvEnabled(spark, path), ndv = Some(merged),
-      expectVer = Some(expect))
-    merged
+    updateMeta(spark, path, base, base.copy(ndv = base.ndv ++ fresh)).ndv
   }
 
   /** Stats WRITE-BACK: record externally-computed column statistics
     * (an HMS client's ANALYZE — Hive's `update_table_column_statistics`
     * verb) into the same store [[analyze]] fills, so an external
     * engine's stats round-trip through the facade and feed Spark's own
-    * CBO identically. Same CAS discipline as analyze: the token is
-    * captured BEFORE the merge read, so a concurrent DDL (rename)
-    * publishing mid-verb fails this publish instead of being
-    * overwritten with stale column names.
+    * CBO identically, under the same meta CAS.
     */
   def recordNdv(spark: SparkSession, path: String,
       fresh: Map[String, ColumnNdv]): Map[String, ColumnNdv] = {
-    val expect = currentMetaVer(spark, path)
-    val merged = tableNdv(spark, path) ++ fresh
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), tableChecks(spark, path),
-      dvEnabled(spark, path), ndv = Some(merged), expectVer = Some(expect))
-    merged
+    val base = meta(spark, path)
+    requireColumns(spark, path, base, fresh.keys)
+    updateMeta(spark, path, base, base.copy(ndv = base.ndv ++ fresh)).ndv
+  }
+
+  /** Written-back stats arrive keyed by names the caller resolved
+    * before this verb read `base`: a name `base`'s schema lacks means a
+    * column DDL published in between, and recording it would resurrect
+    * a pre-rename key.
+    */
+  private def requireColumns(spark: SparkSession, path: String, base: TableMeta,
+      names: Iterable[String]): Unit = {
+    val stale = names.toSeq.diff(headSchema(spark, path, base).fieldNames.toSeq)
+    if (stale.nonEmpty)
+      throw new ConcurrentWriteException(
+        s"stats for ${stale.mkString(", ")} name no column of $path at metaVer ${base.ver}: " +
+        "a concurrent DDL renamed or dropped them — re-run against the new table state")
   }
 
   /** Drop one column's stored ANALYZE/write-back record (Hive's
     * `delete_table_column_statistics`). No-op when absent.
     */
   def dropNdv(spark: SparkSession, path: String, colName: String): Unit = {
-    val expect = currentMetaVer(spark, path)
-    val cur = tableNdv(spark, path)
-    val remaining = cur.filterNot(_._1.equalsIgnoreCase(colName))
-    if (remaining.size == cur.size) return
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), tableChecks(spark, path),
-      dvEnabled(spark, path), ndv = Some(remaining), expectVer = Some(expect))
+    val base = meta(spark, path)
+    val remaining = base.ndv.filterNot(_._1.equalsIgnoreCase(colName))
+    if (remaining.size != base.ndv.size)
+      updateMeta(spark, path, base, base.copy(ndv = remaining))
   }
-
-  /** Stored PER-PARTITION ANALYZE/write-back records, by Hive
-    * partition name ("col=v/col2=v2") then column. Same staleness
-    * semantics as [[tableNdv]]; the partition name is base64-wrapped
-    * inside each entry so partition VALUES may contain any character.
-    */
-  def partitionNdv(spark: SparkSession, path: String)
-      : Map[String, Map[String, ColumnNdv]] =
-    tableMetaBody(spark, path).flatMap(
-      """"pndvB64"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(_)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-          .map { b64 =>
-            val s = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
-            val a = s.split("\t")
-            val part = new String(java.util.Base64.getDecoder.decode(a(0)), StandardCharsets.UTF_8)
-            (part, a(1), ColumnNdv(a(2).toLong, a(3).toLong, a(4).toDouble, a(5).toLong))
-          }
-          .groupBy(_._1)
-          .map { case (p, g) => p -> g.map(t => t._2 -> t._3).toMap }))
-      .getOrElse(Map.empty)
 
   /** PARTITION-level stats write-back (Hive's
     * `update_partition_column_statistics`): merge one partition's
     * externally-computed column records into the per-partition store
-    * the HMS facade serves reads from. Same CAS discipline as
-    * [[recordNdv]] — the token is captured before the merge read.
+    * the HMS facade serves reads from ([[TableMeta.pndv]]).
     */
   def recordPartitionNdv(spark: SparkSession, path: String, partName: String,
       fresh: Map[String, ColumnNdv]): Unit = {
-    val expect = currentMetaVer(spark, path)
-    val cur = partitionNdv(spark, path)
-    val merged = cur + (partName -> (cur.getOrElse(partName, Map.empty) ++ fresh))
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), tableChecks(spark, path),
-      dvEnabled(spark, path), pndv = Some(merged), expectVer = Some(expect))
+    val base = meta(spark, path)
+    requireColumns(spark, path, base, fresh.keys)
+    val cur = base.pndv
+    updateMeta(spark, path, base,
+      base.copy(pndv = cur + (partName -> (cur.getOrElse(partName, Map.empty) ++ fresh))))
   }
 
   /** Drop one partition-column record — or, with colName null, ALL of
@@ -1592,8 +1648,8 @@ object LakeTable {
     */
   def dropPartitionNdv(spark: SparkSession, path: String, partName: String,
       colName: String): Unit = {
-    val expect = currentMetaVer(spark, path)
-    val cur = partitionNdv(spark, path)
+    val base = meta(spark, path)
+    val cur = base.pndv
     val pruned = cur.get(partName) match {
       case None => return
       case Some(_) if colName == null => cur - partName
@@ -1602,9 +1658,7 @@ object LakeTable {
         if (remaining.size == cols.size) return
         if (remaining.isEmpty) cur - partName else cur + (partName -> remaining)
     }
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), tableChecks(spark, path),
-      dvEnabled(spark, path), pndv = Some(pruned), expectVer = Some(expect))
+    updateMeta(spark, path, base, base.copy(pndv = pruned))
   }
 
   /** PARTITION EVOLUTION (the Iceberg marquee): change the table's
@@ -1620,13 +1674,11 @@ object LakeTable {
     * multi-day rewrite. Old snapshots are untouched: time travel
     * before the spec change reads exactly what it always did.
     */
-  def setPartitioning(spark: SparkSession, path: String, cols: Seq[String]): Unit = {
-    val expect = currentMetaVer(spark, path)
-    writeTableMeta(spark, path, cols, metaSchema(spark, path),
-      tableSortBy(spark, path), tableChecks(spark, path), dvEnabled(spark, path),
+  def setPartitioning(spark: SparkSession, path: String, cols: Seq[String]): TableMeta = {
+    val base = meta(spark, path)
+    updateMeta(spark, path, base, base.copy(partitionBy = cols,
       // spec changed while data exists → old and new groups may differ
-      markMixed = currentVersion(spark, path).isDefined,
-      expectVer = Some(expect))
+      mixedLayouts = currentVersion(spark, path).isDefined))
   }
 
   /** One column-mapping change, stamped with the first table version
@@ -1652,33 +1704,6 @@ object LakeTable {
       extends MapRec
   private[graft] val DroppedPrefix = "__graft_dropped_"
 
-  /** The ordered column-mapping chain (renames, drops, type widenings)
-    * — the Delta column-mapping analogue. Metadata-only: no change on
-    * this chain ever rewrites a file; readers apply each group exactly
-    * the entries that postdate it, and the next COW rewrite migrates.
-    */
-  def tableMappings(spark: SparkSession, path: String): Seq[MapRec] =
-    tableMetaBody(spark, path).flatMap(
-      """"mappingsB64"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(_)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-          .map { b64 =>
-            val s = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
-            s.split("\t") match {
-              case Array("r", o, n, v) => RenameRec(o, n, v.toLong)
-              case Array("w", c, t, v) => WidenRec(c, t, v.toLong)
-              case other => throw new IllegalStateException(
-                s"bad mapping record '${other.mkString("\\t")}' in the $path table meta")
-            }
-          }))
-      .getOrElse(Nil)
-
-  /** Rename/drop entries only — what prior-name resolution (stats
-    * pruning) consumes.
-    */
-  def tableRenames(spark: SparkSession, path: String): Seq[RenameRec] =
-    tableMappings(spark, path).collect { case r: RenameRec => r }
-
   /** RENAME COLUMN as a metadata-only change (ALTER TABLE ... RENAME
     * COLUMN): no file is rewritten. The rename chain applies at read
     * time per file group, so old-physical-name and new-name groups
@@ -1690,17 +1715,18 @@ object LakeTable {
     */
   def renameColumn(spark: SparkSession, path: String, oldName: String,
       newName: String): Unit = {
-    val sch = tableSchema(spark, path)
+    val base = meta(spark, path)
+    val sch = headSchema(spark, path, base)
     require(sch.fieldNames.contains(oldName), s"no column $oldName in ${sch.fieldNames.mkString(",")}")
     require(!sch.fieldNames.contains(newName), s"column $newName already exists")
     // A CHECK holding the old name would silently stop resolving on
     // the next write — reject, like dropColumn does.
     val ref = ("""\b""" + java.util.regex.Pattern.quote(oldName) + """\b""").r
-    tableChecks(spark, path).foreach { case (cn, expr) =>
+    base.checks.foreach { case (cn, expr) =>
       require(ref.findFirstIn(expr).isEmpty,
         s"cannot rename $oldName: CHECK constraint $cn references it ($expr)")
     }
-    appendMapping(spark, path, oldName, newName)
+    appendMapping(spark, path, base, oldName, newName)
   }
 
   /** DROP COLUMN as a metadata-only change (B59): no file is
@@ -1713,19 +1739,20 @@ object LakeTable {
     * next COW rewrite / compaction physically sheds the column.
     */
   def dropColumn(spark: SparkSession, path: String, name: String): Unit = {
-    val sch = tableSchema(spark, path)
+    val base = meta(spark, path)
+    val sch = headSchema(spark, path, base)
     require(sch.fieldNames.contains(name), s"no column $name in ${sch.fieldNames.mkString(",")}")
     require(sch.fields.length > 1, s"cannot drop the only column $name")
-    require(!tablePartitioning(spark, path).contains(name),
+    require(!base.partitionBy.contains(name),
       s"cannot drop partition column $name (change the partition spec first)")
-    require(!tableSortBy(spark, path).contains(name),
+    require(!base.sortBy.contains(name),
       s"cannot drop sort column $name (clear write.sort.by first)")
     val ref = ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-    tableChecks(spark, path).foreach { case (cn, expr) =>
+    base.checks.foreach { case (cn, expr) =>
       require(ref.findFirstIn(expr).isEmpty,
         s"cannot drop $name: CHECK constraint $cn references it ($expr)")
     }
-    appendMapping(spark, path, name,
+    appendMapping(spark, path, base, name,
       DroppedPrefix + java.util.UUID.randomUUID.toString.take(8))
   }
 
@@ -1755,43 +1782,36 @@ object LakeTable {
 
   def widenColumn(spark: SparkSession, path: String, name: String,
       newType: org.apache.spark.sql.types.DataType): Unit = {
-    val sch = tableSchema(spark, path)
+    val base = meta(spark, path)
+    val sch = headSchema(spark, path, base)
     require(sch.fieldNames.contains(name), s"no column $name in ${sch.fieldNames.mkString(",")}")
-    require(!tablePartitioning(spark, path).contains(name),
+    require(!base.partitionBy.contains(name),
       s"cannot change the type of partition column $name")
     val from = sch(name).dataType
     require(losslessWidening(from, newType),
       s"$from -> $newType is not a lossless widening for $name")
-    appendToChain(spark, path, WidenRec(name, newType.catalogString, 0L),
+    appendToChain(spark, path, base, WidenRec(name, newType.catalogString, 0L),
       metaUpdate = m => org.apache.spark.sql.types.StructType(
         m.fields.map(f => if (f.name == name) f.copy(dataType = newType) else f)))
   }
 
-  private def appendMapping(spark: SparkSession, path: String, oldName: String,
-      newName: String): Unit = {
+  private def appendMapping(spark: SparkSession, path: String, base: TableMeta,
+      oldName: String, newName: String): Unit = {
     val dropped = newName.startsWith(DroppedPrefix)
-    appendToChain(spark, path, RenameRec(oldName, newName, 0L),
+    appendToChain(spark, path, base, RenameRec(oldName, newName, 0L),
       metaUpdate = m => org.apache.spark.sql.types.StructType(
         if (dropped) m.fields.filterNot(_.name == oldName)
         else m.fields.map(f => if (f.name == oldName) f.copy(name = newName) else f)),
       partsUpdate = _.map(c => if (c == oldName) newName else c))
   }
 
-  private def appendToChain(spark: SparkSession, path: String, rec: MapRec,
+  private def appendToChain(spark: SparkSession, path: String, base: TableMeta, rec: MapRec,
       metaUpdate: org.apache.spark.sql.types.StructType => org.apache.spark.sql.types.StructType,
-      partsUpdate: Seq[String] => Seq[String] = identity): Unit = {
-    // CAS token FIRST: the chain/schema/spec reads below feed the new
-    // meta, so a concurrent DDL publishing after them must fail this
-    // write rather than be silently overwritten (last-writer-wins on
-    // the chain would drop its entry — column identity corruption).
-    val expect = currentMetaVer(spark, path)
-    commitColumnDdl(spark, path, expect, Seq(rec),
-      partsUpdate(tablePartitioning(spark, path)),
+      partsUpdate: Seq[String] => Seq[String] = identity): Unit =
+    commitColumnDdl(spark, path, base, Seq(rec), partsUpdate(base.partitionBy),
       // renames follow through the write sort order too — a stale old
       // name there would break the next native write's distribution
-      partsUpdate(tableSortBy(spark, path)),
-      metaSchema(spark, path).map(metaUpdate))
-  }
+      partsUpdate(base.sortBy), base.schema.map(metaUpdate))
 
   /** ONE atomic multi-change column DDL (ALTER TABLE with several
     * clauses): all mapping records land on the chain in statement
@@ -1801,28 +1821,19 @@ object LakeTable {
     * caller's fold over every clause. `parts`/`sortBy` are the fold's
     * incrementally-renamed partition spec and sort order (computed
     * clause by clause — re-deriving them here from disk via a rename
-    * map mis-follows chained renames), and `expectVer` is the CAS
-    * token the caller captured BEFORE its first meta read, per
-    * writeTableMeta's contract — a concurrent DDL publishing between
-    * those reads and this commit must fail the CAS, not be
-    * overwritten.
+    * map mis-follows chained renames), and `base` is the meta the
+    * caller's fold read.
     */
   private[graft] def alterColumnsAtomic(spark: SparkSession, path: String,
       recs: Seq[MapRec], finalSchema: org.apache.spark.sql.types.StructType,
-      parts: Seq[String], sortBy: Seq[String], expectVer: Long): Unit =
-    commitColumnDdl(spark, path, expectVer, recs, parts, sortBy, Some(finalSchema))
-
-  /** The CAS token for a caller-composed meta mutation (the metaVer a
-    * multi-read DDL captures before its first meta read).
-    */
-  private[graft] def metaCasToken(spark: SparkSession, path: String): Long =
-    currentMetaVer(spark, path)
+      parts: Seq[String], sortBy: Seq[String], base: TableMeta): Unit =
+    commitColumnDdl(spark, path, base, recs, parts, sortBy, Some(finalSchema))
 
   /** Shared stamp-and-publish tail of every column DDL: computes the
     * confinement stamp, appends `recs` (in order, one shared stamp) to
-    * the chain, and writes the table meta once under `expect`'s CAS.
+    * the chain, and publishes the table meta once over `base`.
     */
-  private def commitColumnDdl(spark: SparkSession, path: String, expect: Long,
+  private def commitColumnDdl(spark: SparkSession, path: String, base: TableMeta,
       recs: Seq[MapRec], parts: Seq[String], sortBy: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): Unit = {
     // Stamp = the next data version: every EXISTING group (dir version
@@ -1833,12 +1844,8 @@ object LakeTable {
     // SOURCE's version numbers, and a clone-side change must still
     // postdate all of them.
     val cur = currentVersion(spark, path)
-    val maxDirVer = cur.map(v => readCommit(spark, path, v).dirs.map { e =>
-      val k = groupKey(e)
-      if (k.startsWith("d") && k.indexOf('-') > 1)
-        try k.substring(1, k.indexOf('-')).toLong catch { case _: NumberFormatException => -1L }
-      else -1L
-    }.foldLeft(-1L)(math.max)).getOrElse(-1L)
+    val maxDirVer = cur.map(v => readCommit(spark, path, v).dirs.map(groupVersionOf)
+      .foldLeft(-1L)(math.max)).getOrElse(-1L)
     // STAGED dirs too (on disk, not yet committed): a blind append
     // racing this DDL has already named its dir with the pre-change
     // data inside — the stamp must land ABOVE it or that group's
@@ -1847,9 +1854,7 @@ object LakeTable {
     val stagedMax = {
       val root = new Path(path); val fs = fsOf(spark, root)
       if (!fs.exists(root)) -1L
-      else fs.listStatus(root).iterator.map(_.getPath.getName)
-        .filter(n => n.startsWith("d") && n.indexOf('-') > 1)
-        .flatMap(n => scala.util.Try(n.substring(1, n.indexOf('-')).toLong).toOption)
+      else fs.listStatus(root).iterator.map(st => groupVersionOf(st.getPath.getName))
         .foldLeft(-1L)(math.max)
     }
     val stamp = math.max(cur.getOrElse(-1L), math.max(maxDirVer, stagedMax)) + 1
@@ -1862,7 +1867,7 @@ object LakeTable {
     // the same name must NOT inherit the dead column's NDV — stats for
     // a different column under a reused name are worse than none),
     // widening keeps them (lossless, same value set).
-    val ndvFollowed = stamped.foldLeft(tableNdv(spark, path)) {
+    val ndvFollowed = stamped.foldLeft(base.ndv) {
       case (m, r: RenameRec) if r.dropped => m - r.old
       case (m, r: RenameRec) =>
         m.get(r.old).fold(m)(v => (m - r.old) + (r.to -> v))
@@ -1872,7 +1877,7 @@ object LakeTable {
     // partition — preserving them verbatim would leave stale keys
     // that a re-ADDed column would resurrect (the exact hazard the
     // comment above forbids for table stats).
-    val pndvFollowed = partitionNdv(spark, path).map { case (pn, cols) =>
+    val pndvFollowed = base.pndv.map { case (pn, cols) =>
       pn -> stamped.foldLeft(cols) {
         case (m, r: RenameRec) if r.dropped => m - r.old
         case (m, r: RenameRec) =>
@@ -1880,17 +1885,13 @@ object LakeTable {
         case (m, _) => m
       }
     }.filter(_._2.nonEmpty)
-    writeTableMeta(spark, path, parts, schema, sortBy,
-      tableChecks(spark, path), dvEnabled(spark, path),
+    updateMeta(spark, path, base, base.copy(partitionBy = parts, sortBy = sortBy,
+      schema = schema,
       // pre-change groups and post-change groups must read per root —
       // only when the chain actually grew (schema-only DDL keeps the
       // single-scan fast path)
-      markMixed = cur.isDefined && stamped.nonEmpty,
-      mappings = if (stamped.isEmpty) None
-                 else Some(tableMappings(spark, path) ++ stamped),
-      ndv = Some(ndvFollowed),
-      pndv = Some(pndvFollowed),
-      expectVer = Some(expect))
+      mixedLayouts = cur.isDefined && stamped.nonEmpty,
+      mappings = base.mappings ++ stamped, ndv = ndvFollowed, pndv = pndvFollowed))
   }
 
   /** Apply the mapping chain to one file group's frame. Only entries
@@ -1940,143 +1941,67 @@ object LakeTable {
     else Long.MinValue
   }
 
-  /** True once a partition-spec change may have left groups with
-    * different directory layouts (see writeTableMeta).
+  /** The parsed `_table.json` — the ONLY reader of the file; empty when
+    * the table has none. FAILS LOUDLY on a malformed body — the schema
+    * chain in this file determines column identity, so "unparseable →
+    * empty chain" would silently serve wrong columns; with the
+    * tmp+rename write protocol a torn body can only mean real
+    * corruption.
     */
-  private[graft] def hasMixedLayouts(spark: SparkSession, path: String): Boolean =
-    tableMetaBody(spark, path).exists(_.contains("\"mixedLayouts\":true"))
-
-  /** The raw `_table.json` body, or None when the table has none.
-    * FAILS LOUDLY on a malformed body — the schema chain in this file
-    * now determines column identity, so "unparseable → empty chain"
-    * would silently serve wrong columns; with the tmp+rename write
-    * protocol a torn body can only mean real corruption.
-    */
-  private def tableMetaBody(spark: SparkSession, path: String): Option[String] = {
+  def meta(spark: SparkSession, path: String): TableMeta = {
     val p = tableMetaFile(path)
     val fs = fsOf(spark, p)
-    // A checksummed file system (the local one) renames the body and its
-    // .crc sidecar one after the other, so a read racing a publish can
-    // pair one version's body with the other's checksum. A re-read sees
-    // a matched pair once the publisher's second rename lands (backing
-    // off, since the publisher may be descheduled between the two);
-    // real corruption fails every attempt.
-    def read(retries: Int): String =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      } catch { case _: org.apache.hadoop.fs.ChecksumException if retries > 0 =>
-        Thread.sleep(1L << (6 - retries))
-        read(retries - 1)
+    // A read racing a publish can pair one version's body with the
+    // other's checksum (a checksummed file system, the local one,
+    // renames the body and its .crc sidecar one after the other), or
+    // see a torn body where the store's rename is a copy (S3's copy +
+    // delete). A re-read sees a whole body once the publisher's rename
+    // lands (backing off, since the publisher may be descheduled in
+    // between); real corruption fails every attempt.
+    def read(retries: Int): TableMeta = {
+      def again(failure: Exception): TableMeta =
+        if (retries == 0) throw failure
+        else { Thread.sleep(1L << (6 - retries)); read(retries - 1) }
+      metaReads.increment()
+      val body =
+        try {
+          val in = fs.open(p)
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+        } catch { case e: org.apache.hadoop.fs.ChecksumException => return again(e) }
+      try TableMeta.parse(body)
+      catch { case scala.util.control.NonFatal(e) =>
+        again(new IllegalStateException(
+          s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}", e))
       }
-    if (!fs.exists(p)) None
-    else {
-      val body = read(retries = 6)
-      if (!(body.startsWith("{") && body.trim.endsWith("}")))
-        throw new IllegalStateException(
-          s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}")
-      Some(body)
     }
+    if (!fs.exists(p)) TableMeta.empty else read(retries = 6)
   }
 
-  /** Monotonic table-meta version — the CAS token every `_table.json`
-    * mutation claims. 0 = no meta yet (or a pre-versioning file).
-    */
-  private def currentMetaVer(spark: SparkSession, path: String): Long =
-    tableMetaBody(spark, path).flatMap(
-      """"metaVer"\s*:\s*(\d+)""".r.findFirstMatchIn(_).map(_.group(1).toLong))
-      .getOrElse(0L)
-
-  /** One writer for every `_table.json` mutation so no path drops a
-    * key another recorded (updateSchemaMeta used to erase nothing only
-    * because partitioning was the single other key).
+  /** Publish `next` over `base` — the ONLY writer of `_table.json`, so
+    * no path drops a key another recorded. Returns what it published:
+    * `next` at metaVer `base.ver + 1`, with the mixed-layout marker
+    * kept MONOTONIC (once set by a spec change, every later rewrite
+    * preserves it; readers route mixed tables through the per-group-
+    * root union and keep the single-scan fast path for never-evolved
+    * flat tables).
     *
     * Concurrency: the meta is read-modify-write state (DDL reads the
-    * chain/checks/spec it extends), so publication is a CAS — the
-    * writer claims `.claim-meta-v<expect+1>` with an atomic exclusive
-    * create and renames a tmp file in; content atomicity comes from
-    * the rename (readers never see a torn body), lost updates from the
-    * claim (two DDLs racing from the same base: one wins, the loser
-    * gets ConcurrentWriteException and must re-run against the new
-    * meta). Callers that read meta state to compute the new value pass
-    * the `expectVer` they captured BEFORE those reads.
+    * chain/checks/spec it extends), so publication is a CAS on
+    * `base.ver` — the version of the very value the caller derived
+    * `next` from. The writer claims `.claim-meta-v<ver+1>` with an
+    * atomic exclusive create and renames a tmp file in; content
+    * atomicity comes from the rename (readers never see a torn body),
+    * lost updates from the claim (two DDLs racing from the same base:
+    * one wins, the loser gets ConcurrentWriteException and must re-run
+    * against the new meta).
     */
-  private def writeTableMeta(spark: SparkSession, path: String, parts: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      sortBy: Seq[String],
-      checks: Seq[(String, String)],
-      dvMode: Boolean,
-      markMixed: Boolean = false,
-      mappings: Option[Seq[MapRec]] = None,
-      ndv: Option[Map[String, ColumnNdv]] = None,
-      pndv: Option[Map[String, Map[String, ColumnNdv]]] = None,
-      expectVer: Option[Long] = None): Unit = {
-    val expect = expectVer.getOrElse(currentMetaVer(spark, path))
-    val fields = Seq.newBuilder[String]
-    fields += s""""partitionBy":[${parts.map(c => "\"" + c + "\"").mkString(",")}]"""
-    // ANALYZE results: explicit new map, or preserved from current meta
-    val nd = ndv.getOrElse(tableNdv(spark, path))
-    if (nd.nonEmpty) {
-      val enc = nd.toSeq.sortBy(_._1).map { case (c, r) =>
-        "\"" + java.util.Base64.getEncoder.encodeToString(
-          s"$c\t${r.ndv}\t${r.maxLen}\t${r.avgLen}\t${r.asOf}"
-            .getBytes(StandardCharsets.UTF_8)) + "\""
-      }
-      fields += s""""ndvB64":[${enc.mkString(",")}]"""
-    }
-    // per-partition ANALYZE/write-back records, preserved like ndv
-    val pnd = pndv.getOrElse(partitionNdv(spark, path))
-    if (pnd.nonEmpty) {
-      val enc = pnd.toSeq.sortBy(_._1).flatMap { case (part, colsMap) =>
-        val pb = java.util.Base64.getEncoder.encodeToString(
-          part.getBytes(StandardCharsets.UTF_8))
-        colsMap.toSeq.sortBy(_._1).map { case (c, r) =>
-          "\"" + java.util.Base64.getEncoder.encodeToString(
-            s"$pb\t$c\t${r.ndv}\t${r.maxLen}\t${r.avgLen}\t${r.asOf}"
-              .getBytes(StandardCharsets.UTF_8)) + "\""
-        }
-      }
-      fields += s""""pndvB64":[${enc.mkString(",")}]"""
-    }
-    // mapping chain: explicit new value, or preserved from the current meta
-    val ren = mappings.getOrElse(tableMappings(spark, path))
-    if (ren.nonEmpty) {
-      val enc = ren.map { r =>
-        val line = r match {
-          case RenameRec(o, n, v) => s"r\t$o\t$n\t$v"
-          case WidenRec(c, t, v)  => s"w\t$c\t$t\t$v"
-        }
-        "\"" + java.util.Base64.getEncoder.encodeToString(
-          line.getBytes(StandardCharsets.UTF_8)) + "\""
-      }
-      fields += s""""mappingsB64":[${enc.mkString(",")}]"""
-    }
-    // MONOTONIC mixed-layout marker (partition evolution, B53): set
-    // when a spec change leaves groups of different layouts behind,
-    // preserved by every later meta rewrite. Readers route mixed
-    // tables through the per-group-root union (always correct) and
-    // keep the single-scan fast path for never-evolved flat tables.
-    if (markMixed || hasMixedLayouts(spark, path)) fields += "\"mixedLayouts\":true"
-    if (dvMode) fields += "\"dvMode\":true"
-    if (sortBy.nonEmpty)
-      fields += s""""sortBy":[${sortBy.map(c => "\"" + c + "\"").mkString(",")}]"""
-    if (checks.nonEmpty) {
-      // name TAB sql, base64 per entry: constraint SQL may contain any
-      // character, so it never touches the JSON-ish syntax above
-      val encoded = checks.map { case (n, sql) =>
-        "\"" + java.util.Base64.getEncoder.encodeToString(
-          s"$n\t$sql".getBytes(StandardCharsets.UTF_8)) + "\""
-      }
-      fields += s""""checksB64":[${encoded.mkString(",")}]"""
-    }
-    schema.foreach { sch =>
-      val b64 = java.util.Base64.getEncoder.encodeToString(
-        sch.json.getBytes(StandardCharsets.UTF_8))
-      fields += s""""schemaB64":"$b64""""
-    }
-    fields += s""""metaVer":${expect + 1}"""
-    val meta = tableMetaFile(path)
-    val fs = fsOf(spark, meta)
+  private def updateMeta(spark: SparkSession, path: String, base: TableMeta,
+      next: TableMeta): TableMeta = {
+    val expect = base.ver
+    val published = next.copy(ver = expect + 1,
+      mixedLayouts = next.mixedLayouts || base.mixedLayouts)
+    val metaFile = tableMetaFile(path)
+    val fs = fsOf(spark, metaFile)
     fs.mkdirs(logDir(path))
     val lock = new Path(logDir(path), f".claim-meta-v${expect + 1}%05d")
     val token = java.util.UUID.randomUUID.toString
@@ -2091,7 +2016,7 @@ object LakeTable {
       // tunable via spark.graft.meta.claimLeaseMs.
       val leaseMs = spark.conf.getOption("spark.graft.meta.claimLeaseMs")
         .map(_.toLong).getOrElse(15L * 60 * 1000)
-      val reclaimed = currentMetaVer(spark, path) == expect && {
+      val reclaimed = meta(spark, path).ver == expect && {
         val age =
           try System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime
           catch { case _: java.io.FileNotFoundException => -1L } // racer mid-flight
@@ -2099,14 +2024,13 @@ object LakeTable {
       }
       if (!reclaimed)
         throw new ConcurrentWriteException(
-          s"table-meta change lost the race at $meta (expected metaVer $expect): " +
+          s"table-meta change lost the race at $metaFile (expected metaVer $expect): " +
           "a concurrent DDL published first — re-run against the new table state")
     }
     val tmp = new Path(logDir(path),
       s".tmp-meta-${java.util.UUID.randomUUID.toString.take(8)}.json")
     val out = fs.create(tmp, true)
-    try out.write(("{" + fields.result().mkString(",") + "}")
-      .getBytes(StandardCharsets.UTF_8))
+    try out.write(TableMeta.render(published).getBytes(StandardCharsets.UTF_8))
     finally out.close()
     // Ownership re-verify: the reclaim path's delete-then-create is
     // NOT atomic — two reclaimers both past the lease check can
@@ -2118,6 +2042,8 @@ object LakeTable {
     // metaVer re-read closes the second ordering (B stat'd the orphan
     // before A replaced it, A published in between): a version that
     // already moved means the claim B holds is for a SPENT version.
+    // The meta read (a parse) goes first so the token check sits right
+    // before the rename: the gap below is one claim read wide.
     // Residual (accepted): if BOTH reclaimers pass this re-verify
     // before either renames — A's whole delete+create+verify landing
     // inside B's verify→rename gap — both publish. That needs two
@@ -2126,86 +2052,55 @@ object LakeTable {
     // interleave; full closure needs a compare-and-swap primitive the
     // filesystem API doesn't offer — on a store that has one
     // (conditional PUT), tryExclusiveCreateToken is the swap point.
-    if (!claimToken(fs, lock).contains(token)
-        || currentMetaVer(spark, path) != expect) {
+    if (meta(spark, path).ver != expect || !claimToken(fs, lock).contains(token)) {
       fs.delete(tmp, false)
       throw new ConcurrentWriteException(
-        s"table-meta claim for $meta was reclaimed by a concurrent writer " +
+        s"table-meta claim for $metaFile was reclaimed by a concurrent writer " +
         s"(expected metaVer $expect): re-run against the new table state")
     }
-    if (!fs.rename(tmp, meta)) {
+    if (!fs.rename(tmp, metaFile)) {
       // HDFS-semantics stores refuse a rename onto an existing target
       // (local FS replaces atomically). The claim already serialized
       // writers, so delete+rename is race-free there; the not-found
       // window it opens for readers is the store's own trade.
-      if (fs.exists(meta)) fs.delete(meta, false)
-      if (!fs.rename(tmp, meta)) {
+      if (fs.exists(metaFile)) fs.delete(metaFile, false)
+      if (!fs.rename(tmp, metaFile)) {
         fs.delete(tmp, false)
         // Release the claim: metaVer stays at `expect`, so keeping the
         // claim would block every future mutation until lease expiry.
         fs.delete(lock, false)
-        throw new IllegalStateException(s"table-meta rename failed for $meta")
+        throw new IllegalStateException(s"table-meta rename failed for $metaFile")
       }
     }
+    published
   }
-
-  /** CHECK constraints recorded on the table as (name, boolean SQL).
-    * Enforced on every write path: API verbs through the writeGroup
-    * guard, native DSv2 writes through a per-row bound predicate in
-    * the task writer. SQL-standard semantics: NULL passes.
-    */
-  def tableChecks(spark: SparkSession, path: String): Seq[(String, String)] =
-    tableMetaBody(spark, path).flatMap { body =>
-      """"checksB64"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(body)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-          .map { b64 =>
-            val s = new String(java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8)
-            val i = s.indexOf('\t')
-            (s.substring(0, i), s.substring(i + 1))
-          })
-    }.getOrElse(Nil)
 
   /** Add a CHECK constraint (the Delta `ALTER TABLE ADD CONSTRAINT`
     * capability): EXISTING data is validated first — one scan; a
     * violated constraint is rejected rather than recorded — then the
     * constraint guards every subsequent write.
     */
-  def addCheck(spark: SparkSession, path: String, name: String, sql: String): Unit = {
+  def addCheck(spark: SparkSession, path: String, name: String, sql: String): TableMeta = {
     import org.apache.spark.sql.functions.{expr => fexpr}
-    val expect = currentMetaVer(spark, path)
-    val existing = tableChecks(spark, path)
-    require(!existing.exists(_._1 == name), s"constraint $name already exists")
-    val violations =
-      read(spark, path).where(fexpr(s"NOT coalesce(($sql), true)")).limit(1).count()
+    val base = meta(spark, path)
+    require(!base.checks.exists(_._1 == name), s"constraint $name already exists")
+    val head = currentVersion(spark, path)
+      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    val violations = read(spark, path, base, head)
+      .where(fexpr(s"NOT coalesce(($sql), true)")).limit(1).count()
     require(violations == 0,
       s"cannot add CHECK constraint $name: existing rows violate ($sql)")
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), existing :+ (name -> sql),
-      dvEnabled(spark, path), expectVer = Some(expect))
+    updateMeta(spark, path, base, base.copy(checks = base.checks :+ (name -> sql)))
   }
 
-  def dropCheck(spark: SparkSession, path: String, name: String): Unit = {
-    val expect = currentMetaVer(spark, path)
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path),
-      tableChecks(spark, path).filterNot(_._1 == name), dvEnabled(spark, path),
-      expectVer = Some(expect))
+  def dropCheck(spark: SparkSession, path: String, name: String): TableMeta = {
+    val base = meta(spark, path)
+    updateMeta(spark, path, base, base.copy(checks = base.checks.filterNot(_._1 == name)))
   }
 
-  /** Delta's enableDeletionVectors table property: when ON, SQL DELETE
-    * and UPDATE route through the merge-on-read verbs (deleteMor /
-    * updateMor) instead of copy-on-write group rewrites.
-    */
-  def dvEnabled(spark: SparkSession, path: String): Boolean =
-    tableMetaBody(spark, path).exists(
-      """"dvMode"\s*:\s*true""".r.findFirstIn(_).isDefined)
-
-  def setDvMode(spark: SparkSession, path: String, on: Boolean): Unit = {
-    val expect = currentMetaVer(spark, path)
-    writeTableMeta(spark, path, tablePartitioning(spark, path),
-      metaSchema(spark, path), tableSortBy(spark, path), tableChecks(spark, path), on,
-      expectVer = Some(expect))
+  def setDvMode(spark: SparkSession, path: String, on: Boolean): TableMeta = {
+    val base = meta(spark, path)
+    updateMeta(spark, path, base, base.copy(dvMode = on))
   }
 
   /** Create (or replace) the table as version 0. */
@@ -2215,26 +2110,18 @@ object LakeTable {
     val fs = fsOf(spark, p)
     if (fs.exists(p)) fs.delete(p, true)
     invalidateSchemaCache(spark, path)
-    val dir = writeGroup(spark, path, 0L, df, partitionBy)
+    val dir = writeGroup(spark, path, TableMeta.empty, 0L, df, partitionBy)
     if (partitionBy.nonEmpty) {
-      // The schema rides along (base64 of its JSON, dodging escaping):
-      // an EMPTY partitioned create writes no parquet files at all, so
-      // schema inference has nothing to read until the first insert —
-      // the meta is the fallback that keeps DDL-then-INSERT resolvable.
-      writeTableMeta(spark, path, partitionBy, Some(df.schema), Nil, Nil, dvMode = false)
+      // The schema rides along: an EMPTY partitioned create writes no
+      // parquet files at all, so schema inference has nothing to read
+      // until the first insert — the meta is the fallback that keeps
+      // DDL-then-INSERT resolvable.
+      updateMeta(spark, path, TableMeta.empty,
+        TableMeta(partitionBy = partitionBy, schema = Some(df.schema)))
     }
     writeCommit(spark, path, Commit(0L, "create", Seq(dir)))
     0L
   }
-
-  /** Schema recorded in the table meta, if any. */
-  private def metaSchema(spark: SparkSession, path: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    tableMetaBody(spark, path).flatMap(
-      """"schemaB64"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(_)
-        .map(m => org.apache.spark.sql.types.DataType.fromJson(
-          new String(java.util.Base64.getDecoder.decode(m.group(1)), StandardCharsets.UTF_8))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]))
 
   /** Record `schema` (and keep the partitioning) in the table meta —
     * the ALTER TABLE ADD COLUMNS persistence: files stay untouched,
@@ -2242,10 +2129,8 @@ object LakeTable {
     */
   private[graft] def updateSchemaMeta(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val expect = currentMetaVer(spark, path)
-    writeTableMeta(spark, path, tablePartitioning(spark, path), Some(schema),
-      tableSortBy(spark, path), tableChecks(spark, path), dvEnabled(spark, path),
-      expectVer = Some(expect))
+    val base = meta(spark, path)
+    updateMeta(spark, path, base, base.copy(schema = Some(schema)))
   }
 
   /** Bounded process-wide schema cache. Schema derivation walks every
@@ -2316,31 +2201,38 @@ object LakeTable {
     */
   def tableSchema(spark: SparkSession, path: String,
       version: Option[Long] = None): org.apache.spark.sql.types.StructType = {
-    val resolved = version.orElse(currentVersion(spark, path))
-    val key = resolved.map(v => (
-      fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString,
-      v, currentMetaVer(spark, path)))
-    key.flatMap(k => Option(schemaCache.get(k))) match {
-      case Some(hit) => hit
-      case None =>
-        val computed = tableSchemaUncached(spark, path, resolved)
-        key.foreach(k => schemaCache.put(k, computed))
-        computed
+    val v = version.orElse(currentVersion(spark, path))
+      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    tableSchema(spark, path, meta(spark, path), v)
+  }
+
+  /** [[tableSchema]] of snapshot `v` under meta `m`, the value the
+    * calling verb resolved.
+    */
+  private[graft] def tableSchema(spark: SparkSession, path: String, m: TableMeta,
+      v: Long): org.apache.spark.sql.types.StructType = {
+    val key = (fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString, v, m.ver)
+    Option(schemaCache.get(key)).getOrElse {
+      val computed = tableSchemaUncached(spark, path, m, v)
+      schemaCache.put(key, computed)
+      computed
     }
   }
 
-  private def tableSchemaUncached(spark: SparkSession, path: String,
-      version: Option[Long]): org.apache.spark.sql.types.StructType = {
-    val inferred =
-      try Some(read(spark, path, version).schema)
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        metaSchema(spark, path) match {
-          case Some(m) => return m
-          case None => throw e
-        }
+  /** [[tableSchema]] of the head snapshot under meta `m`. */
+  private[graft] def headSchema(spark: SparkSession, path: String,
+      m: TableMeta): org.apache.spark.sql.types.StructType =
+    tableSchema(spark, path, m, currentVersion(spark, path)
+      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path")))
+
+  private def tableSchemaUncached(spark: SparkSession, path: String, tm: TableMeta,
+      v: Long): org.apache.spark.sql.types.StructType = {
+    val i =
+      try read(spark, path, tm, v).schema
+      catch {
+        case e: org.apache.spark.sql.AnalysisException => return tm.schema.getOrElse(throw e)
       }
-    val i = inferred.get
-    metaSchema(spark, path) match {
+    tm.schema match {
       case Some(m) =>
         val have = i.fieldNames.toSet
         val byName = m.fields.map(f => f.name -> f).toMap
@@ -2378,8 +2270,9 @@ object LakeTable {
     // No explicit layout → the table's CURRENT spec (which partition
     // evolution may have changed since create): new groups always land
     // under the spec in force at write time.
-    val spec = if (partitionBy.nonEmpty) partitionBy else tablePartitioning(spark, path)
-    val dir = writeGroup(spark, path, prev + 1, df, spec)
+    val m = meta(spark, path)
+    val spec = if (partitionBy.nonEmpty) partitionBy else m.partitionBy
+    val dir = writeGroup(spark, path, m, prev + 1, df, spec)
     commitBlindAppend(spark, path, prev, dir, txn = None)
   }
 
@@ -2456,13 +2349,13 @@ object LakeTable {
         .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
       val c = readCommit(spark, path, prev)
       val v = prev + 1
-      val spec = if (partitionBy.nonEmpty) partitionBy
-        else tablePartitioning(spark, path)
       // Stage the data ONCE; retries after a lost race rebase the same
       // group dir (blind appends read nothing — only the metadata
       // commit needs redoing).
       val dir = staged.getOrElse {
-        val d = writeGroup(spark, path, v, df, spec); staged = Some(d); d
+        val m = meta(spark, path)
+        val spec = if (partitionBy.nonEmpty) partitionBy else m.partitionBy
+        val d = writeGroup(spark, path, m, v, df, spec); staged = Some(d); d
       }
       val cdc = cdcKey(spark, path).map(_ => "@" + dir)
       try {
@@ -2514,9 +2407,7 @@ object LakeTable {
   }
 
   private[graft] def commitStaged(spark: SparkSession, path: String, stagedDir: String,
-      keepFiles: Seq[String], mode: StagedMode, txn: Option[(String, Long)] = None,
-      createPartitionBy: Seq[String] = Nil,
-      createSchema: Option[org.apache.spark.sql.types.StructType] = None): Long = {
+      keepFiles: Seq[String], mode: StagedMode, txn: Option[(String, Long)] = None): Long = {
     import StagedMode._
     val stagedPath = new Path(path, stagedDir)
     val fs = fsOf(spark, stagedPath)
@@ -2537,25 +2428,14 @@ object LakeTable {
       case None =>
         // First write to a fresh path: create at version 0 (the staged
         // dir IS the v0 group). Partitioned DDL tables already exist
-        // (the catalog's createTable commits v0), so createPartitionBy
-        // only matters for path-based first writes.
-        if (createPartitionBy.nonEmpty) {
-          val b64 = java.util.Base64.getEncoder.encodeToString(
-            createSchema.getOrElse(org.apache.spark.sql.types.StructType(Nil))
-              .json.getBytes(StandardCharsets.UTF_8))
-          val meta = tableMetaFile(path)
-          val out = fsOf(spark, meta).create(meta, true)
-          try out.write(
-            (s"""{"partitionBy":[${createPartitionBy.map(c => "\"" + c + "\"").mkString(",")}],""" +
-              s""""schemaB64":"$b64"}""").getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-        }
+        // (the catalog's createTable commits v0).
         writeCommit(spark, path, Commit(0L, "create", Seq(stagedDir), None, txn = txn))
         0L
       case Some(prev) =>
         val c = readCommit(spark, path, prev)
         val v = prev + 1
-        val parts = tablePartitioning(spark, path)
+        val m = meta(spark, path)
+        val parts = m.partitionBy
         mode match {
           case Append =>
             // Zero-write-amplification CDC marker, like append().
@@ -2564,23 +2444,23 @@ object LakeTable {
             writeCommit(spark, path, Commit(v, "append", dirs, cdc, txn = txn))
           case Overwrite =>
             val cdc = cdcKey(spark, path).map { k =>
-              writeCdc(spark, path, v, diffFrames(read(spark, path, Some(prev)),
-                readDirs(spark, path, Seq(stagedDir)), k, preimages = true))
+              writeCdc(spark, path, v, diffFrames(read(spark, path, m, prev),
+                readDirs(spark, path, m, Seq(stagedDir)), k, preimages = true))
             }
             writeCommit(spark, path, Commit(v, "overwrite", Seq(stagedDir), cdc, txn = txn))
           case ReplaceWhere(pred) =>
-            val (touched, untouched) = splitDirs(spark, path, c.dirs,
-              predicateBounds(spark, tableSchema(spark, path, Some(prev)), pred))
+            val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
+              predicateBounds(spark, tableSchema(spark, path, m, prev), pred))
             val old =
-              if (touched.isEmpty) read(spark, path, Some(prev)).limit(0)
-              else readDirsLive(spark, path, touched, prev)
+              if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+              else readDirsLive(spark, path, m, touched, prev)
             val rewritten =
               if (touched.isEmpty) None
-              else Some(writeGroup(spark, path, v,
+              else Some(writeGroup(spark, path, m, v,
                 old.where(!coalesce(pred, lit(false))), parts))
             val cdc = cdcKey(spark, path).map { k =>
               writeCdc(spark, path, v, diffFrames(old,
-                readDirs(spark, path, rewritten.toSeq :+ stagedDir), k, preimages = true))
+                readDirs(spark, path, m, rewritten.toSeq :+ stagedDir), k, preimages = true))
             }
             writeCommit(spark, path,
               Commit(v, "replace", (untouched ++ rewritten) :+ stagedDir, cdc, txn = txn))
@@ -2606,10 +2486,10 @@ object LakeTable {
             val cdc = cdcKey(spark, path).map { k =>
               val ds = droppedLeaves.result()
               val oldDf =
-                if (ds.isEmpty) read(spark, path, Some(prev)).limit(0)
-                else readDirsLive(spark, path, ds, prev)
+                if (ds.isEmpty) read(spark, path, m, prev).limit(0)
+                else readDirsLive(spark, path, m, ds, prev)
               writeCdc(spark, path, v, diffFrames(oldDf,
-                readDirs(spark, path, Seq(stagedDir)), k, preimages = true))
+                readDirs(spark, path, m, Seq(stagedDir)), k, preimages = true))
             }
             writeCommit(spark, path,
               Commit(v, "replace", keepDirs.result() :+ stagedDir, cdc, txn = txn))
@@ -2646,8 +2526,13 @@ object LakeTable {
   def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    read(spark, path, meta(spark, path), v)
+  }
+
+  /** Snapshot `v` read under meta `m`, the value the calling verb resolved. */
+  private[graft] def read(spark: SparkSession, path: String, m: TableMeta, v: Long): DataFrame = {
     val c = readCommit(spark, path, v)
-    readDirsDv(spark, path, c.dirs, dvFor(spark, path, v, c.dirs), withPos = false)
+    readDirsDv(spark, path, m, c.dirs, dvFor(spark, path, v, c.dirs), withPos = false)
   }
 
   // ---- deletion vectors (merge-on-read DELETE, B46) -----------------
@@ -2765,7 +2650,7 @@ object LakeTable {
     val v = prev + 1
     val c = readCommit(spark, path, prev)
     val dv0 = dvFor(spark, path, prev, c.dirs)
-    val live = readDirsDv(spark, path, c.dirs, dv0, withPos = true)
+    val live = readDirsDv(spark, path, meta(spark, path), c.dirs, dv0, withPos = true)
     if (!live.columns.contains("__file")) { // empty DDL table: no files
       writeCommit(spark, path, Commit(v, "delete-mor", c.dirs))
       return v
@@ -2818,8 +2703,9 @@ object LakeTable {
         stateAtTo.get(g).map(_._2).getOrElse(Map.empty))
     }
     val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v, diffFrames(read(spark, path, Some(cur)),
-        read(spark, path, Some(toVersion)), k, preimages = true))
+      val m = meta(spark, path)
+      writeCdc(spark, path, v, diffFrames(read(spark, path, m, cur),
+        read(spark, path, m, toVersion), k, preimages = true))
     }
     writeCommit(spark, path, Commit(v, "restore", old.dirs, cdc, dvFiles = dvNames))
     v
@@ -2939,8 +2825,9 @@ object LakeTable {
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val v = prev + 1
     val c = readCommit(spark, path, prev)
+    val m = meta(spark, path)
     val dv0 = dvFor(spark, path, prev, c.dirs)
-    val live = readDirsDv(spark, path, c.dirs, dv0, withPos = true)
+    val live = readDirsDv(spark, path, m, c.dirs, dv0, withPos = true)
     if (!live.columns.contains("__file")) {
       writeCommit(spark, path, Commit(v, "update-mor", c.dirs))
       return v
@@ -2958,7 +2845,7 @@ object LakeTable {
     val newRows = assignments.foldLeft(oldRows) { case (acc, (cn, e)) =>
       acc.withColumn(cn, e)
     }
-    val dir = writeGroup(spark, path, v, newRows, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, newRows, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v, diffFrames(oldRows, newRows, k, preimages = true))
     }
@@ -3000,9 +2887,10 @@ object LakeTable {
     * an array and exploded, so the diff join never re-executes.
     */
   def changes(spark: SparkSession, path: String, key: String,
-      fromVersion: Long, toVersion: Long, preimages: Boolean): DataFrame =
-    diffFrames(read(spark, path, Some(fromVersion)),
-      read(spark, path, Some(toVersion)), key, preimages)
+      fromVersion: Long, toVersion: Long, preimages: Boolean): DataFrame = {
+    val m = meta(spark, path)
+    diffFrames(read(spark, path, m, fromVersion), read(spark, path, m, toVersion), key, preimages)
+  }
 
   /** Keyed diff of two row sets — the core of [[changes]], also used
     * by CDC-on-write to diff only the touched file groups of a DML
@@ -3198,7 +3086,7 @@ object LakeTable {
   /** Split a snapshot's dirs under conjunctive bounds: `untouched` =
     * every file's [min,max] provably misses the bounds on some column.
     */
-  private def splitDirs(spark: SparkSession, path: String, dirs: Seq[String],
+  private def splitDirs(spark: SparkSession, path: String, m: TableMeta, dirs: Seq[String],
       bounds: Map[String, ColumnBounds]): (Seq[String], Seq[String]) = {
     if (bounds.isEmpty || bounds.values.forall(b => b.lo.isEmpty && b.hi.isEmpty))
       return (dirs, Nil)
@@ -3209,7 +3097,7 @@ object LakeTable {
     // partition subdirs forward verbatim and only matching partitions
     // feed the rewrite (a DELETE on one partition of a 1000-partition
     // group moves 1/1000th of it).
-    val (pruned, _) = pruneFilesByDir(spark, path, dirs, bounds)
+    val (pruned, _) = pruneFilesByDir(spark, path, m.renames, dirs, bounds)
     val touched = Seq.newBuilder[String]; val untouched = Seq.newBuilder[String]
     pruned.foreach { pd =>
       if (!pd.files.exists(_.kept)) untouched += pd.dir
@@ -3370,16 +3258,17 @@ object LakeTable {
     * allowMissingColumns, same contract as mergeSchema). Empty groups
     * (a schema-only create) contribute nothing.
     */
-  private def readDirs(spark: SparkSession, path: String, dirs: Seq[String]): DataFrame =
-    readDirsDv(spark, path, dirs, Map.empty, withPos = false)
+  private def readDirs(spark: SparkSession, path: String, m: TableMeta,
+      dirs: Seq[String]): DataFrame =
+    readDirsDv(spark, path, m, dirs, Map.empty, withPos = false)
 
   /** Touched-group read with the snapshot's deletion vectors applied.
     * EVERY copy-on-write rewrite source must read LIVE rows — a plain
     * readDirs would resurrect vectored-out rows into the rewrite.
     */
-  private def readDirsLive(spark: SparkSession, path: String, dirs: Seq[String],
+  private def readDirsLive(spark: SparkSession, path: String, m: TableMeta, dirs: Seq[String],
       version: Long): DataFrame =
-    readDirsDv(spark, path, dirs, dvFor(spark, path, version, dirs), withPos = false)
+    readDirsDv(spark, path, m, dirs, dvFor(spark, path, version, dirs), withPos = false)
 
   /** [[readDirs]] with deletion-vector application (B46) and optional
     * file/row-position columns. DVs and positions both ride on the
@@ -3389,7 +3278,7 @@ object LakeTable {
     * no DV skip the metadata projection entirely (zero overhead for
     * the common non-MOR table).
     */
-  private def readDirsDv(spark: SparkSession, path: String, dirs: Seq[String],
+  private def readDirsDv(spark: SparkSession, path: String, m: TableMeta, dirs: Seq[String],
       dv: Map[String, Map[String, Array[Byte]]], withPos: Boolean,
       kept: Option[Map[String, Seq[String]]] = None): DataFrame = {
     // ONE broadcast of the full vector set per read plan (executors
@@ -3420,7 +3309,7 @@ object LakeTable {
       case None => entries.map(e => new Path(path, e).toString)
         .filter(p => !nonEmpty || hasParquet(spark, new Path(p)))
     }
-    val mappings = tableMappings(spark, path)
+    val mappings = m.mappings
     val flatEntries = dirs.forall(d => groupRoot(d) == d)
     // Footer merge across groups fails hard on PHYSICAL type skew (a
     // pre-normalization group stored INT where later ones hold
@@ -3431,8 +3320,7 @@ object LakeTable {
     // legacy-data escape hatch, not a hot path.
     def mergeConflict(t: Throwable): Boolean = t != null && (
       Option(t.getMessage).exists(_.contains("CANNOT_MERGE")) || mergeConflict(t.getCause))
-    if (flatEntries && tablePartitioning(spark, path).isEmpty
-        && !hasMixedLayouts(spark, path)) {
+    if (flatEntries && m.partitionBy.isEmpty && !m.mixedLayouts) {
       // Single-scan fast path: a table with data at rename time is
       // marked mixed and routed below, so any chain here predates
       // every dir — the min version stands in for all of them.
@@ -3441,7 +3329,7 @@ object LakeTable {
         dirs.map(groupVersionOf).min),
         dirs.map(groupKey))
       catch { case e: Throwable if mergeConflict(e) =>
-        readDirsUnion(spark, path, dirs, mappings, sources(_, nonEmpty = true), finish) }
+        readDirsUnion(spark, path, m, dirs, sources(_, nonEmpty = true), finish) }
     } else {
       // Partitioned (or subdir-entry) layout. CLEAN snapshots (no
       // deletion vectors, no mapping chain, no position columns) read
@@ -3453,19 +3341,18 @@ object LakeTable {
       // group root). Partition column types come from the meta-recorded
       // schema (authoritative — the catalog path's source), never
       // re-inferred from path strings.
-      val partCols = tablePartitioning(spark, path)
+      val partCols = m.partitionBy
       if (dv.isEmpty && !withPos && mappings.isEmpty && partCols.nonEmpty && kept.isEmpty) {
-        val meta = metaSchema(spark, path)
-        if (meta.exists(m => partCols.forall(m.fieldNames.contains))) {
-          val m = meta.get
+        val recorded = m.schema.filter(s => partCols.forall(s.fieldNames.contains))
+        if (recorded.isDefined) {
           val leaves = partitionLeaves(spark,
             dirs.map(d => new Path(path, d).toString), partCols)
-          val partSchema = org.apache.spark.sql.types.StructType(partCols.map(c => m(c)))
+          val partSchema = org.apache.spark.sql.types.StructType(partCols.map(recorded.get(_)))
           // The footer-merged schema is immutable per (path, dir set,
           // metaVer) — cache it so repeated reads of the same snapshot
           // skip the inference job entirely.
           val key = (fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString
-            + FileSchemaKeySep + dirs.sorted.mkString(","), -1L, currentMetaVer(spark, path))
+            + FileSchemaKeySep + dirs.sorted.mkString(","), -1L, m.ver)
           val hint = Option(fileSchemaCache.get(key))
           try org.apache.spark.sql.graftglue.Glue
             .partitionedParquetDataFrame(spark, leaves, partSchema, hint) match {
@@ -3477,7 +3364,7 @@ object LakeTable {
           catch { case e: Throwable if mergeConflict(e) => () } // union coerces
         }
       }
-      readDirsUnion(spark, path, dirs, mappings, sources(_, nonEmpty = true), finish)
+      readDirsUnion(spark, path, m, dirs, sources(_, nonEmpty = true), finish)
     }
   }
 
@@ -3490,16 +3377,23 @@ object LakeTable {
     * groups. `sources` names the paths a root's entries read. Plan size
     * here is the ROOT count; compaction collapses it to one.
     */
-  private def readDirsUnion(spark: SparkSession, path: String, dirs: Seq[String],
-      mappings: Seq[MapRec], sources: Seq[String] => Seq[String],
+  private def readDirsUnion(spark: SparkSession, path: String, m: TableMeta,
+      dirs: Seq[String], sources: Seq[String] => Seq[String],
       finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{DataType, StructType}
     // Partition columns take the meta-recorded types, as the clean
     // explicit-spec read does: discovery from path strings would read
     // a STRING value `01` as the int 1. A root whose discovered types
     // differ re-reads with them fixed (a listing; no second footer merge).
-    lazy val recorded = metaSchema(spark, path).fold(Map.empty[String, DataType])(
+    lazy val recorded = m.schema.fold(Map.empty[String, DataType])(
       _.fields.map(f => f.name -> f.dataType).toMap)
+    // A root discovers its partition columns under their write-time
+    // names; the renames that apply to it (those applyMappings performs)
+    // lead to the logical name the recorded schema types.
+    def logicalName(root: String, physical: String): String =
+      m.renames.foldLeft(physical) { (n, r) =>
+        if (groupVersionOf(root) < r.stamp && r.old == n) r.to else n
+      }
     def readRoot(root: String, paths: Seq[String]): DataFrame = {
       import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val reader = spark.read.option("mergeSchema", "true")
@@ -3509,21 +3403,22 @@ object LakeTable {
         l.relation }.collect { case h: HadoopFsRelation => h.partitionSchema.fieldNames.toSet }
         .getOrElse(Set.empty[String])
       if (discovered.isEmpty) return df
-      val typed = StructType(df.schema.fields.map(f => recorded.get(f.name) match {
-        case Some(t) if discovered(f.name) && t != f.dataType => f.copy(dataType = t)
-        case _ => f
-      }))
+      val typed = StructType(df.schema.fields.map(f =>
+        recorded.get(logicalName(root, f.name)) match {
+          case Some(t) if discovered(f.name) && t != f.dataType => f.copy(dataType = t)
+          case _ => f
+        }))
       if (typed == df.schema) df else reader.schema(typed).parquet(paths: _*)
     }
     val byRoot = dirs.groupBy(groupRoot).toSeq.sortBy(_._1)
     val reads = byRoot.flatMap { case (root, entries) =>
       val entryPaths = sources(entries)
       if (entryPaths.isEmpty) None
-      else Some(finish(applyMappings(readRoot(root, entryPaths), mappings,
+      else Some(finish(applyMappings(readRoot(root, entryPaths), m.mappings,
         groupVersionOf(root)), Seq(groupKey(root))))
     }
     if (reads.nonEmpty) reads.reduce(_.unionByName(_, allowMissingColumns = true))
-    else metaSchema(spark, path) match {
+    else m.schema match {
       // A partitioned DDL create writes NO files (partitionBy of an
       // empty frame emits nothing) — an empty frame with the
       // recorded schema keeps first-write DML (MERGE-as-insert,
@@ -3546,22 +3441,23 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
-    val (touched, untouched) = splitDirs(spark, path, c.dirs, keyBounds(source, Seq(key)))
+    val m = meta(spark, path)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs, keyBounds(source, Seq(key)))
     // limit(0) base pins the full table schema even when no group is
     // touched (pure insert) or the source is missing columns.
     val target =
-      if (touched.isEmpty) read(spark, path, Some(prev)).limit(0)
-      else readDirsLive(spark, path, touched, prev)
+      if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+      else readDirsLive(spark, path, m, touched, prev)
     val kept = target.join(source.select(key), Seq(key), "left_anti")
     val merged = kept.unionByName(source, allowMissingColumns = true)
     val v = prev + 1
-    val dir = writeGroup(spark, path, v, merged, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, merged, m.partitionBy)
     // CDC: diff only the touched groups against their rewrite —
     // untouched groups are on both sides of the snapshot diff and
     // produce no records, so the diff cost tracks the mutation size.
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
-        diffFrames(target, readDirs(spark, path, Seq(dir)), k, preimages = true))
+        diffFrames(target, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
     writeCommit(spark, path, Commit(v, "merge", untouched :+ dir, cdc))
     v
@@ -3624,6 +3520,7 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
+    val m = meta(spark, path)
 
     // Equi-key pairs (targetCol, sourceCol) mined from the condition's
     // conjuncts — they drive file-group pruning and the dup guard.
@@ -3661,24 +3558,24 @@ object LakeTable {
       else keyBounds(source, equiPairs.map(_._2))
         .map { case (sc, b) => equiPairs.find(_._2 == sc).get._1 -> b }
     // splitDirs treats empty bounds as "everything touched" (sound).
-    val (touched, untouched) = splitDirs(spark, path, c.dirs, bounds)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs, bounds)
 
-    val tSchema = tableSchema(spark, path, Some(prev))
+    val tSchema = tableSchema(spark, path, m, prev)
     // DV-mode (B46): MERGE goes merge-on-read — affected target rows
     // are carried with their (file, position) so they can be vectored
     // out instead of rewriting their groups.
-    val dvMode = dvEnabled(spark, path)
+    val dvMode = m.dvMode
     val dv0 = if (dvMode) dvFor(spark, path, prev, c.dirs)
       else Map.empty[String, Map[String, Array[Byte]]]
     val targetRaw =
       if (touched.isEmpty) {
-        val base = read(spark, path, Some(prev)).limit(0)
+        val base = read(spark, path, m, prev).limit(0)
         if (dvMode) base.withColumn("__file", lit(null).cast("string"))
           .withColumn("__pos", lit(null).cast("long"))
         else base
       }
-      else if (dvMode) readDirsDv(spark, path, touched, dv0, withPos = true)
-      else readDirsLive(spark, path, touched, prev)
+      else if (dvMode) readDirsDv(spark, path, m, touched, dv0, withPos = true)
+      else readDirsLive(spark, path, m, touched, prev)
     // Pin the full evolved schema (touched groups may predate an added
     // column) and add presence markers for the full-outer categories.
     val outNames = tSchema.fieldNames.toSeq ++
@@ -3739,21 +3636,21 @@ object LakeTable {
         .toDF("__file", "bm")
       val appendRows = joined.where(keep && (!tPresent || acted)).select(outCols: _*)
       val dvNames = mergeAndWriteDv(spark, path, v, c.dirs, dv0, marks)
-      val dir = writeGroup(spark, path, v, appendRows, tablePartitioning(spark, path))
+      val dir = writeGroup(spark, path, m, v, appendRows, m.partitionBy)
       val cdc = cdcKey(spark, path).map { k =>
         val oldAffected = affected.select(tSchema.fieldNames.map(n => col(s"t.$n")).toSeq: _*)
         writeCdc(spark, path, v,
-          diffFrames(oldAffected, readDirs(spark, path, Seq(dir)), k, preimages = true))
+          diffFrames(oldAffected, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
       }
       writeCommit(spark, path, Commit(v, "merge-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
       return v
     }
     val result = joined.where(keep).select(outCols: _*)
 
-    val dir = writeGroup(spark, path, v, result, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, result, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
-        diffFrames(targetFull, readDirs(spark, path, Seq(dir)), k, preimages = true))
+        diffFrames(targetFull, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
     writeCommit(spark, path, Commit(v, "merge", untouched :+ dir, cdc))
     v
@@ -3778,19 +3675,20 @@ object LakeTable {
     // column keys). Untouched groups keep their one-row-per-key
     // invariant by induction; touched ∪ source re-combines to one row
     // per key, so the table-wide invariant survives the partial rewrite.
-    val (touched, untouched) = splitDirs(spark, path, c.dirs, keyBounds(source, keys))
+    val m = meta(spark, path)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs, keyBounds(source, keys))
     val target =
-      if (touched.isEmpty) read(spark, path, Some(prev)).limit(0)
-      else readDirsLive(spark, path, touched, prev)
+      if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+      else readDirsLive(spark, path, m, touched, prev)
     val combined = target.unionByName(source, allowMissingColumns = true)
       .groupBy(keys.map(col): _*)
       .agg(sum(sumCols.head).as(sumCols.head),
         sumCols.tail.map(c => sum(c).as(c)): _*)
     val v = prev + 1
-    val dir = writeGroup(spark, path, v, combined, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, combined, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
-        diffFrames(target, readDirs(spark, path, Seq(dir)), k, preimages = true))
+        diffFrames(target, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
     writeCommit(spark, path, Commit(v, "merge_agg", untouched :+ dir, cdc))
     v
@@ -3812,18 +3710,19 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
-    val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
+    val m = meta(spark, path)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
+      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
     val old =
-      if (touched.isEmpty) read(spark, path, Some(prev)).limit(0)
-      else readDirsLive(spark, path, touched, prev)
+      if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+      else readDirsLive(spark, path, m, touched, prev)
     val replaced = old.where(!coalesce(predicate, lit(false)))
       .unionByName(df, allowMissingColumns = true)
     val v = prev + 1
-    val dir = writeGroup(spark, path, v, replaced, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, replaced, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
-        diffFrames(old, readDirs(spark, path, Seq(dir)), k, preimages = true))
+        diffFrames(old, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
     writeCommit(spark, path, Commit(v, "replace", untouched :+ dir, cdc))
     v
@@ -3839,19 +3738,20 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
-    val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
+    val m = meta(spark, path)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
+      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       // Nothing can match: the commit is pure metadata, zero data moved.
       writeCommit(spark, path, Commit(v, "delete", c.dirs))
     } else {
-      val old = readDirsLive(spark, path, touched, prev)
-      val dir = writeGroup(spark, path, v,
-        old.where(!coalesce(predicate, lit(false))), tablePartitioning(spark, path))
+      val old = readDirsLive(spark, path, m, touched, prev)
+      val dir = writeGroup(spark, path, m, v,
+        old.where(!coalesce(predicate, lit(false))), m.partitionBy)
       val cdc = cdcKey(spark, path).map { k =>
         writeCdc(spark, path, v,
-          diffFrames(old, readDirs(spark, path, Seq(dir)), k, preimages = true))
+          diffFrames(old, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
       }
       writeCommit(spark, path, Commit(v, "delete", untouched :+ dir, cdc))
     }
@@ -3867,20 +3767,21 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
-    val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
+    val m = meta(spark, path)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
+      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       writeCommit(spark, path, Commit(v, "update", c.dirs))
     } else {
-      val df = readDirsLive(spark, path, touched, prev)
+      val df = readDirsLive(spark, path, m, touched, prev)
       val updated = assignments.foldLeft(df) { case (acc, (cn, e)) =>
         acc.withColumn(cn, when(predicate, e).otherwise(col(cn)))
       }
-      val dir = writeGroup(spark, path, v, updated, tablePartitioning(spark, path))
+      val dir = writeGroup(spark, path, m, v, updated, m.partitionBy)
       val cdc = cdcKey(spark, path).map { k =>
         writeCdc(spark, path, v,
-          diffFrames(df, readDirs(spark, path, Seq(dir)), k, preimages = true))
+          diffFrames(df, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
       }
       writeCommit(spark, path, Commit(v, "update", untouched :+ dir, cdc))
     }
@@ -3962,15 +3863,15 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val v = prev + 1
-    val df = read(spark, path, Some(prev))
-    val sb = tableSortBy(spark, path)
-      .flatMap(c => df.columns.find(_.equalsIgnoreCase(c)))
+    val m = meta(spark, path)
+    val df = read(spark, path, m, prev)
+    val sb = m.sortBy.flatMap(c => df.columns.find(_.equalsIgnoreCase(c)))
     val packed =
       if (sb.nonEmpty)
         df.repartitionByRange(numFiles, sb.map(org.apache.spark.sql.functions.col): _*)
           .sortWithinPartitions(sb.map(org.apache.spark.sql.functions.col): _*)
       else df.coalesce(numFiles)
-    val dir = writeGroup(spark, path, v, packed, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, packed, m.partitionBy)
     writeCommit(spark, path, Commit(v, "compact", Seq(dir)))
     v
   }
@@ -3988,22 +3889,22 @@ object LakeTable {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val c = readCommit(spark, path, prev)
-    val (touched, untouched) = splitDirs(spark, path, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, Some(prev)), predicate))
+    val m = meta(spark, path)
+    val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
+      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       writeCommit(spark, path, Commit(v, "compact", c.dirs))
       return v
     }
-    val df = readDirsLive(spark, path, touched, prev)
-    val sb = tableSortBy(spark, path)
-      .flatMap(cn => df.columns.find(_.equalsIgnoreCase(cn)))
+    val df = readDirsLive(spark, path, m, touched, prev)
+    val sb = m.sortBy.flatMap(cn => df.columns.find(_.equalsIgnoreCase(cn)))
     val packed =
       if (sb.nonEmpty)
         df.repartitionByRange(numFiles, sb.map(org.apache.spark.sql.functions.col): _*)
           .sortWithinPartitions(sb.map(org.apache.spark.sql.functions.col): _*)
       else df.coalesce(numFiles)
-    val dir = writeGroup(spark, path, v, packed, tablePartitioning(spark, path))
+    val dir = writeGroup(spark, path, m, v, packed, m.partitionBy)
     writeCommit(spark, path, Commit(v, "compact", untouched :+ dir))
     v
   }
@@ -4019,9 +3920,10 @@ object LakeTable {
   def clusterBy(spark: SparkSession, path: String, cols: Seq[String], numFiles: Int): Long = {
     val prev = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val zed = zOrdered(read(spark, path, Some(prev)), cols, numFiles)
+    val m = meta(spark, path)
+    val zed = zOrdered(read(spark, path, m, prev), cols, numFiles)
     val v = prev + 1
-    val dir = writeGroup(spark, path, v, zed, Nil)
+    val dir = writeGroup(spark, path, m, v, zed, Nil)
     writeCommit(spark, path, Commit(v, "cluster", Seq(dir)))
     v
   }
@@ -4112,8 +4014,9 @@ object LakeTable {
           // so the next incremental run's walk stays O(1).
           writeCommit(spark, path, Commit(v, "cluster", kept))
         } else {
-          val dir = writeGroup(spark, path, v,
-            zOrdered(readDirsLive(spark, path, delta, prev), cols, numFiles), Nil)
+          val m = meta(spark, path)
+          val dir = writeGroup(spark, path, m, v,
+            zOrdered(readDirsLive(spark, path, m, delta, prev), cols, numFiles), Nil)
           writeCommit(spark, path, Commit(v, "cluster", kept :+ dir))
         }
         v
@@ -4152,7 +4055,8 @@ object LakeTable {
     val v = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     val commit = readCommit(spark, path, v)
-    val (pruned, _) = pruneFilesByDir(spark, path, commit.dirs, Map.empty)
+    // no bounds, so no prior column names to resolve
+    val (pruned, _) = pruneFilesByDir(spark, path, Nil, commit.dirs, Map.empty)
     val dv = dvFor(spark, path, v, commit.dirs)
     pruned.flatMap { pd =>
       // DV maps key by the scan's `_metadata.file_path` URI; compare on

@@ -48,22 +48,22 @@ class ColumnRenameSpec extends AnyFunSuite {
     sources.LakeTable.create(spark, p,
       Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 20L, "c")).toDF("k", "amount", "tag"))
     sources.LakeTable.analyze(spark, p)
-    assert(sources.LakeTable.tableNdv(spark, p)("amount").ndv == 2L)
+    assert(sources.LakeTable.meta(spark, p).ndv("amount").ndv == 2L)
     // rename: the stats ride to the new name, nothing under the old
     sources.LakeTable.renameColumn(spark, p, "amount", "value")
-    val afterRename = sources.LakeTable.tableNdv(spark, p)
+    val afterRename = sources.LakeTable.meta(spark, p).ndv
     assert(afterRename("value").ndv == 2L, afterRename)
     assert(!afterRename.contains("amount"), afterRename)
     // drop then re-ADD the same name: the dead column's NDV must NOT
     // be inherited by the new column (stats for a different column
     // under a reused name are worse than none)
     sources.LakeTable.dropColumn(spark, p, "value")
-    assert(!sources.LakeTable.tableNdv(spark, p).contains("value"))
+    assert(!sources.LakeTable.meta(spark, p).ndv.contains("value"))
     sources.LakeTable.append(spark, p,
       Seq((4L, 99L, "d")).toDF("k", "value", "tag"))
-    assert(!sources.LakeTable.tableNdv(spark, p).contains("value"))
+    assert(!sources.LakeTable.meta(spark, p).ndv.contains("value"))
     // untouched columns keep their entries throughout
-    assert(sources.LakeTable.tableNdv(spark, p)("tag").ndv == 3L)
+    assert(sources.LakeTable.meta(spark, p).ndv("tag").ndv == 3L)
   }
 
   test("stats pruning on the renamed column still skips old-name files") {
@@ -75,7 +75,8 @@ class ColumnRenameSpec extends AnyFunSuite {
     sources.LakeTable.renameColumn(spark, p, "amount", "value")
     val c = sources.LakeTable.readCommit(spark, p,
       sources.LakeTable.currentVersion(spark, p).get)
-    val (pruned, _) = sources.LakeTable.pruneFilesByDir(spark, p, c.dirs,
+    val (pruned, _) = sources.LakeTable.pruneFilesByDir(spark, p,
+      sources.LakeTable.meta(spark, p).renames, c.dirs,
       Map("value" -> sources.LakeTable.ColumnBounds(Some(Long.box(90L)), None)))
     val files = pruned.flatMap(_.files)
     assert(files.nonEmpty)
@@ -377,7 +378,7 @@ class ColumnRenameSpec extends AnyFunSuite {
     sources.LakeTable.renameColumn(spark, p, "lang", "language")
     // logical schema + partition spec follow the new name
     assert(sources.LakeTable.read(spark, p).columns.contains("language"))
-    assert(sources.LakeTable.tablePartitioning(spark, p) == Seq("language"))
+    assert(sources.LakeTable.meta(spark, p).partitionBy == Seq("language"))
     // new appends lay out under the new name; both generations serve
     sources.LakeTable.append(spark, p, Seq((4L, "de", 40L)).toDF("k", "language", "v"))
     val by = sources.LakeTable.read(spark, p).groupBy("language")

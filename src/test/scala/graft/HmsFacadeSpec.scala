@@ -211,7 +211,7 @@ class HmsFacadeSpec extends AnyFunSuite {
       // engine-side visibility: the written-back stats are the SAME
       // store graft's ANALYZE fills, so the engine's catalog sees them
       val loc = client.getTable("db", "wb_t").getSd.getLocation
-      assert(graft.sources.LakeTable.tableNdv(spark, loc)("k").ndv == 42L)
+      assert(graft.sources.LakeTable.meta(spark, loc).ndv("k").ndv == 42L)
 
       // delete one column's record: k reverts to the bound, s stays
       client.deleteTableColumnStatistics("db", "wb_t", "k")
@@ -273,7 +273,7 @@ class HmsFacadeSpec extends AnyFunSuite {
 
       // engine-side visibility: same store, readable by path
       val loc = client.getTable("db", "pwb").getSd.getLocation
-      assert(graft.sources.LakeTable.partitionNdv(spark, loc)("p=a")("k").ndv == 33L)
+      assert(graft.sources.LakeTable.meta(spark, loc).pndv("p=a")("k").ndv == 33L)
 
       // per-partition delete: k reverts to the bound, s stays
       client.deletePartitionColumnStatistics("db", "pwb", "p=a", "k")

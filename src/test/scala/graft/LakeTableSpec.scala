@@ -728,7 +728,7 @@ class LakeTableSpec extends AnyFunSuite {
     assert(LakeTable.read(spark, p).count() === 4010)
     // ALTER-style schema meta updates must not erase the sort order
     LakeTable.updateSchemaMeta(spark, p, LakeTable.tableSchema(spark, p))
-    assert(LakeTable.tableSortBy(spark, p) === Seq("k"))
+    assert(LakeTable.meta(spark, p).sortBy === Seq("k"))
     // SORT compaction: the pre-order v0 file (full-range) plus the
     // sorted appends rewrite into range-disjoint files table-wide
     LakeTable.compact(spark, p, 4)
@@ -1836,7 +1836,8 @@ class LakeTableSpec extends AnyFunSuite {
     LakeTable.append(spark, p, Seq((42L, "b")).toDF("k", "s"))
     val v = LakeTable.currentVersion(spark, p).get
     val dirs = LakeTable.readCommit(spark, p, v).dirs
-    val (pruned, _) = LakeTable.pruneFilesByDir(spark, p, dirs,
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, p,
+      LakeTable.meta(spark, p).renames, dirs,
       Map("k" -> LakeTable.ColumnBounds(Some(hot), Some(hot))))
     val files = pruned.flatMap(_.files)
     assert(files.exists(_.kept), s"the file holding $hot must be kept: $files")
@@ -1866,7 +1867,8 @@ class LakeTableSpec extends AnyFunSuite {
     assert(!statLines.exists(_.contains("a" * 100)), "full long string leaked into sidecar")
     // truncated bounds still separate the files: a 'z'-range query
     // skips the all-'a' file and stays exact
-    val (pruned, _) = LakeTable.pruneFilesByDir(spark, p, c.dirs,
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, p,
+      LakeTable.meta(spark, p).renames, c.dirs,
       Map("doc" -> LakeTable.ColumnBounds(Some("z"), None)))
     val files = pruned.flatMap(_.files)
     assert(files.exists(!_.kept), s"the all-'a' file must prune: $files")
@@ -1883,7 +1885,8 @@ class LakeTableSpec extends AnyFunSuite {
     val v = "a" * 63 + "\uD83D\uDE00\uD83D\uDE00 tail to exceed the cap"
     LakeTable.create(spark, p, Seq((1L, v), (2L, "a" * 10)).toDF("k", "doc"))
     val c = LakeTable.readCommit(spark, p, 0L)
-    val (pruned, _) = LakeTable.pruneFilesByDir(spark, p, c.dirs,
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, p,
+      LakeTable.meta(spark, p).renames, c.dirs,
       Map("doc" -> LakeTable.ColumnBounds(Some(v), None)))
     assert(pruned.flatMap(_.files).exists(_.kept),
       "the file holding the emoji row must survive a lo=value prune")
@@ -2084,13 +2087,13 @@ class LakeTableSpec extends AnyFunSuite {
     LakeTable.deleteMor(spark, src, col("id") === 7)
     LakeTable.deepClone(spark, src, dst)
     // ANALYZE results travel (identical data), re-stamped to the clone
-    assert(LakeTable.tableNdv(spark, dst).get("g").exists(r => r.ndv == 4L && r.asOf == 0L))
+    assert(LakeTable.meta(spark, dst).ndv.get("g").exists(r => r.ndv == 4L && r.asOf == 0L))
     // resolved state travels; DV debt does not
     assert(LakeTable.read(spark, dst).count() === 99L)
     assert(LakeTable.filesDf(spark, dst).collect().forall(!_.getBoolean(4)))
     // layout + constraints carried
-    assert(LakeTable.tablePartitioning(spark, dst) === Seq("g"))
-    assert(LakeTable.tableChecks(spark, dst).map(_._1) === Seq("nonneg"))
+    assert(LakeTable.meta(spark, dst).partitionBy === Seq("g"))
+    assert(LakeTable.meta(spark, dst).checks.map(_._1) === Seq("nonneg"))
     intercept[Exception] {
       LakeTable.append(spark, dst, spark.range(1).selectExpr("-id - 5 AS id", "'0' AS g"))
         .toString

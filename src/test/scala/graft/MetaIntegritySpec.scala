@@ -136,7 +136,7 @@ class MetaIntegritySpec extends AnyFunSuite {
       TableChange.renameColumn(Array("b"), "c"),
       TableChange.renameColumn(Array("c"), "d"))
     val loc = s"${operators.Lakehouse.scratch}/chain_wh/db/ch"
-    assert(sources.LakeTable.tablePartitioning(spark, loc) == Seq("d"),
+    assert(sources.LakeTable.meta(spark, loc).partitionBy == Seq("d"),
       "partition spec must carry the final chained name")
     spark.sql(s"INSERT INTO $cat.db.ch VALUES (3, 'p3')")
     assert(spark.sql(s"SELECT k, d FROM $cat.db.ch WHERE d = 'p3'").count() == 1)
@@ -147,7 +147,7 @@ class MetaIntegritySpec extends AnyFunSuite {
     val p = freshPath("cas_window")
     sources.LakeTable.create(spark, p, Seq((1L, 10L)).toDF("k", "a"))
     // the statement captures its token, then a concurrent DDL publishes
-    val expect = sources.LakeTable.metaCasToken(spark, p)
+    val base = sources.LakeTable.meta(spark, p)
     sources.LakeTable.setSortBy(spark, p, Seq("k"))
     intercept[sources.LakeTable.ConcurrentWriteException] {
       sources.LakeTable.alterColumnsAtomic(spark, p,
@@ -155,10 +155,10 @@ class MetaIntegritySpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("a2", org.apache.spark.sql.types.LongType))),
-        Nil, Seq("k"), expect)
+        Nil, Seq("k"), base)
     }
     // the concurrent DDL's state survives untouched
-    assert(sources.LakeTable.tableSortBy(spark, p) == Seq("k"))
+    assert(sources.LakeTable.meta(spark, p).sortBy == Seq("k"))
     assert(sources.LakeTable.read(spark, p).columns.toSeq == Seq("k", "a"))
   }
 
@@ -195,7 +195,7 @@ class MetaIntegritySpec extends AnyFunSuite {
         // old name; one that won carried/kept the entries consistent).
         val names = sources.LakeTable.tableSchema(spark, p).fieldNames.toSet
         assert(names.count(_.startsWith("amount")) == 1, names)
-        val ndvKeys = sources.LakeTable.tableNdv(spark, p).keySet
+        val ndvKeys = sources.LakeTable.meta(spark, p).ndv.keySet
         assert(ndvKeys.subsetOf(names), s"round $i: stale stats keys " +
           s"${ndvKeys -- names} not in schema $names")
       }
@@ -237,7 +237,7 @@ class MetaIntegritySpec extends AnyFunSuite {
         assert(wOk || rOk, s"round $i: both losers")
         val names = sources.LakeTable.tableSchema(spark, p).fieldNames.toSet
         assert(names.count(_.startsWith("amount")) == 1, names)
-        val ndvKeys = sources.LakeTable.tableNdv(spark, p).keySet
+        val ndvKeys = sources.LakeTable.meta(spark, p).ndv.keySet
         assert(ndvKeys.subsetOf(names), s"round $i: stale stats keys " +
           s"${ndvKeys -- names} not in schema $names")
       }
@@ -253,16 +253,16 @@ class MetaIntegritySpec extends AnyFunSuite {
     // a SEQUENTIAL rename (no CAS conflict) must carry the record to
     // the new name — stale keys would be resurrected by a re-ADD
     sources.LakeTable.renameColumn(spark, p, "amount", "amount2")
-    val afterRename = sources.LakeTable.partitionNdv(spark, p)("p=a")
+    val afterRename = sources.LakeTable.meta(spark, p).pndv("p=a")
     assert(afterRename.get("amount2").exists(_.ndv == 7L), afterRename)
     assert(!afterRename.contains("amount"), afterRename)
     // a column drop sheds its partition records
     sources.LakeTable.dropColumn(spark, p, "amount2")
-    val afterDrop = sources.LakeTable.partitionNdv(spark, p)("p=a")
+    val afterDrop = sources.LakeTable.meta(spark, p).pndv("p=a")
     assert(afterDrop.keySet == Set("extra"), afterDrop)
     // the Hive wire's null colName = drop every record for the partition
     sources.LakeTable.dropPartitionNdv(spark, p, "p=a", null)
-    assert(!sources.LakeTable.partitionNdv(spark, p).contains("p=a"))
+    assert(!sources.LakeTable.meta(spark, p).pndv.contains("p=a"))
   }
 
   test("partition stats write-back vs column rename: the meta CAS arbitrates") {
@@ -301,7 +301,7 @@ class MetaIntegritySpec extends AnyFunSuite {
         assert(wOk || rOk, s"round $i: both losers")
         val names = sources.LakeTable.tableSchema(spark, p).fieldNames.toSet
         assert(names.count(_.startsWith("amount")) == 1, names)
-        val keys = sources.LakeTable.partitionNdv(spark, p)
+        val keys = sources.LakeTable.meta(spark, p).pndv
           .getOrElse("p=a", Map.empty).keySet
         assert(keys.subsetOf(names), s"round $i: stale partition stats keys " +
           s"${keys -- names} not in schema $names")
@@ -322,7 +322,7 @@ class MetaIntegritySpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       for (i <- 1 to 10) {
-        val before = sources.LakeTable.metaCasToken(spark, p)
+        val before = sources.LakeTable.meta(spark, p).ver
         // plant an orphan claim for the NEXT version so both writers
         // take the reclaim path rather than the plain CAS
         overwrite(logFile(p, f".claim-meta-v${before + 1}%05d"), "")
@@ -338,7 +338,7 @@ class MetaIntegritySpec extends AnyFunSuite {
         }
         start.countDown()
         val wins = futs.map(_.get()).count(identity)
-        val after = sources.LakeTable.metaCasToken(spark, p)
+        val after = sources.LakeTable.meta(spark, p).ver
         assert(wins >= 1, s"iteration $i: both reclaimers lost")
         assert(after == before + wins,
           s"iteration $i: $wins DDLs reported success but metaVer moved " +
@@ -364,12 +364,12 @@ class MetaIntegritySpec extends AnyFunSuite {
     spark.conf.set("spark.graft.meta.claimLeaseMs", "-1")
     try {
       sources.LakeTable.setSortBy(spark, p, Seq("k"))
-      assert(sources.LakeTable.tableSortBy(spark, p) == Seq("k"))
+      assert(sources.LakeTable.meta(spark, p).sortBy == Seq("k"))
     } finally spark.conf.unset("spark.graft.meta.claimLeaseMs")
     // a PUBLISHED version's claim is never reclaimed: the next DDL
     // claims the next version and succeeds normally
     sources.LakeTable.setSortBy(spark, p, Seq("a"))
-    assert(sources.LakeTable.tableSortBy(spark, p) == Seq("a"))
+    assert(sources.LakeTable.meta(spark, p).sortBy == Seq("a"))
   }
 
   test("a narrower-typed INSERT up-casts to the table's column type (catalog SQL + API)") {

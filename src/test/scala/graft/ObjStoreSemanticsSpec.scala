@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Every LakeTable test elsewhere runs on the local filesystem, whose
   * rename REPLACES an existing target atomically — so the documented
-  * fallback paths (writeTableMeta's delete-then-rename when the store
+  * fallback paths (updateMeta's delete-then-rename when the store
   * refuses rename-onto-existing; the commit publish's "target already
   * exists" arbitration) never execute under test. [[NoReplaceFs]]
   * (scheme `graftnr`) delegates storage to the local FS but REFUSES
@@ -39,7 +39,7 @@ class ObjStoreSemanticsSpec extends AnyFunSuite {
     // — on this scheme that is exactly the delete-then-rename fallback
     LakeTable.setSortBy(spark, p, Seq("k"))
     LakeTable.setSortBy(spark, p, Seq("v"))
-    assert(LakeTable.tableSortBy(spark, p) == Seq("v"))
+    assert(LakeTable.meta(spark, p).sortBy == Seq("v"))
 
     // copy-on-write DML (group rewrite + commit publish)
     LakeTable.merge(spark, p, Seq((2L, 222L), (4L, 40L)).toDF("k", "v"), "k")
@@ -69,7 +69,7 @@ class ObjStoreSemanticsSpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       for (i <- 1 to 6) {
-        val before = LakeTable.metaCasToken(spark, p)
+        val before = LakeTable.meta(spark, p).ver
         val start = new java.util.concurrent.CountDownLatch(1)
         val futs = Seq(Seq("k"), Seq("a")).map { c =>
           pool.submit(new java.util.concurrent.Callable[Boolean] {
@@ -83,7 +83,7 @@ class ObjStoreSemanticsSpec extends AnyFunSuite {
         start.countDown()
         val wins = futs.map(_.get()).count(identity)
         assert(wins >= 1, s"iteration $i: both DDLs lost")
-        assert(LakeTable.metaCasToken(spark, p) == before + wins,
+        assert(LakeTable.meta(spark, p).ver == before + wins,
           s"iteration $i: lost update under no-replace semantics")
       }
     } finally pool.shutdown()
@@ -125,7 +125,7 @@ class S3SemanticsSpec extends AnyFunSuite {
     assert(LakeTable.read(spark, p, Some(0L)).count() == 2L, "time travel")
     LakeTable.setSortBy(spark, p, Seq("k"))
     LakeTable.setSortBy(spark, p, Seq("v"))
-    assert(LakeTable.tableSortBy(spark, p) == Seq("v"))
+    assert(LakeTable.meta(spark, p).sortBy == Seq("v"))
     LakeTable.merge(spark, p, Seq((2L, 222L), (4L, 40L)).toDF("k", "v"), "k")
     val got = LakeTable.read(spark, p).as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L), (2L, 222L), (3L, 30L), (4L, 40L)), got)
@@ -171,7 +171,7 @@ class S3SemanticsSpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       for (i <- 1 to 6) {
-        val before = LakeTable.metaCasToken(spark, p)
+        val before = LakeTable.meta(spark, p).ver
         val start = new java.util.concurrent.CountDownLatch(1)
         val futs = Seq(Seq("k"), Seq("a")).map { c =>
           pool.submit(new java.util.concurrent.Callable[Boolean] {
@@ -185,7 +185,7 @@ class S3SemanticsSpec extends AnyFunSuite {
         start.countDown()
         val wins = futs.map(_.get()).count(identity)
         assert(wins >= 1, s"iteration $i: both DDLs lost")
-        assert(LakeTable.metaCasToken(spark, p) == before + wins,
+        assert(LakeTable.meta(spark, p).ver == before + wins,
           s"iteration $i: lost update under replace-rename semantics")
       }
     } finally pool.shutdown()

@@ -42,7 +42,7 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     val v1 = sources.LakeTable.currentVersion(spark, p).get
 
     sources.LakeTable.setPartitioning(spark, p, Seq("lang"))
-    assert(sources.LakeTable.tablePartitioning(spark, p) == Seq("lang"))
+    assert(sources.LakeTable.meta(spark, p).partitionBy == Seq("lang"))
 
     val batch2 = Seq((4L, "en", 40L), (5L, "de", 50L), (6L, "fr", 60L))
       .toDF("k", "lang", "v")
@@ -69,7 +69,8 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     // by their sidecar stats instead of paths
     val c = sources.LakeTable.readCommit(spark, p,
       sources.LakeTable.currentVersion(spark, p).get)
-    val (pruned, _) = sources.LakeTable.pruneFilesByDir(spark, p, c.dirs,
+    val (pruned, _) = sources.LakeTable.pruneFilesByDir(spark, p,
+      sources.LakeTable.meta(spark, p).renames, c.dirs,
       Map("lang" -> sources.LakeTable.ColumnBounds(Some("en"), Some("en"))))
     val files = pruned.flatMap(_.files)
     val newSpecFiles = files.filter(_.file.contains("lang="))

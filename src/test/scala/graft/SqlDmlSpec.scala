@@ -173,7 +173,7 @@ class SqlDmlSpec extends AnyFunSuite {
     val sb = spark.sql(s"CALL graft_cat.system.set_sort_by('dml.proc', 'k')")
       .as[String].head()
     assert(sb === "k")
-    assert(LakeTable.tableSortBy(spark, root) === Seq("k"))
+    assert(LakeTable.meta(spark, root).sortBy === Seq("k"))
 
     // cluster_by commits a layout rewrite version
     val zv = spark.sql(s"CALL graft_cat.system.cluster_by('dml.proc', 'k,v', 2)")
@@ -409,7 +409,7 @@ class SqlDmlSpec extends AnyFunSuite {
       spark.sql("CALL graft_cat.system.add_check('dml.chk', 'v_small', 'v < 15')")
     }
     assert(bad.getMessage.contains("existing rows violate"), bad.getMessage)
-    assert(LakeTable.tableChecks(spark, root).isEmpty)
+    assert(LakeTable.meta(spark, root).checks.isEmpty)
 
     // a satisfiable one records and echoes back
     val checks = spark.sql(
