@@ -230,12 +230,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // failed write releases the claim.
     store.registerTable(spark, nsOf(ident), ident.name(), loc)
     try {
-      LakeTable.create(spark, loc, empty, partCols)
       // Parquet drops field metadata, so defaults (and comments)
-      // survive only through the meta schema — persist it whenever
-      // the DDL carried any.
-      if (schema.fields.exists(f => f.metadata != org.apache.spark.sql.types.Metadata.empty))
-        LakeTable.updateSchemaMeta(spark, loc, schema)
+      // survive only through the meta schema — record it whenever the
+      // DDL carried any.
+      val carriesMetadata =
+        schema.fields.exists(f => f.metadata != org.apache.spark.sql.types.Metadata.empty)
+      LakeTable.create(spark, loc, empty, partCols,
+        if (carriesMetadata) LakeTable.TableMeta(schema = Some(schema))
+        else LakeTable.TableMeta.empty)
     } catch { case e: Throwable =>
       store.unregisterTable(spark, nsOf(ident), ident.name()); throw e
     }
@@ -259,18 +261,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // then the mapping records, the folded schema and the renamed-
     // through partition/sort specs land in ONE table-meta CAS. A
     // clause that fails leaves the table exactly as it was.
-    val base = LakeTable.meta(spark, p)
-    var parts = base.partitionBy
-    var sortBy = base.sortBy
+    val base = LakeTable.state(spark, p)
+    var parts = base.meta.partitionBy
+    var sortBy = base.meta.sortBy
     val recs = Seq.newBuilder[LakeTable.MapRec]
     def refGuard(verb: String, name: String): Unit = {
       val ref = ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-      base.checks.foreach { case (cn, sql) =>
+      base.meta.checks.foreach { case (cn, sql) =>
         require(ref.findFirstIn(sql).isEmpty,
           s"cannot $verb $name: CHECK constraint $cn references it ($sql)")
       }
     }
-    val updated = changes.foldLeft(LakeTable.headSchema(spark, p, base)) {
+    val updated = changes.foldLeft(LakeTable.tableSchema(spark, p, base)) {
       case (_, add: TableChange.AddColumn) if add.defaultValue() != null =>
         throw new UnsupportedOperationException(
           "ADD COLUMN with DEFAULT is not metadata-only here: existing rows " +

@@ -251,10 +251,10 @@ final class GraftRawStore extends RawStore {
     } else st.tableLocation(s, db, name) match {
       case None => null // handler translates to NoSuchObjectException
       case Some(loc) =>
-        val v = LakeTable.currentVersion(s, loc)
-          .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $loc"))
-        val m = LakeTable.meta(s, loc)
-        val (cols, partKeys) = colsOf(LakeTable.tableSchema(s, loc, m, v), m.partitionBy)
+        val table = LakeTable.state(s, loc)
+        val v = table.version
+        val (cols, partKeys) =
+          colsOf(LakeTable.tableSchema(s, loc, table), table.meta.partitionBy)
         val params = new java.util.HashMap[String, String]()
         params.put("spark.sql.sources.provider", "graft")
         params.put("EXTERNAL", "TRUE")
@@ -309,23 +309,20 @@ final class GraftRawStore extends RawStore {
 
   // ---- partitions (read-only, from the current snapshot) ----------
 
-  /** (location, partition columns, visible leaves, the meta read). */
+  /** (location, partition columns, visible leaves, the state read). */
   private def leaves(s: SparkSession, st: CatalogStore, db: String, tbl: String)
       : (String, Seq[String], Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)],
-        LakeTable.TableMeta) = {
+        LakeTable.State) = {
     val loc = st.tableLocation(s, db, tbl)
       .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
-    val m = LakeTable.meta(s, loc)
-    val partCols = m.partitionBy
-    if (partCols.isEmpty) return (loc, Nil, Nil, m)
-    val v = LakeTable.currentVersion(s, loc)
-      .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
-    val dirs = LakeTable.readCommit(s, loc, v).dirs
-      .map(d => new org.apache.hadoop.fs.Path(loc, d).toString)
+    val table = LakeTable.head(s, loc).getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
+    val partCols = table.meta.partitionBy
+    if (partCols.isEmpty) return (loc, Nil, Nil, table)
+    val dirs = table.commit.dirs.map(d => new org.apache.hadoop.fs.Path(loc, d).toString)
     val all = LakeTable.partitionLeaves(s, dirs, partCols)
     (loc, partCols,
       all.filterNot(l => GraftHmsFacade.droppedParts.contains(
-        partKey(s, db, tbl, loc, partName(partCols, l._1)))), m)
+        partKey(s, db, tbl, loc, partName(partCols, l._1)))), table)
   }
 
   /** Visibility-mark key, scoped to the table's LOCATION and commit-log
@@ -426,11 +423,11 @@ final class GraftRawStore extends RawStore {
   private def filteredLeaves(s: SparkSession, st: CatalogStore, db: String,
       tbl: String, filter: String)
       : (Seq[String], Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)]) = {
-    val (loc, cols, ls, m) = leaves(s, st, db, tbl)
+    val (loc, cols, ls, table) = leaves(s, st, db, tbl)
     if (filter == null || filter.trim.isEmpty) return (cols, ls)
     val tree = org.apache.hadoop.hive.metastore.PartFilterExprUtil
       .getFilterParser(filter).tree
-    val schema = LakeTable.headSchema(s, loc, m)
+    val schema = LakeTable.tableSchema(s, loc, table)
     val numeric = cols.filter(c => schema.fields.exists(f =>
       f.name.equalsIgnoreCase(c) && (f.dataType match {
         case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
@@ -672,8 +669,9 @@ final class GraftRawStore extends RawStore {
   private def decodeStatsObjs(s: SparkSession, loc: String,
       cs: org.apache.hadoop.hive.metastore.api.ColumnStatistics)
       : Map[String, LakeTable.ColumnNdv] = {
-    val v = LakeTable.currentVersion(s, loc).getOrElse(0L)
-    val schema = LakeTable.tableSchema(s, loc)
+    val table = LakeTable.state(s, loc)
+    val v = table.version
+    val schema = LakeTable.tableSchema(s, loc, table)
     cs.getStatsObj.asScala.flatMap { o =>
       schema.fields.find(_.name.equalsIgnoreCase(o.getColName)).flatMap { f =>
         val d = o.getStatsData
@@ -756,9 +754,9 @@ final class GraftRawStore extends RawStore {
         case Some(loc) =>
           val agg = LakeTable.aggregatedColumnStats(s, loc)
           val nullsAgg = LakeTable.aggregatedColumnNulls(s, loc)
-          val m = LakeTable.meta(s, loc)
-          val ndvMap = m.ndv
-          val schema = LakeTable.headSchema(s, loc, m)
+          val table = LakeTable.state(s, loc)
+          val ndvMap = table.meta.ndv
+          val schema = LakeTable.tableSchema(s, loc, table)
           def bd(v: String) = new java.math.BigDecimal(v)
           val objs = cols.asScala.flatMap { c =>
             val stringData = // ANALYZE-backed string stats (lengths + NDV)
@@ -822,10 +820,10 @@ final class GraftRawStore extends RawStore {
       import org.apache.hadoop.hive.metastore.api.{ColumnStatistics, ColumnStatisticsData, ColumnStatisticsDesc, ColumnStatisticsObj, DoubleColumnStatsData, LongColumnStatsData}
       val loc = st.tableLocation(s, db, tbl)
         .getOrElse(throw new NoSuchObjectException(s"$db.$tbl"))
-      val (_, pcols, ls, m) = leaves(s, st, db, tbl)
+      val (_, pcols, ls, table) = leaves(s, st, db, tbl)
       val byName = ls.groupBy(p => partName(pcols, p._1))
-      val schema = LakeTable.headSchema(s, loc, m)
-      val pndvAll = m.pndv
+      val schema = LakeTable.tableSchema(s, loc, table)
+      val pndvAll = table.meta.pndv
       def bd(v: String) = new java.math.BigDecimal(v)
       partNames.asScala.flatMap { pn =>
         byName.get(pn).flatMap { group =>

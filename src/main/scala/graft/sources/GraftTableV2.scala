@@ -77,33 +77,34 @@ final class GraftTable(path: String, version: Option[Long],
 
   import org.apache.spark.sql.catalyst.InternalRow
 
+  /** The state this handle reads — the pinned version under the head's
+    * meta, or the head — resolved once per call; None before the first
+    * write to a fresh path.
+    */
+  private def resolved(): Option[LakeTable.State] =
+    LakeTable.head(spark, path).map(h => version.fold(h)(LakeTable.at(spark, path, h, _)))
+
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
     LakeTable.meta(spark, path).partitionBy
       .map(org.apache.spark.sql.connector.expressions.Expressions.identity).toArray
 
-  override def partitionSchema(): StructType = partitionState()._2
+  override def partitionSchema(): StructType =
+    resolved().fold(new StructType())(partitionState(_)._2)
 
-  /** The partition columns and their types, from one meta read. */
-  private def partitionState(): (Seq[String], StructType) =
-    version.orElse(LakeTable.currentVersion(spark, path)) match {
-      case None => (Nil, new StructType())
-      case Some(v) =>
-        val m = LakeTable.meta(spark, path)
-        val s = providedSchema.filter(_.nonEmpty)
-          .getOrElse(LakeTable.tableSchema(spark, path, m, v))
-        (m.partitionBy, StructType(m.partitionBy.map(s(_))))
-    }
+  /** The partition columns of `st` and their types. */
+  private def partitionState(st: LakeTable.State): (Seq[String], StructType) = {
+    val s = providedSchema.filter(_.nonEmpty).getOrElse(LakeTable.tableSchema(spark, path, st))
+    (st.meta.partitionBy, StructType(st.meta.partitionBy.map(s(_))))
+  }
 
   /** Partition values of every leaf dir in the current snapshot (one
     * row per distinct partition tuple across all file groups).
     */
   private def partitionRows(): Seq[(Seq[Option[String]], InternalRow)] = {
-    val (partitionCols, pSchema) = partitionState()
-    val v = version.orElse(LakeTable.currentVersion(spark, path))
-      .getOrElse(return Nil)
-    val c = LakeTable.readCommit(spark, path, v)
+    val st = resolved().getOrElse(return Nil)
+    val (partitionCols, pSchema) = partitionState(st)
     LakeTable.partitionLeaves(spark,
-        c.dirs.map(d => new org.apache.hadoop.fs.Path(path, d).toString),
+        st.commit.dirs.map(d => new org.apache.hadoop.fs.Path(path, d).toString),
         partitionCols)
       .map(_._1).distinct
       .map { values =>
@@ -199,10 +200,9 @@ final class GraftTable(path: String, version: Option[Long],
     val m = new java.util.HashMap[String, String]()
     m.put("provider", "graft")
     try {
-      LakeTable.currentVersion(spark, path).foreach { v =>
-        m.put("current-version", v.toString)
-      }
-      val meta = LakeTable.meta(spark, path)
+      val head = LakeTable.head(spark, path)
+      head.foreach(st => m.put("current-version", st.version.toString))
+      val meta = head.fold(LakeTable.TableMeta.empty)(_.meta)
       if (meta.sortBy.nonEmpty) m.put("write.sort.by", meta.sortBy.mkString(","))
       meta.checks.foreach { case (n, sql) => m.put(s"check.$n", sql) }
       if (meta.dvMode) m.put("deletion-vectors", "enabled")
@@ -222,9 +222,8 @@ final class GraftTable(path: String, version: Option[Long],
 
   override def schema(): StructType =
     providedSchema.filter(_.nonEmpty).getOrElse {
-      version.orElse(LakeTable.currentVersion(spark, path))
-        // no version: the not-yet-created target of a first write
-        .fold(new StructType())(v => LakeTable.tableSchema(spark, path, Some(v)))
+      // no state: the not-yet-created target of a first write
+      resolved().fold(new StructType())(LakeTable.tableSchema(spark, path, _))
     }
 
   override def capabilities(): util.Set[TableCapability] = {
@@ -251,12 +250,11 @@ final class GraftTable(path: String, version: Option[Long],
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val v = Option(options.get("version")).map(_.toLong).orElse(version)
-      .orElse(LakeTable.currentVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val commit = LakeTable.readCommit(spark, path, v)
-    val m = LakeTable.meta(spark, path)
-    val schema = LakeTable.tableSchema(spark, path, m, v)
+    val head = LakeTable.state(spark, path)
+    val st = Option(options.get("version")).map(_.toLong).orElse(version)
+      .fold(head)(LakeTable.at(spark, path, head, _))
+    val atHead = st.version == head.version
+    val schema = LakeTable.tableSchema(spark, path, st)
     // A snapshot carrying deletion vectors (B46 merge-on-read) serves
     // through GraftDvScanBuilder: V1 filter pushdown + column pruning
     // + sidecar-stats file skipping, vectors applied inside the
@@ -270,12 +268,12 @@ final class GraftTable(path: String, version: Option[Long],
     // (see GraftDvScanBuilder); compaction migrates groups to the
     // current physical names and vector-free files, restoring the
     // fully-V2 path.
-    if (LakeTable.dvFor(spark, path, v, commit.dirs).nonEmpty || m.mappings.nonEmpty)
-      return new GraftDvScanBuilder(spark, path, m, v, schema)
+    if (LakeTable.dvFor(spark, path, st.version, st.commit.dirs).nonEmpty ||
+        st.meta.mappings.nonEmpty)
+      return new GraftDvScanBuilder(spark, path, st, atHead, schema)
     val scanOpts = new CaseInsensitiveStringMap(
       (options.asCaseSensitiveMap().asScala.toMap ++ Map("mergeSchema" -> "true")).asJava)
-    new GraftScanBuilder(spark, path, m, commit.dirs, schema, scanOpts,
-      atHead = LakeTable.currentVersion(spark, path).contains(v))
+    new GraftScanBuilder(spark, path, st.meta, st.commit.dirs, schema, scanOpts, atHead)
   }
 
   /** Native DSv2 write path (GraftWrite.scala): task-level parquet
@@ -308,8 +306,8 @@ final class GraftTable(path: String, version: Option[Long],
   * `CALL system.compact` still purges vectors and restores the fully
   * columnar V2 scan.
   */
-final class GraftDvScanBuilder(spark: SparkSession, path: String, meta: LakeTable.TableMeta,
-    v: Long, tableSchema: StructType) extends ScanBuilder
+final class GraftDvScanBuilder(spark: SparkSession, path: String, st: LakeTable.State,
+    atHead: Boolean, tableSchema: StructType) extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
@@ -351,8 +349,7 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, meta: LakeTabl
 
   override def build(): org.apache.spark.sql.connector.read.Scan = {
     val filterCol = pushed.flatMap(toColumn(_)).reduceOption(_ && _)
-    val (pruned, _) = LakeTable.pruneFilesByDir(spark, path, meta.renames,
-      LakeTable.readCommit(spark, path, v).dirs,
+    val (pruned, _) = LakeTable.pruneFilesByDir(spark, path, st.meta.renames, st.commit.dirs,
       filterCol.fold(Map.empty[String, LakeTable.ColumnBounds])(
         LakeTable.predicateBounds(spark, tableSchema, _)))
     val total = pruned.map(_.files.size).sum
@@ -376,15 +373,14 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, meta: LakeTabl
     // aggregates describe currentVersion, so a VERSION AS OF scan of an
     // older snapshot must not report them as its own row count / NDV
     // (CBO would plan the old snapshot with the new table's shape).
-    val unpruned = kept == total &&
-      LakeTable.currentVersion(spark, path).contains(v)
+    val unpruned = kept == total && atHead
     val statRows: java.util.OptionalLong =
       if (unpruned)
         LakeTable.aggregatedColumnNulls(spark, path)
           .fold(java.util.OptionalLong.empty())(t => java.util.OptionalLong.of(t._1))
       else java.util.OptionalLong.empty()
     val colStatsMap =
-      if (unpruned) LakeTable.v2ColumnStats(spark, path, meta, required.fieldNames.toSeq)
+      if (unpruned) LakeTable.v2ColumnStats(spark, path, st.meta, required.fieldNames.toSeq)
       else new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
@@ -409,15 +405,15 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, meta: LakeTabl
           override def sqlContext: org.apache.spark.sql.SQLContext = ctx
           override def schema: StructType = reqSchema
           override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val base = LakeTable.readKept(spark, path, meta, v, tableSchema, pruned)
+            val base = LakeTable.readKept(spark, path, st, tableSchema, pruned)
             val filtered = filterCol.fold(base)(base.where)
             filtered.select(reqCols.map(col): _*).rdd
           }
           // Surfaces in `explain` (RowDataSourceScanExec prints the
           // relation): the file-skipping evidence a plan audit needs.
-          override def toString: String = s"GraftDvScan $path@v$v files=$kept/$total"
+          override def toString: String = s"GraftDvScan $path@v${st.version} files=$kept/$total"
         }.asInstanceOf[T]
-      override def description(): String = s"GraftDvScan $path@v$v files=$kept/$total"
+      override def description(): String = s"GraftDvScan $path@v${st.version} files=$kept/$total"
     }
   }
 }

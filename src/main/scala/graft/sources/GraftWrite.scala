@@ -43,11 +43,11 @@ private[sources] object GraftWriteUtil {
     * (schema evolution by name keeps working); otherwise same-arity
     * writes align BY POSITION and cast to the table's column types.
     */
-  def targetSchema(spark: SparkSession, path: String, m: LakeTable.TableMeta,
+  def targetSchema(spark: SparkSession, path: String, base: Option[LakeTable.State],
       incoming: StructType): StructType = {
-    val t = LakeTable.currentVersion(spark, path) match {
+    val t = base match {
       case None => return incoming
-      case Some(v) => LakeTable.tableSchema(spark, path, m, v)
+      case Some(st) => LakeTable.tableSchema(spark, path, st)
     }
     val byName = incoming.fieldNames.forall(c => t.fieldNames.exists(_.equalsIgnoreCase(c)))
     if (byName)
@@ -121,14 +121,12 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
-  /** The table meta this write plans and stages under (empty for the
-    * first write to a fresh path).
+  /** The table state this write plans and stages under (None for the
+    * first write to a fresh path), and its meta.
     */
-  private val meta: LakeTable.TableMeta = {
-    val spark = org.apache.spark.sql.graftglue.Glue.activeSession
-    if (LakeTable.currentVersion(spark, path).isEmpty) LakeTable.TableMeta.empty
-    else LakeTable.meta(spark, path)
-  }
+  private val base: Option[LakeTable.State] =
+    LakeTable.head(org.apache.spark.sql.graftglue.Glue.activeSession, path)
+  private val meta = base.fold(LakeTable.TableMeta.empty)(_.meta)
 
   /** Writes to a PARTITIONED table request a clustered distribution on
     * the partition columns: without it every task holds an open writer
@@ -198,16 +196,17 @@ final class GraftWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMod
     org.apache.spark.sql.graftglue.Glue.activeSession.conf
       .getOption("spark.graft.write.advisoryPartitionBytes").map(_.toLong).getOrElse(0L)
 
-  override def toBatch: BatchWrite = new GraftBatchWrite(path, info, mode, meta)
-  override def toStreaming: StreamingWrite = new GraftStreamingWrite(path, info, mode, meta)
+  override def toBatch: BatchWrite = new GraftBatchWrite(path, info, mode, base)
+  override def toStreaming: StreamingWrite = new GraftStreamingWrite(path, info, mode, base)
 }
 
 final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMode,
-    meta: LakeTable.TableMeta) extends BatchWrite {
+    base: Option[LakeTable.State]) extends BatchWrite {
 
   private def spark: SparkSession = org.apache.spark.sql.graftglue.Glue.activeSession
+  private val meta = base.fold(LakeTable.TableMeta.empty)(_.meta)
   private val incoming = info.schema()
-  private val target = GraftWriteUtil.targetSchema(spark, path, meta, incoming)
+  private val target = GraftWriteUtil.targetSchema(spark, path, base, incoming)
   private val partCols = meta.partitionBy
   // Fail at planning, not as an opaque task failure on an executor.
   partCols.foreach { c =>
@@ -215,10 +214,7 @@ final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWri
       s"write to partitioned table $path must supply partition column $c; " +
         s"got ${target.fieldNames.mkString("(", ",", ")")}")
   }
-  private val stagedDir = {
-    val guess = LakeTable.currentVersion(spark, path).map(_ + 1).getOrElse(0L)
-    s"d$guess-${UUID.randomUUID.toString.take(8)}"
-  }
+  private val stagedDir = s"d${base.fold(0L)(_.version + 1)}-${UUID.randomUUID.toString.take(8)}"
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
     new GraftWriterFactory(path, stagedDir, incoming, target, partCols,
@@ -252,11 +248,12 @@ final class GraftBatchWrite(path: String, info: LogicalWriteInfo, mode: GraftWri
   * replaces the table each epoch (history-preserving).
   */
 final class GraftStreamingWrite(path: String, info: LogicalWriteInfo, mode: GraftWriteMode,
-    meta: LakeTable.TableMeta) extends StreamingWrite {
+    base: Option[LakeTable.State]) extends StreamingWrite {
 
   private def spark: SparkSession = org.apache.spark.sql.graftglue.Glue.activeSession
+  private val meta = base.fold(LakeTable.TableMeta.empty)(_.meta)
   private val incoming = info.schema()
-  private val target = GraftWriteUtil.targetSchema(spark, path, meta, incoming)
+  private val target = GraftWriteUtil.targetSchema(spark, path, base, incoming)
   private val partCols = meta.partitionBy
   partCols.foreach { c =>
     require(target.fieldNames.exists(_.equalsIgnoreCase(c)),
@@ -265,11 +262,11 @@ final class GraftStreamingWrite(path: String, info: LogicalWriteInfo, mode: Graf
   }
   // Stable across restarts (checkpointed): the idempotence key.
   private val appId = info.queryId()
-  private val base = s"ds-${UUID.randomUUID.toString.take(8)}"
-  private def epochDir(epochId: Long) = s"$base-e$epochId"
+  private val dirPrefix = s"ds-${UUID.randomUUID.toString.take(8)}"
+  private def epochDir(epochId: Long) = s"$dirPrefix-e$epochId"
 
   override def createStreamingWriterFactory(pInfo: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftWriterFactory(path, base, incoming, target, partCols,
+    new GraftWriterFactory(path, dirPrefix, incoming, target, partCols,
       spark.conf.get("spark.sql.session.timeZone"),
       Glue.broadcastConf(spark.sparkContext, Glue.sessionHadoopConf(spark)),
       GraftWriteUtil.boundChecks(spark, meta, target))

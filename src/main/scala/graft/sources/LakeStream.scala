@@ -93,8 +93,7 @@ final class LakeMicroBatchStream(spark: SparkSession, path: String,
   override protected def headVersion: Long = current
   override protected def admissionOptions: CaseInsensitiveStringMap = options
 
-  private def innerBatch(dirPaths: Seq[String]): Batch = {
-    val partCols = LakeTable.meta(spark, path).partitionBy
+  private def innerBatch(partCols: Seq[String], dirPaths: Seq[String]): Batch = {
     if (partCols.isEmpty)
       ParquetTable(s"graft.`$path`", spark, options, dirPaths, Some(schema),
         classOf[ParquetFileFormat]).newScanBuilder(options).build().toBatch
@@ -130,7 +129,9 @@ final class LakeMicroBatchStream(spark: SparkSession, path: String,
       else commitOf(fromExclusive).dirs.toSet
     ((fromExclusive + 1) to toInclusive).foreach { v =>
       val c = commitOf(v)
-      val ok = c.action == "create" || c.action == "append" || c.action == "clone"
+      // A meta-only commit (DDL) keeps every dir: nothing to replay.
+      val ok = c.action == "create" || c.action == "append" || c.action == "clone" ||
+        (c.action == LakeTable.MetaAction && c.dirs.toSet == prev)
       val removed = prev -- c.dirs.toSet
       if (!ok || removed.nonEmpty)
         throw new IllegalStateException(
@@ -155,14 +156,16 @@ final class LakeMicroBatchStream(spark: SparkSession, path: String,
     val e = end.asInstanceOf[LakeVersionOffset].version
     if (e <= s) return Array.empty
     val dirs = addedDirs(s, e).map(d => new Path(path, d).toString)
-    if (dirs.isEmpty) Array.empty else innerBatch(dirs).planInputPartitions()
+    if (dirs.isEmpty) Array.empty
+    else innerBatch(LakeTable.meta(spark, path).partitionBy, dirs).planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // Parquet's factory is bound to schema/conf, not to a file list —
     // one factory serves every batch's FilePartitions.
-    val c = LakeTable.readCommit(spark, path, current)
-    innerBatch(c.dirs.map(d => new Path(path, d).toString)).createReaderFactory()
+    val st = LakeTable.state(spark, path)
+    innerBatch(st.meta.partitionBy, st.commit.dirs.map(d => new Path(path, d).toString))
+      .createReaderFactory()
   }
 
   override def deserializeOffset(json: String): Offset =

@@ -14,7 +14,9 @@ import java.nio.charset.StandardCharsets
   *
   * Layout:
   * {{{
-  *   <path>/_graft_log/v00000.json   // {"version":0,"action":"create","dirs":["d0"]}
+  *   <path>/_graft_log/v00000.json   // {"version":0,"action":"create","dirs":["d0"],
+  *                                   //  "meta":"meta-00000-1a2b3c4d.json","ts":...}
+  *   <path>/_graft_log/meta-00000-1a2b3c4d.json  // table meta in force (write-once)
   *   <path>/d0/part-*.parquet        // file group written by commit 0
   *   <path>/d1/...                   // appended by commit 1
   * }}}
@@ -27,7 +29,9 @@ import java.nio.charset.StandardCharsets
   * (old groups stay for time travel). The commit point is an atomic
   * rename of the log JSON; on an object store this maps to a
   * conditional PUT. Readers resolve the latest committed version and
-  * never see partial writes (snapshot isolation).
+  * never see partial writes (snapshot isolation). Each commit names the
+  * table meta (partition spec, schema, mapping chain, ...) in force at
+  * its version, so a DDL is one more commit under the same claim.
   *
   * Scale notes: metadata is O(commits), data files never move on
   * append; merge shuffles once on the key and rewrites only the groups
@@ -43,17 +47,82 @@ import java.nio.charset.StandardCharsets
   */
 object LakeTable {
 
-  /** `cdcDir`: change-records dir under `_cdc/` published atomically
-    * with the commit (None = commit produced no change records —
-    * pre-enablement history, layout rewrites, pruned no-ops).
-    */
-  /** `txn`: (application id, application version) recorded with the
-    * commit — the idempotent-write marker [[appendOnce]] checks.
+  /** One log entry `_graft_log/v<N>.json`.
+    *
+    * @param cdcDir change-records dir under `_cdc/` published atomically
+    *   with the commit (None = commit produced no change records —
+    *   pre-enablement history, layout rewrites, pruned no-ops)
+    * @param txns per-application high-water marks of idempotent writes
+    *   (application id → newest application version committed), carried
+    *   forward by every commit so [[txnVersion]] reads the head alone
+    * @param meta the table-meta object in force at this version (a name
+    *   under `_graft_log/`; "" = the empty meta, no object). None = a
+    *   commit written before meta objects existed: its meta is the
+    *   legacy `_table.json`
     */
   final case class Commit(version: Long, action: String, dirs: Seq[String],
       cdcDir: Option[String] = None, ts: Long = 0L,
-      txn: Option[(String, Long)] = None,
-      dvFiles: Seq[String] = Nil)
+      txns: Map[String, Long] = Map.empty,
+      dvFiles: Seq[String] = Nil,
+      meta: Option[String] = None)
+
+  /** The commit body format: one JSON object; `cdc`, `dv`, `meta` and
+    * `txns` are omitted when empty. Bodies of earlier writers carry one
+    * `txnApp`/`txnVer` pair instead of `txns`, and no `meta`.
+    */
+  object Commit {
+    import org.json4s.{JArray, JInt, JObject, JString, JValue}
+
+    def render(c: Commit): String = {
+      def strings(vs: Seq[String]) = JArray(vs.map(JString(_)).toList)
+      val fields: Seq[Option[(String, JValue)]] = Seq(
+        Some("version" -> JInt(c.version)), Some("action" -> JString(c.action)),
+        Some("dirs" -> strings(c.dirs)),
+        c.cdcDir.map("cdc" -> JString(_)),
+        Option.when(c.dvFiles.nonEmpty)("dv" -> strings(c.dvFiles)),
+        c.meta.map("meta" -> JString(_)),
+        Option.when(c.txns.nonEmpty)("txns" -> JObject(c.txns.toSeq.sortBy(_._1)
+          .map { case (app, v) => app -> (JInt(v): JValue) }.toList)),
+        Some("ts" -> JInt(c.ts)))
+      org.json4s.jackson.JsonMethods.compact(JObject(fields.flatten.toList))
+    }
+
+    def parse(body: String): Commit = {
+      val fields = org.json4s.jackson.JsonMethods.parse(body) match {
+        case JObject(fs) => fs.toMap
+        case other => throw new IllegalArgumentException(s"not a JSON object: $other")
+      }
+      def long(k: String): Option[Long] = fields.get(k).collect { case JInt(v) => v.toLong }
+      def string(k: String): Option[String] = fields.get(k).collect { case JString(v) => v }
+      def strings(k: String): Seq[String] = fields.get(k).toSeq.flatMap {
+        case JArray(vs) => vs.map { case JString(s) => s
+          case v => throw new IllegalArgumentException(s"$k holds $v") }
+        case v => throw new IllegalArgumentException(s"$k holds $v")
+      }
+      val txns = fields.get("txns") match {
+        case Some(JObject(kvs)) => kvs.map {
+          case (app, JInt(v)) => app -> v.toLong
+          case (app, v) => throw new IllegalArgumentException(s"txns.$app holds $v")
+        }.toMap
+        case _ => (for (app <- string("txnApp"); v <- long("txnVer")) yield app -> v).toMap
+      }
+      Commit(
+        version = long("version").getOrElse(
+          throw new IllegalArgumentException(s"commit without a version: $body")),
+        action = string("action").getOrElse(""),
+        dirs = strings("dirs"), cdcDir = string("cdc"), ts = long("ts").getOrElse(0L),
+        txns = txns, dvFiles = strings("dv"), meta = string("meta"))
+    }
+  }
+
+  /** A table as one verb sees it: the snapshot `version`, its commit,
+    * and the table meta in force — resolved once ([[state]]) and passed
+    * down, so a verb's reads, writes and commit agree on one value.
+    */
+  final case class State(version: Long, commit: Commit, meta: TableMeta)
+
+  /** The action of a commit that changes only the table meta. */
+  private[graft] val MetaAction = "meta"
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -80,7 +149,9 @@ object LakeTable {
     */
   private[graft] val logOps = new java.util.concurrent.atomic.LongAdder
 
-  /** Diagnostic/test hook: every open of a table's `_table.json`. */
+  /** Diagnostic/test hook: every open of a table-meta object (or of a
+    * legacy `_table.json`).
+    */
   private[graft] val metaReads = new java.util.concurrent.atomic.LongAdder
 
   private def checkpointFile(path: String) = new Path(logDir(path), "_checkpoint.json")
@@ -136,24 +207,18 @@ object LakeTable {
   def readCommit(spark: SparkSession, path: String, version: Long): Commit = {
     val p = commitFile(path, version)
     val fs = fsOf(spark, p)
-    logOps.increment()
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val ver = """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(body).get.group(1).toLong
-    val action = """"action"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(body).get.group(1)
-    val dirs = """"dirs"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(body).get.group(1)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    val cdc = """"cdc"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(body).map(_.group(1))
-    val ts = """"ts"\s*:\s*(\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val txn = for {
-      app <- """"txnApp"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(body).map(_.group(1))
-      tv <- """"txnVer"\s*:\s*(-?\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
-    } yield (app, tv)
-    val dv = """"dv"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(body)
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    Commit(ver, action, dirs, cdc, ts, txn, dv)
+    // A store whose rename is copy + delete (S3's) can show a reader a
+    // commit mid-copy; a body that does not parse is re-read a few times
+    // (the copy lands within milliseconds) before it counts as corrupt.
+    def attempt(left: Int): Commit = {
+      logOps.increment()
+      val in = fs.open(p)
+      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      try Commit.parse(body)
+      catch { case scala.util.control.NonFatal(_) if left > 0 =>
+        Thread.sleep(1L << (4 - left)); attempt(left - 1) }
+    }
+    attempt(4)
   }
 
   /** Read a commit iff its file exists; a MISSING file (below a
@@ -188,14 +253,7 @@ object LakeTable {
     val tmp = new Path(logDir(path), s".tmp-v${c.version}-${java.util.UUID.randomUUID.toString.take(8)}.json")
     val fs = fsOf(spark, target)
     fs.mkdirs(logDir(path))
-    val json = s"""{"version":${c.version},"action":"${c.action}",""" +
-      s""""dirs":[${c.dirs.map(d => "\"" + d + "\"").mkString(",")}]""" +
-      c.cdcDir.map(d => s""","cdc":"$d"""").getOrElse("") +
-      c.txn.map { case (app, ver) =>
-        s""","txnApp":"$app","txnVer":$ver""" }.getOrElse("") +
-      (if (c.dvFiles.isEmpty) ""
-       else s""","dv":[${c.dvFiles.map(d => "\"" + d + "\"").mkString(",")}]""") +
-      s""","ts":${if (c.ts > 0) c.ts else System.currentTimeMillis()}}"""
+    val json = Commit.render(if (c.ts > 0) c else c.copy(ts = System.currentTimeMillis()))
     val out = fs.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
     // Local-FS (and POSIX) rename silently REPLACES an existing target,
@@ -221,9 +279,11 @@ object LakeTable {
       // published commit (local-FS rename overwrites) — the exact
       // double-publish the lock prevents. Keep the claim when the
       // target is live; release it only when the version is truly
-      // unpublished so the next committer can retry.
+      // unpublished so the next committer can retry. A live target is
+      // a lost race like a lost claim (a store whose exclusive create
+      // is not atomic let two writers claim): the caller may rebase.
       if (fs.exists(target))
-        throw new IllegalStateException(
+        throw new CommitRaceLostException(
           s"commit v${c.version} already published at $target")
       fs.delete(lock, false)
       throw new IllegalStateException(s"commit v${c.version} rename failed for $target")
@@ -234,14 +294,17 @@ object LakeTable {
       writeCheckpoint(spark, path, c.version)
   }
 
-  /** One atomic exclusive create — the claim primitive both the commit
-    * log and the table-meta CAS use. Hadoop's RawLocalFileSystem
+  /** One atomic exclusive create — the commit log's claim primitive,
+    * under data and table-meta commits alike. Hadoop's RawLocalFileSystem
     * implements create(overwrite=false) as a non-atomic
     * exists()-then-create, so two local racers could both "claim";
     * java.nio CREATE_NEW is a single atomic O_EXCL open — used
-    * whenever the path is local. For a remote store,
-    * fs.create(overwrite=false) stands in for the conditional PUT
-    * (If-None-Match) the store would provide.
+    * whenever the path is local. For a remote store, create with
+    * overwrite=false stands in for the conditional PUT (If-None-Match)
+    * the store would provide — through FileSystem's abstract full-form
+    * create, the one overload every store implements (a subclass of
+    * RawLocalFileSystem inherits the shorter ones, which check
+    * existence first).
     */
   private def tryExclusiveCreate(fs: org.apache.hadoop.fs.FileSystem, lock: Path): Boolean = {
     val lockUri = fs.makeQualified(lock).toUri
@@ -249,59 +312,19 @@ object LakeTable {
       try { java.nio.file.Files.createFile(java.nio.file.Paths.get(lockUri.getPath)); true }
       catch { case _: java.nio.file.FileAlreadyExistsException => false }
     } else {
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    }
-  }
-
-  /** Exclusive-create a claim file CARRYING an ownership token. The
-    * token makes a non-atomic reclaim (delete-then-create) detectable:
-    * the publisher re-reads the claim immediately before the meta
-    * rename and aborts if another writer's token replaced its own.
-    * On the local scheme the existence check (createFile) is atomic
-    * and the token lands in a second write — a racer that steals the
-    * claim in that gap makes the WRITE fail (no CREATE option), which
-    * reports as not-owned: spurious loss is safe, silent double-own
-    * is not.
-    */
-  private def tryExclusiveCreateToken(
-      fs: org.apache.hadoop.fs.FileSystem, lock: Path, token: String): Boolean = {
-    val lockUri = fs.makeQualified(lock).toUri
-    if (lockUri.getScheme == "file") {
       try {
-        val p = java.nio.file.Paths.get(lockUri.getPath)
-        java.nio.file.Files.createFile(p)
-        java.nio.file.Files.write(p, token.getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: java.nio.file.NoSuchFileException => false // claim stolen mid-write
-      }
-    } else {
-      try {
-        val out = fs.create(lock, false)
-        try out.write(token.getBytes(StandardCharsets.UTF_8)) finally out.close()
+        fs.create(lock, org.apache.hadoop.fs.permission.FsPermission.getFileDefault, false,
+          4096, fs.getDefaultReplication(lock), fs.getDefaultBlockSize(lock), null).close()
         true
       } catch { case _: java.io.IOException => false }
     }
   }
 
-  /** The token currently recorded in a claim file; None if unreadable
-    * (deleted, or a tokenless claim from an in-flight racer).
+  /** Write `df` as a new file group for the commit after `base` (the
+    * caller's resolved state; [[unborn]] for a create), under `base`'s
+    * CHECK constraints. Returns the group dir name.
     */
-  private def claimToken(
-      fs: org.apache.hadoop.fs.FileSystem, lock: Path): Option[String] =
-    try {
-      val in = fs.open(lock)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        if (n <= 0) None else Some(new String(buf, 0, n, StandardCharsets.UTF_8))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  private def writeGroup(spark: SparkSession, path: String, m: TableMeta, v: Long,
+  private def writeGroup(spark: SparkSession, path: String, base: State,
       df: DataFrame, partitionBy: Seq[String]): String = {
     // Type normalization: a column arriving NARROWER than the table's
     // recorded type (an INT literal into a BIGINT column) up-casts
@@ -309,10 +332,10 @@ object LakeTable {
     // physical type would poison later mergeSchema reads with
     // CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE. First write (create) has
     // no schema to align to and passes through.
-    val aligned = currentVersion(spark, path) match {
-      case None => df
-      case Some(head) =>
-        val t = tableSchema(spark, path, m, head)
+    val aligned =
+      if (base.version < 0) df
+      else {
+        val t = tableSchema(spark, path, base)
         df.schema.fields.foldLeft(df) { case (d, f) =>
           t.fields.find(_.name.equalsIgnoreCase(f.name)) match {
             case Some(tf) if tf.dataType != f.dataType &&
@@ -322,12 +345,12 @@ object LakeTable {
             case _ => d
           }
         }
-    }
+      }
     // CHECK constraints guard every API-verb write in-stream: an
     // assert_true filter per constraint (codegen'd, no extra pass) —
     // the first violating row fails the job before anything commits.
     // SQL semantics: NULL passes (coalesce to true).
-    val guarded = m.checks.foldLeft(aligned) { case (d, (n, sql)) =>
+    val guarded = base.meta.checks.foldLeft(aligned) { case (d, (n, sql)) =>
       import org.apache.spark.sql.functions.{assert_true, expr, lit}
       d.filter(assert_true(expr(s"coalesce(($sql), true)"),
         lit(s"CHECK constraint $n violated: $sql")).isNull)
@@ -361,7 +384,7 @@ object LakeTable {
     // Unique suffix: concurrent writers racing for the same version
     // must stage DISTINCT dirs — only the commit rename decides the
     // winner; the loser's dir is orphaned (vacuum reclaims it).
-    val dir = s"d$v-${java.util.UUID.randomUUID.toString.take(8)}"
+    val dir = s"d${base.version + 1}-${java.util.UUID.randomUUID.toString.take(8)}"
     val w = sized.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(new Path(path, dir).toString)
@@ -1023,13 +1046,14 @@ object LakeTable {
     * to a narrower type), a column no surviving file carries reading
     * as NULL.
     */
-  private[graft] def readKept(spark: SparkSession, path: String, m: TableMeta, v: Long,
+  private[graft] def readKept(spark: SparkSession, path: String, st: State,
       schema: org.apache.spark.sql.types.StructType, pruned: Seq[PrunedDir]): DataFrame = {
     val live = pruned.filter(_.kept.nonEmpty)
     if (live.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val dirs = live.map(_.dir)
-    val df = readDirsDv(spark, path, m, dirs, dvFor(spark, path, v, dirs), withPos = false,
+    val df = readDirsDv(spark, path, st.meta, dirs, dvFor(spark, path, st.version, dirs),
+      withPos = false,
       kept = Some(live.map(pd => pd.dir -> pd.kept).toMap))
     import org.apache.spark.sql.catalyst.types.DataTypeUtils
     val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -1048,10 +1072,10 @@ object LakeTable {
     * [[predicateBounds]] mines from `predicate` (see
     * [[pruneFilesByDir]] for the `flat` flag).
     */
-  private def pruneFor(spark: SparkSession, path: String, m: TableMeta, v: Long,
+  private def pruneFor(spark: SparkSession, path: String, st: State,
       schema: org.apache.spark.sql.types.StructType,
       predicate: org.apache.spark.sql.Column): (Seq[PrunedDir], Boolean) =
-    pruneFilesByDir(spark, path, m.renames, readCommit(spark, path, v).dirs,
+    pruneFilesByDir(spark, path, st.meta.renames, st.commit.dirs,
       predicateBounds(spark, schema, predicate))
 
   /** File-skipping range read: keep only the files of the snapshot
@@ -1063,12 +1087,10 @@ object LakeTable {
     */
   def readRange(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val m = meta(spark, path)
-    val schema = tableSchema(spark, path, m, v)
+    val st = snapshot(spark, path, version)
+    val schema = tableSchema(spark, path, st)
     val predicate = col(column) >= lit(lo) && col(column) <= lit(hi)
-    readKept(spark, path, m, v, schema, pruneFor(spark, path, m, v, schema, predicate)._1)
+    readKept(spark, path, st, schema, pruneFor(spark, path, st, schema, predicate)._1)
       .where(predicate)
   }
 
@@ -1167,11 +1189,9 @@ object LakeTable {
     */
   def readPoint(spark: SparkSession, path: String, column: String, value: Any,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val m = meta(spark, path)
-    val schema = tableSchema(spark, path, m, v)
-    readKept(spark, path, m, v, schema, prunePoint(spark, path, m, schema, column, value, v)._1)
+    val st = snapshot(spark, path, version)
+    val schema = tableSchema(spark, path, st)
+    readKept(spark, path, st, schema, prunePoint(spark, path, st, schema, column, value)._1)
       .where(col(column) === lit(value))
   }
 
@@ -1181,21 +1201,19 @@ object LakeTable {
     */
   private[graft] def pointCandidateFiles(spark: SparkSession, path: String,
       column: String, value: Any, version: Option[Long] = None): Option[Seq[String]] = {
-    val v = version.orElse(currentVersion(spark, path)).get
-    val m = meta(spark, path)
-    val (pruned, flat) = prunePoint(spark, path, m, tableSchema(spark, path, m, v),
-      column, value, v)
+    val st = snapshot(spark, path, version)
+    val (pruned, flat) = prunePoint(spark, path, st, tableSchema(spark, path, st), column, value)
     if (flat) Some(pruned.flatMap(_.kept)) else None
   }
 
   /** The point lookup's prune: stats/partition values, then — in a
     * flat layout, where the sidecars key each file — the bloom tier.
     */
-  private def prunePoint(spark: SparkSession, path: String, m: TableMeta,
-      schema: org.apache.spark.sql.types.StructType, column: String, value: Any,
-      v: Long): (Seq[PrunedDir], Boolean) = {
+  private def prunePoint(spark: SparkSession, path: String, st: State,
+      schema: org.apache.spark.sql.types.StructType, column: String,
+      value: Any): (Seq[PrunedDir], Boolean) = {
     import org.apache.spark.util.sketch.BloomFilter
-    val (pruned, flat) = pruneFor(spark, path, m, v, schema, col(column) === lit(value))
+    val (pruned, flat) = pruneFor(spark, path, st, schema, col(column) === lit(value))
     if (!flat) return (pruned, flat)
     // cache per-dir sidecar parses: (dir -> (rel, column) -> bloom b64)
     val sidecars = scala.collection.mutable.Map.empty[String, Map[(String, String), String]]
@@ -1271,9 +1289,8 @@ object LakeTable {
     */
   def shallowClone(spark: SparkSession, sourcePath: String, targetPath: String,
       version: Option[Long] = None): Long = {
-    val v = version.orElse(currentVersion(spark, sourcePath))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $sourcePath"))
-    val c = readCommit(spark, sourcePath, v)
+    val src = snapshot(spark, sourcePath, version)
+    val (v, c, srcMeta) = (src.version, src.commit, src.meta)
     val srcFs = fsOf(spark, new Path(sourcePath))
     // Fully-qualified URIs (scheme + authority), not bare paths: a
     // clone rooted on a DIFFERENT filesystem/bucket must keep reading
@@ -1290,7 +1307,6 @@ object LakeTable {
     // base) postdates the whole copied chain. Starting the clone at 0
     // instead would put fresh clone data "before" copied stamps and a
     // copied DROP tombstone would capture it.
-    val srcMeta = meta(spark, sourcePath)
     val base = (Seq(v) ++ c.dirs.map(groupVersionOf).filter(_ > 0) ++
       srcMeta.mappings.map(_.stamp)).max + 1
     val p = new Path(targetPath)
@@ -1311,8 +1327,8 @@ object LakeTable {
     // physical schema. Clone-side reads apply copied mappings to the
     // source-named dirs under the copied stamps (groupVersionOf parses
     // source version numbers out of the absolute refs).
-    if (srcMeta != TableMeta.empty) updateMeta(spark, targetPath, TableMeta.empty, srcMeta)
-    writeCommit(spark, targetPath, Commit(base, "clone", absDirs, dvFiles = dvNames))
+    writeCommit(spark, targetPath, Commit(base, "clone", absDirs, dvFiles = dvNames,
+      meta = Some(writeMeta(spark, targetPath, base, srcMeta))))
     base
   }
 
@@ -1327,35 +1343,32 @@ object LakeTable {
     */
   def deepClone(spark: SparkSession, sourcePath: String, targetPath: String,
       version: Option[Long] = None): Long = {
-    val v = version.orElse(currentVersion(spark, sourcePath))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $sourcePath"))
-    val p = new Path(targetPath)
-    val fs = fsOf(spark, p)
-    if (fs.exists(p)) fs.delete(p, true)
-    val src = meta(spark, sourcePath)
-    create(spark, targetPath, read(spark, sourcePath, src, v), partitionBy = src.partitionBy)
+    val src = snapshot(spark, sourcePath, version)
     // The copy satisfies the source's CHECKs (it IS the source's rows).
     // ANALYZE results stay valid (identical data, logical names) —
     // re-stamped to the clone's own create version.
-    val base = meta(spark, targetPath)
-    val next = base.copy(sortBy = src.sortBy, checks = src.checks,
-      ndv = src.ndv.map { case (c, r) => c -> r.copy(asOf = 0L) })
-    if (next != base) updateMeta(spark, targetPath, base, next)
-    0L
+    create(spark, targetPath, read(spark, sourcePath, src), partitionBy = src.meta.partitionBy,
+      meta = TableMeta(sortBy = src.meta.sortBy, checks = src.meta.checks,
+        ndv = src.meta.ndv.map { case (c, r) => c -> r.copy(asOf = 0L) }))
   }
 
-  // ---- table meta (`_graft_log/_table.json`) -------------------------
+  // ---- table meta (commit-log entries) --------------------------------
   //
   // The metastore half of the format: the partition spec, write sort
   // order, recorded schema, CHECK constraints, DV mode and column-
-  // mapping chain every verb needs beside the commit log. [[meta]] is
-  // its one reader and [[updateMeta]] its one writer; a verb reads the
-  // value once and passes it down, so everything it does sees ONE meta.
+  // mapping chain every verb needs beside the data. Each commit names
+  // the meta in force at its version: a write-once object under
+  // `_graft_log/` (written before the commit that references it, never
+  // renamed over anything — the DV-file rule), so data and DDL publish
+  // through ONE claim, the commit version's. [[state]] resolves a
+  // version's commit and meta together; a verb resolves it once and
+  // passes it down, so everything it does sees ONE meta.
 
-  private def tableMetaFile(path: String) = new Path(logDir(path), "_table.json")
+  /** Where tables written before meta objects keep their meta; read only. */
+  private def legacyMetaFile(path: String) = new Path(logDir(path), "_table.json")
 
-  /** One table's meta, as recorded at metaVer `ver` (0 = none yet, or a
-    * file from before meta versioning).
+  /** One table's meta at meta version `ver` (0 = none yet, or a body
+    * from before meta versioning); every meta change bumps it.
     *
     * @param partitionBy partition columns new groups are written under
     *   (empty = flat): every COW rewrite re-applies them, so DML never
@@ -1387,11 +1400,11 @@ object LakeTable {
     def renames: Seq[RenameRec] = mappings.collect { case r: RenameRec => r }
   }
 
-  /** The `_table.json` body format: a JSON object whose free-text
-    * entries (stats, mapping records, CHECK SQL, the schema) are base64
-    * of tab-separated fields, so they never touch the JSON syntax.
-    * Keys are omitted when empty (`partitionBy` and `metaVer` always
-    * appear).
+  /** The meta body format (meta objects, legacy `_table.json`): a
+    * JSON object whose free-text entries (stats, mapping records, CHECK
+    * SQL, the schema) are base64 of tab-separated fields, so they never
+    * touch the JSON syntax. Keys are omitted when empty (`partitionBy`
+    * and `metaVer` always appear).
     */
   object TableMeta {
     import org.json4s.{JArray, JBool, JInt, JObject, JString, JValue}
@@ -1481,8 +1494,8 @@ object LakeTable {
     * untouched until rewritten.
     */
   def setSortBy(spark: SparkSession, path: String, cols: Seq[String]): TableMeta = {
-    val base = meta(spark, path)
-    updateMeta(spark, path, base, base.copy(sortBy = cols))
+    val base = state(spark, path)
+    updateMeta(spark, path, base, _ => base.meta.copy(sortBy = cols))
   }
 
   /** DSv2 per-column statistics for SupportsReportStatistics scans —
@@ -1549,10 +1562,8 @@ object LakeTable {
   def analyze(spark: SparkSession, path: String,
       cols: Seq[String] = Nil): Map[String, ColumnNdv] = {
     import org.apache.spark.sql.functions._
-    val base = meta(spark, path)
-    val v = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val df = read(spark, path, base, v)
+    val base = state(spark, path)
+    val df = read(spark, path, base)
     val atomic: org.apache.spark.sql.types.DataType => Boolean = {
       case _: org.apache.spark.sql.types.NumericType => true
       case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.BooleanType |
@@ -1564,7 +1575,7 @@ object LakeTable {
       (if (cols.isEmpty) df.schema.fields.toSeq
        else cols.flatMap(c => df.schema.fields.find(_.name.equalsIgnoreCase(c))))
         .filter(f => atomic(f.dataType))
-    if (targets.isEmpty) return base.ndv
+    if (targets.isEmpty) return base.meta.ndv
     val aggs = targets.zipWithIndex.flatMap { case (f, i) =>
       val ndvAgg = approx_count_distinct(col(f.name)).as(s"__ndv$i")
       f.dataType match {
@@ -1585,9 +1596,9 @@ object LakeTable {
            else row.getAs[Double](s"__avg$i"))
         case _ => (-1L, -1.0)
       }
-      f.name -> ColumnNdv(ndv, mx, av, v)
+      f.name -> ColumnNdv(ndv, mx, av, base.version)
     }.toMap
-    updateMeta(spark, path, base, base.copy(ndv = base.ndv ++ fresh)).ndv
+    updateMeta(spark, path, base, _ => base.meta.copy(ndv = base.meta.ndv ++ fresh)).ndv
   }
 
   /** Stats WRITE-BACK: record externally-computed column statistics
@@ -1598,9 +1609,9 @@ object LakeTable {
     */
   def recordNdv(spark: SparkSession, path: String,
       fresh: Map[String, ColumnNdv]): Map[String, ColumnNdv] = {
-    val base = meta(spark, path)
+    val base = state(spark, path)
     requireColumns(spark, path, base, fresh.keys)
-    updateMeta(spark, path, base, base.copy(ndv = base.ndv ++ fresh)).ndv
+    updateMeta(spark, path, base, _ => base.meta.copy(ndv = base.meta.ndv ++ fresh)).ndv
   }
 
   /** Written-back stats arrive keyed by names the caller resolved
@@ -1608,12 +1619,12 @@ object LakeTable {
     * column DDL published in between, and recording it would resurrect
     * a pre-rename key.
     */
-  private def requireColumns(spark: SparkSession, path: String, base: TableMeta,
+  private def requireColumns(spark: SparkSession, path: String, base: State,
       names: Iterable[String]): Unit = {
-    val stale = names.toSeq.diff(headSchema(spark, path, base).fieldNames.toSeq)
+    val stale = names.toSeq.diff(tableSchema(spark, path, base).fieldNames.toSeq)
     if (stale.nonEmpty)
       throw new ConcurrentWriteException(
-        s"stats for ${stale.mkString(", ")} name no column of $path at metaVer ${base.ver}: " +
+        s"stats for ${stale.mkString(", ")} name no column of $path at v${base.version}: " +
         "a concurrent DDL renamed or dropped them — re-run against the new table state")
   }
 
@@ -1621,10 +1632,10 @@ object LakeTable {
     * `delete_table_column_statistics`). No-op when absent.
     */
   def dropNdv(spark: SparkSession, path: String, colName: String): Unit = {
-    val base = meta(spark, path)
-    val remaining = base.ndv.filterNot(_._1.equalsIgnoreCase(colName))
-    if (remaining.size != base.ndv.size)
-      updateMeta(spark, path, base, base.copy(ndv = remaining))
+    val base = state(spark, path)
+    val remaining = base.meta.ndv.filterNot(_._1.equalsIgnoreCase(colName))
+    if (remaining.size != base.meta.ndv.size)
+      updateMeta(spark, path, base, _ => base.meta.copy(ndv = remaining))
   }
 
   /** PARTITION-level stats write-back (Hive's
@@ -1634,11 +1645,11 @@ object LakeTable {
     */
   def recordPartitionNdv(spark: SparkSession, path: String, partName: String,
       fresh: Map[String, ColumnNdv]): Unit = {
-    val base = meta(spark, path)
+    val base = state(spark, path)
     requireColumns(spark, path, base, fresh.keys)
-    val cur = base.pndv
+    val cur = base.meta.pndv
     updateMeta(spark, path, base,
-      base.copy(pndv = cur + (partName -> (cur.getOrElse(partName, Map.empty) ++ fresh))))
+      _ => base.meta.copy(pndv = cur + (partName -> (cur.getOrElse(partName, Map.empty) ++ fresh))))
   }
 
   /** Drop one partition-column record — or, with colName null, ALL of
@@ -1648,8 +1659,8 @@ object LakeTable {
     */
   def dropPartitionNdv(spark: SparkSession, path: String, partName: String,
       colName: String): Unit = {
-    val base = meta(spark, path)
-    val cur = base.pndv
+    val base = state(spark, path)
+    val cur = base.meta.pndv
     val pruned = cur.get(partName) match {
       case None => return
       case Some(_) if colName == null => cur - partName
@@ -1658,7 +1669,7 @@ object LakeTable {
         if (remaining.size == cols.size) return
         if (remaining.isEmpty) cur - partName else cur + (partName -> remaining)
     }
-    updateMeta(spark, path, base, base.copy(pndv = pruned))
+    updateMeta(spark, path, base, _ => base.meta.copy(pndv = pruned))
   }
 
   /** PARTITION EVOLUTION (the Iceberg marquee): change the table's
@@ -1675,10 +1686,9 @@ object LakeTable {
     * before the spec change reads exactly what it always did.
     */
   def setPartitioning(spark: SparkSession, path: String, cols: Seq[String]): TableMeta = {
-    val base = meta(spark, path)
-    updateMeta(spark, path, base, base.copy(partitionBy = cols,
-      // spec changed while data exists → old and new groups may differ
-      mixedLayouts = currentVersion(spark, path).isDefined))
+    val base = state(spark, path)
+    // spec changed under existing groups → old and new ones may differ
+    updateMeta(spark, path, base, _ => base.meta.copy(partitionBy = cols, mixedLayouts = true))
   }
 
   /** One column-mapping change, stamped with the first table version
@@ -1715,14 +1725,14 @@ object LakeTable {
     */
   def renameColumn(spark: SparkSession, path: String, oldName: String,
       newName: String): Unit = {
-    val base = meta(spark, path)
-    val sch = headSchema(spark, path, base)
+    val base = state(spark, path)
+    val sch = tableSchema(spark, path, base)
     require(sch.fieldNames.contains(oldName), s"no column $oldName in ${sch.fieldNames.mkString(",")}")
     require(!sch.fieldNames.contains(newName), s"column $newName already exists")
     // A CHECK holding the old name would silently stop resolving on
     // the next write — reject, like dropColumn does.
     val ref = ("""\b""" + java.util.regex.Pattern.quote(oldName) + """\b""").r
-    base.checks.foreach { case (cn, expr) =>
+    base.meta.checks.foreach { case (cn, expr) =>
       require(ref.findFirstIn(expr).isEmpty,
         s"cannot rename $oldName: CHECK constraint $cn references it ($expr)")
     }
@@ -1739,16 +1749,16 @@ object LakeTable {
     * next COW rewrite / compaction physically sheds the column.
     */
   def dropColumn(spark: SparkSession, path: String, name: String): Unit = {
-    val base = meta(spark, path)
-    val sch = headSchema(spark, path, base)
+    val base = state(spark, path)
+    val sch = tableSchema(spark, path, base)
     require(sch.fieldNames.contains(name), s"no column $name in ${sch.fieldNames.mkString(",")}")
     require(sch.fields.length > 1, s"cannot drop the only column $name")
-    require(!base.partitionBy.contains(name),
+    require(!base.meta.partitionBy.contains(name),
       s"cannot drop partition column $name (change the partition spec first)")
-    require(!base.sortBy.contains(name),
+    require(!base.meta.sortBy.contains(name),
       s"cannot drop sort column $name (clear write.sort.by first)")
     val ref = ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-    base.checks.foreach { case (cn, expr) =>
+    base.meta.checks.foreach { case (cn, expr) =>
       require(ref.findFirstIn(expr).isEmpty,
         s"cannot drop $name: CHECK constraint $cn references it ($expr)")
     }
@@ -1782,10 +1792,10 @@ object LakeTable {
 
   def widenColumn(spark: SparkSession, path: String, name: String,
       newType: org.apache.spark.sql.types.DataType): Unit = {
-    val base = meta(spark, path)
-    val sch = headSchema(spark, path, base)
+    val base = state(spark, path)
+    val sch = tableSchema(spark, path, base)
     require(sch.fieldNames.contains(name), s"no column $name in ${sch.fieldNames.mkString(",")}")
-    require(!base.partitionBy.contains(name),
+    require(!base.meta.partitionBy.contains(name),
       s"cannot change the type of partition column $name")
     val from = sch(name).dataType
     require(losslessWidening(from, newType),
@@ -1795,7 +1805,7 @@ object LakeTable {
         m.fields.map(f => if (f.name == name) f.copy(dataType = newType) else f)))
   }
 
-  private def appendMapping(spark: SparkSession, path: String, base: TableMeta,
+  private def appendMapping(spark: SparkSession, path: String, base: State,
       oldName: String, newName: String): Unit = {
     val dropped = newName.startsWith(DroppedPrefix)
     appendToChain(spark, path, base, RenameRec(oldName, newName, 0L),
@@ -1805,13 +1815,13 @@ object LakeTable {
       partsUpdate = _.map(c => if (c == oldName) newName else c))
   }
 
-  private def appendToChain(spark: SparkSession, path: String, base: TableMeta, rec: MapRec,
+  private def appendToChain(spark: SparkSession, path: String, base: State, rec: MapRec,
       metaUpdate: org.apache.spark.sql.types.StructType => org.apache.spark.sql.types.StructType,
       partsUpdate: Seq[String] => Seq[String] = identity): Unit =
-    commitColumnDdl(spark, path, base, Seq(rec), partsUpdate(base.partitionBy),
+    commitColumnDdl(spark, path, base, Seq(rec), partsUpdate(base.meta.partitionBy),
       // renames follow through the write sort order too — a stale old
       // name there would break the next native write's distribution
-      partsUpdate(base.sortBy), base.schema.map(metaUpdate))
+      partsUpdate(base.meta.sortBy), base.meta.schema.map(metaUpdate))
 
   /** ONE atomic multi-change column DDL (ALTER TABLE with several
     * clauses): all mapping records land on the chain in statement
@@ -1821,77 +1831,53 @@ object LakeTable {
     * caller's fold over every clause. `parts`/`sortBy` are the fold's
     * incrementally-renamed partition spec and sort order (computed
     * clause by clause — re-deriving them here from disk via a rename
-    * map mis-follows chained renames), and `base` is the meta the
+    * map mis-follows chained renames), and `base` is the state the
     * caller's fold read.
     */
   private[graft] def alterColumnsAtomic(spark: SparkSession, path: String,
       recs: Seq[MapRec], finalSchema: org.apache.spark.sql.types.StructType,
-      parts: Seq[String], sortBy: Seq[String], base: TableMeta): Unit =
+      parts: Seq[String], sortBy: Seq[String], base: State): Unit =
     commitColumnDdl(spark, path, base, recs, parts, sortBy, Some(finalSchema))
 
   /** Shared stamp-and-publish tail of every column DDL: computes the
     * confinement stamp, appends `recs` (in order, one shared stamp) to
     * the chain, and publishes the table meta once over `base`.
     */
-  private def commitColumnDdl(spark: SparkSession, path: String, base: TableMeta,
+  private def commitColumnDdl(spark: SparkSession, path: String, base: State,
       recs: Seq[MapRec], parts: Seq[String], sortBy: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): Unit = {
-    // Stamp = the next data version: every EXISTING group (dir version
-    // <= current) carries the pre-change physical schema; groups
-    // written from here on use the new logical schema natively. The
-    // stamp also clears the largest dir-NAME version in the head — a
-    // shallow clone references source dirs whose names carry the
-    // SOURCE's version numbers, and a clone-side change must still
-    // postdate all of them.
-    val cur = currentVersion(spark, path)
-    val maxDirVer = cur.map(v => readCommit(spark, path, v).dirs.map(groupVersionOf)
-      .foldLeft(-1L)(math.max)).getOrElse(-1L)
-    // STAGED dirs too (on disk, not yet committed): a blind append
-    // racing this DDL has already named its dir with the pre-change
-    // data inside — the stamp must land ABOVE it or that group's
-    // version would equal the stamp and its old-name data would never
-    // map. One root listing; same cost class as the meta read.
-    val stagedMax = {
-      val root = new Path(path); val fs = fsOf(spark, root)
-      if (!fs.exists(root)) -1L
-      else fs.listStatus(root).iterator.map(st => groupVersionOf(st.getPath.getName))
-        .foldLeft(-1L)(math.max)
-    }
-    val stamp = math.max(cur.getOrElse(-1L), math.max(maxDirVer, stagedMax)) + 1
-    val stamped = recs.map {
-      case r: RenameRec => r.copy(stamp = stamp)
-      case w: WidenRec  => w.copy(stamp = stamp)
-    }
     // ANALYZE entries follow the DDL: a renamed column keeps its stats
     // under the new name, a dropped one sheds them (a later re-ADD of
     // the same name must NOT inherit the dead column's NDV — stats for
     // a different column under a reused name are worse than none),
-    // widening keeps them (lossless, same value set).
-    val ndvFollowed = stamped.foldLeft(base.ndv) {
-      case (m, r: RenameRec) if r.dropped => m - r.old
-      case (m, r: RenameRec) =>
-        m.get(r.old).fold(m)(v => (m - r.old) + (r.to -> v))
-      case (m, _) => m
+    // widening keeps them (lossless, same value set). The PER-PARTITION
+    // records follow the same rule, per partition — preserving them
+    // verbatim would leave stale keys a re-ADDed column would resurrect.
+    def follow(m: Map[String, ColumnNdv]): Map[String, ColumnNdv] = recs.foldLeft(m) {
+      case (acc, r: RenameRec) if r.dropped => acc - r.old
+      case (acc, r: RenameRec) => acc.get(r.old).fold(acc)(v => (acc - r.old) + (r.to -> v))
+      case (acc, _) => acc
     }
-    // ...and the PER-PARTITION records follow the same rule, per
-    // partition — preserving them verbatim would leave stale keys
-    // that a re-ADDed column would resurrect (the exact hazard the
-    // comment above forbids for table stats).
-    val pndvFollowed = base.pndv.map { case (pn, cols) =>
-      pn -> stamped.foldLeft(cols) {
-        case (m, r: RenameRec) if r.dropped => m - r.old
-        case (m, r: RenameRec) =>
-          m.get(r.old).fold(m)(v => (m - r.old) + (r.to -> v))
-        case (m, _) => m
+    val pndvFollowed = base.meta.pndv.map { case (pn, cols) => pn -> follow(cols) }
+      .filter(_._2.nonEmpty)
+    updateMeta(spark, path, base, { v =>
+      // Stamp = the version after this commit's: a writer that read the
+      // pre-change meta read a head below v, so its group is named d<=v
+      // (the clone base, a shallow clone's commit, already clears every
+      // copied dir and stamp); every writer at or past v reads this meta
+      // and writes the new logical schema natively.
+      val stamped = recs.map {
+        case r: RenameRec => r.copy(stamp = v + 1)
+        case w: WidenRec  => w.copy(stamp = v + 1)
       }
-    }.filter(_._2.nonEmpty)
-    updateMeta(spark, path, base, base.copy(partitionBy = parts, sortBy = sortBy,
-      schema = schema,
-      // pre-change groups and post-change groups must read per root —
-      // only when the chain actually grew (schema-only DDL keeps the
-      // single-scan fast path)
-      mixedLayouts = cur.isDefined && stamped.nonEmpty,
-      mappings = base.mappings ++ stamped, ndv = ndvFollowed, pndv = pndvFollowed))
+      base.meta.copy(partitionBy = parts, sortBy = sortBy, schema = schema,
+        // pre-change groups and post-change groups must read per root —
+        // only when the chain actually grew (schema-only DDL keeps the
+        // single-scan fast path)
+        mixedLayouts = stamped.nonEmpty,
+        mappings = base.meta.mappings ++ stamped, ndv = follow(base.meta.ndv),
+        pndv = pndvFollowed)
+    })
   }
 
   /** Apply the mapping chain to one file group's frame. Only entries
@@ -1941,138 +1927,148 @@ object LakeTable {
     else Long.MinValue
   }
 
-  /** The parsed `_table.json` — the ONLY reader of the file; empty when
-    * the table has none. FAILS LOUDLY on a malformed body — the schema
-    * chain in this file determines column identity, so "unparseable →
-    * empty chain" would silently serve wrong columns; with the
-    * tmp+rename write protocol a torn body can only mean real
-    * corruption.
-    */
-  def meta(spark: SparkSession, path: String): TableMeta = {
-    val p = tableMetaFile(path)
-    val fs = fsOf(spark, p)
-    // A read racing a publish can pair one version's body with the
-    // other's checksum (a checksummed file system, the local one,
-    // renames the body and its .crc sidecar one after the other), or
-    // see a torn body where the store's rename is a copy (S3's copy +
-    // delete). A re-read sees a whole body once the publisher's rename
-    // lands (backing off, since the publisher may be descheduled in
-    // between); real corruption fails every attempt.
-    def read(retries: Int): TableMeta = {
-      def again(failure: Exception): TableMeta =
-        if (retries == 0) throw failure
-        else { Thread.sleep(1L << (6 - retries)); read(retries - 1) }
-      metaReads.increment()
-      val body =
-        try {
-          val in = fs.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        } catch { case e: org.apache.hadoop.fs.ChecksumException => return again(e) }
-      try TableMeta.parse(body)
-      catch { case scala.util.control.NonFatal(e) =>
-        again(new IllegalStateException(
-          s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}", e))
-      }
-    }
-    if (!fs.exists(p)) TableMeta.empty else read(retries = 6)
+  /** The head state; None when no table exists at `path`. */
+  def head(spark: SparkSession, path: String): Option[State] =
+    currentVersion(spark, path).map(stateAt(spark, path, _))
+
+  /** The head state; throws when no table exists at `path`. */
+  def state(spark: SparkSession, path: String): State =
+    head(spark, path).getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+
+  private def stateAt(spark: SparkSession, path: String, v: Long): State = {
+    val c = readCommit(spark, path, v)
+    State(v, c, readMeta(spark, path, c.meta))
   }
 
-  /** Publish `next` over `base` — the ONLY writer of `_table.json`, so
-    * no path drops a key another recorded. Returns what it published:
-    * `next` at metaVer `base.ver + 1`, with the mixed-layout marker
-    * kept MONOTONIC (once set by a spec change, every later rewrite
+  /** Snapshot `version` (the head when None) under the HEAD's meta —
+    * time travel reads old data with the current schema and mappings.
+    */
+  def snapshot(spark: SparkSession, path: String, version: Option[Long]): State = {
+    val h = state(spark, path)
+    version.fold(h)(at(spark, path, h, _))
+  }
+
+  /** Snapshot `v` under the meta of head state `h`. */
+  private[graft] def at(spark: SparkSession, path: String, h: State, v: Long): State =
+    if (v == h.version) h else h.copy(version = v, commit = readCommit(spark, path, v))
+
+  /** The head's table meta; empty when no table exists at `path`. */
+  def meta(spark: SparkSession, path: String): TableMeta =
+    head(spark, path).fold(TableMeta.empty)(_.meta)
+
+  /** The meta a commit's `meta` entry names. FAILS LOUDLY on a
+    * malformed body — the mapping chain determines column identity, so
+    * "unparseable → empty chain" would silently serve wrong columns;
+    * objects are write-once and only referenced once whole, so a bad
+    * body is real corruption.
+    */
+  private def readMeta(spark: SparkSession, path: String, ref: Option[String]): TableMeta = {
+    val p = ref match {
+      case Some("") => return TableMeta.empty
+      case Some(name) => new Path(logDir(path), name)
+      case None => legacyMetaFile(path)
+    }
+    val fs = fsOf(spark, p)
+    if (ref.isEmpty && !fs.exists(p)) return TableMeta.empty
+    metaReads.increment()
+    val in = fs.open(p)
+    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    try TableMeta.parse(body)
+    catch { case scala.util.control.NonFatal(e) =>
+      throw new IllegalStateException(
+        s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}", e)
+    }
+  }
+
+  /** Write `m` as a new meta object for commit `v`; returns the name
+    * the commit references ("" for the empty meta). The name is unique,
+    * so a racer that loses the commit claim leaves an inert orphan.
+    */
+  private def writeMeta(spark: SparkSession, path: String, v: Long, m: TableMeta): String =
+    if (m == TableMeta.empty) ""
+    else {
+      val name = f"meta-$v%05d-${java.util.UUID.randomUUID.toString.take(8)}.json"
+      val p = new Path(logDir(path), name)
+      val out = fsOf(spark, p).create(p, false)
+      try out.write(TableMeta.render(m).getBytes(StandardCharsets.UTF_8)) finally out.close()
+      name
+    }
+
+  /** Per-application txn high-water marks as of `st`. A commit from
+    * before the marks were carried names only its own, so a legacy
+    * head folds the retained log back to the newest carrying commit.
+    */
+  private def txnsOf(spark: SparkSession, path: String, st: State): Map[String, Long] = {
+    var acc = st.commit.txns
+    var (v, carrying) = (st.version, st.commit.meta.isDefined)
+    while (!carrying && v > 0) {
+      v -= 1
+      readCommitOpt(spark, path, v).foreach { c =>
+        acc = withTxns(acc, c.txns); carrying = c.meta.isDefined
+      }
+    }
+    acc
+  }
+
+  private def withTxns(a: Map[String, Long], b: Iterable[(String, Long)]): Map[String, Long] =
+    b.foldLeft(a) { case (m, (app, v)) => m.updated(app, m.get(app).fold(v)(math.max(_, v))) }
+
+  /** Publish `c` as the commit after `base`, carrying `base`'s meta
+    * (a legacy head's migrates into an object here) and txn marks plus
+    * `txn`. Throws [[CommitRaceLostException]] when another writer took
+    * the version.
+    */
+  private def commitOver(spark: SparkSession, path: String, base: State, c: Commit,
+      txn: Option[(String, Long)] = None): Unit =
+    writeCommit(spark, path, c.copy(version = base.version + 1,
+      meta = Some(base.commit.meta.getOrElse(writeMeta(spark, path, base.version + 1, base.meta))),
+      txns = withTxns(txnsOf(spark, path, base), txn)))
+
+  /** Publish `next` over `base` — the ONLY meta writer, so no path drops
+    * a key another recorded. Returns what it published: `next` at meta
+    * version `base.meta.ver + 1`, with the mixed-layout marker kept
+    * MONOTONIC (once set by a spec change, every later rewrite
     * preserves it; readers route mixed tables through the per-group-
     * root union and keep the single-scan fast path for never-evolved
     * flat tables).
     *
-    * Concurrency: the meta is read-modify-write state (DDL reads the
-    * chain/checks/spec it extends), so publication is a CAS on
-    * `base.ver` — the version of the very value the caller derived
-    * `next` from. The writer claims `.claim-meta-v<ver+1>` with an
-    * atomic exclusive create and renames a tmp file in; content
-    * atomicity comes from the rename (readers never see a torn body),
-    * lost updates from the claim (two DDLs racing from the same base:
-    * one wins, the loser gets ConcurrentWriteException and must re-run
-    * against the new meta).
+    * Concurrency: the meta commit claims the version after the head
+    * like any commit. Losing the claim to commits that kept `base`'s
+    * meta (appends, DML) rebases onto the new head; losing it to
+    * another meta change throws [[ConcurrentWriteException]] — the
+    * caller derived `next` from a meta that is gone and must re-run.
+    * `next` gets the version it publishes at (column DDL stamps with it).
     */
-  private def updateMeta(spark: SparkSession, path: String, base: TableMeta,
-      next: TableMeta): TableMeta = {
-    val expect = base.ver
-    val published = next.copy(ver = expect + 1,
-      mixedLayouts = next.mixedLayouts || base.mixedLayouts)
-    val metaFile = tableMetaFile(path)
-    val fs = fsOf(spark, metaFile)
-    fs.mkdirs(logDir(path))
-    val lock = new Path(logDir(path), f".claim-meta-v${expect + 1}%05d")
-    val token = java.util.UUID.randomUUID.toString
-    if (!tryExclusiveCreateToken(fs, lock, token)) {
-      // The claim may be an ORPHAN: a writer that crashed between
-      // claiming and publishing leaves the claim on disk with metaVer
-      // still at `expect`, which would brick every future meta
-      // mutation. Reclaimable iff the version is UNPUBLISHED (metaVer
-      // didn't move — a published v<expect+1> means this CAS genuinely
-      // lost) AND the claim is older than the lease (a younger claim
-      // is a live writer mid-publish). Lease default 15 min,
-      // tunable via spark.graft.meta.claimLeaseMs.
-      val leaseMs = spark.conf.getOption("spark.graft.meta.claimLeaseMs")
-        .map(_.toLong).getOrElse(15L * 60 * 1000)
-      val reclaimed = meta(spark, path).ver == expect && {
-        val age =
-          try System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime
-          catch { case _: java.io.FileNotFoundException => -1L } // racer mid-flight
-        age > leaseMs && { fs.delete(lock, false); tryExclusiveCreateToken(fs, lock, token) }
-      }
-      if (!reclaimed)
-        throw new ConcurrentWriteException(
-          s"table-meta change lost the race at $metaFile (expected metaVer $expect): " +
-          "a concurrent DDL published first — re-run against the new table state")
-    }
-    val tmp = new Path(logDir(path),
-      s".tmp-meta-${java.util.UUID.randomUUID.toString.take(8)}.json")
-    val out = fs.create(tmp, true)
-    try out.write(TableMeta.render(published).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // Ownership re-verify: the reclaim path's delete-then-create is
-    // NOT atomic — two reclaimers both past the lease check can
-    // interleave (A deletes+creates, B deletes A's fresh claim and
-    // creates its own) and each believes it owns the claim. The token
-    // written at create time disambiguates: whoever's token is in the
-    // claim file NOW owns the publish; the other aborts instead of
-    // silently overwriting a metaVer that already carried a DDL. The
-    // metaVer re-read closes the second ordering (B stat'd the orphan
-    // before A replaced it, A published in between): a version that
-    // already moved means the claim B holds is for a SPENT version.
-    // The meta read (a parse) goes first so the token check sits right
-    // before the rename: the gap below is one claim read wide.
-    // Residual (accepted): if BOTH reclaimers pass this re-verify
-    // before either renames — A's whole delete+create+verify landing
-    // inside B's verify→rename gap — both publish. That needs two
-    // writers to see the SAME claim lease-expired (a crashed third
-    // writer plus a 15-minute standoff) and then a sub-millisecond
-    // interleave; full closure needs a compare-and-swap primitive the
-    // filesystem API doesn't offer — on a store that has one
-    // (conditional PUT), tryExclusiveCreateToken is the swap point.
-    if (meta(spark, path).ver != expect || !claimToken(fs, lock).contains(token)) {
-      fs.delete(tmp, false)
-      throw new ConcurrentWriteException(
-        s"table-meta claim for $metaFile was reclaimed by a concurrent writer " +
-        s"(expected metaVer $expect): re-run against the new table state")
-    }
-    if (!fs.rename(tmp, metaFile)) {
-      // HDFS-semantics stores refuse a rename onto an existing target
-      // (local FS replaces atomically). The claim already serialized
-      // writers, so delete+rename is race-free there; the not-found
-      // window it opens for readers is the store's own trade.
-      if (fs.exists(metaFile)) fs.delete(metaFile, false)
-      if (!fs.rename(tmp, metaFile)) {
-        fs.delete(tmp, false)
-        // Release the claim: metaVer stays at `expect`, so keeping the
-        // claim would block every future mutation until lease expiry.
-        fs.delete(lock, false)
-        throw new IllegalStateException(s"table-meta rename failed for $metaFile")
+  private def updateMeta(spark: SparkSession, path: String, base: State,
+      next: Long => TableMeta): TableMeta = {
+    var head = base
+    var attempts = 0
+    while (true) {
+      val v = head.version + 1
+      val n = next(v)
+      val published = n.copy(ver = base.meta.ver + 1,
+        mixedLayouts = n.mixedLayouts || base.meta.mixedLayouts)
+      val name = writeMeta(spark, path, v, published)
+      try {
+        writeCommit(spark, path, Commit(v, MetaAction, head.commit.dirs,
+          meta = Some(name), txns = txnsOf(spark, path, head)))
+        return published
+      } catch {
+        case e: CommitRaceLostException =>
+          attempts += 1
+          val now = state(spark, path)
+          if (now.meta != base.meta)
+            throw new ConcurrentWriteException(
+              s"table-meta change at $path lost v$v to a concurrent meta change " +
+              s"(expected meta version ${base.meta.ver}) — re-run against the new table state")
+          if (attempts >= 32)
+            throw new ConcurrentWriteException(
+              s"table-meta change at $path gave up after $attempts rebases: ${e.getMessage}")
+          if (now.version < v) Thread.sleep(5L * attempts) // winner mid-publish
+          if (now.version > head.version) head = now
       }
     }
-    published
+    base.meta // unreachable
   }
 
   /** Add a CHECK constraint (the Delta `ALTER TABLE ADD CONSTRAINT`
@@ -2082,44 +2078,49 @@ object LakeTable {
     */
   def addCheck(spark: SparkSession, path: String, name: String, sql: String): TableMeta = {
     import org.apache.spark.sql.functions.{expr => fexpr}
-    val base = meta(spark, path)
-    require(!base.checks.exists(_._1 == name), s"constraint $name already exists")
-    val head = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val violations = read(spark, path, base, head)
+    val base = state(spark, path)
+    require(!base.meta.checks.exists(_._1 == name), s"constraint $name already exists")
+    val violations = read(spark, path, base)
       .where(fexpr(s"NOT coalesce(($sql), true)")).limit(1).count()
     require(violations == 0,
       s"cannot add CHECK constraint $name: existing rows violate ($sql)")
-    updateMeta(spark, path, base, base.copy(checks = base.checks :+ (name -> sql)))
+    updateMeta(spark, path, base, _ => base.meta.copy(checks = base.meta.checks :+ (name -> sql)))
   }
 
   def dropCheck(spark: SparkSession, path: String, name: String): TableMeta = {
-    val base = meta(spark, path)
-    updateMeta(spark, path, base, base.copy(checks = base.checks.filterNot(_._1 == name)))
+    val base = state(spark, path)
+    updateMeta(spark, path, base,
+      _ => base.meta.copy(checks = base.meta.checks.filterNot(_._1 == name)))
   }
 
   def setDvMode(spark: SparkSession, path: String, on: Boolean): TableMeta = {
-    val base = meta(spark, path)
-    updateMeta(spark, path, base, base.copy(dvMode = on))
+    val base = state(spark, path)
+    updateMeta(spark, path, base, _ => base.meta.copy(dvMode = on))
   }
 
-  /** Create (or replace) the table as version 0. */
+  /** The state before a table's first commit, under meta `m`. */
+  private def unborn(m: TableMeta) = State(-1L, Commit(-1L, "create", Nil), m)
+
+  /** Create (or replace) the table as version 0, with `meta` as its
+    * initial table meta — one commit, whatever the meta holds.
+    */
   def create(spark: SparkSession, path: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil): Long = {
+      partitionBy: Seq[String] = Nil, meta: TableMeta = TableMeta.empty): Long = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     if (fs.exists(p)) fs.delete(p, true)
     invalidateSchemaCache(spark, path)
-    val dir = writeGroup(spark, path, TableMeta.empty, 0L, df, partitionBy)
-    if (partitionBy.nonEmpty) {
-      // The schema rides along: an EMPTY partitioned create writes no
-      // parquet files at all, so schema inference has nothing to read
-      // until the first insert — the meta is the fallback that keeps
-      // DDL-then-INSERT resolvable.
-      updateMeta(spark, path, TableMeta.empty,
-        TableMeta(partitionBy = partitionBy, schema = Some(df.schema)))
-    }
-    writeCommit(spark, path, Commit(0L, "create", Seq(dir)))
+    // A partitioned create records the schema: an EMPTY partitioned
+    // create writes no parquet files at all, so schema inference has
+    // nothing to read until the first insert — the meta is the
+    // fallback that keeps DDL-then-INSERT resolvable.
+    val initial =
+      if (partitionBy.isEmpty) meta
+      else meta.copy(partitionBy = partitionBy, schema = meta.schema.orElse(Some(df.schema)))
+    val m = if (initial == TableMeta.empty) initial else initial.copy(ver = 1L)
+    val dir = writeGroup(spark, path, unborn(m), df, partitionBy)
+    writeCommit(spark, path,
+      Commit(0L, "create", Seq(dir), meta = Some(writeMeta(spark, path, 0L, m))))
     0L
   }
 
@@ -2129,8 +2130,8 @@ object LakeTable {
     */
   private[graft] def updateSchemaMeta(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val base = meta(spark, path)
-    updateMeta(spark, path, base, base.copy(schema = Some(schema)))
+    val base = state(spark, path)
+    updateMeta(spark, path, base, _ => base.meta.copy(schema = Some(schema)))
   }
 
   /** Bounded process-wide schema cache. Schema derivation walks every
@@ -2139,9 +2140,10 @@ object LakeTable {
     * times per statement (schema(), capabilities(), scan build, write
     * build), so an uncached INSERT into a multi-group table was paying
     * ~30 sequential ~100 ms inference jobs of pure re-derivation. The
-    * key is exact: (qualified path, data version, meta version) —
-    * any write moves the data version, any DDL moves the metaVer, so
-    * entries are immutable once computed. LRU-bounded; access-ordered.
+    * key is exact: (qualified path, data version, meta version) — a
+    * version pins its commit, and the meta version the meta time
+    * travel reads under — so entries are immutable once computed.
+    * LRU-bounded; access-ordered.
     */
   private val schemaCache =
     java.util.Collections.synchronizedMap(
@@ -2200,39 +2202,29 @@ object LakeTable {
     * DDL-evolved columns both surface, each nullable until data lands.
     */
   def tableSchema(spark: SparkSession, path: String,
-      version: Option[Long] = None): org.apache.spark.sql.types.StructType = {
-    val v = version.orElse(currentVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    tableSchema(spark, path, meta(spark, path), v)
-  }
+      version: Option[Long] = None): org.apache.spark.sql.types.StructType =
+    tableSchema(spark, path, snapshot(spark, path, version))
 
-  /** [[tableSchema]] of snapshot `v` under meta `m`, the value the
-    * calling verb resolved.
-    */
-  private[graft] def tableSchema(spark: SparkSession, path: String, m: TableMeta,
-      v: Long): org.apache.spark.sql.types.StructType = {
-    val key = (fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString, v, m.ver)
+  /** [[tableSchema]] of the state the calling verb resolved. */
+  private[graft] def tableSchema(spark: SparkSession, path: String,
+      st: State): org.apache.spark.sql.types.StructType = {
+    val key = (fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString,
+      st.version, st.meta.ver)
     Option(schemaCache.get(key)).getOrElse {
-      val computed = tableSchemaUncached(spark, path, m, v)
+      val computed = tableSchemaUncached(spark, path, st)
       schemaCache.put(key, computed)
       computed
     }
   }
 
-  /** [[tableSchema]] of the head snapshot under meta `m`. */
-  private[graft] def headSchema(spark: SparkSession, path: String,
-      m: TableMeta): org.apache.spark.sql.types.StructType =
-    tableSchema(spark, path, m, currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path")))
-
-  private def tableSchemaUncached(spark: SparkSession, path: String, tm: TableMeta,
-      v: Long): org.apache.spark.sql.types.StructType = {
+  private def tableSchemaUncached(spark: SparkSession, path: String,
+      st: State): org.apache.spark.sql.types.StructType = {
     val i =
-      try read(spark, path, tm, v).schema
+      try read(spark, path, st).schema
       catch {
-        case e: org.apache.spark.sql.AnalysisException => return tm.schema.getOrElse(throw e)
+        case e: org.apache.spark.sql.AnalysisException => return st.meta.schema.getOrElse(throw e)
       }
-    tm.schema match {
+    st.meta.schema match {
       case Some(m) =>
         val have = i.fieldNames.toSet
         val byName = m.fields.map(f => f.name -> f).toMap
@@ -2265,116 +2257,82 @@ object LakeTable {
     */
   def append(spark: SparkSession, path: String, df: DataFrame,
       partitionBy: Seq[String] = Nil): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     // No explicit layout → the table's CURRENT spec (which partition
     // evolution may have changed since create): new groups always land
     // under the spec in force at write time.
-    val m = meta(spark, path)
-    val spec = if (partitionBy.nonEmpty) partitionBy else m.partitionBy
-    val dir = writeGroup(spark, path, m, prev + 1, df, spec)
-    commitBlindAppend(spark, path, prev, dir, txn = None)
+    val base = state(spark, path)
+    val spec = if (partitionBy.nonEmpty) partitionBy else base.meta.partitionBy
+    val dir = writeGroup(spark, path, base, df, spec)
+    commitBlindAppend(spark, path, base, Seq(dir), txn = None).get
   }
 
-  /** Publish an already-staged group as an append, rebasing past
-    * concurrent winners (their commits plus this dir compose — blind
-    * appends have an empty read set). Claim losses where the winner's
-    * publish is still in flight (claim marker up, commit rename not
-    * yet visible) back off briefly and re-resolve.
+  /** Publish already-staged groups as an append, rebasing past
+    * concurrent winners (their commits plus these dirs compose — blind
+    * appends have an empty read set). Every attempt carries the meta of
+    * the head it claims over, so a DDL that landed meanwhile stays in
+    * force. Claim losses where the winner's publish is still in flight
+    * (claim marker up, commit rename not yet visible) back off briefly
+    * and re-resolve. With a `txn` (application id, version), every
+    * attempt first checks the head's marks: None = that application
+    * version is already committed (a replay, or a twin that won), and
+    * nothing was published.
     */
-  private def commitBlindAppend(spark: SparkSession, path: String, basePrev: Long,
-      dir: String, txn: Option[(String, Long)]): Long = {
-    var prev = basePrev
+  private def commitBlindAppend(spark: SparkSession, path: String, base: State,
+      dirs: Seq[String], txn: Option[(String, Long)]): Option[Long] = {
+    var head = base
     var attempts = 0
     while (true) {
-      val c = readCommit(spark, path, prev)
-      val v = prev + 1
+      if (txn.exists { case (app, tv) => txnsOf(spark, path, head).get(app).exists(_ >= tv) })
+        return None
+      val v = head.version + 1
       // CDC: an append's change records ARE the appended rows, so no
       // change file is written at all — the commit carries an `@dir`
       // marker and readers synthesize (change_type='insert',
       // _commit_version=v) from the data group. Appends with the feed
       // on pay ZERO write amplification (the Delta insert-only-commit
       // optimization); only row-mutating commits write change files.
-      val cdc = cdcKey(spark, path).map(_ => "@" + dir)
+      val cdc = dirs.headOption.flatMap(d => cdcKey(spark, path).map(_ => "@" + d))
       try {
-        writeCommit(spark, path, Commit(v, "append", c.dirs :+ dir, cdc, txn = txn))
-        return v
+        commitOver(spark, path, head, Commit(v, "append", head.commit.dirs ++ dirs, cdc), txn)
+        return Some(v)
       } catch {
         case e: CommitRaceLostException =>
           attempts += 1
           if (attempts >= 32)
             throw new ConcurrentWriteException(
               s"append to $path gave up after $attempts rebases: ${e.getMessage}")
-          val head = currentVersion(spark, path).getOrElse(prev)
-          if (head < v) Thread.sleep(5L * attempts) // winner mid-publish
-          prev = math.max(head, prev)
+          val now = state(spark, path)
+          if (now.version < v) Thread.sleep(5L * attempts) // winner mid-publish
+          if (now.version > head.version) head = now
       }
     }
-    -1L // unreachable
+    None // unreachable
   }
 
   /** Latest application version `appId` has committed to this table
-    * (the Delta `txnVersion` idempotent-write query). Newest-first
-    * walk over the retained log — bounded by vacuum retention; a
-    * writer restarting after a long gap pays one log sweep, then its
-    * next marker is near the head again.
+    * (the Delta `txnVersion` idempotent-write query): the head commit
+    * carries every application's mark, so vacuum never loses one.
     */
-  def txnVersion(spark: SparkSession, path: String, appId: String): Option[Long] = {
-    val cur = currentVersion(spark, path).getOrElse(return None)
-    (cur to 0L by -1).iterator.flatMap { v =>
-      try readCommit(spark, path, v).txn.collect { case (a, tv) if a == appId => tv }
-      catch { case _: java.io.FileNotFoundException => None } // vacuumed tail
-    }.maxOption
-  }
+  def txnVersion(spark: SparkSession, path: String, appId: String): Option[Long] =
+    head(spark, path).flatMap(txnsOf(spark, path, _).get(appId))
 
   /** IDEMPOTENT append (the Delta `txnAppId`/`txnVersion` contract —
     * what turns an at-least-once foreachBatch file sink into
     * exactly-once): the write commits only if `appId` has not already
     * committed a version ≥ `appVersion`; a replayed micro-batch after
     * a restart becomes a no-op. Returns true when this call committed.
-    * A concurrent-racer loss re-checks and retries, so two replays of
-    * the same (appId, appVersion) can never both land.
+    * The check re-runs before every commit attempt (a race loss may be
+    * to a twin replaying the same batch), so two replays of the same
+    * (appId, appVersion) can never both land; a staged-but-unneeded
+    * dir is an orphan vacuum reclaims — same as any race loser.
     */
   def appendOnce(spark: SparkSession, path: String, df: DataFrame,
       appId: String, appVersion: Long, partitionBy: Seq[String] = Nil): Boolean = {
-    var attempts = 0
-    var staged: Option[String] = None
-    while (true) {
-      // The idempotence check runs before EVERY commit attempt (not
-      // just the first): a race loss may have been to our own twin
-      // replaying the same (appId, appVersion). A staged-but-unneeded
-      // dir is an orphan vacuum reclaims — same as any race loser.
-      if (txnVersion(spark, path, appId).exists(_ >= appVersion)) return false
-      val prev = currentVersion(spark, path)
-        .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-      val c = readCommit(spark, path, prev)
-      val v = prev + 1
-      // Stage the data ONCE; retries after a lost race rebase the same
-      // group dir (blind appends read nothing — only the metadata
-      // commit needs redoing).
-      val dir = staged.getOrElse {
-        val m = meta(spark, path)
-        val spec = if (partitionBy.nonEmpty) partitionBy else m.partitionBy
-        val d = writeGroup(spark, path, m, v, df, spec); staged = Some(d); d
-      }
-      val cdc = cdcKey(spark, path).map(_ => "@" + dir)
-      try {
-        writeCommit(spark, path,
-          Commit(v, "append", c.dirs :+ dir, cdc, txn = Some(appId -> appVersion)))
-        return true
-      } catch {
-        case e: CommitRaceLostException =>
-          // Lost the version race: someone else committed v (possibly
-          // OUR twin replaying the same batch) — re-check and retry.
-          attempts += 1
-          if (attempts >= 8)
-            throw new ConcurrentWriteException(
-              s"appendOnce($appId, $appVersion) gave up after $attempts rebases: ${e.getMessage}")
-          if (currentVersion(spark, path).exists(_ < v))
-            Thread.sleep(5L * attempts) // winner mid-publish
-      }
-    }
-    false // unreachable
+    val base = state(spark, path)
+    if (txnsOf(spark, path, base).get(appId).exists(_ >= appVersion)) return false
+    val spec = if (partitionBy.nonEmpty) partitionBy else base.meta.partitionBy
+    val dir = writeGroup(spark, path, base, df, spec)
+    commitBlindAppend(spark, path, base, Seq(dir), Some(appId -> appVersion)).isDefined
   }
 
   // ---- native-DSv2 staged commits -----------------------------------
@@ -2424,46 +2382,46 @@ object LakeTable {
     }
     writeStats(spark, path, stagedDir)
     val hasData = keepFiles.nonEmpty
-    currentVersion(spark, path) match {
+    head(spark, path) match {
       case None =>
         // First write to a fresh path: create at version 0 (the staged
         // dir IS the v0 group). Partitioned DDL tables already exist
         // (the catalog's createTable commits v0).
-        writeCommit(spark, path, Commit(0L, "create", Seq(stagedDir), None, txn = txn))
+        writeCommit(spark, path, Commit(0L, "create", Seq(stagedDir), None,
+          txns = txn.toMap, meta = Some("")))
         0L
-      case Some(prev) =>
-        val c = readCommit(spark, path, prev)
+      case Some(st) =>
+        val (prev, c, m) = (st.version, st.commit, st.meta)
         val v = prev + 1
-        val m = meta(spark, path)
         val parts = m.partitionBy
         mode match {
           case Append =>
-            // Zero-write-amplification CDC marker, like append().
-            val cdc = if (hasData) cdcKey(spark, path).map(_ => "@" + stagedDir) else None
-            val dirs = if (hasData) c.dirs :+ stagedDir else c.dirs
-            writeCommit(spark, path, Commit(v, "append", dirs, cdc, txn = txn))
+            // A blind append like append(); a replayed txn is a lost race.
+            return commitBlindAppend(spark, path, st, if (hasData) Seq(stagedDir) else Nil, txn)
+              .getOrElse(throw new CommitRaceLostException(
+                s"txn ${txn.get} is already committed to $path"))
           case Overwrite =>
             val cdc = cdcKey(spark, path).map { k =>
-              writeCdc(spark, path, v, diffFrames(read(spark, path, m, prev),
+              writeCdc(spark, path, v, diffFrames(read(spark, path, st),
                 readDirs(spark, path, m, Seq(stagedDir)), k, preimages = true))
             }
-            writeCommit(spark, path, Commit(v, "overwrite", Seq(stagedDir), cdc, txn = txn))
+            commitOver(spark, path, st, Commit(v, "overwrite", Seq(stagedDir), cdc), txn)
           case ReplaceWhere(pred) =>
             val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
-              predicateBounds(spark, tableSchema(spark, path, m, prev), pred))
+              predicateBounds(spark, tableSchema(spark, path, st), pred))
             val old =
-              if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+              if (touched.isEmpty) read(spark, path, st).limit(0)
               else readDirsLive(spark, path, m, touched, prev)
             val rewritten =
               if (touched.isEmpty) None
-              else Some(writeGroup(spark, path, m, v,
+              else Some(writeGroup(spark, path, st,
                 old.where(!coalesce(pred, lit(false))), parts))
             val cdc = cdcKey(spark, path).map { k =>
               writeCdc(spark, path, v, diffFrames(old,
                 readDirs(spark, path, m, rewritten.toSeq :+ stagedDir), k, preimages = true))
             }
-            writeCommit(spark, path,
-              Commit(v, "replace", (untouched ++ rewritten) :+ stagedDir, cdc, txn = txn))
+            commitOver(spark, path, st,
+              Commit(v, "replace", (untouched ++ rewritten) :+ stagedDir, cdc), txn)
           case DynamicPartitions =>
             require(parts.nonEmpty,
               "dynamic partition overwrite requires a partitioned table")
@@ -2486,13 +2444,13 @@ object LakeTable {
             val cdc = cdcKey(spark, path).map { k =>
               val ds = droppedLeaves.result()
               val oldDf =
-                if (ds.isEmpty) read(spark, path, m, prev).limit(0)
+                if (ds.isEmpty) read(spark, path, st).limit(0)
                 else readDirsLive(spark, path, m, ds, prev)
               writeCdc(spark, path, v, diffFrames(oldDf,
                 readDirs(spark, path, m, Seq(stagedDir)), k, preimages = true))
             }
-            writeCommit(spark, path,
-              Commit(v, "replace", keepDirs.result() :+ stagedDir, cdc, txn = txn))
+            commitOver(spark, path, st,
+              Commit(v, "replace", keepDirs.result() :+ stagedDir, cdc), txn)
         }
         v
     }
@@ -2523,17 +2481,13 @@ object LakeTable {
     * merge-on-read) are applied; rewritten groups shed theirs by dir
     * rename, older snapshots read pre-delete state by version.
     */
-  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    read(spark, path, meta(spark, path), v)
-  }
+  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame =
+    read(spark, path, snapshot(spark, path, version))
 
-  /** Snapshot `v` read under meta `m`, the value the calling verb resolved. */
-  private[graft] def read(spark: SparkSession, path: String, m: TableMeta, v: Long): DataFrame = {
-    val c = readCommit(spark, path, v)
-    readDirsDv(spark, path, m, c.dirs, dvFor(spark, path, v, c.dirs), withPos = false)
-  }
+  /** The snapshot of `st`, the state the calling verb resolved. */
+  private[graft] def read(spark: SparkSession, path: String, st: State): DataFrame =
+    readDirsDv(spark, path, st.meta, st.commit.dirs,
+      dvFor(spark, path, st.version, st.commit.dirs), withPos = false)
 
   // ---- deletion vectors (merge-on-read DELETE, B46) -----------------
 
@@ -2645,14 +2599,13 @@ object LakeTable {
     * of prior and new marks, so readers resolve one DV file per group.
     */
   def deleteMor(spark: SparkSession, path: String, predicate: org.apache.spark.sql.Column): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    val st = state(spark, path)
+    val (prev, c) = (st.version, st.commit)
     val v = prev + 1
-    val c = readCommit(spark, path, prev)
     val dv0 = dvFor(spark, path, prev, c.dirs)
-    val live = readDirsDv(spark, path, meta(spark, path), c.dirs, dv0, withPos = true)
+    val live = readDirsDv(spark, path, st.meta, c.dirs, dv0, withPos = true)
     if (!live.columns.contains("__file")) { // empty DDL table: no files
-      writeCommit(spark, path, Commit(v, "delete-mor", c.dirs))
+      commitOver(spark, path, st, Commit(v, "delete-mor", c.dirs))
       return v
     }
     val matched = live.where(predicate)
@@ -2661,14 +2614,14 @@ object LakeTable {
       .toDF("__file", "bm")
     val dvNames = mergeAndWriteDv(spark, path, v, c.dirs, dv0, marks)
     if (dvNames.isEmpty) { // nothing matched: pure metadata commit
-      writeCommit(spark, path, Commit(v, "delete-mor", c.dirs))
+      commitOver(spark, path, st, Commit(v, "delete-mor", c.dirs))
       return v
     }
     val cdc = cdcKey(spark, path).map { k =>
       val rows = matched.drop("__file", "__pos")
       writeCdc(spark, path, v, diffFrames(rows, rows.limit(0), k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "delete-mor", c.dirs, cdc, dvFiles = dvNames))
+    commitOver(spark, path, st, Commit(v, "delete-mor", c.dirs, cdc, dvFiles = dvNames))
     v
   }
 
@@ -2682,8 +2635,8 @@ object LakeTable {
     * state diff, the Delta-CDF restore contract.
     */
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
-    val cur = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    val st = state(spark, path)
+    val cur = st.version
     require(toVersion <= cur, s"cannot restore $path to future version $toVersion (current $cur)")
     val old = readCommit(spark, path, toVersion)
     val v = cur + 1
@@ -2702,12 +2655,13 @@ object LakeTable {
       writeDvFile(spark, path, v, g,
         stateAtTo.get(g).map(_._2).getOrElse(Map.empty))
     }
+    // The commit carries the HEAD's meta: a restore rolls data back,
+    // never a DDL made since.
     val cdc = cdcKey(spark, path).map { k =>
-      val m = meta(spark, path)
-      writeCdc(spark, path, v, diffFrames(read(spark, path, m, cur),
-        read(spark, path, m, toVersion), k, preimages = true))
+      writeCdc(spark, path, v, diffFrames(read(spark, path, st),
+        read(spark, path, at(spark, path, st, toVersion)), k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "restore", old.dirs, cdc, dvFiles = dvNames))
+    commitOver(spark, path, st, Commit(v, "restore", old.dirs, cdc, dvFiles = dvNames))
     v
   }
 
@@ -2821,15 +2775,13 @@ object LakeTable {
   def updateMor(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     val v = prev + 1
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
     val dv0 = dvFor(spark, path, prev, c.dirs)
     val live = readDirsDv(spark, path, m, c.dirs, dv0, withPos = true)
     if (!live.columns.contains("__file")) {
-      writeCommit(spark, path, Commit(v, "update-mor", c.dirs))
+      commitOver(spark, path, st, Commit(v, "update-mor", c.dirs))
       return v
     }
     val matched = live.where(predicate)
@@ -2838,18 +2790,18 @@ object LakeTable {
       .toDF("__file", "bm")
     val dvNames = mergeAndWriteDv(spark, path, v, c.dirs, dv0, marks)
     if (dvNames.isEmpty) {
-      writeCommit(spark, path, Commit(v, "update-mor", c.dirs))
+      commitOver(spark, path, st, Commit(v, "update-mor", c.dirs))
       return v
     }
     val oldRows = matched.drop("__file", "__pos")
     val newRows = assignments.foldLeft(oldRows) { case (acc, (cn, e)) =>
       acc.withColumn(cn, e)
     }
-    val dir = writeGroup(spark, path, m, v, newRows, m.partitionBy)
+    val dir = writeGroup(spark, path, st, newRows, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v, diffFrames(oldRows, newRows, k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "update-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
+    commitOver(spark, path, st, Commit(v, "update-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
     v
   }
 
@@ -2888,8 +2840,9 @@ object LakeTable {
     */
   def changes(spark: SparkSession, path: String, key: String,
       fromVersion: Long, toVersion: Long, preimages: Boolean): DataFrame = {
-    val m = meta(spark, path)
-    diffFrames(read(spark, path, m, fromVersion), read(spark, path, m, toVersion), key, preimages)
+    val h = state(spark, path)
+    diffFrames(read(spark, path, at(spark, path, h, fromVersion)),
+      read(spark, path, at(spark, path, h, toVersion)), key, preimages)
   }
 
   /** Keyed diff of two row sets — the core of [[changes]], also used
@@ -3438,20 +3391,18 @@ object LakeTable {
     * MERGE touching 0.1% of a 100 TB table rewrites ~0.1% of it.
     */
   def merge(spark: SparkSession, path: String, source: DataFrame, key: String): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs, keyBounds(source, Seq(key)))
     // limit(0) base pins the full table schema even when no group is
     // touched (pure insert) or the source is missing columns.
     val target =
-      if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+      if (touched.isEmpty) read(spark, path, st).limit(0)
       else readDirsLive(spark, path, m, touched, prev)
     val kept = target.join(source.select(key), Seq(key), "left_anti")
     val merged = kept.unionByName(source, allowMissingColumns = true)
     val v = prev + 1
-    val dir = writeGroup(spark, path, m, v, merged, m.partitionBy)
+    val dir = writeGroup(spark, path, st, merged, m.partitionBy)
     // CDC: diff only the touched groups against their rewrite —
     // untouched groups are on both sides of the snapshot diff and
     // produce no records, so the diff cost tracks the mutation size.
@@ -3459,7 +3410,7 @@ object LakeTable {
       writeCdc(spark, path, v,
         diffFrames(target, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "merge", untouched :+ dir, cdc))
+    commitOver(spark, path, st, Commit(v, "merge", untouched :+ dir, cdc))
     v
   }
 
@@ -3517,10 +3468,8 @@ object LakeTable {
       "WHEN MATCHED supports UPDATE/DELETE only")
     require(notMatchedBySource.forall(!_.isInstanceOf[MergeInsert]),
       "WHEN NOT MATCHED BY SOURCE supports UPDATE/DELETE only")
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
 
     // Equi-key pairs (targetCol, sourceCol) mined from the condition's
     // conjuncts — they drive file-group pruning and the dup guard.
@@ -3560,7 +3509,7 @@ object LakeTable {
     // splitDirs treats empty bounds as "everything touched" (sound).
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs, bounds)
 
-    val tSchema = tableSchema(spark, path, m, prev)
+    val tSchema = tableSchema(spark, path, st)
     // DV-mode (B46): MERGE goes merge-on-read — affected target rows
     // are carried with their (file, position) so they can be vectored
     // out instead of rewriting their groups.
@@ -3569,7 +3518,7 @@ object LakeTable {
       else Map.empty[String, Map[String, Array[Byte]]]
     val targetRaw =
       if (touched.isEmpty) {
-        val base = read(spark, path, m, prev).limit(0)
+        val base = read(spark, path, st).limit(0)
         if (dvMode) base.withColumn("__file", lit(null).cast("string"))
           .withColumn("__pos", lit(null).cast("long"))
         else base
@@ -3636,23 +3585,23 @@ object LakeTable {
         .toDF("__file", "bm")
       val appendRows = joined.where(keep && (!tPresent || acted)).select(outCols: _*)
       val dvNames = mergeAndWriteDv(spark, path, v, c.dirs, dv0, marks)
-      val dir = writeGroup(spark, path, m, v, appendRows, m.partitionBy)
+      val dir = writeGroup(spark, path, st, appendRows, m.partitionBy)
       val cdc = cdcKey(spark, path).map { k =>
         val oldAffected = affected.select(tSchema.fieldNames.map(n => col(s"t.$n")).toSeq: _*)
         writeCdc(spark, path, v,
           diffFrames(oldAffected, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
       }
-      writeCommit(spark, path, Commit(v, "merge-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
+      commitOver(spark, path, st, Commit(v, "merge-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
       return v
     }
     val result = joined.where(keep).select(outCols: _*)
 
-    val dir = writeGroup(spark, path, m, v, result, m.partitionBy)
+    val dir = writeGroup(spark, path, st, result, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
         diffFrames(targetFull, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "merge", untouched :+ dir, cdc))
+    commitOver(spark, path, st, Commit(v, "merge", untouched :+ dir, cdc))
     v
   }
 
@@ -3667,30 +3616,28 @@ object LakeTable {
     */
   def mergeAggregate(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String], sumCols: Seq[String]): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     // A group is untouched only if its stats prove no source key tuple
     // can live in it (per-column intersection — conservative for multi
     // column keys). Untouched groups keep their one-row-per-key
     // invariant by induction; touched ∪ source re-combines to one row
     // per key, so the table-wide invariant survives the partial rewrite.
-    val m = meta(spark, path)
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs, keyBounds(source, keys))
     val target =
-      if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+      if (touched.isEmpty) read(spark, path, st).limit(0)
       else readDirsLive(spark, path, m, touched, prev)
     val combined = target.unionByName(source, allowMissingColumns = true)
       .groupBy(keys.map(col): _*)
       .agg(sum(sumCols.head).as(sumCols.head),
         sumCols.tail.map(c => sum(c).as(c)): _*)
     val v = prev + 1
-    val dir = writeGroup(spark, path, m, v, combined, m.partitionBy)
+    val dir = writeGroup(spark, path, st, combined, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
         diffFrames(target, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "merge_agg", untouched :+ dir, cdc))
+    commitOver(spark, path, st, Commit(v, "merge_agg", untouched :+ dir, cdc))
     v
   }
 
@@ -3707,24 +3654,22 @@ object LakeTable {
     */
   def overwriteWhere(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column, df: DataFrame): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
+      predicateBounds(spark, tableSchema(spark, path, st), predicate))
     val old =
-      if (touched.isEmpty) read(spark, path, m, prev).limit(0)
+      if (touched.isEmpty) read(spark, path, st).limit(0)
       else readDirsLive(spark, path, m, touched, prev)
     val replaced = old.where(!coalesce(predicate, lit(false)))
       .unionByName(df, allowMissingColumns = true)
     val v = prev + 1
-    val dir = writeGroup(spark, path, m, v, replaced, m.partitionBy)
+    val dir = writeGroup(spark, path, st, replaced, m.partitionBy)
     val cdc = cdcKey(spark, path).map { k =>
       writeCdc(spark, path, v,
         diffFrames(old, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
     }
-    writeCommit(spark, path, Commit(v, "replace", untouched :+ dir, cdc))
+    commitOver(spark, path, st, Commit(v, "replace", untouched :+ dir, cdc))
     v
   }
 
@@ -3735,25 +3680,23 @@ object LakeTable {
     */
   def delete(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
+      predicateBounds(spark, tableSchema(spark, path, st), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
       // Nothing can match: the commit is pure metadata, zero data moved.
-      writeCommit(spark, path, Commit(v, "delete", c.dirs))
+      commitOver(spark, path, st, Commit(v, "delete", c.dirs))
     } else {
       val old = readDirsLive(spark, path, m, touched, prev)
-      val dir = writeGroup(spark, path, m, v,
+      val dir = writeGroup(spark, path, st,
         old.where(!coalesce(predicate, lit(false))), m.partitionBy)
       val cdc = cdcKey(spark, path).map { k =>
         writeCdc(spark, path, v,
           diffFrames(old, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
       }
-      writeCommit(spark, path, Commit(v, "delete", untouched :+ dir, cdc))
+      commitOver(spark, path, st, Commit(v, "delete", untouched :+ dir, cdc))
     }
     v
   }
@@ -3764,50 +3707,47 @@ object LakeTable {
   def update(spark: SparkSession, path: String, predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{col, when}
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
+      predicateBounds(spark, tableSchema(spark, path, st), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
-      writeCommit(spark, path, Commit(v, "update", c.dirs))
+      commitOver(spark, path, st, Commit(v, "update", c.dirs))
     } else {
       val df = readDirsLive(spark, path, m, touched, prev)
       val updated = assignments.foldLeft(df) { case (acc, (cn, e)) =>
         acc.withColumn(cn, when(predicate, e).otherwise(col(cn)))
       }
-      val dir = writeGroup(spark, path, m, v, updated, m.partitionBy)
+      val dir = writeGroup(spark, path, st, updated, m.partitionBy)
       val cdc = cdcKey(spark, path).map { k =>
         writeCdc(spark, path, v,
           diffFrames(df, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
       }
-      writeCommit(spark, path, Commit(v, "update", untouched :+ dir, cdc))
+      commitOver(spark, path, st, Commit(v, "update", untouched :+ dir, cdc))
     }
     v
   }
 
-  /** VACUUM: physically remove data dirs not referenced by any commit
+  /** VACUUM: physically remove data dirs, change files, deletion
+    * vectors and table-meta objects not referenced by any commit
     * ≥ `retainFrom` and drop the older commit entries — bounds
     * storage; time travel before the horizon is forfeited.
     */
   def vacuum(spark: SparkSession, path: String, retainFrom: Long): Long = {
     val cur = currentVersion(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val keepVersions = (retainFrom to cur)
-    // Subdir entries (d0/g=b) pin their whole GROUP dir: reclamation is
-    // group-granular — a group frees only when no retained commit
-    // references any slice of it (conservative, like Delta's vacuum
-    // over partially-rewritten files).
     // A version in the window may have no commit file (below a clone's
     // base, or dropped by an earlier vacuum) — nothing to pin there.
     // Missing-file ONLY: any other readCommit failure aborts the
     // vacuum — a retained commit whose dirs can't be read must never
     // fall out of the keep-set (that would delete live data).
-    val keepDirs = keepVersions
-      .flatMap(v => readCommitOpt(spark, path, v).map(_.dirs).getOrElse(Nil)
-        .map(groupRoot)).toSet
+    val retained = (retainFrom to cur).flatMap(readCommitOpt(spark, path, _))
+    // Subdir entries (d0/g=b) pin their whole GROUP dir: reclamation is
+    // group-granular — a group frees only when no retained commit
+    // references any slice of it (conservative, like Delta's vacuum
+    // over partially-rewritten files).
+    val keepDirs = retained.flatMap(_.dirs.map(groupRoot)).toSet
     val root = new Path(path)
     val fs = fsOf(spark, root)
     fs.listStatus(root).foreach { st =>
@@ -3817,8 +3757,7 @@ object LakeTable {
     }
     // Change files follow the same retention: drop cdc dirs no kept
     // commit references (includes orphaned racer dirs).
-    val keepCdc = keepVersions
-      .flatMap(v => readCommitOpt(spark, path, v).flatMap(_.cdcDir)).toSet
+    val keepCdc = retained.flatMap(_.cdcDir).toSet
     val cdcRoot = new Path(path, "_cdc")
     if (fs.exists(cdcRoot)) fs.listStatus(cdcRoot).foreach { st =>
       if (st.isDirectory && !keepCdc.contains(st.getPath.getName))
@@ -3830,8 +3769,7 @@ object LakeTable {
     // lost commit races and superseded cumulative files go.
     val dvRoot = dvDirPath(path)
     if (fs.exists(dvRoot)) {
-      val referenced = keepVersions
-        .flatMap(v => readCommitOpt(spark, path, v).map(_.dvFiles).getOrElse(Nil)).toSet
+      val referenced = retained.flatMap(_.dvFiles).toSet
       val horizonState = scala.util.Try(
         dvResolve(spark, path, retainFrom, readCommit(spark, path, retainFrom).dirs)
           .values.map(_._1).toSet).getOrElse(Set.empty)
@@ -3848,6 +3786,13 @@ object LakeTable {
       fs.delete(commitFile(path, v), false)
       fs.delete(new Path(logDir(path), f".claim-v$v%05d"), false)
     }
+    // Table-meta objects likewise (orphans of lost meta commits too);
+    // the legacy `_table.json` goes once no retained commit reads it.
+    val keepMeta = retained.flatMap(_.meta).toSet
+    fs.listStatus(logDir(path)).map(_.getPath).foreach { m =>
+      if (m.getName.startsWith("meta-") && !keepMeta(m.getName)) fs.delete(m, false)
+    }
+    if (retained.forall(_.meta.isDefined)) fs.delete(legacyMetaFile(path), false)
     keepDirs.size.toLong
   }
 
@@ -3860,19 +3805,17 @@ object LakeTable {
     * and the stats pruner serves point reads from one file.
     */
   def compact(spark: SparkSession, path: String, numFiles: Int): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val v = prev + 1
-    val m = meta(spark, path)
-    val df = read(spark, path, m, prev)
+    val st = state(spark, path)
+    val (v, m) = (st.version + 1, st.meta)
+    val df = read(spark, path, st)
     val sb = m.sortBy.flatMap(c => df.columns.find(_.equalsIgnoreCase(c)))
     val packed =
       if (sb.nonEmpty)
         df.repartitionByRange(numFiles, sb.map(org.apache.spark.sql.functions.col): _*)
           .sortWithinPartitions(sb.map(org.apache.spark.sql.functions.col): _*)
       else df.coalesce(numFiles)
-    val dir = writeGroup(spark, path, m, v, packed, m.partitionBy)
-    writeCommit(spark, path, Commit(v, "compact", Seq(dir)))
+    val dir = writeGroup(spark, path, st, packed, m.partitionBy)
+    commitOver(spark, path, st, Commit(v, "compact", Seq(dir)))
     v
   }
 
@@ -3886,15 +3829,13 @@ object LakeTable {
     */
   def compactWhere(spark: SparkSession, path: String, numFiles: Int,
       predicate: org.apache.spark.sql.Column): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val c = readCommit(spark, path, prev)
-    val m = meta(spark, path)
+    val st = state(spark, path)
+    val (prev, c, m) = (st.version, st.commit, st.meta)
     val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
-      predicateBounds(spark, tableSchema(spark, path, m, prev), predicate))
+      predicateBounds(spark, tableSchema(spark, path, st), predicate))
     val v = prev + 1
     if (touched.isEmpty) {
-      writeCommit(spark, path, Commit(v, "compact", c.dirs))
+      commitOver(spark, path, st, Commit(v, "compact", c.dirs))
       return v
     }
     val df = readDirsLive(spark, path, m, touched, prev)
@@ -3904,8 +3845,8 @@ object LakeTable {
         df.repartitionByRange(numFiles, sb.map(org.apache.spark.sql.functions.col): _*)
           .sortWithinPartitions(sb.map(org.apache.spark.sql.functions.col): _*)
       else df.coalesce(numFiles)
-    val dir = writeGroup(spark, path, m, v, packed, m.partitionBy)
-    writeCommit(spark, path, Commit(v, "compact", untouched :+ dir))
+    val dir = writeGroup(spark, path, st, packed, m.partitionBy)
+    commitOver(spark, path, st, Commit(v, "compact", untouched :+ dir))
     v
   }
 
@@ -3918,13 +3859,11 @@ object LakeTable {
     * range predicates — the Iceberg/Doris data-layout optimization.
     */
   def clusterBy(spark: SparkSession, path: String, cols: Seq[String], numFiles: Int): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    val m = meta(spark, path)
-    val zed = zOrdered(read(spark, path, m, prev), cols, numFiles)
-    val v = prev + 1
-    val dir = writeGroup(spark, path, m, v, zed, Nil)
-    writeCommit(spark, path, Commit(v, "cluster", Seq(dir)))
+    val st = state(spark, path)
+    val zed = zOrdered(read(spark, path, st), cols, numFiles)
+    val v = st.version + 1
+    val dir = writeGroup(spark, path, st, zed, Nil)
+    commitOver(spark, path, st, Commit(v, "cluster", Seq(dir)))
     v
   }
 
@@ -3988,8 +3927,8 @@ object LakeTable {
     */
   def clusterByIncremental(spark: SparkSession, path: String, cols: Seq[String],
       numFiles: Int): Long = {
-    val prev = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
+    val st = state(spark, path)
+    val prev = st.version
     // Newest retained `cluster` commit; a vacuumed hole below ends the
     // walk (nothing older is retained either).
     var probe = prev
@@ -4004,7 +3943,7 @@ object LakeTable {
     lastCluster match {
       case None => clusterBy(spark, path, cols, numFiles)
       case Some(cl) =>
-        val head = readCommit(spark, path, prev)
+        val head = st.commit
         val clustered = cl.dirs.toSet
         val kept = head.dirs.filter(clustered)
         val delta = head.dirs.filterNot(clustered)
@@ -4012,12 +3951,11 @@ object LakeTable {
         if (delta.isEmpty) {
           // Nothing new since the last rewrite: publish a marker commit
           // so the next incremental run's walk stays O(1).
-          writeCommit(spark, path, Commit(v, "cluster", kept))
+          commitOver(spark, path, st, Commit(v, "cluster", kept))
         } else {
-          val m = meta(spark, path)
-          val dir = writeGroup(spark, path, m, v,
-            zOrdered(readDirsLive(spark, path, m, delta, prev), cols, numFiles), Nil)
-          writeCommit(spark, path, Commit(v, "cluster", kept :+ dir))
+          val dir = writeGroup(spark, path, st,
+            zOrdered(readDirsLive(spark, path, st.meta, delta, prev), cols, numFiles), Nil)
+          commitOver(spark, path, st, Commit(v, "cluster", kept :+ dir))
         }
         v
     }

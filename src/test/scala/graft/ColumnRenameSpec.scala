@@ -312,8 +312,8 @@ class ColumnRenameSpec extends AnyFunSuite {
   test("table-meta CAS: a held claim rejects the DDL loudly instead of last-writer-wins") {
     val p = freshPath("metacas")
     sources.LakeTable.create(spark, p, Seq((1L, 10L, 20L)).toDF("k", "a", "b"))
-    // simulate a concurrent DDL that claimed the next meta version
-    val claim = new org.apache.hadoop.fs.Path(s"$p/_graft_log", ".claim-meta-v00001")
+    // simulate a concurrent writer that claimed the next log version
+    val claim = new org.apache.hadoop.fs.Path(s"$p/_graft_log", ".claim-v00001")
     val fs = claim.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(claim.getParent)
     fs.create(claim, false).close()
@@ -360,7 +360,8 @@ class ColumnRenameSpec extends AnyFunSuite {
     val p = freshPath("metacorrupt")
     sources.LakeTable.create(spark, p, Seq((1L, 10L)).toDF("k", "a"))
     sources.LakeTable.renameColumn(spark, p, "a", "a2")
-    val meta = new org.apache.hadoop.fs.Path(s"$p/_graft_log", "_table.json")
+    val head = sources.LakeTable.state(spark, p).commit
+    val meta = new org.apache.hadoop.fs.Path(s"$p/_graft_log", head.meta.get)
     val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(meta, true)
     try out.write("{\"partitionBy\":[".getBytes("UTF-8")) finally out.close() // torn tail

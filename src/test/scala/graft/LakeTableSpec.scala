@@ -586,6 +586,19 @@ class LakeTableSpec extends AnyFunSuite {
     assert(LakeTable.read(spark, p).count() === 20)
   }
 
+  test("appendOnce marks survive vacuum: a later replay is still a no-op") {
+    val p = s"$root/append_once_vacuum"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))
+    LakeTable.create(spark, p, Seq(1L).toDF("id"))
+    assert(LakeTable.appendOnce(spark, p, Seq(2L).toDF("id"), "app", 5L))
+    LakeTable.append(spark, p, Seq(3L).toDF("id"))
+    LakeTable.vacuum(spark, p, LakeTable.currentVersion(spark, p).get)
+    // the commit that recorded (app, 5) is gone; the head carries it
+    assert(LakeTable.txnVersion(spark, p, "app") === Some(5L))
+    assert(!LakeTable.appendOnce(spark, p, Seq(2L).toDF("id"), "app", 5L))
+    assert(LakeTable.read(spark, p).as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+  }
+
   test("native streaming sink: restart replay of an unacknowledged epoch lands exactly once") {
     import org.apache.spark.sql.streaming.Trigger
     val lake = s"$root/native_sink"
@@ -1823,6 +1836,22 @@ class LakeTableSpec extends AnyFunSuite {
     LakeTable.vacuum(spark, dst, retainFrom = 1L)
     assert(LakeTable.read(spark, src).count() == 3L)
     assert(LakeTable.read(spark, dst).count() == 4L)
+  }
+
+  test("a shallow clone of a table under a path holding ',' reads and appends") {
+    val src = s"$root/clone_src,1"
+    val dst = s"$root/clone_dst,1"
+    Seq(src, dst).foreach(p => org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p)))
+    LakeTable.create(spark, src, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    LakeTable.append(spark, src, Seq((3L, "c")).toDF("k", "v"))
+    val base = LakeTable.shallowClone(spark, src, dst)
+    assert(LakeTable.readCommit(spark, dst, base).dirs.forall(_.contains("clone_src,1")))
+    assert(LakeTable.read(spark, dst).as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b"), (3L, "c")))
+    LakeTable.append(spark, dst, Seq((4L, "d")).toDF("k", "v"))
+    assert(LakeTable.read(spark, dst).as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+    assert(LakeTable.read(spark, src).count() === 3L)
   }
 
   test("numeric stats pruning stays exact past 2^53 (no double round-trip)") {

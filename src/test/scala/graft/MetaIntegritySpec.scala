@@ -6,10 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * delete) when a RETAINED commit can't be read for any reason other
   * than a genuinely missing file; the schema cache must not serve a
   * dropped generation after re-create at the same path; multi-clause
-  * ALTER follows chained renames through the partition spec; the
-  * table-meta CAS token is captured before the statement's meta reads;
-  * and an orphaned meta claim is lease-reclaimable instead of bricking
-  * the table.
+  * ALTER follows chained renames through the partition spec; a meta
+  * change fails when another published after the state it read; and
+  * meta changes publish through the commit log's version claim.
   */
 class MetaIntegritySpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -146,8 +145,8 @@ class MetaIntegritySpec extends AnyFunSuite {
   test("a DDL publishing inside the statement's read window fails the CAS (no lost update)") {
     val p = freshPath("cas_window")
     sources.LakeTable.create(spark, p, Seq((1L, 10L)).toDF("k", "a"))
-    // the statement captures its token, then a concurrent DDL publishes
-    val base = sources.LakeTable.meta(spark, p)
+    // the statement resolves its state, then a concurrent DDL publishes
+    val base = sources.LakeTable.state(spark, p)
     sources.LakeTable.setSortBy(spark, p, Seq("k"))
     intercept[sources.LakeTable.ConcurrentWriteException] {
       sources.LakeTable.alterColumnsAtomic(spark, p,
@@ -309,67 +308,57 @@ class MetaIntegritySpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
-  test("racing lease-reclaims never silently drop a published DDL") {
-    // Two writers both past the lease check can interleave the
-    // delete-then-create reclaim (A deletes+creates, B deletes A's
-    // fresh claim and creates its own). Before the ownership token +
-    // pre-rename metaVer re-verify, BOTH would publish the same
-    // metaVer and one DDL vanished. The invariant: metaVer advances by
-    // exactly the number of DDLs that REPORTED success.
-    val p = freshPath("reclaim_race")
+  test("racing DDLs advance the head by exactly the number that reported success") {
+    // Meta changes publish as commits under the log's version claim:
+    // two DDLs racing from one head both claim head+1, one wins, and
+    // the loser must not publish over it. The invariant: the head
+    // advances by exactly the number of DDLs that REPORTED success,
+    // and the meta holds the winner's change.
+    val p = freshPath("ddl_race")
     sources.LakeTable.create(spark, p, Seq((1L, 10L)).toDF("k", "a"))
-    spark.conf.set("spark.graft.meta.claimLeaseMs", "-1") // everything reclaimable
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       for (i <- 1 to 10) {
-        val before = sources.LakeTable.meta(spark, p).ver
-        // plant an orphan claim for the NEXT version so both writers
-        // take the reclaim path rather than the plain CAS
-        overwrite(logFile(p, f".claim-meta-v${before + 1}%05d"), "")
+        val before = sources.LakeTable.currentVersion(spark, p).get
         val start = new java.util.concurrent.CountDownLatch(1)
         val futs = Seq(Seq("k"), Seq("a")).map { c =>
-          pool.submit(new java.util.concurrent.Callable[Boolean] {
-            def call(): Boolean = {
+          pool.submit(new java.util.concurrent.Callable[Option[Seq[String]]] {
+            def call(): Option[Seq[String]] = {
               start.await()
-              try { sources.LakeTable.setSortBy(spark, p, c); true }
-              catch { case _: sources.LakeTable.ConcurrentWriteException => false }
+              try { sources.LakeTable.setSortBy(spark, p, c); Some(c) }
+              catch { case _: sources.LakeTable.ConcurrentWriteException => None }
             }
           })
         }
         start.countDown()
-        val wins = futs.map(_.get()).count(identity)
-        val after = sources.LakeTable.meta(spark, p).ver
-        assert(wins >= 1, s"iteration $i: both reclaimers lost")
-        assert(after == before + wins,
-          s"iteration $i: $wins DDLs reported success but metaVer moved " +
+        val won = futs.flatMap(_.get())
+        val after = sources.LakeTable.currentVersion(spark, p).get
+        assert(won.nonEmpty, s"iteration $i: both DDLs lost")
+        assert(after == before + won.size,
+          s"iteration $i: ${won.size} DDLs reported success but the head moved " +
           s"${after - before} — a publish was silently overwritten")
+        assert(won.contains(sources.LakeTable.meta(spark, p).sortBy),
+          s"iteration $i: the published sort order is no winner's")
       }
-    } finally {
-      pool.shutdown()
-      spark.conf.unset("spark.graft.meta.claimLeaseMs")
-    }
+    } finally pool.shutdown()
   }
 
-  test("an orphaned meta claim is lease-reclaimed; a live claim still blocks") {
+  test("a planted claim on the next version rejects a DDL until it is removed") {
     val p = freshPath("claim")
     sources.LakeTable.create(spark, p, Seq((1L, 10L)).toDF("k", "a"))
-    // simulate a writer that crashed between claim and publish
-    val claim = logFile(p, ".claim-meta-v00001")
+    // simulate a writer that crashed between claiming v1 and publishing
+    val claim = logFile(p, ".claim-v00001")
     overwrite(claim, "")
-    // default lease (15 min): the claim is "live" → CAS loss
     intercept[sources.LakeTable.ConcurrentWriteException] {
       sources.LakeTable.setSortBy(spark, p, Seq("k"))
     }
-    // expired lease: reclaim and publish
-    spark.conf.set("spark.graft.meta.claimLeaseMs", "-1")
-    try {
-      sources.LakeTable.setSortBy(spark, p, Seq("k"))
-      assert(sources.LakeTable.meta(spark, p).sortBy == Seq("k"))
-    } finally spark.conf.unset("spark.graft.meta.claimLeaseMs")
-    // a PUBLISHED version's claim is never reclaimed: the next DDL
-    // claims the next version and succeeds normally
-    sources.LakeTable.setSortBy(spark, p, Seq("a"))
-    assert(sources.LakeTable.meta(spark, p).sortBy == Seq("a"))
+    assert(sources.LakeTable.currentVersion(spark, p).contains(0L))
+    assert(sources.LakeTable.meta(spark, p).sortBy.isEmpty)
+    // clearing the orphan (the operator's step) lets the DDL through
+    fsOf(p).delete(claim, false)
+    sources.LakeTable.setSortBy(spark, p, Seq("k"))
+    assert(sources.LakeTable.meta(spark, p).sortBy == Seq("k"))
+    assert(sources.LakeTable.currentVersion(spark, p).contains(1L))
   }
 
   test("a narrower-typed INSERT up-casts to the table's column type (catalog SQL + API)") {

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The commit protocol under OBJECT-STORE/HDFS rename semantics.
   *
   * Every LakeTable test elsewhere runs on the local filesystem, whose
-  * rename REPLACES an existing target atomically — so the documented
-  * fallback paths (updateMeta's delete-then-rename when the store
-  * refuses rename-onto-existing; the commit publish's "target already
-  * exists" arbitration) never execute under test. [[NoReplaceFs]]
+  * rename REPLACES an existing target atomically — so the commit
+  * publish's "target already exists" arbitration never executes under
+  * test, and nothing there shows that no publish renames onto an
+  * existing file (table-meta objects are write-once). [[NoReplaceFs]]
   * (scheme `graftnr`) delegates storage to the local FS but REFUSES
   * any rename whose target exists — the HDFS contract, and the shape
   * of the S3 copy-object leg (reference internal/controller/minio.go:
@@ -35,8 +35,7 @@ class ObjStoreSemanticsSpec extends AnyFunSuite {
     assert(LakeTable.read(spark, p).count() == 3L)
     assert(LakeTable.read(spark, p, Some(0L)).count() == 2L, "time travel")
 
-    // TWO meta DDLs: the second publishes onto an EXISTING _table.json
-    // — on this scheme that is exactly the delete-then-rename fallback
+    // TWO meta DDLs: each publishes a fresh meta object and a commit
     LakeTable.setSortBy(spark, p, Seq("k"))
     LakeTable.setSortBy(spark, p, Seq("v"))
     assert(LakeTable.meta(spark, p).sortBy == Seq("v"))
@@ -46,7 +45,7 @@ class ObjStoreSemanticsSpec extends AnyFunSuite {
     val got = LakeTable.read(spark, p).as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L), (2L, 222L), (3L, 30L), (4L, 40L)), got)
 
-    // ANALYZE rides the same meta CAS onto an existing _table.json
+    // ANALYZE rides the same log claim
     val ndv = LakeTable.analyze(spark, p)
     assert(ndv("k").ndv == 4L, ndv)
 
@@ -100,10 +99,10 @@ class ObjStoreSemanticsSpec extends AnyFunSuite {
   * silently vanish. [[S3LikeFs]] (scheme `grafts3`) models exactly
   * this, with ONE atomic primitive: `create(overwrite=false)` is a
   * conditional PUT (If-None-Match), which S3 provides natively. If the
-  * whole verb surface stays correct here, `tryExclusiveCreate` /
-  * `tryExclusiveCreateToken` (the only call sites of that primitive —
-  * LakeTable.scala) are provably the only swap points that need the
-  * conditional PUT; the reference stores its tables on exactly this
+  * whole verb surface stays correct here, `tryExclusiveCreate` (the
+  * only call site of that primitive — LakeTable.scala) is provably the
+  * only swap point that needs the conditional PUT; the reference
+  * stores its tables on exactly this
   * kind of store (internal/controller/minio.go).
   */
 class S3SemanticsSpec extends AnyFunSuite {

@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.LakeTable
 import graft.sources.LakeTable.{ColumnNdv, RenameRec, TableMeta, WidenRec}
 
-/** The table meta (`_graft_log/_table.json`) as one parsed value:
-  * format compatibility with bodies already on disk, names that carry
-  * JSON syntax, rename-aware partition typing, stats write-backs keyed
-  * by a column a DDL already renamed, and the number of meta reads each
-  * verb pays.
+/** The table meta as one parsed value, published through the commit
+  * log: format compatibility with bodies already on disk, names that
+  * carry JSON syntax, rename-aware partition typing, stats write-backs
+  * keyed by a column a DDL already renamed, the number of meta reads
+  * each verb pays, and tables laid out before meta objects existed.
   */
 class TableMetaSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -88,7 +88,7 @@ class TableMetaSpec extends AnyFunSuite {
       .keySet == Set("value"))
   }
 
-  test("each meta verb reads _table.json at most twice: its base and the CAS re-verify") {
+  test("each verb opens at most one meta object: the state it resolves") {
     val p = freshPath("reads")
     LakeTable.create(spark, p, Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "g", "v"),
       partitionBy = Seq("g"))
@@ -104,8 +104,131 @@ class TableMetaSpec extends AnyFunSuite {
       "addCheck" -> reads(LakeTable.addCheck(spark, p, "pos", "k > 0")),
       "merge" -> reads(LakeTable.merge(spark, p,
         Seq((2L, "b", 21L), (3L, "c", 30L)).toDF("k", "g", "w"), "k")))
-    counts.foreach { case (verb, n) => assert(n >= 1 && n <= 2, s"$verb read the meta $n times") }
+    counts.foreach { case (verb, n) => assert(n == 1, s"$verb read the meta $n times") }
     assert(LakeTable.read(spark, p).select("k", "w").as[(Long, Long)].collect().toSet ==
       Set((1L, 10L), (2L, 21L), (3L, 30L)))
+  }
+
+  test("a legacy layout reads through _table.json and migrates on its first commit") {
+    val p = freshPath("legacy")
+    // the group as an earlier writer left it: partitioned by g, column
+    // `amount` since renamed to `value` at stamp 1
+    Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "g", "amount")
+      .write.partitionBy("g").parquet(s"$p/d0-0000beef")
+    def put(name: String, body: String): Unit = {
+      val f = new org.apache.hadoop.fs.Path(s"$p/_graft_log", name)
+      val out = f.getFileSystem(spark.sparkContext.hadoopConfiguration).create(f, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    put("v00000.json",
+      """{"version":0,"action":"create","dirs":["d0-0000beef"],"ts":1700000000000}""")
+    put("_table.json", """{"partitionBy":["g"],"mappingsB64":["cglhbW91bnQJdmFsdWUJMQ=="],""" +
+      """"mixedLayouts":true,"schemaB64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiayIs""" +
+      """InR5cGUiOiJsb25nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX0seyJuYW1lIjoidmFsdWUiLCJ0eXBl""" +
+      """IjoibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6ImciLCJ0eXBlIjoic3RyaW5n""" +
+      """IiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX1dfQ==","metaVer":2}""")
+    def rows(): Set[(Long, String, Long)] = LakeTable.read(spark, p)
+      .select("k", "g", "value").as[(Long, String, Long)].collect().toSet
+    val legacy = LakeTable.meta(spark, p)
+    assert(legacy.ver == 2L && legacy.partitionBy == Seq("g"))
+    assert(legacy.renames == Seq(RenameRec("amount", "value", 1L)))
+    assert(rows() == Set((1L, "a", 10L), (2L, "b", 20L)))
+    assert(LakeTable.readRange(spark, p, "g", "b", "b").count() == 1L)
+    // the first commit this code writes names a meta object holding
+    // the legacy value
+    LakeTable.append(spark, p, Seq((3L, "c", 30L)).toDF("k", "g", "value"))
+    val head = LakeTable.readCommit(spark, p, 1L)
+    assert(head.meta.exists(_.startsWith("meta-")), head)
+    assert(LakeTable.meta(spark, p) == legacy)
+    assert(rows() == Set((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)))
+    // once no retained commit reads it, vacuum reclaims the legacy file
+    LakeTable.vacuum(spark, p, 1L)
+    val legacyFile = new org.apache.hadoop.fs.Path(s"$p/_graft_log/_table.json")
+    assert(!legacyFile.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(legacyFile))
+    assert(LakeTable.meta(spark, p) == legacy)
+    assert(rows() == Set((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)))
+  }
+
+  test("create, clones and each DDL publish exactly one commit") {
+    val p = freshPath("onecommit")
+    LakeTable.create(spark, p, Seq((1L, "a", 10L)).toDF("k", "g", "v"), partitionBy = Seq("g"))
+    LakeTable.setSortBy(spark, p, Seq("k"))
+    LakeTable.addCheck(spark, p, "pos", "v > 0")
+    LakeTable.analyze(spark, p)
+    assert(LakeTable.currentVersion(spark, p).contains(3L))
+    assert(LakeTable.history(spark, p).select("action").as[String].collect().toSeq ==
+      Seq("meta", "meta", "meta", "create"))
+    val src = LakeTable.meta(spark, p)
+    val deep = freshPath("onecommit_deep")
+    LakeTable.deepClone(spark, p, deep)
+    assert(LakeTable.currentVersion(spark, deep).contains(0L))
+    val dm = LakeTable.meta(spark, deep)
+    assert(dm.partitionBy == Seq("g") && dm.sortBy == Seq("k") && dm.checks == src.checks)
+    assert(dm.ndv.keySet == src.ndv.keySet && dm.ndv.values.forall(_.asOf == 0L))
+    val shallow = freshPath("onecommit_shallow")
+    val base = LakeTable.shallowClone(spark, p, shallow)
+    assert(LakeTable.currentVersion(spark, shallow).contains(base))
+    assert(LakeTable.readCommit(spark, shallow, base).action == "clone")
+    assert(LakeTable.meta(spark, shallow) == src)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.tmetadb")
+    spark.sql("DROP TABLE IF EXISTS graft_cat.tmetadb.dflt")
+    spark.sql("CREATE TABLE graft_cat.tmetadb.dflt (k BIGINT, s STRING DEFAULT 'x') USING graft")
+    val loc = s"${GraftSession.catalogRoot}/tmetadb/dflt"
+    assert(LakeTable.currentVersion(spark, loc).contains(0L))
+    assert(LakeTable.meta(spark, loc).schema.exists(_("s").metadata.contains("CURRENT_DEFAULT")))
+  }
+
+  test("a rename landing between an append's staging and its commit stays in force") {
+    val p = freshPath("ddl_mid_append")
+    LakeTable.create(spark, p, Seq((1L, 10L)).toDF("k", "a"))
+    LakeTable.tableSchema(spark, p) // cached: the rename below runs no job
+    AppendGate.reset()
+    val gate = udf((v: Long) => { AppendGate.pass(); v }).asNondeterministic()
+    val ec = scala.concurrent.ExecutionContext.global
+    val appended = scala.concurrent.Future(LakeTable.append(spark, p,
+      spark.range(2, 3).select(col("id").as("k"), gate(col("id") * 10).as("a"))))(ec)
+    try {
+      assert(AppendGate.started.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the append's write job never started")
+      LakeTable.renameColumn(spark, p, "a", "a2") // publishes v1 mid-append
+    } finally AppendGate.release.countDown()
+    val v = scala.concurrent.Await.result(appended, scala.concurrent.duration.Duration(120, "s"))
+    assert(v == 2L, "the append lost v1 to the rename and rebased")
+    assert(LakeTable.meta(spark, p).renames.map(_.to) == Seq("a2"),
+      "the append's commit must carry the rename, not revert it")
+    val df = LakeTable.read(spark, p)
+    assert(df.columns.toSeq == Seq("k", "a2"))
+    assert(df.as[(Long, Long)].collect().toSet == Set((1L, 10L), (2L, 20L)))
+  }
+
+  test("a DDL between two micro-batches does not stop a commit-log stream reader") {
+    val p = freshPath("stream_ddl")
+    LakeTable.create(spark, p, spark.range(0, 10).toDF("k"))
+    val q = spark.readStream.format("graft").load(p)
+      .writeStream.format("memory").queryName("tmeta_stream_ddl").start()
+    try {
+      q.processAllAvailable()
+      LakeTable.setSortBy(spark, p, Seq("k"))
+      LakeTable.append(spark, p, spark.range(10, 25).toDF("k"))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, q.exception)
+      assert(spark.table("tmeta_stream_ddl").as[Long].collect().sorted.toSeq == (0L until 25L))
+    } finally q.stop()
+  }
+}
+
+/** Holds a write task until the test thread releases it (tasks run in
+  * the driver JVM under a local master, so they share this object).
+  */
+object AppendGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pass(): Unit = {
+    started.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
   }
 }
