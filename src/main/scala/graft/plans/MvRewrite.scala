@@ -74,19 +74,26 @@ object MvRegistry {
   private[graft] def descriptorFile(basePath: String) =
     new org.apache.hadoop.fs.Path(basePath, "_mv.json")
 
+  /** The `_mv.json` body (json4s): `mvPath`, and `dims`/`measures` as arrays. */
+  private[graft] def renderDescriptor(d: MvDef): String = org.json4s.jackson.Serialization.write(
+    Map("mvPath" -> d.mvPath, "dims" -> d.dims, "measures" -> d.measures.toSeq.sorted))(
+    org.json4s.DefaultFormats)
+
   private def loadDescriptor(spark: org.apache.spark.sql.SparkSession,
       basePath: String): Option[MvDef] = try {
     val p = descriptorFile(basePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
+      implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
       val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      def f(k: String): Option[String] =
-        (""""""" + k + """"\s*:\s*"([^"]*)"""").r.findFirstMatchIn(body).map(_.group(1))
-      for (mv <- f("mvPath"); dims <- f("dims"); ms <- f("measures"))
-        yield MvDef(basePath, mv, dims.split(",").filter(_.nonEmpty).toSeq,
-          ms.split(",").filter(_.nonEmpty).toSet)
+      val j = try org.json4s.jackson.JsonMethods.parse(in) finally in.close()
+      // an earlier writer joined dims and measures with ','
+      def names(k: String): Seq[String] = j \ k match {
+        case org.json4s.JString(v) => v.split(",").filter(_.nonEmpty).toSeq
+        case v => v.extract[Seq[String]]
+      }
+      Some(MvDef(basePath, (j \ "mvPath").extract[String], names("dims"), names("measures").toSet))
     }
   } catch { case _: Exception => None }
 }

@@ -222,9 +222,8 @@ object GraftProcedures {
           StructType(Seq(StructField("tags", StringType)))) {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
-          LakeTable.setTag(spark, p, in.getUTF8String(1).toString, in.getLong(2))
-          row(UTF8String.fromString(LakeTable.tags(spark, p).toSeq.sortBy(_._1)
-            .map { case (n, v) => s"$n=$v" }.mkString(",")))
+          row(UTF8String.fromString(
+            LakeTable.setTag(spark, p, in.getUTF8String(1).toString, in.getLong(2)).tagList))
         }
       }
       case "drop_tag" => new Proc("drop_tag",
@@ -232,9 +231,8 @@ object GraftProcedures {
           StructType(Seq(StructField("tags", StringType)))) {
         override def run(in: InternalRow): Array[InternalRow] = {
           val p = path(store, in.getUTF8String(0).toString)
-          LakeTable.dropTag(spark, p, in.getUTF8String(1).toString)
-          row(UTF8String.fromString(LakeTable.tags(spark, p).toSeq.sortBy(_._1)
-            .map { case (n, v) => s"$n=$v" }.mkString(",")))
+          row(UTF8String.fromString(
+            LakeTable.dropTag(spark, p, in.getUTF8String(1).toString).tagList))
         }
       }
       case "create_view" => new Proc("create_view",

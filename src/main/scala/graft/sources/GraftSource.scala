@@ -39,7 +39,7 @@ class DefaultSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = pathOf(options)
     val spark = org.apache.spark.sql.graftglue.Glue.activeSession
-    if (changeFeed(options)) LakeTable.cdcSchema(spark, path)
+    if (changeFeed(options)) LakeTable.cdcSchema(spark, path, LakeTable.state(spark, path))
     else if (LakeTable.currentVersion(spark, path).isDefined)
       LakeTable.tableSchema(spark, path, versionOf(options))
     else new StructType() // first write targets a fresh path

@@ -199,24 +199,20 @@ final class GraftTable(path: String, version: Option[Long],
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
     m.put("provider", "graft")
-    try {
-      val head = LakeTable.head(spark, path)
-      head.foreach(st => m.put("current-version", st.version.toString))
-      val meta = head.fold(LakeTable.TableMeta.empty)(_.meta)
+    // no head: the not-yet-created target of a first write
+    LakeTable.head(spark, path).foreach { case LakeTable.State(version, _, meta, _) =>
+      m.put("current-version", version.toString)
       if (meta.sortBy.nonEmpty) m.put("write.sort.by", meta.sortBy.mkString(","))
       meta.checks.foreach { case (n, sql) => m.put(s"check.$n", sql) }
       if (meta.dvMode) m.put("deletion-vectors", "enabled")
-      val tags = LakeTable.tags(spark, path)
-      if (tags.nonEmpty)
-        m.put("tags", tags.toSeq.sortBy(_._1)
-          .map { case (n, v) => s"$n=$v" }.mkString(","))
-      LakeTable.cdcKey(spark, path).foreach(k => m.put("cdc.key", k))
+      if (meta.tags.nonEmpty) m.put("tags", meta.tagList)
+      meta.cdcKey.foreach(k => m.put("cdc.key", k))
       // ANALYZE results at a glance: which columns carry stats and the
       // snapshot they measured (staleness is visible, not hidden)
       if (meta.ndv.nonEmpty)
         m.put("stats.analyzed", meta.ndv.toSeq.sortBy(_._1)
           .map { case (c, r) => s"$c=${r.ndv}@v${r.asOf}" }.mkString(","))
-    } catch { case _: Exception => () } // a fresh CTAS target has no state yet
+    }
     m
   }
 
@@ -471,11 +467,12 @@ private[sources] object GraftPredicates {
 final class GraftCdcTable(path: String) extends Table with SupportsRead {
   private def spark: SparkSession = org.apache.spark.sql.graftglue.Glue.activeSession
   override def name(): String = s"graft-cdc.`$path`"
-  override def schema(): StructType = LakeTable.cdcSchema(spark, path)
+  private lazy val feedSchema = LakeTable.cdcSchema(spark, path, LakeTable.state(spark, path))
+  override def schema(): StructType = feedSchema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftCdcScanBuilder(spark, path, schema(), options)
+    new GraftCdcScanBuilder(spark, path, feedSchema, options)
 }
 
 /** V2 scan builder that adds LakeTable FILE SKIPPING in front of the

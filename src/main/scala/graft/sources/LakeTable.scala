@@ -56,9 +56,10 @@ object LakeTable {
     *   (application id → newest application version committed), carried
     *   forward by every commit so [[txnVersion]] reads the head alone
     * @param meta the table-meta object in force at this version (a name
-    *   under `_graft_log/`; "" = the empty meta, no object). None = a
-    *   commit written before meta objects existed: its meta is the
-    *   legacy `_table.json`
+    *   under `_graft_log/`; [[EmptyMeta]] = the empty meta, no object).
+    *   "" = the empty meta of a commit written before tags and the CDC
+    *   key joined the meta; None = a commit written before meta objects
+    *   existed: its meta is the legacy `_table.json`
     */
   final case class Commit(version: Long, action: String, dirs: Seq[String],
       cdcDir: Option[String] = None, ts: Long = 0L,
@@ -118,16 +119,27 @@ object LakeTable {
   /** A table as one verb sees it: the snapshot `version`, its commit,
     * and the table meta in force — resolved once ([[state]]) and passed
     * down, so a verb's reads, writes and commit agree on one value.
+    * `legacy`: the meta was read from a layout older than meta objects
+    * holding tags and the CDC key, so the next commit writes it afresh.
     */
-  final case class State(version: Long, commit: Commit, meta: TableMeta)
+  final case class State(version: Long, commit: Commit, meta: TableMeta,
+      legacy: Boolean = false)
 
   /** The action of a commit that changes only the table meta. */
   private[graft] val MetaAction = "meta"
+
+  /** A commit's `meta` reference to the empty meta (no object). */
+  private[graft] val EmptyMeta = "empty"
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def logDir(path: String) = new Path(path, "_graft_log")
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
 
   // ---- log checkpointing (the Delta `_last_checkpoint` capability) ---
   //
@@ -172,8 +184,7 @@ object LakeTable {
       if (!fs.exists(p)) None
       else {
         logOps.increment()
-        val in = fs.open(p)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+        val body = readText(fs, p)
         """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
       }
     } catch { case _: Exception => None } // torn/corrupt hint → listing
@@ -212,8 +223,7 @@ object LakeTable {
     // (the copy lands within milliseconds) before it counts as corrupt.
     def attempt(left: Int): Commit = {
       logOps.increment()
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val body = readText(fs, p)
       try Commit.parse(body)
       catch { case scala.util.control.NonFatal(_) if left > 0 =>
         Thread.sleep(1L << (4 - left)); attempt(left - 1) }
@@ -653,8 +663,7 @@ object LakeTable {
     val statsPath = new Path(new Path(path, root), StatsFile)
     val fs = fsOf(spark, statsPath)
     if (!fs.exists(statsPath)) return Nil
-    val in = fs.open(statsPath)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val body = readText(fs, statsPath)
     body.split("\n").filter(_.nonEmpty).map(_.split("\t")).toSeq
   }
 
@@ -922,8 +931,7 @@ object LakeTable {
       val stats: Map[(String, String), (Char, String, String)] =
         if (!fs.exists(statsPath)) Map.empty
         else {
-          val in = fs.open(statsPath)
-          val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+          val body = readText(fs, statsPath)
           body.split("\n").filter(_.nonEmpty).map(_.split("\t"))
             .filter(a => a.length >= 5 && a(1).nonEmpty)
             .map(a => (dec(a(0)), dec(a(1))) -> (a(2).head, dec(a(3)), dec(a(4)))).toMap
@@ -1222,8 +1230,7 @@ object LakeTable {
         val bloomPath = new Path(dirPath, BloomFile)
         if (!fs.exists(bloomPath)) Map.empty
         else {
-          val in = fs.open(bloomPath)
-          val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+          val body = readText(fs, bloomPath)
           body.split("\n").filter(_.nonEmpty).map(_.split("\t"))
             .collect { case Array(r, cn, b64) => (dec(r), dec(cn)) -> b64 }.toMap
         }
@@ -1326,9 +1333,11 @@ object LakeTable {
     // clone of a renamed/dropped/widened table would serve the OLD
     // physical schema. Clone-side reads apply copied mappings to the
     // source-named dirs under the copied stamps (groupVersionOf parses
-    // source version numbers out of the absolute refs).
+    // source version numbers out of the absolute refs). Tags and the
+    // CDC key stay behind: the clone starts untagged, with its feed off.
     writeCommit(spark, targetPath, Commit(base, "clone", absDirs, dvFiles = dvNames,
-      meta = Some(writeMeta(spark, targetPath, base, srcMeta))))
+      meta = Some(writeMeta(spark, targetPath, base,
+        srcMeta.copy(tags = Map.empty, cdcKey = None)))))
     base
   }
 
@@ -1355,8 +1364,8 @@ object LakeTable {
   // ---- table meta (commit-log entries) --------------------------------
   //
   // The metastore half of the format: the partition spec, write sort
-  // order, recorded schema, CHECK constraints, DV mode and column-
-  // mapping chain every verb needs beside the data. Each commit names
+  // order, recorded schema, CHECK constraints, DV mode, column-mapping
+  // chain, tags and CDC key every verb needs beside the data. Each commit names
   // the meta in force at its version: a write-once object under
   // `_graft_log/` (written before the commit that references it, never
   // renamed over anything — the DV-file rule), so data and DDL publish
@@ -1388,6 +1397,8 @@ object LakeTable {
     *   postdate it
     * @param ndv stored ANALYZE / write-back results by column
     * @param pndv the same per Hive partition name ("col=v/col2=v2")
+    * @param tags named snapshot pins (Iceberg tags): name → version
+    * @param cdcKey the change feed's row identity; None = feed off
     */
   final case class TableMeta(ver: Long = 0L, partitionBy: Seq[String] = Nil,
       sortBy: Seq[String] = Nil,
@@ -1395,16 +1406,21 @@ object LakeTable {
       checks: Seq[(String, String)] = Nil, dvMode: Boolean = false,
       mixedLayouts: Boolean = false, mappings: Seq[MapRec] = Nil,
       ndv: Map[String, ColumnNdv] = Map.empty,
-      pndv: Map[String, Map[String, ColumnNdv]] = Map.empty) {
+      pndv: Map[String, Map[String, ColumnNdv]] = Map.empty,
+      tags: Map[String, Long] = Map.empty, cdcKey: Option[String] = None) {
     /** Rename/drop entries only — what prior-name resolution consumes. */
     def renames: Seq[RenameRec] = mappings.collect { case r: RenameRec => r }
+    /** Tags for display: `name=version`, comma-joined, by name. */
+    def tagList: String = tags.toSeq.sortBy(_._1).map { case (n, v) => s"$n=$v" }.mkString(",")
   }
 
   /** The meta body format (meta objects, legacy `_table.json`): a
     * JSON object whose free-text entries (stats, mapping records, CHECK
     * SQL, the schema) are base64 of tab-separated fields, so they never
     * touch the JSON syntax. Keys are omitted when empty (`partitionBy`
-    * and `metaVer` always appear).
+    * and `metaVer` always appear), except that a meta object always
+    * carries `tags`: bodies without it predate tags and the CDC key
+    * joining the meta, and take both from legacy side files.
     */
   object TableMeta {
     import org.json4s.{JArray, JBool, JInt, JObject, JString, JValue}
@@ -1419,7 +1435,8 @@ object LakeTable {
     private def ndvAt(a: Array[String], i: Int): ColumnNdv =
       ColumnNdv(a(i).toLong, a(i + 1).toLong, a(i + 2).toDouble, a(i + 3).toLong)
 
-    def render(m: TableMeta): String = {
+    /** `marked`: write `tags` even when empty (a meta object's body). */
+    def render(m: TableMeta, marked: Boolean = false): String = {
       def arr(vs: Seq[JValue]) = JArray(vs.toList)
       val fields: Seq[Option[(String, JValue)]] = Seq(
         Some("partitionBy" -> arr(m.partitionBy.map(JString(_)))),
@@ -1440,11 +1457,17 @@ object LakeTable {
         Option.when(m.checks.nonEmpty)("checksB64" -> arr(m.checks.map {
           case (n, sql) => b64(s"$n\t$sql") })),
         m.schema.map(s => "schemaB64" -> b64(s.json)),
+        Option.when(m.tags.nonEmpty || marked)("tags" -> JObject(m.tags.toSeq.sortBy(_._1)
+          .map { case (n, v) => n -> (JInt(v): JValue) }.toList)),
+        m.cdcKey.map("cdcKey" -> JString(_)),
         Some("metaVer" -> JInt(m.ver)))
       org.json4s.jackson.JsonMethods.compact(JObject(fields.flatten.toList))
     }
 
-    def parse(body: String): TableMeta = {
+    def parse(body: String): TableMeta = parseMarked(body)._1
+
+    /** [[parse]], and whether the body carries `tags` (see [[render]]). */
+    private[graft] def parseMarked(body: String): (TableMeta, Boolean) = {
       val fields = org.json4s.jackson.JsonMethods.parse(body) match {
         case JObject(fs) => fs.toMap
         case other => throw new IllegalArgumentException(s"not a JSON object: $other")
@@ -1455,7 +1478,7 @@ object LakeTable {
         case v => throw new IllegalArgumentException(s"$k holds $v")
       }
       def flag(k: String): Boolean = fields.get(k).contains(JBool(true))
-      TableMeta(
+      (TableMeta(
         ver = fields.get("metaVer").collect { case JInt(v) => v.toLong }.getOrElse(0L),
         partitionBy = strings("partitionBy"),
         sortBy = strings("sortBy"),
@@ -1481,7 +1504,19 @@ object LakeTable {
         pndv = strings("pndvB64").map(unb64).map { s =>
           val a = s.split("\t")
           (unb64(a(0)), a(1), ndvAt(a, 2))
-        }.groupBy(_._1).map { case (p, g) => p -> g.map(t => t._2 -> t._3).toMap })
+        }.groupBy(_._1).map { case (p, g) => p -> g.map(t => t._2 -> t._3).toMap },
+        tags = fields.get("tags").fold(Map.empty[String, Long])(tagsOf),
+        cdcKey = fields.get("cdcKey").collect { case JString(k) => k }),
+        fields.contains("tags"))
+    }
+
+    /** A `tags` object (or a legacy `_tags.json` body): name → version. */
+    private[graft] def tagsOf(j: JValue): Map[String, Long] = j match {
+      case JObject(kvs) => kvs.map {
+        case (n, JInt(v)) => n -> v.toLong
+        case (n, v) => throw new IllegalArgumentException(s"tag $n holds $v")
+      }.toMap
+      case v => throw new IllegalArgumentException(s"tags holds $v")
     }
   }
 
@@ -1495,7 +1530,7 @@ object LakeTable {
     */
   def setSortBy(spark: SparkSession, path: String, cols: Seq[String]): TableMeta = {
     val base = state(spark, path)
-    updateMeta(spark, path, base, _ => base.meta.copy(sortBy = cols))
+    updateMeta(spark, path, base, (_, m) => m.copy(sortBy = cols))
   }
 
   /** DSv2 per-column statistics for SupportsReportStatistics scans —
@@ -1598,7 +1633,7 @@ object LakeTable {
       }
       f.name -> ColumnNdv(ndv, mx, av, base.version)
     }.toMap
-    updateMeta(spark, path, base, _ => base.meta.copy(ndv = base.meta.ndv ++ fresh)).ndv
+    updateMeta(spark, path, base, (_, m) => m.copy(ndv = m.ndv ++ fresh)).ndv
   }
 
   /** Stats WRITE-BACK: record externally-computed column statistics
@@ -1611,7 +1646,7 @@ object LakeTable {
       fresh: Map[String, ColumnNdv]): Map[String, ColumnNdv] = {
     val base = state(spark, path)
     requireColumns(spark, path, base, fresh.keys)
-    updateMeta(spark, path, base, _ => base.meta.copy(ndv = base.meta.ndv ++ fresh)).ndv
+    updateMeta(spark, path, base, (_, m) => m.copy(ndv = m.ndv ++ fresh)).ndv
   }
 
   /** Written-back stats arrive keyed by names the caller resolved
@@ -1635,7 +1670,7 @@ object LakeTable {
     val base = state(spark, path)
     val remaining = base.meta.ndv.filterNot(_._1.equalsIgnoreCase(colName))
     if (remaining.size != base.meta.ndv.size)
-      updateMeta(spark, path, base, _ => base.meta.copy(ndv = remaining))
+      updateMeta(spark, path, base, (_, m) => m.copy(ndv = remaining))
   }
 
   /** PARTITION-level stats write-back (Hive's
@@ -1649,7 +1684,7 @@ object LakeTable {
     requireColumns(spark, path, base, fresh.keys)
     val cur = base.meta.pndv
     updateMeta(spark, path, base,
-      _ => base.meta.copy(pndv = cur + (partName -> (cur.getOrElse(partName, Map.empty) ++ fresh))))
+      (_, m) => m.copy(pndv = cur + (partName -> (cur.getOrElse(partName, Map.empty) ++ fresh))))
   }
 
   /** Drop one partition-column record — or, with colName null, ALL of
@@ -1669,7 +1704,7 @@ object LakeTable {
         if (remaining.size == cols.size) return
         if (remaining.isEmpty) cur - partName else cur + (partName -> remaining)
     }
-    updateMeta(spark, path, base, _ => base.meta.copy(pndv = pruned))
+    updateMeta(spark, path, base, (_, m) => m.copy(pndv = pruned))
   }
 
   /** PARTITION EVOLUTION (the Iceberg marquee): change the table's
@@ -1688,7 +1723,7 @@ object LakeTable {
   def setPartitioning(spark: SparkSession, path: String, cols: Seq[String]): TableMeta = {
     val base = state(spark, path)
     // spec changed under existing groups → old and new ones may differ
-    updateMeta(spark, path, base, _ => base.meta.copy(partitionBy = cols, mixedLayouts = true))
+    updateMeta(spark, path, base, (_, m) => m.copy(partitionBy = cols, mixedLayouts = true))
   }
 
   /** One column-mapping change, stamped with the first table version
@@ -1860,7 +1895,7 @@ object LakeTable {
     }
     val pndvFollowed = base.meta.pndv.map { case (pn, cols) => pn -> follow(cols) }
       .filter(_._2.nonEmpty)
-    updateMeta(spark, path, base, { v =>
+    updateMeta(spark, path, base, { (v, m) =>
       // Stamp = the version after this commit's: a writer that read the
       // pre-change meta read a head below v, so its group is named d<=v
       // (the clone base, a shallow clone's commit, already clears every
@@ -1870,12 +1905,12 @@ object LakeTable {
         case r: RenameRec => r.copy(stamp = v + 1)
         case w: WidenRec  => w.copy(stamp = v + 1)
       }
-      base.meta.copy(partitionBy = parts, sortBy = sortBy, schema = schema,
+      m.copy(partitionBy = parts, sortBy = sortBy, schema = schema,
         // pre-change groups and post-change groups must read per root —
         // only when the chain actually grew (schema-only DDL keeps the
         // single-scan fast path)
         mixedLayouts = stamped.nonEmpty,
-        mappings = base.meta.mappings ++ stamped, ndv = follow(base.meta.ndv),
+        mappings = m.mappings ++ stamped, ndv = follow(m.ndv),
         pndv = pndvFollowed)
     })
   }
@@ -1937,7 +1972,8 @@ object LakeTable {
 
   private def stateAt(spark: SparkSession, path: String, v: Long): State = {
     val c = readCommit(spark, path, v)
-    State(v, c, readMeta(spark, path, c.meta))
+    val (m, legacy) = readMeta(spark, path, c.meta)
+    State(v, c, m, legacy)
   }
 
   /** Snapshot `version` (the head when None) under the HEAD's meta —
@@ -1960,37 +1996,55 @@ object LakeTable {
     * malformed body — the mapping chain determines column identity, so
     * "unparseable → empty chain" would silently serve wrong columns;
     * objects are write-once and only referenced once whole, so a bad
-    * body is real corruption.
+    * body is real corruption. Also returns whether the meta is legacy
+    * ([[State.legacy]]).
     */
-  private def readMeta(spark: SparkSession, path: String, ref: Option[String]): TableMeta = {
+  private def readMeta(spark: SparkSession, path: String,
+      ref: Option[String]): (TableMeta, Boolean) = {
     val p = ref match {
-      case Some("") => return TableMeta.empty
+      case Some(EmptyMeta) => return (TableMeta.empty, false)
+      case Some("") => return (withSideFiles(spark, path, TableMeta.empty), true)
       case Some(name) => new Path(logDir(path), name)
       case None => legacyMetaFile(path)
     }
     val fs = fsOf(spark, p)
-    if (ref.isEmpty && !fs.exists(p)) return TableMeta.empty
+    if (ref.isEmpty && !fs.exists(p)) return (withSideFiles(spark, path, TableMeta.empty), true)
     metaReads.increment()
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    try TableMeta.parse(body)
+    val body = readText(fs, p)
+    val (m, marked) = try TableMeta.parseMarked(body)
     catch { case scala.util.control.NonFatal(e) =>
       throw new IllegalStateException(
         s"corrupt table meta at $p (${body.length} bytes): ${body.take(80)}", e)
     }
+    if (marked) (m, false) else (withSideFiles(spark, path, m), true)
+  }
+
+  /** `m` with the tags and CDC key that writers before meta objects
+    * carried them kept in side files — read only, for a legacy head.
+    */
+  private def withSideFiles(spark: SparkSession, path: String, m: TableMeta): TableMeta = {
+    def json(name: String): Option[org.json4s.JValue] = {
+      val p = new Path(logDir(path), name)
+      val fs = fsOf(spark, p)
+      Option.when(fs.exists(p))(org.json4s.jackson.JsonMethods.parse(readText(fs, p)))
+    }
+    m.copy(tags = json("_tags.json").fold(Map.empty[String, Long])(TableMeta.tagsOf),
+      cdcKey = json("_cdc.json").map(_ \ "key").collect { case org.json4s.JString(k) => k })
   }
 
   /** Write `m` as a new meta object for commit `v`; returns the name
-    * the commit references ("" for the empty meta). The name is unique,
-    * so a racer that loses the commit claim leaves an inert orphan.
+    * the commit references ([[EmptyMeta]] for the empty meta). The name
+    * is unique, so a racer that loses the commit claim leaves an inert
+    * orphan.
     */
   private def writeMeta(spark: SparkSession, path: String, v: Long, m: TableMeta): String =
-    if (m == TableMeta.empty) ""
+    if (m == TableMeta.empty) EmptyMeta
     else {
       val name = f"meta-$v%05d-${java.util.UUID.randomUUID.toString.take(8)}.json"
       val p = new Path(logDir(path), name)
       val out = fsOf(spark, p).create(p, false)
-      try out.write(TableMeta.render(m).getBytes(StandardCharsets.UTF_8)) finally out.close()
+      try out.write(TableMeta.render(m, marked = true).getBytes(StandardCharsets.UTF_8))
+      finally out.close()
       name
     }
 
@@ -2021,33 +2075,38 @@ object LakeTable {
   private def commitOver(spark: SparkSession, path: String, base: State, c: Commit,
       txn: Option[(String, Long)] = None): Unit =
     writeCommit(spark, path, c.copy(version = base.version + 1,
-      meta = Some(base.commit.meta.getOrElse(writeMeta(spark, path, base.version + 1, base.meta))),
+      meta = Some(base.commit.meta match {
+        case Some(ref) if !base.legacy => ref
+        case _ => writeMeta(spark, path, base.version + 1, base.meta)
+      }),
       txns = withTxns(txnsOf(spark, path, base), txn)))
 
-  /** Publish `next` over `base` — the ONLY meta writer, so no path drops
-    * a key another recorded. Returns what it published: `next` at meta
-    * version `base.meta.ver + 1`, with the mixed-layout marker kept
-    * MONOTONIC (once set by a spec change, every later rewrite
-    * preserves it; readers route mixed tables through the per-group-
-    * root union and keep the single-scan fast path for never-evolved
-    * flat tables).
+  /** Publish `next(v, m)` over `base`, where `v` is the version it
+    * publishes at (column DDL stamps with it) and `m` the meta it
+    * replaces — the ONLY meta writer, so no path drops a key another
+    * recorded. Returns what it published, at meta version `m.ver + 1`,
+    * with the mixed-layout marker kept MONOTONIC (once set by a spec
+    * change, every later rewrite preserves it; readers route mixed
+    * tables through the per-group-root union and keep the single-scan
+    * fast path for never-evolved flat tables).
     *
     * Concurrency: the meta commit claims the version after the head
-    * like any commit. Losing the claim to commits that kept `base`'s
-    * meta (appends, DML) rebases onto the new head; losing it to
-    * another meta change throws [[ConcurrentWriteException]] — the
-    * caller derived `next` from a meta that is gone and must re-run.
-    * `next` gets the version it publishes at (column DDL stamps with it).
+    * like any commit. Losing the claim to commits that kept the meta
+    * (appends, DML) rebases onto the new head. Losing it to another
+    * meta change throws [[ConcurrentWriteException]] — the caller
+    * derived its change from a meta that is gone and must re-run —
+    * unless `rederive`: a change that is a pure function of the meta
+    * (tags, the CDC key) derives again from the new one.
     */
   private def updateMeta(spark: SparkSession, path: String, base: State,
-      next: Long => TableMeta): TableMeta = {
-    var head = base
+      next: (Long, TableMeta) => TableMeta, rederive: Boolean = false): TableMeta = {
+    var (from, head) = (base.meta, base)
     var attempts = 0
     while (true) {
       val v = head.version + 1
-      val n = next(v)
-      val published = n.copy(ver = base.meta.ver + 1,
-        mixedLayouts = n.mixedLayouts || base.meta.mixedLayouts)
+      val n = next(v, from)
+      val published = n.copy(ver = from.ver + 1,
+        mixedLayouts = n.mixedLayouts || from.mixedLayouts)
       val name = writeMeta(spark, path, v, published)
       try {
         writeCommit(spark, path, Commit(v, MetaAction, head.commit.dirs,
@@ -2057,10 +2116,13 @@ object LakeTable {
         case e: CommitRaceLostException =>
           attempts += 1
           val now = state(spark, path)
-          if (now.meta != base.meta)
-            throw new ConcurrentWriteException(
-              s"table-meta change at $path lost v$v to a concurrent meta change " +
-              s"(expected meta version ${base.meta.ver}) — re-run against the new table state")
+          if (now.meta != from) {
+            if (!rederive)
+              throw new ConcurrentWriteException(
+                s"table-meta change at $path lost v$v to a concurrent meta change " +
+                s"(expected meta version ${from.ver}) — re-run against the new table state")
+            from = now.meta
+          }
           if (attempts >= 32)
             throw new ConcurrentWriteException(
               s"table-meta change at $path gave up after $attempts rebases: ${e.getMessage}")
@@ -2068,7 +2130,7 @@ object LakeTable {
           if (now.version > head.version) head = now
       }
     }
-    base.meta // unreachable
+    from // unreachable
   }
 
   /** Add a CHECK constraint (the Delta `ALTER TABLE ADD CONSTRAINT`
@@ -2084,18 +2146,18 @@ object LakeTable {
       .where(fexpr(s"NOT coalesce(($sql), true)")).limit(1).count()
     require(violations == 0,
       s"cannot add CHECK constraint $name: existing rows violate ($sql)")
-    updateMeta(spark, path, base, _ => base.meta.copy(checks = base.meta.checks :+ (name -> sql)))
+    updateMeta(spark, path, base, (_, m) => m.copy(checks = m.checks :+ (name -> sql)))
   }
 
   def dropCheck(spark: SparkSession, path: String, name: String): TableMeta = {
     val base = state(spark, path)
     updateMeta(spark, path, base,
-      _ => base.meta.copy(checks = base.meta.checks.filterNot(_._1 == name)))
+      (_, m) => m.copy(checks = m.checks.filterNot(_._1 == name)))
   }
 
   def setDvMode(spark: SparkSession, path: String, on: Boolean): TableMeta = {
     val base = state(spark, path)
-    updateMeta(spark, path, base, _ => base.meta.copy(dvMode = on))
+    updateMeta(spark, path, base, (_, m) => m.copy(dvMode = on))
   }
 
   /** The state before a table's first commit, under meta `m`. */
@@ -2131,7 +2193,7 @@ object LakeTable {
   private[graft] def updateSchemaMeta(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val base = state(spark, path)
-    updateMeta(spark, path, base, _ => base.meta.copy(schema = Some(schema)))
+    updateMeta(spark, path, base, (_, m) => m.copy(schema = Some(schema)))
   }
 
   /** Bounded process-wide schema cache. Schema derivation walks every
@@ -2291,7 +2353,7 @@ object LakeTable {
       // _commit_version=v) from the data group. Appends with the feed
       // on pay ZERO write amplification (the Delta insert-only-commit
       // optimization); only row-mutating commits write change files.
-      val cdc = dirs.headOption.flatMap(d => cdcKey(spark, path).map(_ => "@" + d))
+      val cdc = dirs.headOption.flatMap(d => head.meta.cdcKey.map(_ => "@" + d))
       try {
         commitOver(spark, path, head, Commit(v, "append", head.commit.dirs ++ dirs, cdc), txn)
         return Some(v)
@@ -2388,7 +2450,7 @@ object LakeTable {
         // dir IS the v0 group). Partitioned DDL tables already exist
         // (the catalog's createTable commits v0).
         writeCommit(spark, path, Commit(0L, "create", Seq(stagedDir), None,
-          txns = txn.toMap, meta = Some("")))
+          txns = txn.toMap, meta = Some(EmptyMeta)))
         0L
       case Some(st) =>
         val (prev, c, m) = (st.version, st.commit, st.meta)
@@ -2401,10 +2463,8 @@ object LakeTable {
               .getOrElse(throw new CommitRaceLostException(
                 s"txn ${txn.get} is already committed to $path"))
           case Overwrite =>
-            val cdc = cdcKey(spark, path).map { k =>
-              writeCdc(spark, path, v, diffFrames(read(spark, path, st),
-                readDirs(spark, path, m, Seq(stagedDir)), k, preimages = true))
-            }
+            val cdc = writeCdc(spark, path, m, v, read(spark, path, st),
+              readDirs(spark, path, m, Seq(stagedDir)))
             commitOver(spark, path, st, Commit(v, "overwrite", Seq(stagedDir), cdc), txn)
           case ReplaceWhere(pred) =>
             val (touched, untouched) = splitDirs(spark, path, m, c.dirs,
@@ -2416,10 +2476,8 @@ object LakeTable {
               if (touched.isEmpty) None
               else Some(writeGroup(spark, path, st,
                 old.where(!coalesce(pred, lit(false))), parts))
-            val cdc = cdcKey(spark, path).map { k =>
-              writeCdc(spark, path, v, diffFrames(old,
-                readDirs(spark, path, m, rewritten.toSeq :+ stagedDir), k, preimages = true))
-            }
+            val cdc = writeCdc(spark, path, m, v, old,
+              readDirs(spark, path, m, rewritten.toSeq :+ stagedDir))
             commitOver(spark, path, st,
               Commit(v, "replace", (untouched ++ rewritten) :+ stagedDir, cdc), txn)
           case DynamicPartitions =>
@@ -2441,14 +2499,11 @@ object LakeTable {
                 droppedLeaves ++= drop.map { case (_, leaf) => rel(leaf) }
               }
             }
-            val cdc = cdcKey(spark, path).map { k =>
-              val ds = droppedLeaves.result()
-              val oldDf =
-                if (ds.isEmpty) read(spark, path, st).limit(0)
-                else readDirsLive(spark, path, m, ds, prev)
-              writeCdc(spark, path, v, diffFrames(oldDf,
-                readDirs(spark, path, m, Seq(stagedDir)), k, preimages = true))
-            }
+            val ds = droppedLeaves.result()
+            val cdc = writeCdc(spark, path, m, v,
+              if (ds.isEmpty) read(spark, path, st).limit(0)
+              else readDirsLive(spark, path, m, ds, prev),
+              readDirs(spark, path, m, Seq(stagedDir)))
             commitOver(spark, path, st,
               Commit(v, "replace", keepDirs.result() :+ stagedDir, cdc), txn)
         }
@@ -2617,10 +2672,8 @@ object LakeTable {
       commitOver(spark, path, st, Commit(v, "delete-mor", c.dirs))
       return v
     }
-    val cdc = cdcKey(spark, path).map { k =>
-      val rows = matched.drop("__file", "__pos")
-      writeCdc(spark, path, v, diffFrames(rows, rows.limit(0), k, preimages = true))
-    }
+    val rows = matched.drop("__file", "__pos")
+    val cdc = writeCdc(spark, path, st.meta, v, rows, rows.limit(0))
     commitOver(spark, path, st, Commit(v, "delete-mor", c.dirs, cdc, dvFiles = dvNames))
     v
   }
@@ -2655,69 +2708,46 @@ object LakeTable {
       writeDvFile(spark, path, v, g,
         stateAtTo.get(g).map(_._2).getOrElse(Map.empty))
     }
-    // The commit carries the HEAD's meta: a restore rolls data back,
-    // never a DDL made since.
-    val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v, diffFrames(read(spark, path, st),
-        read(spark, path, at(spark, path, st, toVersion)), k, preimages = true))
-    }
+    // The commit carries the HEAD's meta, tags and CDC key included: a
+    // restore rolls data back, never a DDL made since.
+    val cdc = writeCdc(spark, path, st.meta, v, read(spark, path, st),
+      read(spark, path, at(spark, path, st, toVersion)))
     commitOver(spark, path, st, Commit(v, "restore", old.dirs, cdc, dvFiles = dvNames))
     v
   }
 
   // ---- named tags (Iceberg tags: human-readable snapshot pins) ------
 
-  private def tagsFile(path: String) = new Path(logDir(path), "_tags.json")
-
-  /** All tags: name → pinned version. */
-  def tags(spark: SparkSession, path: String): Map[String, Long] = {
-    val p = tagsFile(path)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
-    }
-  }
-
-  private def writeTags(spark: SparkSession, path: String, t: Map[String, Long]): Unit = {
-    val p = tagsFile(path)
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(("{" + t.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }.mkString(",") + "}")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** Pin `name` to `version` (the Iceberg tag): `VERSION AS OF 'name'`
-    * resolves through it. Version must exist at tag time; vacuum does
-    * NOT consult tags (document tags as retention-advisory like Delta
-    * names nothing — pin retention accordingly).
+    * resolves through it. One meta commit; the version must exist at
+    * tag time. Vacuum does NOT consult tags (retention-advisory like
+    * Delta names nothing — pin retention accordingly).
     */
-  def setTag(spark: SparkSession, path: String, name: String, version: Long): Unit = {
+  def setTag(spark: SparkSession, path: String, name: String, version: Long): TableMeta = {
     require(name.nonEmpty && !name.forall(_.isDigit),
       s"tag '$name' must be non-numeric (numeric strings resolve as versions)")
-    // The tags file is write-by-format/read-by-regex: a quote or
-    // backslash in a name would corrupt it and silently drop or alter
-    // OTHER tags on the next read — reject at the door instead.
-    require(name.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
-      s"tag '$name' may only contain letters, digits, '.', '_', '-'")
+    val base = state(spark, path)
     readCommit(spark, path, version) // existence check, throws if absent
-    writeTags(spark, path, tags(spark, path) + (name -> version))
+    updateMeta(spark, path, base, (_, m) => m.copy(tags = m.tags + (name -> version)),
+      rederive = true)
   }
 
-  def dropTag(spark: SparkSession, path: String, name: String): Unit =
-    writeTags(spark, path, tags(spark, path) - name)
+  /** Drop tag `name`: one meta commit, none when it does not exist. */
+  def dropTag(spark: SparkSession, path: String, name: String): TableMeta = {
+    val base = state(spark, path)
+    if (!base.meta.tags.contains(name)) base.meta
+    else updateMeta(spark, path, base, (_, m) => m.copy(tags = m.tags - name), rederive = true)
+  }
 
-  /** Resolve a version STRING: numeric = the version itself, anything
-    * else = a tag name.
+  /** Resolve a version STRING: all digits = the version itself,
+    * anything else = a tag name.
     */
   def resolveVersion(spark: SparkSession, path: String, spec: String): Long =
-    if (spec.forall(_.isDigit)) spec.toLong
-    else tags(spark, path).getOrElse(spec,
-      throw new IllegalArgumentException(s"no tag '$spec' on $path"))
+    if (spec.isEmpty || !spec.forall(_.isDigit))
+      state(spark, path).meta.tags.getOrElse(spec,
+        throw new IllegalArgumentException(s"no tag '$spec' on $path"))
+    else spec.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"version '$spec' of $path is past ${Long.MaxValue}"))
 
   /** Shared MOR tail, fully distributed: the per-file mark bitmaps
     * stay in `marks` (columns `__file`, `bm`) — tasks group them by
@@ -2798,9 +2828,7 @@ object LakeTable {
       acc.withColumn(cn, e)
     }
     val dir = writeGroup(spark, path, st, newRows, m.partitionBy)
-    val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v, diffFrames(oldRows, newRows, k, preimages = true))
-    }
+    val cdc = writeCdc(spark, path, m, v, oldRows, newRows)
     commitOver(spark, path, st, Commit(v, "update-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
     v
   }
@@ -2914,39 +2942,27 @@ object LakeTable {
   // tracks the mutation size, and reading the feed — batch or streaming
   // — is a pure parquet scan with version offsets, never a join.
 
-  private def cdcMetaFile(path: String) = new Path(logDir(path), "_cdc.json")
-
   /** Turn the change feed ON for a single-column row identity `key`
-    * (same contract as [[changes]]). Subsequent append/merge/delete/
-    * update/agg-merge commits write change files; layout rewrites
-    * (compact/cluster) and pruned no-ops correctly publish none.
-    * Consume with [[readChangeFeed]] or
+    * (same contract as [[changes]]): one meta commit, after which
+    * append/merge/delete/update/agg-merge commits write change files;
+    * layout rewrites (compact/cluster) and pruned no-ops correctly
+    * publish none. Consume with [[readChangeFeed]] or
     * `readStream.format("graft").option("readChangeFeed","true")`.
     */
-  def enableCdc(spark: SparkSession, path: String, key: String): Unit = {
-    val p = cdcMetaFile(path)
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(s"""{"key":"$key"}""".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+  def enableCdc(spark: SparkSession, path: String, key: String): TableMeta = {
+    val base = state(spark, path)
+    updateMeta(spark, path, base, (_, m) => m.copy(cdcKey = Some(key)), rederive = true)
   }
 
-  private[graft] def cdcKey(spark: SparkSession, path: String): Option[String] = {
-    val p = cdcMetaFile(path)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      """"key"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(body).map(_.group(1))
-    }
-  }
-
-  /** Feed schema: change_type, key, data columns (sorted), _commit_version. */
-  def cdcSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+  /** Feed schema of `st`: change_type, key, data columns (sorted),
+    * _commit_version.
+    */
+  def cdcSchema(spark: SparkSession, path: String,
+      st: State): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val key = cdcKey(spark, path).getOrElse(
+    val key = st.meta.cdcKey.getOrElse(
       throw new IllegalStateException(s"CDC not enabled on $path (LakeTable.enableCdc)"))
-    val s = read(spark, path).schema
+    val s = tableSchema(spark, path, st)
     val keyField = s.fields.find(_.name == key).getOrElse(
       throw new IllegalStateException(s"CDC key $key not in table schema of $path"))
     StructType(
@@ -2955,15 +2971,19 @@ object LakeTable {
           StructField("_commit_version", LongType)))
   }
 
-  /** Materialize one commit's change records; returns the cdc dir name
-    * (unique suffix — racers stage distinct dirs, the commit decides).
+  /** Materialize commit `v`'s change records — the keyed diff of
+    * `oldRows` → `newRows` under `m`'s CDC key — and return the cdc dir
+    * name (unique suffix — racers stage distinct dirs, the commit
+    * decides); None, computing nothing, when the feed is off.
     */
-  private def writeCdc(spark: SparkSession, path: String, v: Long, records: DataFrame): String = {
-    val dir = s"d$v-${java.util.UUID.randomUUID.toString.take(8)}"
-    records.withColumn("_commit_version", lit(v))
-      .write.mode("overwrite").parquet(new Path(new Path(path, "_cdc"), dir).toString)
-    dir
-  }
+  private def writeCdc(spark: SparkSession, path: String, m: TableMeta, v: Long,
+      oldRows: => DataFrame, newRows: => DataFrame): Option[String] =
+    m.cdcKey.map { k =>
+      val dir = s"d$v-${java.util.UUID.randomUUID.toString.take(8)}"
+      diffFrames(oldRows, newRows, k, preimages = true).withColumn("_commit_version", lit(v))
+        .write.mode("overwrite").parquet(new Path(new Path(path, "_cdc"), dir).toString)
+      dir
+    }
 
   /** One feed contribution: a change-file dir (synthetic=false) or an
     * append's data group standing in for its own insert records
@@ -2994,11 +3014,9 @@ object LakeTable {
     */
   def readChangeFeed(spark: SparkSession, path: String,
       fromExclusive: Long = -1L, toInclusive: Long = Long.MinValue): DataFrame = {
-    val hi = if (toInclusive == Long.MinValue)
-      currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no LakeTable at $path"))
-    else toInclusive
-    val schema = cdcSchema(spark, path)
+    val st = state(spark, path)
+    val hi = if (toInclusive == Long.MinValue) st.version else toInclusive
+    val schema = cdcSchema(spark, path, st)
     val slices = cdcSlices(spark, path, fromExclusive, hi)
     val (synth, real) = slices.partition(_.synthetic)
     val parts = Seq.newBuilder[DataFrame]
@@ -3406,10 +3424,7 @@ object LakeTable {
     // CDC: diff only the touched groups against their rewrite —
     // untouched groups are on both sides of the snapshot diff and
     // produce no records, so the diff cost tracks the mutation size.
-    val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v,
-        diffFrames(target, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-    }
+    val cdc = writeCdc(spark, path, m, v, target, readDirs(spark, path, m, Seq(dir)))
     commitOver(spark, path, st, Commit(v, "merge", untouched :+ dir, cdc))
     v
   }
@@ -3586,21 +3601,16 @@ object LakeTable {
       val appendRows = joined.where(keep && (!tPresent || acted)).select(outCols: _*)
       val dvNames = mergeAndWriteDv(spark, path, v, c.dirs, dv0, marks)
       val dir = writeGroup(spark, path, st, appendRows, m.partitionBy)
-      val cdc = cdcKey(spark, path).map { k =>
-        val oldAffected = affected.select(tSchema.fieldNames.map(n => col(s"t.$n")).toSeq: _*)
-        writeCdc(spark, path, v,
-          diffFrames(oldAffected, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-      }
+      val cdc = writeCdc(spark, path, m, v,
+        affected.select(tSchema.fieldNames.map(n => col(s"t.$n")).toSeq: _*),
+        readDirs(spark, path, m, Seq(dir)))
       commitOver(spark, path, st, Commit(v, "merge-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
       return v
     }
     val result = joined.where(keep).select(outCols: _*)
 
     val dir = writeGroup(spark, path, st, result, m.partitionBy)
-    val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v,
-        diffFrames(targetFull, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-    }
+    val cdc = writeCdc(spark, path, m, v, targetFull, readDirs(spark, path, m, Seq(dir)))
     commitOver(spark, path, st, Commit(v, "merge", untouched :+ dir, cdc))
     v
   }
@@ -3633,10 +3643,7 @@ object LakeTable {
         sumCols.tail.map(c => sum(c).as(c)): _*)
     val v = prev + 1
     val dir = writeGroup(spark, path, st, combined, m.partitionBy)
-    val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v,
-        diffFrames(target, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-    }
+    val cdc = writeCdc(spark, path, m, v, target, readDirs(spark, path, m, Seq(dir)))
     commitOver(spark, path, st, Commit(v, "merge_agg", untouched :+ dir, cdc))
     v
   }
@@ -3665,10 +3672,7 @@ object LakeTable {
       .unionByName(df, allowMissingColumns = true)
     val v = prev + 1
     val dir = writeGroup(spark, path, st, replaced, m.partitionBy)
-    val cdc = cdcKey(spark, path).map { k =>
-      writeCdc(spark, path, v,
-        diffFrames(old, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-    }
+    val cdc = writeCdc(spark, path, m, v, old, readDirs(spark, path, m, Seq(dir)))
     commitOver(spark, path, st, Commit(v, "replace", untouched :+ dir, cdc))
     v
   }
@@ -3692,10 +3696,7 @@ object LakeTable {
       val old = readDirsLive(spark, path, m, touched, prev)
       val dir = writeGroup(spark, path, st,
         old.where(!coalesce(predicate, lit(false))), m.partitionBy)
-      val cdc = cdcKey(spark, path).map { k =>
-        writeCdc(spark, path, v,
-          diffFrames(old, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-      }
+      val cdc = writeCdc(spark, path, m, v, old, readDirs(spark, path, m, Seq(dir)))
       commitOver(spark, path, st, Commit(v, "delete", untouched :+ dir, cdc))
     }
     v
@@ -3720,10 +3721,7 @@ object LakeTable {
         acc.withColumn(cn, when(predicate, e).otherwise(col(cn)))
       }
       val dir = writeGroup(spark, path, st, updated, m.partitionBy)
-      val cdc = cdcKey(spark, path).map { k =>
-        writeCdc(spark, path, v,
-          diffFrames(df, readDirs(spark, path, m, Seq(dir)), k, preimages = true))
-      }
+      val cdc = writeCdc(spark, path, m, v, df, readDirs(spark, path, m, Seq(dir)))
       commitOver(spark, path, st, Commit(v, "update", untouched :+ dir, cdc))
     }
     v
@@ -3786,13 +3784,16 @@ object LakeTable {
       fs.delete(commitFile(path, v), false)
       fs.delete(new Path(logDir(path), f".claim-v$v%05d"), false)
     }
-    // Table-meta objects likewise (orphans of lost meta commits too);
-    // the legacy `_table.json` goes once no retained commit reads it.
+    // Table-meta objects likewise (orphans of lost meta commits too).
+    // Only a head's meta is ever resolved, so the legacy files go once
+    // the head's meta is an object holding everything they held.
     val keepMeta = retained.flatMap(_.meta).toSet
     fs.listStatus(logDir(path)).map(_.getPath).foreach { m =>
       if (m.getName.startsWith("meta-") && !keepMeta(m.getName)) fs.delete(m, false)
     }
-    if (retained.forall(_.meta.isDefined)) fs.delete(legacyMetaFile(path), false)
+    if (!stateAt(spark, path, cur).legacy)
+      (legacyMetaFile(path) +: Seq("_tags.json", "_cdc.json").map(new Path(logDir(path), _)))
+        .foreach(fs.delete(_, false))
     keepDirs.size.toLong
   }
 
@@ -4062,10 +4063,7 @@ object Rollup {
       val fs = desc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.getFileStatus(new Path(basePath)).isDirectory) {
         val out = fs.create(desc, true)
-        try out.write(
-          (s"""{"mvPath":"$mvPath","dims":"${dims.mkString(",")}",""" +
-            s""""measures":"${measures.mkString(",")}"}""").getBytes("UTF-8"))
-        finally out.close()
+        try out.write(MvRegistry.renderDescriptor(d).getBytes("UTF-8")) finally out.close()
       }
     } catch { case _: Exception => () }
     MvRegistry.register(d)

@@ -243,8 +243,8 @@ class LakeTableSpec extends AnyFunSuite {
     // replace the hi region with a shrunken recomputation
     val repl = spark.range(1000, 1010).toDF("k").withColumn("v", lit("HI2"))
     val v = LakeTable.overwriteWhere(spark, p, col("k") >= 1000L, repl)
-    assert(v == 2L)
-    val dirs = LakeTable.readCommit(spark, p, 2L).dirs
+    assert(v == 3L)
+    val dirs = LakeTable.readCommit(spark, p, 3L).dirs
     assert(dirs.contains(loDir), s"lo group rewritten: $dirs") // untouched carried
     val m = LakeTable.read(spark, p).as[(Long, String)].collect().toMap
     assert(m.size == 60 && m(5L) == "lo" && m(1005L) == "HI2" && !m.contains(1040L))
@@ -522,13 +522,14 @@ class LakeTableSpec extends AnyFunSuite {
     spark.sql("INSERT INTO graft_cat.tvf.t VALUES (100, 1000)")
     spark.sql("UPDATE graft_cat.tvf.t SET v = 0 WHERE k = 2")
     // History: newest-first, actions named, by catalog name OR path.
-    // CTAS is two commits: the catalog's empty create + the data append.
+    // CTAS is two commits: the catalog's empty create + the data append;
+    // enabling the feed is a meta commit.
     val hist = spark.sql("SELECT version, action FROM graft_history('tvf.t')")
       .as[(Long, String)].collect().toSeq
-    assert(hist === Seq((3L, "update"), (2L, "append"), (1L, "append"), (0L, "create")),
-      hist.toString)
+    assert(hist === Seq((4L, "update"), (3L, "append"), (2L, "meta"), (1L, "append"),
+      (0L, "create")), hist.toString)
     assert(spark.sql(s"SELECT count(*) FROM graft_history('$root')")
-      .as[Long].head() === 4L)
+      .as[Long].head() === 5L)
     // Change feed: the UPDATE's preimage/postimage + the INSERT.
     val ch = spark.sql(
       """SELECT change_type, k, v FROM graft_changes('tvf.t')
@@ -537,8 +538,8 @@ class LakeTableSpec extends AnyFunSuite {
     assert(ch === Seq(
       ("insert", 100L, 1000L),
       ("update_postimage", 2L, 0L), ("update_preimage", 2L, 20L)), ch.toString)
-    // Version-range slice: (2, 3] = the UPDATE's two records only.
-    assert(spark.sql("SELECT count(*) FROM graft_changes('tvf.t', 2, 3)")
+    // Version-range slice: (3, 4] = the UPDATE's two records only.
+    assert(spark.sql("SELECT count(*) FROM graft_changes('tvf.t', 3, 4)")
       .as[Long].head() === 2L)
 
     // graft_files: the live-file inventory, metadata-only. Every row
@@ -950,8 +951,8 @@ class LakeTableSpec extends AnyFunSuite {
     val h = LakeTable.history(spark, p)
       .select("version", "action", "has_change_data")
       .as[(Long, String, Boolean)].collect().toSeq
-    assert(h == Seq((3L, "compact", false), (2L, "merge", true),
-      (1L, "append", true), (0L, "create", false)), h)
+    assert(h == Seq((4L, "compact", false), (3L, "merge", true),
+      (2L, "append", true), (1L, "meta", false), (0L, "create", false)), h)
     // timestamps are monotone non-decreasing oldest→newest
     val ts = LakeTable.history(spark, p).orderBy("version")
       .select("timestamp").as[java.sql.Timestamp].collect()
@@ -1682,7 +1683,7 @@ class LakeTableSpec extends AnyFunSuite {
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir)))
     LakeTable.create(spark, p, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
     LakeTable.enableCdc(spark, p, "k")
-    LakeTable.merge(spark, p, Seq((2L, "B"), (4L, "d")).toDF("k", "v"), "k") // v1
+    LakeTable.merge(spark, p, Seq((2L, "B"), (4L, "d")).toDF("k", "v"), "k") // v2
     def runOnce(): Unit = {
       val q = spark.readStream.format("graft").option("readChangeFeed", "true").load(p)
         .writeStream.format("parquet").option("path", out)
@@ -1694,17 +1695,18 @@ class LakeTableSpec extends AnyFunSuite {
     def rows() = spark.read.parquet(out)
       .select("change_type", "k", "v", "_commit_version")
       .as[(String, Long, String, Long)].collect().toSet
-    // pre-enablement create (v0) is feed-invisible; unchanged keys emit nothing
-    assert(rows() == Set(("update_preimage", 2L, "b", 1L),
-      ("update_postimage", 2L, "B", 1L), ("insert", 4L, "d", 1L)), rows())
+    // pre-enablement create (v0) and the enabling meta commit (v1) are
+    // feed-invisible; unchanged keys emit nothing
+    assert(rows() == Set(("update_preimage", 2L, "b", 2L),
+      ("update_postimage", 2L, "B", 2L), ("insert", 4L, "d", 2L)), rows())
     // a layout rewrite is CDC-silent; a later delete emits only its own
-    // records; the restarted stream resumes from v1, never replaying it
-    LakeTable.compact(spark, p, 1)              // v2: no change records
-    LakeTable.delete(spark, p, col("k") === 1L) // v3: one delete
+    // records; the restarted stream resumes from v2, never replaying it
+    LakeTable.compact(spark, p, 1)              // v3: no change records
+    LakeTable.delete(spark, p, col("k") === 1L) // v4: one delete
     runOnce()
-    assert(rows() == Set(("update_preimage", 2L, "b", 1L),
-      ("update_postimage", 2L, "B", 1L), ("insert", 4L, "d", 1L),
-      ("delete", 1L, "a", 3L)), rows())
+    assert(rows() == Set(("update_preimage", 2L, "b", 2L),
+      ("update_postimage", 2L, "B", 2L), ("insert", 4L, "d", 2L),
+      ("delete", 1L, "a", 4L)), rows())
     // batch read of the feed sees the same four records
     assert(LakeTable.readChangeFeed(spark, p).count() == 4L)
   }
@@ -1716,18 +1718,18 @@ class LakeTableSpec extends AnyFunSuite {
     LakeTable.enableCdc(spark, p, "k")
     (2L to 5L).foreach(i => LakeTable.append(spark, p, Seq((i, s"v$i")).toDF("k", "v")))
     val feed = spark.read.format("graft").option("readChangeFeed", "true").load(p)
-    assert(feed.count() == 4L) // v1..v4 appends (v0 create pre-enablement)
+    assert(feed.count() == 4L) // v2..v5 appends (v0 create, v1 enablement)
     // filter pushdown reaches the parquet scan of the change files
     val filtered = feed.where(col("change_type") === "insert" && col("k") >= 4L)
     val plan = filtered.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [") && plan.contains("k >= 4"), plan)
     // appends write NO change files — the commit carries an @marker
     // and the feed synthesizes inserts from the data group directly
-    assert(LakeTable.readCommit(spark, p, 1L).cdcDir.exists(_.startsWith("@")))
+    assert(LakeTable.readCommit(spark, p, 2L).cdcDir.exists(_.startsWith("@")))
     assert(!new java.io.File(s"$p/_cdc").exists, "append must not duplicate its rows into _cdc")
     assert(filtered.count() == 2L)
     // a _commit_version range opens ONLY the matching dirs
-    val late = feed.where(col("_commit_version") >= 3L)
+    val late = feed.where(col("_commit_version") >= 4L)
     val files = late.select(input_file_name()).distinct().count()
     val all = feed.select(input_file_name()).distinct().count()
     assert(late.count() == 2L)

@@ -343,6 +343,20 @@ class PlanSpec extends AnyFunSuite {
     } finally graft.plans.MvRegistry.deregister(basePath)
   }
 
+  test("MV descriptor: an mvPath holding '\"' and '\\' and names holding ',' reload intact") {
+    val scratchDir = operators.Lakehouse.scratch
+    val basePath = s"$scratchDir/spec_mv_names_base"
+    val mvPath = s"$scratchDir/spec_mv_names_\"q\\mv"
+    spark.range(10).select((col("id") % 2).as("g,h"), col("id").cast("double").as("m,1"))
+      .write.mode("overwrite").parquet(basePath)
+    try {
+      val d = graft.sources.Rollup.createAndRegister(spark, basePath, mvPath,
+        Seq("g,h"), Seq("m,1"))
+      graft.plans.MvRegistry.clear() // a cold registry reloads the persisted descriptor
+      assert(graft.plans.MvRegistry.findOrLoad(spark, Seq(basePath)).contains(d))
+    } finally graft.plans.MvRegistry.deregister(basePath)
+  }
+
   test("q_corpus_mix broadcasts the rates dim and keeps the hash filter before any shuffle") {
     val p = planOf("q_corpus_mix")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))

@@ -276,8 +276,8 @@ class SqlDmlSpec extends AnyFunSuite {
     // numeric specs still resolve as raw versions
     assert(spark.sql(s"SELECT count(*) FROM $t VERSION AS OF $v0")
       .as[Long].head() === 100L)
-    // re-pointing and dropping
-    spark.sql(s"CALL graft_cat.system.tag('dml.tags', 'stable', ${v0 + 1})")
+    // re-pointing and dropping (the tag itself is the meta commit v0 + 1)
+    spark.sql(s"CALL graft_cat.system.tag('dml.tags', 'stable', ${v0 + 2})")
     assert(spark.sql(s"SELECT count(*) FROM $t VERSION AS OF 'stable'")
       .as[Long].head() === 250L)
     spark.sql(s"CALL graft_cat.system.drop_tag('dml.tags', 'stable')")
