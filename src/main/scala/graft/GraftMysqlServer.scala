@@ -273,14 +273,9 @@ object GraftMysqlServer {
       }
       io.write(okPacket()); io.flush()
 
-      // identity-bound engine session: runtime conf (catalog wiring)
-      // copies over best-effort, then the login is pinned — and the
+      // identity-bound engine session: the login is pinned — and the
       // wire never forwards SET, so it STAYS pinned
-      val sess = parent.newSession()
-      parent.conf.getAll.foreach { case (k, v) =>
-        try sess.conf.set(k, v) catch { case _: Exception => () }
-      }
-      sess.conf.set("spark.graft.sql.user", user)
+      val sess = GraftSession.childSession(parent, user)
 
       val stmts = new StmtRegistry
       var open = true

@@ -301,16 +301,8 @@ object GraftRestServer {
           fs.flatMap { case (k, v) => textOfJ(v).map(k -> _) }
         case _ => Nil
       }
-    val sess = parent.newSession()
-    parent.conf.getAll.foreach { case (k, v) =>
-      try sess.conf.set(k, v) catch { case _: Exception => () }
-    }
-    // client configs apply EXCEPT graft identity keys — the wire, not
-    // the client, owns who the session runs as (C24 stance)
-    cfg.filterNot(_._1.startsWith("spark.graft.sql.")).foreach { case (k, v) =>
-      try sess.conf.set(k, v) catch { case _: Exception => () }
-    }
-    sess.conf.set("spark.graft.sql.user", user)
+    // client configs apply EXCEPT graft identity keys (C24 stance)
+    val sess = GraftSession.childSession(parent, user, cfg)
     val id = UUID.randomUUID().toString
     sessions.put(id, new Sess(sess, user))
     respond(ex, 200, s"""{"identifier":${jstr(id)}}""")
@@ -492,11 +484,7 @@ object GraftRestServer {
     try {
       // a per-load session pins the wire identity without racing other
       // requests on the parent's conf (same stance as openSession)
-      val sess = parent.newSession()
-      parent.conf.getAll.foreach { case (k, v) =>
-        try sess.conf.set(k, v) catch { case _: Exception => () }
-      }
-      sess.conf.set("spark.graft.sql.user", user)
+      val sess = GraftSession.childSession(parent, user)
       val (catName, ns) = db.split('.') match {
         case Array(c, n) => (c, n)
         case _ => (sess.sessionState.catalogManager.currentCatalog.name(), db)

@@ -62,6 +62,29 @@ object GraftSession {
         classOf[GraftAuthInterceptor].getName)
       .config("spark.ui.enabled", "false")
 
+  /** A gateway principal's session: a child of `parent` with its
+    * runtime settings, then the client's `overrides` (rejected values
+    * and `spark.graft.sql.*` keys skipped), then `user` pinned as
+    * `spark.graft.sql.user`. The parent's conf is never written.
+    */
+  def childSession(parent: SparkSession, user: String,
+      overrides: Seq[(String, String)] = Nil): SparkSession = {
+    val child = parent.newSession()
+    // A new session starts from the context's conf; it lacks what was
+    // SET on the parent: modifiable SQL settings, and keys Spark does
+    // not register (catalog wiring, graft's own). A SET takes both.
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (parent.conf.isModifiable(k) || !org.apache.spark.sql.graftglue.Glue.registeredConf(k))
+        child.conf.set(k, v)
+    }
+    overrides.filterNot(_._1.startsWith("spark.graft.sql.")).foreach { case (k, v) =>
+      try child.conf.set(k, v)
+      catch { case _: org.apache.spark.sql.AnalysisException | _: IllegalArgumentException => () }
+    }
+    child.conf.set("spark.graft.sql.user", user)
+    child
+  }
+
   def create(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
     val s = builder(master, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -512,7 +512,8 @@ object Clustering {
     val shortlistEff = if (shortlist > 0) shortlist
       else {
         val n = graft.sources.LakeTable
-          .aggregatedColumnNulls(s, s"$indexPath/codes")
+          .aggregatedColumnNulls(s, s"$indexPath/codes",
+            graft.sources.LakeTable.state(s, s"$indexPath/codes").commit.dirs)
           .map(_._1).getOrElse(codes.count())
         math.max(48L, n / 100L).toInt
       }

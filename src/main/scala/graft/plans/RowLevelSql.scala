@@ -38,7 +38,7 @@ import graft.sources.{GraftTable, LakeTable}
   */
 case class GraftRowLevelSql(session: SparkSession) extends Rule[LogicalPlan] {
 
-  private def graftTarget(plan: LogicalPlan): Option[(String, Seq[Attribute])] =
+  private def graftTarget(plan: LogicalPlan): Option[(GraftTable, Seq[Attribute])] =
     plan.collectFirst {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
         val t = r.table.asInstanceOf[GraftTable]
@@ -49,7 +49,7 @@ case class GraftRowLevelSql(session: SparkSession) extends Rule[LogicalPlan] {
           throw new graft.GraftAuthz.AccessDenied(
             s"PERMISSION_DENIED: principal '$p' lacks MODIFY on graft table ${t.tablePath}")
         }
-        (t.tablePath, r.output)
+        (t, r.output)
     }
 
   private def noSubquery(es: Seq[Expression], stmt: String): Unit =
@@ -114,10 +114,10 @@ case class GraftRowLevelSql(session: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
     case u @ UpdateTable(table, assignments, condition) if table.resolved =>
       graftTarget(table) match {
-        case Some((path, _)) =>
+        case Some((t, _)) =>
           noSubquery(assignments ++ condition.toSeq, "UPDATE")
           val sides = Seq("" -> table)
-          GraftUpdateCommand(path,
+          GraftUpdateCommand(t.tablePath, t.dvMode,
             assignments.map(a =>
               assignName(a, table) -> Glue.column(byName(a.value, sides))),
             condition.map(e => Glue.column(byName(e, sides))))
@@ -126,7 +126,7 @@ case class GraftRowLevelSql(session: SparkSession) extends Rule[LogicalPlan] {
 
     case m: MergeIntoTable if m.targetTable.resolved && m.sourceTable.resolved =>
       graftTarget(m.targetTable) match {
-        case Some((path, targetOut)) =>
+        case Some((t, targetOut)) =>
           if (m.schemaEvolutionEnabled) throw new UnsupportedOperationException(
             "graft MERGE does not support WITH SCHEMA EVOLUTION")
           val acts = m.matchedActions ++ m.notMatchedActions ++
@@ -154,7 +154,7 @@ case class GraftRowLevelSql(session: SparkSession) extends Rule[LogicalPlan] {
             case other => throw new UnsupportedOperationException(
               s"unsupported MERGE action $other")
           }
-          GraftMergeCommand(path, m.sourceTable, conv(m.mergeCondition),
+          GraftMergeCommand(t.tablePath, m.sourceTable, conv(m.mergeCondition),
             m.matchedActions.map(clause), m.notMatchedActions.map(clause),
             m.notMatchedBySourceActions.map(clause))
         case None => m
@@ -163,15 +163,14 @@ case class GraftRowLevelSql(session: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** `UPDATE graft_cat.db.t SET col = expr, ... [WHERE cond]` →
-  * LakeTable.update (granular COW, CDC-integrated).
+  * LakeTable.update (granular COW, CDC-integrated), or the
+  * merge-on-read update when the target's handle read `dvMode`.
   */
-case class GraftUpdateCommand(path: String,
+case class GraftUpdateCommand(path: String, dvMode: Boolean,
     set: Seq[(String, Column)],
     condition: Option[Column]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    // DV-mode tables (Delta enableDeletionVectors): merge-on-read
-    // update — vectors over old positions + one appended image group.
-    if (LakeTable.meta(spark, path).dvMode)
+    if (dvMode)
       LakeTable.updateMor(spark, path, condition.getOrElse(lit(true)), set.toMap)
     else
       LakeTable.update(spark, path, condition.getOrElse(lit(true)), set.toMap)

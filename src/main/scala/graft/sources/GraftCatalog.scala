@@ -119,14 +119,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * crash between the JDBC store's name claim and the data write) is
     * NOT a table: surface the standard not-found error everywhere
     * instead of a low-level read failure. DROP TABLE still cleans the
-    * orphan row.
+    * orphan row. Returns the location and the head state found there.
     */
-  private def existingTable(ident: Identifier): String = {
-    val p = store.tableLocation(spark, nsOf(ident), ident.name())
-      .getOrElse(throw new NoSuchTableException(ident))
-    if (LakeTable.currentVersion(spark, p).isEmpty) throw new NoSuchTableException(ident)
-    p
-  }
+  private def existingTable(ident: Identifier): (String, LakeTable.State) =
+    (for {
+      p <- store.locationOf(spark, nsOf(ident), ident.name())
+      h <- LakeTable.head(spark, p)
+    } yield (p, h)).getOrElse(throw new NoSuchTableException(ident))
 
   // ---- namespaces -------------------------------------------------
 
@@ -188,18 +187,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       val (sql, schema) = store.loadView(spark, nsOf(ident), ident.name())
       return new GraftViewTable((ident.namespace() :+ ident.name()).mkString("."), sql, schema)
     }
-    val p = existingTable(ident)
-    authorized(ident, new GraftTable(p, None, None))
+    val (p, h) = existingTable(ident)
+    authorized(ident, new GraftTable(p, None, None, Some(h)))
   }
+
+  /** A handle on version `v` of `p`, read under its head `h`'s meta. */
+  private def pinned(ident: Identifier, p: String, h: LakeTable.State, v: Long): Table =
+    authorized(ident, new GraftTable(p, Some(v), None, Some(LakeTable.at(spark, p, h, v))))
 
   /** SQL time travel: `SELECT ... FROM graft_cat.db.t VERSION AS OF n`
     * resolves a pinned LakeTable snapshot; a NON-numeric spec resolves
     * through the table's named tags (`VERSION AS OF 'stable'`).
     */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val p = existingTable(ident)
-    authorized(ident, new GraftTable(p,
-      Some(LakeTable.resolveVersion(spark, p, version)), None))
+    val (p, h) = existingTable(ident)
+    pinned(ident, p, h, LakeTable.resolveVersion(spark, p, version, h))
   }
 
   /** SQL time travel by wall clock: `... TIMESTAMP AS OF '...'` —
@@ -207,10 +209,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * newest commit at or before it (LakeTable.versionAt).
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val p = existingTable(ident)
-    val v = LakeTable.versionAt(org.apache.spark.sql.graftglue.Glue.activeSession, p, timestamp / 1000L)
+    val (p, h) = existingTable(ident)
+    val v = LakeTable.versionAt(spark, p, timestamp / 1000L, h.version)
       .getOrElse(throw new NoSuchTableException(ident))
-    authorized(ident, new GraftTable(p, Some(v), None))
+    pinned(ident, p, h, v)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -241,7 +243,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     } catch { case e: Throwable =>
       store.unregisterTable(spark, nsOf(ident), ident.name()); throw e
     }
-    new GraftTable(loc, None, Option(schema))
+    new GraftTable(loc, None, Option(schema), LakeTable.head(spark, loc))
   }
 
   /** ALTER TABLE ... ADD COLUMNS: a pure METADATA operation — the new
@@ -355,7 +357,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // never a re-derivation from disk, which would mis-follow chained
     // renames (a→b→c in one or across statements).
     LakeTable.alterColumnsAtomic(spark, p, recs.result(), updated, parts, sortBy, base)
-    new GraftTable(p, None, Some(updated))
+    new GraftTable(p, None, Some(updated), LakeTable.head(spark, p))
   }
 
   override def dropTable(ident: Identifier): Boolean = {

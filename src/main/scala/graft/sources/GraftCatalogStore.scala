@@ -49,6 +49,9 @@ private[sources] sealed trait CatalogStore {
   def listTables(spark: SparkSession, ns: String): Seq[String]
   /** Location of an EXISTING data table, None when absent. */
   def tableLocation(spark: SparkSession, ns: String, name: String): Option[String]
+  /** Where this name's table would live; existence is not checked. */
+  def locationOf(spark: SparkSession, ns: String, name: String): Option[String] =
+    tableLocation(spark, ns, name)
   /** Where a NEW table for this name should live. */
   def defaultLocation(ns: String, name: String): String =
     (root +: ns.split('.').toSeq :+ name).mkString("/")
@@ -103,10 +106,11 @@ private[sources] final class FsCatalogStore(val root: String) extends CatalogSto
       .filter(n => tableLocation(spark, ns, n).isDefined)
   }
 
-  override def tableLocation(spark: SparkSession, ns: String, name: String): Option[String] = {
-    val p = defaultLocation(ns, name)
-    if (LakeTable.currentVersion(spark, p).isDefined) Some(p) else None
-  }
+  override def tableLocation(spark: SparkSession, ns: String, name: String): Option[String] =
+    locationOf(spark, ns, name).filter(LakeTable.currentVersion(spark, _).isDefined)
+
+  override def locationOf(spark: SparkSession, ns: String, name: String): Option[String] =
+    Some(defaultLocation(ns, name))
 
   override def registerTable(spark: SparkSession, ns: String, name: String,
       location: String): Unit = () // existence IS the LakeTable dir

@@ -752,9 +752,9 @@ final class GraftRawStore extends RawStore {
       st.tableLocation(s, db, tbl) match {
         case None => null
         case Some(loc) =>
-          val agg = LakeTable.aggregatedColumnStats(s, loc)
-          val nullsAgg = LakeTable.aggregatedColumnNulls(s, loc)
           val table = LakeTable.state(s, loc)
+          val agg = LakeTable.aggregatedColumnStats(s, loc, table.commit.dirs)
+          val nullsAgg = LakeTable.aggregatedColumnNulls(s, loc, table.commit.dirs)
           val ndvMap = table.meta.ndv
           val schema = LakeTable.tableSchema(s, loc, table)
           def bd(v: String) = new java.math.BigDecimal(v)

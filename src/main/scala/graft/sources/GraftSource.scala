@@ -36,22 +36,20 @@ class DefaultSource extends TableProvider with DataSourceRegister {
   private def changeFeed(options: util.Map[String, String]): Boolean =
     "true".equalsIgnoreCase(String.valueOf(options.get("readChangeFeed")))
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = pathOf(options)
-    val spark = org.apache.spark.sql.graftglue.Glue.activeSession
-    if (changeFeed(options)) LakeTable.cdcSchema(spark, path, LakeTable.state(spark, path))
-    else if (LakeTable.currentVersion(spark, path).isDefined)
-      LakeTable.tableSchema(spark, path, versionOf(options))
-    else new StructType() // first write targets a fresh path
-  }
+  /** Empty: each table reads its schema from the state `getTable`
+    * resolves, so a path read resolves the head once.
+    */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = new StructType()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
+    val spark = org.apache.spark.sql.graftglue.Glue.activeSession
+    val (path, version) = (pathOf(properties), versionOf(properties))
     // With authorization on, remote tenants may not sidestep the
     // catalog's grants via path-based access (no-op otherwise).
-    graft.GraftAuthz.guardPathAccess(
-      org.apache.spark.sql.graftglue.Glue.activeSession, pathOf(properties))
-    if (changeFeed(properties)) new GraftCdcTable(pathOf(properties))
-    else new GraftTable(pathOf(properties), versionOf(properties), Option(schema))
+    graft.GraftAuthz.guardPathAccess(spark, path)
+    if (changeFeed(properties)) new GraftCdcTable(path)
+    else new GraftTable(path, version, Option(schema),
+      LakeTable.head(spark, path).map(h => version.fold(h)(LakeTable.at(spark, path, h, _))))
   }
 }

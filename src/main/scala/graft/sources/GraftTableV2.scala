@@ -30,17 +30,29 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (mergeSchema read), so Spark's by-name write validation is left to
   * the table itself — same stance as other lakehouse connectors.
   *
+  * Each handle reads the one state its loader resolved. Spark keeps
+  * the handle in the analyzed plan, so a scan of an unpinned handle
+  * advances it to the head (a re-executed Dataset sees later commits).
+  *
   * Reference capability: named tables over object storage via a
   * metastore (internal/controller/metastore.go:38-44); the catalog
   * plugin in GraftCatalog.scala builds on this Table.
   */
 final class GraftTable(path: String, version: Option[Long],
-    providedSchema: Option[StructType]) extends Table
+    providedSchema: Option[StructType], loaded: Option[LakeTable.State]) extends Table
     with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
   private def spark: SparkSession = org.apache.spark.sql.graftglue.Glue.activeSession
+
+  /** The pinned version under the head's meta, or the head as of the
+    * last load or scan; None for the target of a first path write.
+    */
+  @volatile private var bound: Option[GraftTable.Bound] = loaded.map(bind)
+  private def bind(st: LakeTable.State) =
+    new GraftTable.Bound(st, LakeTable.tableSchema(spark, path, st))
+  private def state: Option[LakeTable.State] = bound.map(_.st)
 
   /** Root path of the backing LakeTable (for the row-level SQL rule). */
   private[graft] def tablePath: String = path
@@ -49,6 +61,9 @@ final class GraftTable(path: String, version: Option[Long],
     * OF` (the MV router must never serve a pinned snapshot).
     */
   private[graft] def pinnedVersion: Option[Long] = version
+
+  /** DML on a DV-mode table takes the merge-on-read path (B46). */
+  private[graft] def dvMode: Boolean = state.exists(_.meta.dvMode)
 
   // ---- authorization (GraftAuthz) ---------------------------------
   // A catalog that resolved this handle for a SELECT-only principal
@@ -77,32 +92,22 @@ final class GraftTable(path: String, version: Option[Long],
 
   import org.apache.spark.sql.catalyst.InternalRow
 
-  /** The state this handle reads — the pinned version under the head's
-    * meta, or the head — resolved once per call; None before the first
-    * write to a fresh path.
-    */
-  private def resolved(): Option[LakeTable.State] =
-    LakeTable.head(spark, path).map(h => version.fold(h)(LakeTable.at(spark, path, h, _)))
+  private def partitionCols: Seq[String] = state.fold(Seq.empty[String])(_.meta.partitionBy)
 
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
-    LakeTable.meta(spark, path).partitionBy
-      .map(org.apache.spark.sql.connector.expressions.Expressions.identity).toArray
+    partitionCols.map(org.apache.spark.sql.connector.expressions.Expressions.identity).toArray
 
-  override def partitionSchema(): StructType =
-    resolved().fold(new StructType())(partitionState(_)._2)
-
-  /** The partition columns of `st` and their types. */
-  private def partitionState(st: LakeTable.State): (Seq[String], StructType) = {
-    val s = providedSchema.filter(_.nonEmpty).getOrElse(LakeTable.tableSchema(spark, path, st))
-    (st.meta.partitionBy, StructType(st.meta.partitionBy.map(s(_))))
+  override def partitionSchema(): StructType = {
+    val s = schema()
+    StructType(partitionCols.map(s(_)))
   }
 
   /** Partition values of every leaf dir in the current snapshot (one
     * row per distinct partition tuple across all file groups).
     */
   private def partitionRows(): Seq[(Seq[Option[String]], InternalRow)] = {
-    val st = resolved().getOrElse(return Nil)
-    val (partitionCols, pSchema) = partitionState(st)
+    val st = state.getOrElse(return Nil)
+    val pSchema = partitionSchema()
     LakeTable.partitionLeaves(spark,
         st.commit.dirs.map(d => new org.apache.hadoop.fs.Path(path, d).toString),
         partitionCols)
@@ -183,9 +188,7 @@ final class GraftTable(path: String, version: Option[Long],
     import org.apache.spark.sql.functions.lit
     val cond = predicates.flatMap(toColumn(_))
       .reduceOption(_ && _).getOrElse(lit(true))
-    // Delta's enableDeletionVectors semantics: DV-mode tables take the
-    // merge-on-read path (B46) — no group rewrite, cost ∝ deleted rows.
-    if (LakeTable.meta(spark, path).dvMode) LakeTable.deleteMor(spark, path, cond)
+    if (dvMode) LakeTable.deleteMor(spark, path, cond)
     else LakeTable.delete(spark, path, cond)
   }
 
@@ -199,8 +202,8 @@ final class GraftTable(path: String, version: Option[Long],
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
     m.put("provider", "graft")
-    // no head: the not-yet-created target of a first write
-    LakeTable.head(spark, path).foreach { case LakeTable.State(version, _, meta, _) =>
+    // no state: the not-yet-created target of a first write
+    state.foreach { case LakeTable.State(version, _, meta, _, _) =>
       m.put("current-version", version.toString)
       if (meta.sortBy.nonEmpty) m.put("write.sort.by", meta.sortBy.mkString(","))
       meta.checks.foreach { case (n, sql) => m.put(s"check.$n", sql) }
@@ -219,7 +222,7 @@ final class GraftTable(path: String, version: Option[Long],
   override def schema(): StructType =
     providedSchema.filter(_.nonEmpty).getOrElse {
       // no state: the not-yet-created target of a first write
-      resolved().fold(new StructType())(LakeTable.tableSchema(spark, path, _))
+      bound.fold(new StructType())(_.schema)
     }
 
   override def capabilities(): util.Set[TableCapability] = {
@@ -239,37 +242,37 @@ final class GraftTable(path: String, version: Option[Long],
     // DEFAULTs and coerces input types. A table with declared column
     // defaults therefore takes strict resolution (defaults + casts);
     // default-free tables keep the evolution-friendly open write.
-    val hasDefaults =
-      try schema().fields.exists(_.metadata.contains("CURRENT_DEFAULT"))
-      catch { case _: Exception => false }
+    val hasDefaults = schema().fields.exists(_.metadata.contains("CURRENT_DEFAULT"))
     (if (hasDefaults) base else base + TableCapability.ACCEPT_ANY_SCHEMA).asJava
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val head = LakeTable.state(spark, path)
-    val st = Option(options.get("version")).map(_.toLong).orElse(version)
-      .fold(head)(LakeTable.at(spark, path, head, _))
-    val atHead = st.version == head.version
-    val schema = LakeTable.tableSchema(spark, path, st)
-    // A snapshot carrying deletion vectors (B46 merge-on-read) serves
-    // through GraftDvScanBuilder: V1 filter pushdown + column pruning
-    // + sidecar-stats file skipping, vectors applied inside the
-    // relation's own columnar parquet subplan. `CALL system.compact`
-    // purges the vectors and puts the table back on the fully-V2
-    // columnar scan below.
-    // DV'd snapshots AND renamed tables serve through the V1-pushdown
-    // builder: both need per-group frame assembly (vector filters /
-    // physical→logical name mapping) that the raw columnar parquet
-    // scan below cannot express. Pushdown, pruning and stats survive
-    // (see GraftDvScanBuilder); compaction migrates groups to the
-    // current physical names and vector-free files, restoring the
-    // fully-V2 path.
+    val current = bound match {
+      case Some(b) if version.isDefined => b
+      case Some(b) =>
+        val st = LakeTable.advance(spark, path, b.st)
+        if (st eq b.st) b else bind(st)
+      case None => bind(LakeTable.snapshot(spark, path, version)) // created since the load
+    }
+    bound = Some(current)
+    val st = Option(options.get("version")).map(_.toLong)
+      .fold(current.st)(LakeTable.at(spark, path, current.st, _))
+    // only an unpinned scan of the head may report its aggregates
+    val atHead = version.isEmpty && (st eq current.st)
+    val schema = if (st eq current.st) current.schema else LakeTable.tableSchema(spark, path, st)
+    // DV'd snapshots (B46 merge-on-read) AND renamed tables serve
+    // through the V1-pushdown builder: both need per-group frame
+    // assembly (vector filters / physical→logical name mapping) that
+    // the raw columnar parquet scan below cannot express. Pushdown,
+    // pruning and stats survive (see GraftDvScanBuilder); compaction
+    // migrates groups to the current physical names and vector-free
+    // files, restoring the fully-V2 path.
     if (LakeTable.dvFor(spark, path, st.version, st.commit.dirs).nonEmpty ||
         st.meta.mappings.nonEmpty)
       return new GraftDvScanBuilder(spark, path, st, atHead, schema)
     val scanOpts = new CaseInsensitiveStringMap(
       (options.asCaseSensitiveMap().asScala.toMap ++ Map("mergeSchema" -> "true")).asJava)
-    new GraftScanBuilder(spark, path, st.meta, st.commit.dirs, schema, scanOpts, atHead)
+    new GraftScanBuilder(spark, path, st, schema, scanOpts, atHead)
   }
 
   /** Native DSv2 write path (GraftWrite.scala): task-level parquet
@@ -278,6 +281,15 @@ final class GraftTable(path: String, version: Option[Long],
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     guardWrite()
     new GraftWriteBuilder(path, info)
+  }
+}
+
+object GraftTable {
+  /** A table state with its schema, inferred on first use and then
+    * kept: a later DROP or vacuum may delete the files it comes from.
+    */
+  private final class Bound(val st: LakeTable.State, infer: => StructType) {
+    lazy val schema: StructType = infer
   }
 }
 
@@ -370,16 +382,11 @@ final class GraftDvScanBuilder(spark: SparkSession, path: String, st: LakeTable.
     // older snapshot must not report them as its own row count / NDV
     // (CBO would plan the old snapshot with the new table's shape).
     val unpruned = kept == total && atHead
-    val statRows: java.util.OptionalLong =
-      if (unpruned)
-        LakeTable.aggregatedColumnNulls(spark, path)
-          .fold(java.util.OptionalLong.empty())(t => java.util.OptionalLong.of(t._1))
-      else java.util.OptionalLong.empty()
-    val colStatsMap =
-      if (unpruned) LakeTable.v2ColumnStats(spark, path, st.meta, required.fieldNames.toSeq)
-      else new java.util.HashMap[
+    val (statRows, colStatsMap) =
+      if (unpruned) LakeTable.v2Stats(spark, path, st, required.fieldNames.toSeq)
+      else (java.util.OptionalLong.empty(), new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
+        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]())
     new org.apache.spark.sql.connector.read.V1Scan
         with org.apache.spark.sql.connector.read.SupportsReportStatistics {
       override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
@@ -493,15 +500,15 @@ final class GraftCdcTable(path: String) extends Table with SupportsRead {
   * deliberately not layered on top (the API read paths still apply
   * it via pruneFilesByDir).
   */
-final class GraftScanBuilder(spark: SparkSession, path: String, meta: LakeTable.TableMeta,
-    dirs: Seq[String], schema: StructType, options: CaseInsensitiveStringMap,
-    atHead: Boolean = true)
+final class GraftScanBuilder(spark: SparkSession, path: String, st: LakeTable.State,
+    schema: StructType, options: CaseInsensitiveStringMap, atHead: Boolean = true)
     extends org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
   import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 
-  private val partCols = meta.partitionBy
+  private val partCols = st.meta.partitionBy
+  private val dirs = st.commit.dirs
 
   private def mkInner(paths: Seq[String])
       : org.apache.spark.sql.connector.read.ScanBuilder
@@ -541,7 +548,7 @@ final class GraftScanBuilder(spark: SparkSession, path: String, meta: LakeTable.
     val all = dirs.map(d => new Path(path, d).toString)
     val paths =
       if (bounds.isEmpty) all
-      else LakeTable.pruneFiles(spark, path, meta.renames, dirs, bounds).getOrElse(all)
+      else LakeTable.pruneFiles(spark, path, st.meta.renames, dirs, bounds).getOrElse(all)
     val inner = mkInner(paths)
     if (pushed.nonEmpty) inner.pushFilters(pushed)
     prunedSchema.foreach(inner.pruneColumns)
@@ -552,7 +559,7 @@ final class GraftScanBuilder(spark: SparkSession, path: String, meta: LakeTable.
     // row-count/NDV aggregates always describe currentVersion, so a
     // VERSION/TIMESTAMP AS OF scan must not claim them as its own
     // (plans only — results were always version-correct).
-    new GraftStreamableScan(inner.build(), spark, path, meta, schema, options,
+    new GraftStreamableScan(inner.build(), spark, path, st, schema, options,
       org.apache.spark.sql.types.StructType(partCols.map(c => schema(c))),
       snapshotStats = (paths eq all) && atHead)
   }

@@ -464,7 +464,7 @@ final class GraftKeyedFilePartition(index: Int,
   * storage partition, so partition sizing governs parallelism.
   */
 final class GraftStreamableScan(val inner: Scan, spark: SparkSession, val path: String,
-    meta: LakeTable.TableMeta, schema: StructType, options: CaseInsensitiveStringMap,
+    st: LakeTable.State, schema: StructType, options: CaseInsensitiveStringMap,
     partSchema: StructType = new StructType(),
     snapshotStats: Boolean = false) extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -489,19 +489,14 @@ final class GraftStreamableScan(val inner: Scan, spark: SparkSession, val path: 
         Some(s.estimateStatistics())
       case _ => None
     }
-    val rows: java.util.OptionalLong =
-      if (snapshotStats)
-        graft.sources.LakeTable.aggregatedColumnNulls(spark, path)
-          .fold(base.fold(java.util.OptionalLong.empty())(_.numRows()))(t =>
-            java.util.OptionalLong.of(t._1))
-      else base.fold(java.util.OptionalLong.empty())(_.numRows())
-    val cstats =
-      if (snapshotStats)
-        graft.sources.LakeTable.v2ColumnStats(spark, path, meta,
-          inner.readSchema().fieldNames.toSeq)
-      else new java.util.HashMap[
+    val baseRows = base.fold(java.util.OptionalLong.empty())(_.numRows())
+    val (rows, cstats) =
+      if (snapshotStats) {
+        val (n, cs) = LakeTable.v2Stats(spark, path, st, inner.readSchema().fieldNames.toSeq)
+        (if (n.isPresent) n else baseRows, cs)
+      } else (baseRows, new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
+        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]())
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         base.fold(java.util.OptionalLong.empty())(_.sizeInBytes())

@@ -121,9 +121,12 @@ object LakeTable {
     * down, so a verb's reads, writes and commit agree on one value.
     * `legacy`: the meta was read from a layout older than meta objects
     * holding tags and the CDC key, so the next commit writes it afresh.
+    * `stamp`: the head commit file's modification time when resolved —
+    * a table dropped and created again at its path can reach the same
+    * version, not the same file.
     */
   final case class State(version: Long, commit: Commit, meta: TableMeta,
-      legacy: Boolean = false)
+      legacy: Boolean = false, stamp: Long = 0L)
 
   /** The action of a commit that changes only the table meta. */
   private[graft] val MetaAction = "meta"
@@ -189,26 +192,37 @@ object LakeTable {
       }
     } catch { case _: Exception => None } // torn/corrupt hint → listing
 
-  def currentVersion(spark: SparkSession, path: String): Option[Long] = {
+  def currentVersion(spark: SparkSession, path: String): Option[Long] =
+    headCommit(spark, path, None).map(_._1)
+
+  /** The head version and its commit file's modification time, probed
+    * forward from `from` or else the hint; listed when that version's
+    * file is gone (vacuumed past) or there is no hint.
+    */
+  private def headCommit(spark: SparkSession, path: String,
+      from: Option[Long]): Option[(Long, Long)] = {
     val ld = logDir(path)
     val fs = fsOf(spark, ld)
-    val fromCheckpoint = checkpointVersion(spark, path).filter { v0 =>
+    def stat(v: Long): Option[(Long, Long)] = {
       logOps.increment()
-      fs.exists(commitFile(path, v0)) // stale-beyond-vacuum hint → listing
-    }.map { v0 =>
-      var v = v0
-      while ({ logOps.increment(); fs.exists(commitFile(path, v + 1)) }) v += 1
-      v
+      try Some(v -> fs.getFileStatus(commitFile(path, v)).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
     }
-    fromCheckpoint.orElse {
+    @scala.annotation.tailrec
+    def forward(h: (Long, Long)): (Long, Long) = stat(h._1 + 1) match {
+      case Some(next) => forward(next)
+      case None => h
+    }
+    from.orElse(checkpointVersion(spark, path)).flatMap(stat).map(forward).orElse {
       if (!fs.exists(ld)) None
       else {
-        val names = fs.listStatus(ld).map(_.getPath.getName)
-        logOps.add(names.length.toLong)
-        val vs = names
-          .filter(n => n.startsWith("v") && n.endsWith(".json"))
-          .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-        if (vs.isEmpty) None else Some(vs.max)
+        val listed = fs.listStatus(ld)
+        logOps.add(listed.length.toLong)
+        val vs = listed.map(st => st.getPath.getName -> st.getModificationTime).collect {
+          case (n, t) if n.startsWith("v") && n.endsWith(".json") =>
+            n.stripPrefix("v").stripSuffix(".json").toLong -> t
+        }
+        if (vs.isEmpty) None else Some(vs.maxBy(_._1))
       }
     }
   }
@@ -753,12 +767,11 @@ object LakeTable {
     * sound: the stored min is ≤ the true min, the stored max ≥).
     * O(groups) tiny sidecar reads; columns whose sidecars disagree on
     * kind (a widened/retyped history) are dropped rather than merged
-    * unsoundly.
+    * unsoundly. Over the snapshot of commit dirs `dirs`.
     */
-  private[graft] def aggregatedColumnStats(spark: SparkSession, path: String)
-      : Map[String, (Char, String, String)] = {
-    val cur = currentVersion(spark, path).getOrElse(return Map.empty)
-    val roots = readCommit(spark, path, cur).dirs.map(groupRoot).distinct
+  private[graft] def aggregatedColumnStats(spark: SparkSession, path: String,
+      dirs: Seq[String]): Map[String, (Char, String, String)] = {
+    val roots = dirs.map(groupRoot).distinct
     val acc = scala.collection.mutable.Map.empty[String, (Char, String, String)]
     val dropped = scala.collection.mutable.Set.empty[String]
     roots.foreach { root =>
@@ -790,12 +803,11 @@ object LakeTable {
     * better no number than a wrong one — the same stance the HMS
     * facade takes for the stats it cannot know. Columns whose footers
     * didn't report null counts are absent from the map, the rest stay
-    * exact.
+    * exact, over the snapshot of commit dirs `dirs`.
     */
-  private[graft] def aggregatedColumnNulls(spark: SparkSession, path: String)
-      : Option[(Long, Map[String, Long])] = {
-    val cur = currentVersion(spark, path).getOrElse(return None)
-    val roots = readCommit(spark, path, cur).dirs.map(groupRoot).distinct
+  private[graft] def aggregatedColumnNulls(spark: SparkSession, path: String,
+      dirs: Seq[String]): Option[(Long, Map[String, Long])] = {
+    val roots = dirs.map(groupRoot).distinct
     // file -> (rows, col -> nulls); -1 nulls = footer didn't say
     val perFile = scala.collection.mutable.Map.empty[String, (Long, Map[String, Long])]
     roots.foreach { root =>
@@ -1533,22 +1545,23 @@ object LakeTable {
     updateMeta(spark, path, base, (_, m) => m.copy(sortBy = cols))
   }
 
-  /** DSv2 per-column statistics for SupportsReportStatistics scans —
-    * what Spark's OWN cost-based optimizer (join reorder keys on
-    * rowCount × NDV) consumes: NDV and string lengths from the stored
-    * ANALYZE results, null counts footer-exact from the sidecars.
+  /** DSv2 statistics for SupportsReportStatistics scans — what
+    * Spark's OWN cost-based optimizer (join reorder keys on rowCount ×
+    * NDV) consumes: the sidecars' exact row count (empty when unknown)
+    * and per column NDV and string lengths from the stored ANALYZE
+    * results, null counts footer-exact from the same sidecar read.
     * Snapshot-level, so callers must only attach it to UNPRUNED scans.
     */
-  private[graft] def v2ColumnStats(spark: SparkSession, path: String, tm: TableMeta,
-      cols: Seq[String]): java.util.Map[
+  private[graft] def v2Stats(spark: SparkSession, path: String, st: State,
+      cols: Seq[String]): (java.util.OptionalLong, java.util.Map[
       org.apache.spark.sql.connector.expressions.NamedReference,
-      org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
+      org.apache.spark.sql.connector.read.colstats.ColumnStatistics]) = {
     val m = new java.util.HashMap[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    val ndv = tm.ndv
-    val nulls = aggregatedColumnNulls(spark, path)
-      .map(_._2).getOrElse(Map.empty[String, Long])
+    val ndv = st.meta.ndv
+    val agg = aggregatedColumnNulls(spark, path, st.commit.dirs)
+    val nulls = agg.fold(Map.empty[String, Long])(_._2)
     cols.foreach { c =>
       val nd = ndv.get(c)
       val nn = nulls.get(c)
@@ -1569,7 +1582,7 @@ object LakeTable {
           })
       }
     }
-    m
+    (agg.fold(java.util.OptionalLong.empty())(t => java.util.OptionalLong.of(t._1)), m)
   }
 
   /** One column's stored ANALYZE result: approximate distinct count,
@@ -1964,16 +1977,26 @@ object LakeTable {
 
   /** The head state; None when no table exists at `path`. */
   def head(spark: SparkSession, path: String): Option[State] =
-    currentVersion(spark, path).map(stateAt(spark, path, _))
+    headCommit(spark, path, None).map { case (v, t) => stateAt(spark, path, v, t) }
 
   /** The head state; throws when no table exists at `path`. */
   def state(spark: SparkSession, path: String): State =
     head(spark, path).getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
 
-  private def stateAt(spark: SparkSession, path: String, v: Long): State = {
+  /** `st` advanced to the head: two stats when nothing was published
+    * since (`v<N>.json` is the same file, `v<N+1>.json` is not there).
+    */
+  private[graft] def advance(spark: SparkSession, path: String, st: State): State =
+    headCommit(spark, path, Some(st.version)) match {
+      case Some((st.version, st.stamp)) => st
+      case Some((v, t)) => stateAt(spark, path, v, t)
+      case None => throw new IllegalArgumentException(s"no LakeTable at $path")
+    }
+
+  private def stateAt(spark: SparkSession, path: String, v: Long, stamp: Long): State = {
     val c = readCommit(spark, path, v)
     val (m, legacy) = readMeta(spark, path, c.meta)
-    State(v, c, m, legacy)
+    State(v, c, m, legacy, stamp)
   }
 
   /** Snapshot `version` (the head when None) under the HEAD's meta —
@@ -2517,10 +2540,8 @@ object LakeTable {
     * common "recent timestamp" case reads O(1) commits (an ancient
     * timestamp walks the retained log — bounded by vacuum retention).
     */
-  def versionAt(spark: SparkSession, path: String, tsMillis: Long): Option[Long] = {
-    val cur = currentVersion(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
-    var v = cur
+  def versionAt(spark: SparkSession, path: String, tsMillis: Long, head: Long): Option[Long] = {
+    var v = head
     while (v >= 0) {
       val ok = try readCommit(spark, path, v).ts <= tsMillis
       catch { case _: java.io.FileNotFoundException => return None } // vacuumed past
@@ -2742,9 +2763,9 @@ object LakeTable {
   /** Resolve a version STRING: all digits = the version itself,
     * anything else = a tag name.
     */
-  def resolveVersion(spark: SparkSession, path: String, spec: String): Long =
+  def resolveVersion(spark: SparkSession, path: String, spec: String, head: State): Long =
     if (spec.isEmpty || !spec.forall(_.isDigit))
-      state(spark, path).meta.tags.getOrElse(spec,
+      head.meta.tags.getOrElse(spec,
         throw new IllegalArgumentException(s"no tag '$spec' on $path"))
     else spec.toLongOption.getOrElse(throw new IllegalArgumentException(
       s"version '$spec' of $path is past ${Long.MaxValue}"))
@@ -2895,8 +2916,9 @@ object LakeTable {
       val have = df.columns.toSet
       val aligned = df.select(col(key).as(s"${tag}_k") +: lit(1).as(s"${tag}_present") +:
         dataCols.map(c => (if (have(c)) col(c) else lit(null)).as(s"${tag}_$c")): _*)
+      // a key-only table has no data to hash: only inserts and deletes
       aligned.withColumn(s"${tag}_h",
-        xxhash64(dataCols.map(c => col(s"${tag}_$c")): _*))
+        if (dataCols.isEmpty) lit(0L) else xxhash64(dataCols.map(c => col(s"${tag}_$c")): _*))
     }
     val o = hashed(oldDf, "o")
     val n = hashed(newDf, "n")
@@ -3008,9 +3030,9 @@ object LakeTable {
 
   /** Batch read of the change feed for versions in (fromExclusive,
     * toInclusive]: change files scan as-is; append groups scan ONCE
-    * (vectorized, all dirs in one scan) with `_commit_version`
-    * recovered from the group dir name (`d<v>-<uuid>`) — no per-append
-    * plan growth and no change-file duplication for inserts.
+    * (vectorized, all dirs in one scan), each file's `_commit_version`
+    * looked up by its group dir (`d<v>-<id>`) in the slices — no
+    * per-append plan growth, no change-file duplication for inserts.
     */
   def readChangeFeed(spark: SparkSession, path: String,
       fromExclusive: Long = -1L, toInclusive: Long = Long.MinValue): DataFrame = {
@@ -3029,10 +3051,11 @@ object LakeTable {
         .schema(org.apache.spark.sql.types.StructType(
           schema.fields.filter(f => dataCols.contains(f.name))))
         .parquet(synth.map(_.dirPath): _*)
+      val versionOf = typedLit(synth.map(sl => new Path(sl.dirPath).getName -> sl.version).toMap)
       parts += raw
         .withColumn("change_type", lit("insert"))
-        .withColumn("_commit_version",
-          regexp_extract(input_file_name(), "/d(\\d+)-[0-9a-f]{8}/", 1).cast("long"))
+        .withColumn("_commit_version", element_at(versionOf,
+          regexp_extract(input_file_name(), ".*/(d\\d+-[0-9a-f]{8})/", 1)))
         .select(schema.fields.map(f => col(f.name)): _*)
     }
     parts.result().reduceOption(_.unionByName(_)).getOrElse {
@@ -3733,7 +3756,7 @@ object LakeTable {
     * storage; time travel before the horizon is forfeited.
     */
   def vacuum(spark: SparkSession, path: String, retainFrom: Long): Long = {
-    val cur = currentVersion(spark, path)
+    val (cur, stamp) = headCommit(spark, path, None)
       .getOrElse(throw new IllegalArgumentException(s"no LakeTable at $path"))
     // A version in the window may have no commit file (below a clone's
     // base, or dropped by an earlier vacuum) — nothing to pin there.
@@ -3791,7 +3814,7 @@ object LakeTable {
     fs.listStatus(logDir(path)).map(_.getPath).foreach { m =>
       if (m.getName.startsWith("meta-") && !keepMeta(m.getName)) fs.delete(m, false)
     }
-    if (!stateAt(spark, path, cur).legacy)
+    if (!stateAt(spark, path, cur, stamp).legacy)
       (legacyMetaFile(path) +: Seq("_tags.json", "_cdc.json").map(new Path(logDir(path), _)))
         .foreach(fs.delete(_, false))
     keepDirs.size.toLong

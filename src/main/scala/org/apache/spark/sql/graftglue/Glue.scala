@@ -28,6 +28,13 @@ object Glue {
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
+  /** Whether Spark (core or SQL) registers config `key`; a session
+    * SET of a registered key is rejected unless SQL marks it
+    * modifiable. `ConfigEntry` is private[spark], hence this shim.
+    */
+  def registeredConf(key: String): Boolean =
+    org.apache.spark.internal.config.ConfigEntry.findEntry(key) != null
+
   /** Connector literal over a Catalyst-internal value (UTF8String,
     * Int, …) — the shape BatchScanExec hands to runtime-filterable
     * scans; the case class is private[sql], hence this shim.

@@ -33,6 +33,30 @@ class GatewaySpec extends AnyFunSuite {
     assert(t2.conf.get("spark.sql.shuffle.partitions") != "7")
   }
 
+  test("a gateway child session carries the parent's runtime settings and pins the wire identity") {
+    val parent = spark.newSession()
+    parent.conf.set("spark.sql.shuffle.partitions", "13")
+    parent.conf.set("spark.sql.catalog.child_cat", "graft.sources.GraftCatalog")
+    parent.conf.set("spark.graft.approxQuantiles", "true")
+    // a core key in the session conf, as builder().config(..).getOrCreate()
+    // leaves one on an existing session: not copied, and no failure
+    parent.sessionState.conf.setConfString("spark.task.maxFailures", "9")
+    val child = GraftSession.childSession(parent, "alice", Seq(
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "not-a-number", // rejected value: skipped
+      "spark.sql.warehouse.dir" -> "/elsewhere",        // static: skipped
+      "spark.graft.sql.user" -> "mallory"))             // identity: dropped
+    assert(child.conf.get("spark.sql.shuffle.partitions") == "13")
+    assert(child.conf.get("spark.sql.catalog.child_cat") == "graft.sources.GraftCatalog")
+    assert(child.conf.get("spark.graft.approxQuantiles") == "true")
+    assert(child.conf.getOption("spark.task.maxFailures") != Some("9"))
+    assert(child.conf.get("spark.sql.ansi.enabled") == "false")
+    assert(child.conf.get("spark.sql.warehouse.dir") == parent.conf.get("spark.sql.warehouse.dir"))
+    assert(child.conf.get("spark.graft.sql.user") == "alice")
+    assert(parent.conf.getOption("spark.graft.sql.user").isEmpty)
+    assert(parent.conf.get("spark.sql.ansi.enabled") != "false")
+  }
+
   test("one shared catalog: tenant A's CTAS is visible to tenant B by name") {
     val t1 = spark.newSession()
     val t2 = spark.newSession()

@@ -264,13 +264,14 @@ class LakeTableSpec extends AnyFunSuite {
     val t1 = System.currentTimeMillis()
     Thread.sleep(15)
     LakeTable.append(spark, p, Seq((2L, "b")).toDF("k", "v"))
-    assert(LakeTable.versionAt(spark, p, t1).contains(0L))
-    assert(LakeTable.versionAt(spark, p, System.currentTimeMillis()).contains(1L))
+    val cur = LakeTable.state(spark, p).version
+    assert(LakeTable.versionAt(spark, p, t1, cur).contains(0L))
+    assert(LakeTable.versionAt(spark, p, System.currentTimeMillis(), cur).contains(1L))
     // before the table existed
     val c0 = LakeTable.readCommit(spark, p, 0L)
-    assert(LakeTable.versionAt(spark, p, c0.ts - 1).isEmpty)
+    assert(LakeTable.versionAt(spark, p, c0.ts - 1, cur).isEmpty)
     // the resolved snapshot reads the right content
-    val v0 = LakeTable.versionAt(spark, p, t1).get
+    val v0 = LakeTable.versionAt(spark, p, t1, cur).get
     assert(LakeTable.read(spark, p, Some(v0)).count() == 1L)
   }
 
@@ -1709,6 +1710,42 @@ class LakeTableSpec extends AnyFunSuite {
       ("delete", 1L, "a", 4L)), rows())
     // batch read of the feed sees the same four records
     assert(LakeTable.readChangeFeed(spark, p).count() == 4L)
+  }
+
+  test("CDC on a key-only table: merge, delete and restore diff with no data columns") {
+    val p = s"$root/cdc_keyonly"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p))
+    LakeTable.create(spark, p, Seq(1L, 2L, 3L).toDF("k"))
+    LakeTable.enableCdc(spark, p, "k")                     // v1
+    LakeTable.merge(spark, p, Seq(3L, 4L).toDF("k"), "k")  // v2: 4 is new
+    LakeTable.delete(spark, p, col("k") === 1L)            // v3
+    LakeTable.restore(spark, p, 2L)                        // v4: 1 is back
+    val feed = LakeTable.readChangeFeed(spark, p)
+      .select("change_type", "k", "_commit_version").as[(String, Long, Long)].collect().toSet
+    assert(feed == Set(("insert", 4L, 2L), ("delete", 1L, 3L), ("insert", 1L, 4L)), feed)
+    assert(LakeTable.read(spark, p).as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
+  }
+
+  test("batch change feed versions come from the commit log, not a d<v>-<id> segment of the root") {
+    import org.apache.spark.sql.streaming.Trigger
+    val base = s"$root/d7-0123abcd"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
+    val p = s"$base/cdc_versions"
+    LakeTable.create(spark, p, Seq((1L, "a")).toDF("k", "v"))
+    LakeTable.enableCdc(spark, p, "k")                       // v1
+    LakeTable.append(spark, p, Seq((2L, "b")).toDF("k", "v")) // v2
+    LakeTable.append(spark, p, Seq((3L, "c")).toDF("k", "v")) // v3
+    val batch = LakeTable.readChangeFeed(spark, p)
+      .select("k", "_commit_version").as[(Long, Long)].collect().toSet
+    assert(batch == Set((2L, 2L), (3L, 3L)), batch)
+    val out = s"$base/out"
+    spark.readStream.format("graft").option("readChangeFeed", "true").load(p)
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val streamed = spark.read.parquet(out)
+      .select("k", "_commit_version").as[(Long, Long)].collect().toSet
+    assert(streamed == batch, s"stream $streamed vs batch $batch")
   }
 
   test("CDC table scan pushes filters and skips whole change-file dirs by _commit_version") {

@@ -148,7 +148,7 @@ class PlanSpec extends AnyFunSuite {
         case f: FilePartition => f.files.length
         case _ => 0
       }.sum
-    val scan = new GraftTable(path, None, None)
+    val scan = new GraftTable(path, None, None, LakeTable.head(spark, path))
       .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Collections.emptyMap())).build().asInstanceOf[GraftStreamableScan]
     val before = files(scan)

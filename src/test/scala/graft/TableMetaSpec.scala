@@ -232,8 +232,8 @@ class TableMetaSpec extends AnyFunSuite {
     val (quoted, listed) = ("rel \"1\"", "a,b=c")
     LakeTable.setTag(spark, p, quoted, 0L)
     LakeTable.setTag(spark, p, listed, 1L)
-    assert(LakeTable.resolveVersion(spark, p, quoted) == 0L)
-    assert(LakeTable.resolveVersion(spark, p, listed) == 1L)
+    assert(LakeTable.resolveVersion(spark, p, quoted, LakeTable.state(spark, p)) == 0L)
+    assert(LakeTable.resolveVersion(spark, p, listed, LakeTable.state(spark, p)) == 1L)
     val m = LakeTable.meta(spark, p)
     assert(m.tags == Map(quoted -> 0L, listed -> 1L))
     assert(TableMeta.parse(TableMeta.render(m)) == m)
@@ -246,9 +246,10 @@ class TableMetaSpec extends AnyFunSuite {
   test("version specs: empty, past Long.MaxValue and unknown tags fail naming table and spec") {
     val p = freshPath("specs")
     LakeTable.create(spark, p, Seq(1L).toDF("k"))
-    assert(LakeTable.resolveVersion(spark, p, "0") == 0L)
+    val h = LakeTable.state(spark, p)
+    assert(LakeTable.resolveVersion(spark, p, "0", h) == 0L)
     Seq("", "99999999999999999999", "nope").foreach { spec =>
-      val e = intercept[IllegalArgumentException](LakeTable.resolveVersion(spark, p, spec))
+      val e = intercept[IllegalArgumentException](LakeTable.resolveVersion(spark, p, spec, h))
       assert(e.getMessage.contains(s"'$spec'") && e.getMessage.contains(p), e.getMessage)
     }
   }
@@ -257,7 +258,7 @@ class TableMetaSpec extends AnyFunSuite {
     val p = freshPath("props_corrupt")
     LakeTable.create(spark, p, Seq(1L).toDF("k"))
     LakeTable.setSortBy(spark, p, Seq("k"))
-    val fresh = new graft.sources.GraftTable(freshPath("props_none"), None, None)
+    val fresh = new graft.sources.GraftTable(freshPath("props_none"), None, None, None)
     assert(fresh.properties().keySet().toArray.toSeq == Seq("provider"))
     val meta = new org.apache.hadoop.fs.Path(s"$p/_graft_log",
       LakeTable.state(spark, p).commit.meta.get)
@@ -265,9 +266,29 @@ class TableMetaSpec extends AnyFunSuite {
     val out = fs.create(meta, true)
     try out.write("{\"partitionBy\":[".getBytes("UTF-8")) finally out.close() // torn tail
     val e = intercept[IllegalStateException] {
-      new graft.sources.GraftTable(p, None, None).properties()
+      new graft.sources.GraftTable(p, None, None, LakeTable.head(spark, p)).properties()
     }
     assert(e.getMessage.contains("corrupt table meta"), e.getMessage)
+    // through the catalog: the load fails, neither a read nor a write
+    // is served under a guessed schema or capability set
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.tmeta")
+    spark.sql("DROP TABLE IF EXISTS graft_cat.tmeta.corrupt")
+    spark.sql("CREATE TABLE graft_cat.tmeta.corrupt (k BIGINT, v BIGINT)")
+    spark.sql("ALTER TABLE graft_cat.tmeta.corrupt ALTER COLUMN v SET DEFAULT 7")
+    val cp = s"${GraftSession.catalogRoot}/tmeta/corrupt"
+    val cmeta = new org.apache.hadoop.fs.Path(s"$cp/_graft_log",
+      LakeTable.state(spark, cp).commit.meta.get)
+    val cout = fs.create(cmeta, true)
+    try cout.write("{\"partitionBy\":[".getBytes("UTF-8")) finally cout.close()
+    def corrupt(stmt: String): Unit = {
+      val t = intercept[Exception](spark.sql(stmt).collect())
+      val msgs = Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("corrupt table meta")), s"$stmt: $t")
+    }
+    corrupt("SELECT * FROM graft_cat.tmeta.corrupt")
+    corrupt("INSERT INTO graft_cat.tmeta.corrupt (k) VALUES (1)")
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(cp, "_graft_log"))
+      .count(_.getPath.getName.matches("""v\d{5}\.json""")) == 2, "the INSERT committed")
   }
 
   test("every meta verb leaves only write-once commits and meta objects in _graft_log") {
@@ -330,8 +351,8 @@ class TableMetaSpec extends AnyFunSuite {
     val legacy = LakeTable.meta(spark, p)
     assert(legacy == TableMeta(ver = 1L, sortBy = Seq("k"), tags = Map("first" -> 0L),
       cdcKey = Some("k")), legacy)
-    assert(LakeTable.resolveVersion(spark, p, "first") == 0L)
-    val props = new graft.sources.GraftTable(p, None, None).properties()
+    assert(LakeTable.resolveVersion(spark, p, "first", LakeTable.state(spark, p)) == 0L)
+    val props = new graft.sources.GraftTable(p, None, None, LakeTable.head(spark, p)).properties()
     assert(props.get("tags") == "first=0" && props.get("cdc.key") == "k", props)
     // the first commit carries the folded meta in a fresh object, and
     // its change records follow the legacy CDC key
@@ -358,8 +379,8 @@ class TableMetaSpec extends AnyFunSuite {
     val first = GateFs.holding(LakeTable.setTag(spark, p, "first", 0L))
     LakeTable.setTag(spark, p, "second", 1L) // lands while the first is held
     GateFs.finish(first)
-    assert(LakeTable.resolveVersion(spark, p, "first") == 0L)
-    assert(LakeTable.resolveVersion(spark, p, "second") == 1L)
+    assert(LakeTable.resolveVersion(spark, p, "first", LakeTable.state(spark, p)) == 0L)
+    assert(LakeTable.resolveVersion(spark, p, "second", LakeTable.state(spark, p)) == 1L)
   }
 
   test("an enableCdc racing a merge never leaves a data commit without change records") {
