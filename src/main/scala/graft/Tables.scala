@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Glue
 import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated lakehouse tables (TESTDATA.md).
@@ -54,8 +55,10 @@ object Tables {
     if (df.queryExecution.executedPlan
         .isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
       return df
+    // The planned query's own RDD: `df.rdd` would analyze and plan
+    // the scan a second time just to count its partitions.
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val cur = try df.rdd.getNumPartitions
+    val cur = try df.queryExecution.toRdd.getNumPartitions
       catch { case scala.util.control.NonFatal(_) => target }
     if (cur >= target) df else df.repartition(target)
   }
@@ -70,11 +73,22 @@ object Tables {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
+  /** `spark.read.parquet(path)` without its schema job: the schema
+    * Spark would infer is read from the footer on the driver
+    * (`Glue.parquetFooterSchema`) and handed to the reader, so the
+    * first Spark job is the caller's own. One shape reads differently:
+    * files under `k=v/` that also store `k` get `k` last and typed as
+    * stored, as with any reader-given schema (inference keeps its
+    * place and the partition value's type).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Glue.parquetFooterSchema(spark, path)).parquet(path)
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts may be parquet TIMESTAMP(NANOS), read as a long under
     // the nanosAsLong setting GraftSession fixes (SPARK-40819). Values
     // are µs-aligned, so the ns→µs rescale below is lossless.
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (acc, f) =>
       if (f.name == "ts" && f.dataType == LongType)
         acc.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

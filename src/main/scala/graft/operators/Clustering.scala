@@ -309,8 +309,12 @@ object Clustering {
     // expensive stage from scratch — exactly the large-graph regime the
     // dispatch protects. The distributed branch checkpoints its edge
     // union regardless, so this adds no materialization it didn't pay.
-    val edges0 = DedupOps.ngramPairs(s, d, 0.8).select("doc_a", "doc_b")
-      .localCheckpoint(true)
+    // Once the edges are materialized nothing reads the pair plan
+    // again, so the shingle checkpoint `ngramPairs` may have taken
+    // (DedupOps.sharedShingles) is released with it.
+    val pairs = DedupOps.ngramPairs(s, d, 0.8)
+    val edges0 = pairs.select("doc_a", "doc_b").localCheckpoint(true)
+    release(pairs)
     val lim = ccDriverEdgeLimit(s)
     if (lim > 0) {
       // limit(n+1) bounds the collect: n+1 rows back means "too big".

@@ -810,7 +810,7 @@ object Lakehouse {
         t(s, d, "orders").write.mode("overwrite").parquet(base)
         graft.sources.Rollup.createAndRegister(s, base, s"$scratch/mv_orders_auto",
           dims = Seq("o_orderpriority", "o_orderstatus"), measures = Seq("o_totalprice"))
-        s.read.parquet(base)
+        Tables.parquet(s, base)
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("rev"),
             round(max("o_totalprice"), 2).as("top"))

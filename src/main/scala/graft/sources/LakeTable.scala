@@ -1145,7 +1145,7 @@ object LakeTable {
       val fs = fsOf(spark, dirPath)
       val base = fs.makeQualified(dirPath).toString
       val cols = columns
-      val df = spark.read.parquet(dirPath.toString)
+      val df = graft.Tables.parquet(spark, dirPath.toString)
         .select(input_file_name().as("__file") +: cols.map(col): _*)
       import spark.implicits._
       val partials = df.mapPartitions { rows =>
@@ -4070,7 +4070,7 @@ object Rollup {
     val base =
       if (LakeTable.currentVersion(spark, basePath).isDefined)
         LakeTable.read(spark, basePath)
-      else spark.read.parquet(basePath)
+      else graft.Tables.parquet(spark, basePath)
     val aggs = measures.flatMap(m => Seq(
       sum(col(m)).as(s"sum_$m"), min(col(m)).as(s"min_$m"), max(col(m)).as(s"max_$m"))) :+
       count(lit(1)).as("cnt")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Glue
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Q
@@ -37,34 +38,37 @@ object EventPipeline {
     * rounds COPIED the source into a scratch landing dir first — a
     * driver-side, single-threaded byte copy charged to every stream
     * row, and a non-starter at 100 TB where the landing dir must be
-    * read in place. The byte count sizes state partitions
-    * ([[withStreamPartitions]]).
+    * read in place. File stream sources need an explicit schema: the
+    * one Spark would infer, read from the source's footer on the
+    * driver (`Glue.parquetFooterSchema` over the literal path), so no
+    * Spark job runs before the stream's first batch. The byte count
+    * sizes state partitions ([[withStreamPartitions]]).
     */
-  private def streamSource(spark: SparkSession, src: org.apache.hadoop.fs.Path): (String, Long) = {
+  private def streamSource(spark: SparkSession, src: org.apache.hadoop.fs.Path): (DataFrame, Long) = {
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val path =
       if (fs.getFileStatus(src).isDirectory) globEscape(src.toString)
       else s"${globEscape(src.getParent.toString)}/{${globEscape(src.getName)}}"
-    (path, graft.Tables.pathBytes(spark, src.toString))
+    (spark.readStream.schema(Glue.parquetFooterSchema(spark, Seq(src))).parquet(path),
+      graft.Tables.pathBytes(spark, src.toString))
   }
 
   private def globEscape(p: String): String = p.replaceAll("""([\\*?\[\]{},])""", """\\$1""")
 
-  /** Streaming view of the events table plus its source bytes. File
-    * stream sources need an explicit schema; events.ts is parquet
-    * TIMESTAMP(NANOS), read as long (SPARK-40819, under the setting
-    * GraftSession fixes) and rescaled, mirroring graft.Tables.
+  /** Streaming view of the events table plus its source bytes.
+    * events.ts is parquet TIMESTAMP(NANOS), read as long (SPARK-40819,
+    * under the setting GraftSession fixes) and rescaled, mirroring
+    * graft.Tables.
     */
   def eventsStream(spark: SparkSession, dir: String): (DataFrame, Long) = {
-    val (ingest, bytes) = streamSource(spark, new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
-    val raw: StructType = spark.read.parquet(ingest).schema
+    val (raw, bytes) = streamSource(spark, new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
     // Event-time ops (withWatermark, window, session_window) require
     // TIMESTAMP (LTZ); the generated parquet may carry ts as NANOS-long
     // or TIMESTAMP_NTZ depending on writer version. Session tz is UTC,
     // so the NTZ->LTZ cast is wall-clock lossless; windowed outputs
     // cast back to NTZ to match the oracle's naive timestamps.
-    val ev = spark.readStream.schema(raw).parquet(ingest)
-      .withColumn("ts", raw("ts").dataType match {
+    val ev = raw
+      .withColumn("ts", raw.schema("ts").dataType match {
         case LongType => expr("timestamp_micros(ts div 1000)")
         case org.apache.spark.sql.types.TimestampNTZType => col("ts").cast("timestamp")
         case _ => col("ts")
@@ -376,6 +380,10 @@ object EventPipeline {
       .orderBy("user_id")
   }
 
+  /** Streaming view of the documents table plus its source bytes. */
+  private[graft] def documentsStream(spark: SparkSession, dir: String): (DataFrame, Long) =
+    streamSource(spark, new org.apache.hadoop.fs.Path(s"$dir/documents.parquet"))
+
   /** C33: STREAMING near-dedup against the persisted shingle index —
     * the ingest-time shape of q_dedup_incremental: new documents land
     * as a file stream, each micro-batch shingles its docs (stateless
@@ -392,9 +400,7 @@ object EventPipeline {
     import graft.operators.{Curation, DedupOps}
     // incoming docs stream from the source in place (the eventsStream device)
     val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val (ingest, bytes) = streamSource(spark, src)
-    val raw: StructType = spark.read.parquet(ingest).schema
+    val (docs, bytes) = documentsStream(spark, dir)
     val idx = graft.sources.LakeTable.read(spark, s"${Curation.indexPath}/shingles")
       .select(col("doc_id").as("corpus_id"), col("h"))
     // STATELESS micro-batches: a file-stream doc lands in exactly one
@@ -413,7 +419,7 @@ object EventPipeline {
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     outPath.getFileSystem(conf).delete(outPath, true)
     withStreamPartitions(spark, bytes) {
-      val q = spark.readStream.schema(raw).parquet(ingest)
+      val q = docs
         .where(col("doc_id") % 10 === 0)
         .writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -438,7 +444,7 @@ object EventPipeline {
         .exists(_.getPath.getName.endsWith(".parquet"))
     }
     val pairs =
-      if (wroteAny) spark.read.parquet(outDir)
+      if (wroteAny) graft.Tables.parquet(spark, outDir)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(
           org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType),

@@ -56,10 +56,10 @@ object ScaleGen {
   def run(spark: org.apache.spark.sql.SparkSession, src: String, dst: String,
       copies: Int, weaveEvery: Int = 4): Unit = {
 
-    def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = graft.Tables.parquet(spark, s"$src/$t.parquet")
     def wr(df: DataFrame, t: String, files: Int = 8): Unit = {
       df.repartition(files).write.mode("overwrite").parquet(s"$dst/$t.parquet")
-      println(s"[scalegen] $t -> ${spark.read.parquet(s"$dst/$t.parquet").count()} rows")
+      println(s"[scalegen] $t -> ${graft.Tables.parquet(spark, s"$dst/$t.parquet").count()} rows")
     }
 
     /** N copies with per-column remaps; copy 0 is the verbatim source. */

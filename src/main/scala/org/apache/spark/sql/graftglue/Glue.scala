@@ -196,6 +196,81 @@ object Glue {
     }
   }
 
+  /** The schema `spark.read.parquet(pattern)` infers, read on the
+    * DRIVER: the literal-paths overload below over the paths `pattern`
+    * globs to, globbed and checked as DataFrameReader does
+    * (`PATH_NOT_FOUND` for a missing path).
+    */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession, pattern: String)
+      : org.apache.spark.sql.types.StructType =
+    parquetFooterSchema(spark,
+      org.apache.spark.sql.execution.datasources.DataSource.checkAndGlobPathIfNecessary(
+        Seq(pattern), sessionHadoopConf(spark), checkEmptyGlobPath = true,
+        checkFilesExist = true, enableGlobbing = true))
+
+  /** The data schema Spark's parquet inference gives for the literal
+    * paths `roots`, without the job it launches for it: with no schema,
+    * every `spark.read.parquet` runs `mergeSchemasInParallel` as a
+    * Spark job, even for one file. Same listing (an InMemoryFileIndex
+    * over `roots` on the session's FileStatusCache), same footer
+    * (`ParquetUtils.inferSchema` with mergeSchema off: a summary file
+    * first, else the path-sorted first data file), same conversion
+    * (the Spark row metadata wins, else `ParquetToSparkSchemaConverter`
+    * with the settings Spark's inference passes, nanosAsLong
+    * included), the same `UNABLE_TO_INFER_SCHEMA` when no file is
+    * there. A session that turns `spark.sql.parquet.mergeSchema` on
+    * gets Spark's own merge.
+    * A reader given this schema lists `roots` again: the listing cache
+    * is keyed per index, so the two listings are not shared.
+    */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+      roots: Seq[org.apache.hadoop.fs.Path]): org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.FileStatus
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.errors.{QueryCompilationErrors, QueryExecutionErrors}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = classic.sessionState.conf
+    val files = new InMemoryFileIndex(classic, roots, Map.empty, None,
+      FileStatusCache.getOrCreate(classic)).allFiles()
+    val fmt = new ParquetFileFormat
+    // The settings mergeSchemasInParallel passes; the converter's
+    // other three keep their defaults there too.
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val hadoopConf = sessionHadoopConf(spark)
+    def footerSchema(f: FileStatus) =
+      try Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+        converter))
+      catch {
+        case e: RuntimeException =>
+          if (conf.ignoreCorruptFiles) None
+          else throw QueryExecutionErrors.cannotReadFooterForFileError(f.getPath, e)
+      }
+    val schema =
+      if (conf.isParquetSchemaMergingEnabled) fmt.inferSchema(classic, Map.empty, files)
+      else {
+        val sorted = files.sortBy(_.getPath.toString)
+        def named(n: String) = sorted.find(_.getPath.getName == n)
+        val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+          ParquetFileWriter.PARQUET_METADATA_FILE)
+        named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+          .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+          .orElse(sorted.find(f => !summaries(f.getPath.getName)))
+          .flatMap(footerSchema)
+      }
+    schema.getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError(fmt.toString))
+  }
+
   private def explicitPartitionIndex(
       classic: org.apache.spark.sql.classic.SparkSession,
       leaves: Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)],

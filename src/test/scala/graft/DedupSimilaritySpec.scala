@@ -219,20 +219,61 @@ class DedupSimilaritySpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.cc.driverEdgeLimit")
   }
 
+  /** `body`'s result and the RDDs it cached and did not release. A
+    * listener pins each RDD as it stores a block: `getPersistentRDDs`
+    * holds RDDs weakly, and Spark's ContextCleaner unpersists an
+    * unreachable one after a GC, so without the pin a leaked
+    * checkpoint can drop out of sight.
+    */
+  private def leftBy[T](body: => T): (T, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    val pinned = new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.rdd.RDD[_]]
+    val result = SharedSpark.listening(new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case org.apache.spark.storage.RDDBlockId(id, _) =>
+            spark.sparkContext.getPersistentRDDs.get(id).foreach(pinned.putIfAbsent(id, _))
+          case _ =>
+        }
+    })(body)
+    import scala.jdk.CollectionConverters._
+    (result, pinned.values.asScala.filter(_.getStorageLevel.isValid).toSeq)
+  }
+
   test("clustering releases its checkpoints: no persisted RDD outlives the call") {
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val before = persisted
-    val clusters = operators.Clustering.dedupClusters(spark, sf).collect()
-    assert(clusters.nonEmpty)
-    assert(persisted -- before == Set.empty, "driver path left RDDs behind")
-    // The distributed loop keeps only the checkpoint its returned
-    // labels read; the edges and every superseded labels set are gone.
-    spark.conf.set("spark.graft.cc.driverEdgeLimit", "0")
-    try {
-      val before2 = persisted
-      val loop = operators.Clustering.dedupClusters(spark, sf).collect()
-      assert(loop.toSeq == clusters.toSeq)
-      assert((persisted -- before2).size == 1, s"loop left ${persisted -- before2}")
-    } finally spark.conf.unset("spark.graft.cc.driverEdgeLimit")
+    // The small corpus, and one past the 2 MB size at which the pair
+    // plan checkpoints its shingle table (DedupOps.sharedShingles):
+    // 1300 docs of 150 incompressible hex words, docs 1200.. copying
+    // docs 0..99 with the first word changed (J = 147/149).
+    val big = s"${operators.Lakehouse.scratch}/dedup_release_corpus"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(big))
+    spark.range(1300)
+      .select(col("id").as("doc_id"),
+        concat_ws(" ", transform(sequence(lit(0), lit(149)), i =>
+          when(i === 0 && col("id") >= 1200, lit("planted"))
+            .otherwise(hex(xxhash64(col("id") % 1200, i))))).as("text"))
+      .coalesce(1).write.parquet(s"$big/documents.parquet")
+    assert(Tables.pathBytes(spark, s"$big/documents.parquet") >= (2L << 20))
+    val shingleCheckpoints = operators.DedupOps.ngramPairs(spark, big, 0.8)
+      .queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }
+    assert(shingleCheckpoints.nonEmpty, "the pair plan took no shingle checkpoint")
+    shingleCheckpoints.foreach(_.unpersist(blocking = true))
+    for ((corpus, expected) <- Seq(sf -> None, big -> Some(100))) {
+      val (clusters, left) = leftBy(operators.Clustering.dedupClusters(spark, corpus).collect())
+      assert(clusters.nonEmpty)
+      expected.foreach(n => assert(clusters.length == n && clusters.forall(_.getLong(1) == 2L)))
+      assert(left.isEmpty, s"driver path left $left behind on $corpus")
+      // The distributed loop keeps only the checkpoint its returned
+      // labels read; the edges and every superseded labels set are gone.
+      spark.conf.set("spark.graft.cc.driverEdgeLimit", "0")
+      try {
+        val (loop, left2) = leftBy(operators.Clustering.dedupClusters(spark, corpus).collect())
+        assert(loop.toSeq == clusters.toSeq)
+        assert(left2.size == 1, s"loop left $left2 on $corpus")
+        left2.foreach(_.unpersist(blocking = true))
+      } finally spark.conf.unset("spark.graft.cc.driverEdgeLimit")
+    }
   }
 }
