@@ -26,12 +26,12 @@ import graft.sources.{GraftViews, GraftViewTable}
   * columns. The relation's exprIds are preserved on the aliases so
   * every outer reference stays bound.
   *
-  * The [[GraftViews.depth]] guard carries over from the scan path: a
-  * REPLACE of a referenced view can close a cycle that create-time
-  * validation never saw; the bound turns infinite recursion into a
-  * clear error. (The V1Scan inside [[GraftViewTable]] remains as the
-  * serving path for sessions that loaded the catalog without graft's
-  * extensions.)
+  * The [[GraftViews.depth]] guard: a REPLACE of a referenced view can
+  * close a cycle that create-time validation never saw; the bound
+  * turns infinite recursion into a clear error. This rule is the only
+  * serving path for views: [[GraftViewTable]] has no scan, so a
+  * session must install `graft.GraftExtensions` (as
+  * `GraftSession.builder` does) to read one.
   */
 case class GraftViewInline(spark: SparkSession) extends Rule[LogicalPlan] {
 

@@ -27,8 +27,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * fallback).
   *
   * ACCEPT_ANY_SCHEMA: LakeTable supports per-group schema evolution
-  * (mergeSchema read), so Spark's by-name write validation is left to
-  * the table itself — same stance as other lakehouse connectors.
+  * (a read merges the groups' footer schemas), so Spark's by-name
+  * write validation is left to the table itself — same stance as
+  * other lakehouse connectors.
   *
   * Each handle reads the one state its loader resolved. Spark keeps
   * the handle in the analyzed plan, so a scan of an unpinned handle
@@ -270,9 +271,7 @@ final class GraftTable(path: String, version: Option[Long],
     if (LakeTable.dvFor(spark, path, st.version, st.commit.dirs).nonEmpty ||
         st.meta.mappings.nonEmpty)
       return new GraftDvScanBuilder(spark, path, st, atHead, schema)
-    val scanOpts = new CaseInsensitiveStringMap(
-      (options.asCaseSensitiveMap().asScala.toMap ++ Map("mergeSchema" -> "true")).asJava)
-    new GraftScanBuilder(spark, path, st, schema, scanOpts, atHead)
+    new GraftScanBuilder(spark, path, st, schema, options, atHead)
   }
 
   /** Native DSv2 write path (GraftWrite.scala): task-level parquet
@@ -526,8 +525,10 @@ final class GraftScanBuilder(spark: SparkSession, path: String, st: LakeTable.St
     }
 
   // The probe builder answers the pushdown negotiation (which filters
-  // are fully handled); build() replays the calls on a pruned inner.
-  private val probe = mkInner(dirs.map(d => new Path(path, d).toString))
+  // are fully handled), which depends only on the data and partition
+  // schemas, so it spans no file; build() replays the calls on the
+  // inner builder over the pruned files.
+  private val probe = mkInner(Nil)
   private var pushed: Seq[Expression] = Nil
   private var prunedSchema: Option[StructType] = None
 

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -91,11 +91,11 @@ object GraftViews {
   private[graft] val MaxDepth = 10
 }
 
-/** A stored view served as a read-only DSv2 table: scans re-execute
-  * the stored SQL through a V1Scan relation (plan-level reuse of the
-  * DvScan serving shape). The create-time schema is the contract;
-  * the scan re-selects by name so additive base-table evolution can't
-  * shift columns underneath it.
+/** A stored view as a read-only DSv2 table: the analyzer rule
+  * `graft.plans.GraftViewInline` (installed by `graft.GraftExtensions`)
+  * replaces every relation over it with the view body at resolution,
+  * so it is never scanned. The create-time schema is the contract the
+  * rule re-selects the body's columns by.
   */
 final class GraftViewTable(viewName: String, val sql: String, viewSchema: StructType)
     extends Table with SupportsRead {
@@ -107,28 +107,7 @@ final class GraftViewTable(viewName: String, val sql: String, viewSchema: Struct
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new V1Scan {
-      override def readSchema(): StructType = viewSchema
-      override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-          with org.apache.spark.sql.sources.TableScan](
-          ctx: org.apache.spark.sql.SQLContext): T =
-        new org.apache.spark.sql.sources.BaseRelation
-            with org.apache.spark.sql.sources.TableScan {
-          override def sqlContext: org.apache.spark.sql.SQLContext = ctx
-          override def schema: StructType = viewSchema
-          override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val d = GraftViews.depth.get()
-            if (d >= GraftViews.MaxDepth)
-              throw new IllegalStateException(
-                s"view nesting exceeds ${GraftViews.MaxDepth} resolving $viewName — " +
-                  "likely a cycle introduced by a view replacement")
-            GraftViews.depth.set(d + 1)
-            try org.apache.spark.sql.graftglue.Glue.activeSession.sql(sql)
-              .select(viewSchema.fieldNames.map(org.apache.spark.sql.functions.col)
-                .toIndexedSeq: _*).rdd
-            finally GraftViews.depth.set(d)
-          }
-        }.asInstanceOf[T]
-      override def description(): String = s"GraftView $viewName"
-    }
+    throw new IllegalStateException(
+      s"view $viewName is served by graft's analyzer extensions; start the session with " +
+        "spark.sql.extensions=graft.GraftExtensions (GraftSession.builder sets it)")
 }

@@ -55,8 +55,9 @@ private[sources] object GraftWriteUtil {
       // type when the incoming one is a lossless up-cast away (INT
       // literal into a BIGINT column — the ACCEPT_ANY_SCHEMA table
       // never sees Spark's TableOutputResolver casts): storing the
-      // narrower physical type would poison every later mergeSchema
-      // read with CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE.
+      // narrower physical type would make the groups' footer schemas
+      // unmergeable (CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE) and every
+      // later read a per-root union.
       StructType(incoming.fields.map { f =>
         t.fields.find(_.name.equalsIgnoreCase(f.name)) match {
           case Some(tf) if tf.dataType != f.dataType &&

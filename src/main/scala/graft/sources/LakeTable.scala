@@ -353,9 +353,10 @@ object LakeTable {
     // Type normalization: a column arriving NARROWER than the table's
     // recorded type (an INT literal into a BIGINT column) up-casts
     // in-stream (codegen'd, lossless only) — storing the narrower
-    // physical type would poison later mergeSchema reads with
-    // CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE. First write (create) has
-    // no schema to align to and passes through.
+    // physical type would make the groups' footer schemas unmergeable
+    // (CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE) and every later read a
+    // per-root union. First write (create) has no schema to align to
+    // and passes through.
     val aligned =
       if (base.version < 0) df
       else {
@@ -539,6 +540,13 @@ object LakeTable {
         }
         if (st != null && st.hasNonNullValue) {
           val colName = c.getPath.toDotString
+          // A TIMESTAMP(MILLIS) column's stats are millis; Spark reads
+          // (and `boundsOf` bounds) timestamps in micros.
+          val scale = c.getPrimitiveType.getLogicalTypeAnnotation match {
+            case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                if t.getUnit == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MILLIS => 1000L
+            case _ => 1L
+          }
           (st.genericGetMin, st.genericGetMax) match {
             case (mn: Number, mx: Number) =>
               // INT32/INT64 footer stats arrive as boxed integrals:
@@ -546,7 +554,8 @@ object LakeTable {
               // through Double.
               def encNum(n: Number): String = n match {
                 case _: java.lang.Long | _: java.lang.Integer |
-                     _: java.lang.Short | _: java.lang.Byte => n.longValue().toString
+                     _: java.lang.Short | _: java.lang.Byte =>
+                  Math.multiplyExact(n.longValue(), scale).toString
                 case _ => n.doubleValue().toString
               }
               val (lo, hi) = (encNum(mn), encNum(mx))
@@ -2219,49 +2228,26 @@ object LakeTable {
     updateMeta(spark, path, base, (_, m) => m.copy(schema = Some(schema)))
   }
 
-  /** Bounded process-wide schema cache. Schema derivation walks every
-    * group root with a mergeSchema read — one Spark inference JOB per
-    * root — and Spark's analyzer asks a table for its schema many
-    * times per statement (schema(), capabilities(), scan build, write
-    * build), so an uncached INSERT into a multi-group table was paying
-    * ~30 sequential ~100 ms inference jobs of pure re-derivation. The
-    * key is exact: (qualified path, data version, meta version) — a
-    * version pins its commit, and the meta version the meta time
-    * travel reads under — so entries are immutable once computed.
-    * LRU-bounded; access-ordered.
+  /** Bounded process-wide schema cache. Spark's analyzer asks a table
+    * for its schema many times per statement (schema(), capabilities(),
+    * scan build, write build), and each derivation merges the
+    * snapshot's group footers and the meta. The key is exact:
+    * (qualified path, data version, meta version) — a version pins its
+    * commit, and the meta version the meta time travel reads under —
+    * so entries are immutable once computed. LRU-bounded;
+    * access-ordered.
     */
-  private val schemaCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), org.apache.spark.sql.types.StructType])
-            : Boolean = size() > 256
-      })
+  private val schemaCache = lru[(String, Long, Long), org.apache.spark.sql.types.StructType](256)
 
-  /** Footer-merged FILE schema per (qualified path + sorted dir set,
-    * -, metaVer) — the single-scan partitioned read's inference
-    * result. The dir set pins the snapshot exactly (any write changes
-    * it), so entries are immutable; same LRU bound as the table-schema
-    * cache, same path-wide invalidation on create/clone/drop.
+  /** A synchronized, access-ordered map that drops its eldest entry
+    * past `max` entries.
     */
-  private val fileSchemaCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), org.apache.spark.sql.types.StructType])
-            : Boolean = size() > 256
-      })
+  private def lru[K, V](max: Int): java.util.Map[K, V] = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > max
+    })
 
-  /** Separator between the qualified table path and the dir-set suffix
-    * in fileSchemaCache keys. ONE constant shared by key construction
-    * and invalidation — the two sites diverging (NUL here, " " there)
-    * silently turns the re-create purge into a no-op.
-    */
-  private val FileSchemaKeySep = "\u0000"
-
-  /** Drop every cached schema for `path`. Needed when a table is
+  /** Drop every cached table schema for `path`. Needed when a table is
     * RE-CREATED at the same path (create-replace, clone onto an
     * existing path, catalog DROP + CREATE): the new generation starts
     * again at data version 0 and may reuse the old metaVer, so the
@@ -2275,11 +2261,57 @@ object LakeTable {
     schemaCache.synchronized {
       schemaCache.keySet.removeIf(k => k._1 == q)
     }
-    fileSchemaCache.synchronized {
-      // file-schema keys prefix with the same qualified path
-      fileSchemaCache.keySet.removeIf(k => k._1.startsWith(q + FileSchemaKeySep))
-    }
   }
+
+  /** One file group's schema: its footer's data schema and the names
+    * of the `col=value` dirs its files sit in (its write's partition
+    * columns, under their write-time names).
+    */
+  private final case class GroupSchema(data: org.apache.spark.sql.types.StructType,
+      partCols: Seq[String])
+
+  /** Qualified group root → its [[GroupSchema]] (None: no parquet file,
+    * as in a schema-only create). A group dir is written once, by one
+    * writer, with one schema, and its name (`dN-<uuid>`,
+    * `ds-<uuid>-eN`) never comes back, so an entry never goes stale.
+    */
+  private val groupSchemaCache = lru[String, Option[GroupSchema]](4096)
+
+  /** The group at qualified root `q`: one listing, then the footer of
+    * its path-sorted first parquet file, read on the driver.
+    */
+  private def groupSchema(spark: SparkSession, q: String): Option[GroupSchema] =
+    Option(groupSchemaCache.get(q)).getOrElse {
+      val root = new Path(q)
+      val fs = fsOf(spark, root)
+      val files = if (!fs.exists(root)) Nil else {
+        val it = fs.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      }
+      // The first footer that reads (a corrupt one yields none only
+      // under spark.sql.files.ignoreCorruptFiles).
+      val g = files.sortBy(_.getPath.toString).iterator.flatMap { f =>
+        org.apache.spark.sql.graftglue.Glue.footerSchema(spark, f).map { data =>
+          val rel = fs.makeQualified(f.getPath.getParent).toString.stripPrefix(q)
+          GroupSchema(data, rel.split("/").toSeq.filter(_.contains("=")).map(seg =>
+            unescapePath(seg.substring(0, seg.indexOf('=')))))
+        }
+      }.nextOption()
+      groupSchemaCache.put(q, g)
+      g
+    }
+
+  /** The schemas of the groups `dirs` read, keyed by group root, in
+    * the order Spark's parquet merge folds files (qualified path);
+    * groups without a parquet file are left out.
+    */
+  private def groupSchemas(spark: SparkSession, path: String,
+      dirs: Seq[String]): Seq[(String, GroupSchema)] =
+    dirs.map(groupRoot).distinct
+      .map(r => r -> fsOf(spark, new Path(path, r)).makeQualified(new Path(path, r)).toString)
+      .sortBy(_._2)
+      .flatMap { case (r, q) => groupSchema(spark, q).map(r -> _) }
 
   /** Table schema: the UNION of the snapshot's file-inferred schema
     * and the meta-recorded one (create-time for empty partitioned
@@ -2552,7 +2584,8 @@ object LakeTable {
   }
 
   /** Snapshot read; `version` selects an older snapshot (time travel).
-    * mergeSchema tolerates per-group schema evolution (add-column).
+    * Its schema is the merge of the groups' footer schemas, so
+    * per-group schema evolution (add-column) reads through.
     * Deletion vectors recorded at or before the snapshot (B46
     * merge-on-read) are applied; rewritten groups shed theirs by dir
     * rename, older snapshots read pre-delete state by version.
@@ -2852,17 +2885,6 @@ object LakeTable {
     val cdc = writeCdc(spark, path, m, v, oldRows, newRows)
     commitOver(spark, path, st, Commit(v, "update-mor", c.dirs :+ dir, cdc, dvFiles = dvNames))
     v
-  }
-
-  /** True iff the group dir holds at least one parquet file (a
-    * schema-only create writes an EMPTY group).
-    */
-  private def hasParquet(spark: SparkSession, dirPath: Path): Boolean = {
-    val fs = fsOf(spark, dirPath)
-    if (!fs.exists(dirPath)) return false
-    val it = fs.listFiles(dirPath, true)
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) return true
-    false
   }
 
   /** Change data feed between two snapshots (the Delta-CDF / Iceberg
@@ -3244,13 +3266,13 @@ object LakeTable {
     walk(cond)
   }
 
-  /** Snapshot-subset read. Partitioned layouts with MULTIPLE groups
-    * cannot go through one multi-root parquet read — Spark's partition
-    * discovery requires a single base path (CONFLICTING_DIRECTORY_
-    * STRUCTURES otherwise) — so each group reads under its own
-    * `basePath` and the groups union by name (schema evolution via
-    * allowMissingColumns, same contract as mergeSchema). Empty groups
-    * (a schema-only create) contribute nothing.
+  /** Snapshot-subset read under the merge of the groups' footer
+    * schemas ([[groupSchemas]]), passed to the reader so no inference
+    * runs. A flat snapshot reads as one scan, a clean partitioned one
+    * as one explicit-spec scan; otherwise each group reads under its
+    * own `basePath` and the groups union by name (schema evolution via
+    * allowMissingColumns). Empty groups (a schema-only create)
+    * contribute nothing.
     */
   private def readDirs(spark: SparkSession, path: String, m: TableMeta,
       dirs: Seq[String]): DataFrame =
@@ -3295,70 +3317,62 @@ object LakeTable {
         if (withPos) filtered else filtered.drop("__file", "__pos")
       }
     }
+    val groups = groupSchemas(spark, path, dirs)
+    // No footer at all: a partitioned DDL create writes NO files
+    // (partitionBy of an empty frame emits nothing), so an empty frame
+    // of the recorded schema keeps first-write DML (MERGE-as-insert,
+    // UPDATE no-op) working on the fresh table.
+    if (groups.isEmpty) return m.schema match {
+      case Some(sch) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+      case None => throw new org.apache.spark.sql.AnalysisException(
+        "UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet"))
+    }
+    // The snapshot's file schema: its groups' footer schemas merged
+    // (None on PHYSICAL type skew — a pre-normalization group stored
+    // INT where later ones hold BIGINT — which the per-root union
+    // below coerces instead: unionByName widens per Spark's type
+    // coercion, so such a table stays READABLE and compaction rewrites
+    // it clean. Writes normalize types in-stream now (writeGroup /
+    // GraftWriteUtil.targetSchema), so skew is legacy data only).
+    val merged = org.apache.spark.sql.graftglue.Glue.mergeSchemas(spark, groups.map(_._2.data))
     // What the entries read: their surviving files when `kept` carries
-    // a pruneFilesByDir result ([[readKept]]), else the entry dirs
-    // (`nonEmpty` drops the empty dir of a schema-only create).
-    def sources(entries: Seq[String], nonEmpty: Boolean): Seq[String] = kept match {
+    // a pruneFilesByDir result ([[readKept]]), else the entry dirs of
+    // groups that hold data (a schema-only create's dir is empty).
+    val live = groups.map(_._1).toSet
+    def sources(entries: Seq[String]): Seq[String] = kept match {
       case Some(files) => entries.flatMap(files)
-      case None => entries.map(e => new Path(path, e).toString)
-        .filter(p => !nonEmpty || hasParquet(spark, new Path(p)))
+      case None => entries.filter(e => live(groupRoot(e))).map(e => new Path(path, e).toString)
     }
     val mappings = m.mappings
     val flatEntries = dirs.forall(d => groupRoot(d) == d)
-    // Footer merge across groups fails hard on PHYSICAL type skew (a
-    // pre-normalization group stored INT where later ones hold
-    // BIGINT); the per-root union coerces instead (unionByName widens
-    // per Spark's type coercion), so such a table stays READABLE and
-    // compaction rewrites it clean. Writes normalize types in-stream
-    // now (writeGroup / GraftWriteUtil.targetSchema), so this is the
-    // legacy-data escape hatch, not a hot path.
-    def mergeConflict(t: Throwable): Boolean = t != null && (
-      Option(t.getMessage).exists(_.contains("CANNOT_MERGE")) || mergeConflict(t.getCause))
-    if (flatEntries && m.partitionBy.isEmpty && !m.mixedLayouts) {
+    if (flatEntries && m.partitionBy.isEmpty && !m.mixedLayouts && merged.isDefined) {
       // Single-scan fast path: a table with data at rename time is
       // marked mixed and routed below, so any chain here predates
       // every dir — the min version stands in for all of them.
-      try finish(applyMappings(spark.read.option("mergeSchema", "true")
-        .parquet(sources(dirs, nonEmpty = false): _*), mappings,
+      finish(applyMappings(spark.read.schema(merged.get).parquet(sources(dirs): _*), mappings,
         dirs.map(groupVersionOf).min),
         dirs.map(groupKey))
-      catch { case e: Throwable if mergeConflict(e) =>
-        readDirsUnion(spark, path, m, dirs, sources(_, nonEmpty = true), finish) }
     } else {
       // Partitioned (or subdir-entry) layout. CLEAN snapshots (no
       // deletion vectors, no mapping chain, no position columns) read
       // as ONE explicit-PartitionSpec scan spanning every group — the
       // same single-relation shape the catalog SQL path serves — so
       // the plan does NOT grow with the number of appends between
-      // compactions (one scan node and ONE footer-merge inference job
-      // at 200 commits, where the per-root union below pays both per
-      // group root). Partition column types come from the meta-recorded
-      // schema (authoritative — the catalog path's source), never
-      // re-inferred from path strings.
+      // compactions (one scan node at 200 commits, where the per-root
+      // union below pays one per group root). Partition column types
+      // come from the meta-recorded schema (authoritative — the
+      // catalog path's source), never re-inferred from path strings.
       val partCols = m.partitionBy
-      if (dv.isEmpty && !withPos && mappings.isEmpty && partCols.nonEmpty && kept.isEmpty) {
-        val recorded = m.schema.filter(s => partCols.forall(s.fieldNames.contains))
-        if (recorded.isDefined) {
-          val leaves = partitionLeaves(spark,
-            dirs.map(d => new Path(path, d).toString), partCols)
-          val partSchema = org.apache.spark.sql.types.StructType(partCols.map(recorded.get(_)))
-          // The footer-merged schema is immutable per (path, dir set,
-          // metaVer) — cache it so repeated reads of the same snapshot
-          // skip the inference job entirely.
-          val key = (fsOf(spark, new Path(path)).makeQualified(new Path(path)).toString
-            + FileSchemaKeySep + dirs.sorted.mkString(","), -1L, m.ver)
-          val hint = Option(fileSchemaCache.get(key))
-          try org.apache.spark.sql.graftglue.Glue
-            .partitionedParquetDataFrame(spark, leaves, partSchema, hint) match {
-            case Some((df, merged)) =>
-              if (hint.isEmpty) fileSchemaCache.put(key, merged)
-              return df
-            case None => () // no footers (empty create) — fall through
-          }
-          catch { case e: Throwable if mergeConflict(e) => () } // union coerces
-        }
-      }
-      readDirsUnion(spark, path, m, dirs, sources(_, nonEmpty = true), finish)
+      val recorded = m.schema.filter(s => partCols.forall(s.fieldNames.contains))
+      if (dv.isEmpty && !withPos && mappings.isEmpty && partCols.nonEmpty && kept.isEmpty &&
+          merged.isDefined && recorded.isDefined) {
+        val leaves = partitionLeaves(spark,
+          dirs.map(d => new Path(path, d).toString), partCols)
+        val partSchema = org.apache.spark.sql.types.StructType(partCols.map(recorded.get(_)))
+        org.apache.spark.sql.graftglue.Glue
+          .partitionedParquetDataFrame(spark, leaves, partSchema, merged.get)
+      } else readDirsUnion(spark, path, m, dirs, groups.toMap, sources, finish)
     }
   }
 
@@ -3368,60 +3382,40 @@ object LakeTable {
     * columns ride the per-scan `_metadata` struct, when no meta schema
     * records the partition column types, for a pruned file subset, or
     * as the type-coercing fallback for physically type-skewed legacy
-    * groups. `sources` names the paths a root's entries read. Plan size
-    * here is the ROOT count; compaction collapses it to one.
+    * groups. `groups` holds the schema of every root with data and
+    * `sources` names the paths a root's entries read. Plan size here
+    * is the ROOT count; compaction collapses it to one.
     */
   private def readDirsUnion(spark: SparkSession, path: String, m: TableMeta,
-      dirs: Seq[String], sources: Seq[String] => Seq[String],
+      dirs: Seq[String], groups: Map[String, GroupSchema], sources: Seq[String] => Seq[String],
       finish: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StructType}
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
     // Partition columns take the meta-recorded types, as the clean
     // explicit-spec read does: discovery from path strings would read
-    // a STRING value `01` as the int 1. A root whose discovered types
-    // differ re-reads with them fixed (a listing; no second footer merge).
-    lazy val recorded = m.schema.fold(Map.empty[String, DataType])(
+    // a STRING value `01` as the int 1. One not recorded keeps the type
+    // discovery gives it.
+    val recorded = m.schema.fold(Map.empty[String, DataType])(
       _.fields.map(f => f.name -> f.dataType).toMap)
-    // A root discovers its partition columns under their write-time
-    // names; the renames that apply to it (those applyMappings performs)
-    // lead to the logical name the recorded schema types.
+    // A root's partition columns carry their write-time names; the
+    // renames that apply to it (those applyMappings performs) lead to
+    // the logical name the recorded schema types.
     def logicalName(root: String, physical: String): String =
       m.renames.foldLeft(physical) { (n, r) =>
         if (groupVersionOf(root) < r.stamp && r.old == n) r.to else n
       }
     def readRoot(root: String, paths: Seq[String]): DataFrame = {
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      val reader = spark.read.option("mergeSchema", "true")
-        .option("basePath", new Path(path, root).toString)
-      val df = reader.parquet(paths: _*)
-      val discovered = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation =>
-        l.relation }.collect { case h: HadoopFsRelation => h.partitionSchema.fieldNames.toSet }
-        .getOrElse(Set.empty[String])
-      if (discovered.isEmpty) return df
-      val typed = StructType(df.schema.fields.map(f =>
-        recorded.get(logicalName(root, f.name)) match {
-          case Some(t) if discovered(f.name) && t != f.dataType => f.copy(dataType = t)
-          case _ => f
-        }))
-      if (typed == df.schema) df else reader.schema(typed).parquet(paths: _*)
+      val g = groups(root)
+      val typed = g.partCols.flatMap(c => recorded.get(logicalName(root, c)).map(StructField(c, _)))
+      spark.read.schema(StructType(g.data.fields ++ typed))
+        .option("basePath", new Path(path, root).toString).parquet(paths: _*)
     }
     val byRoot = dirs.groupBy(groupRoot).toSeq.sortBy(_._1)
-    val reads = byRoot.flatMap { case (root, entries) =>
+    byRoot.flatMap { case (root, entries) =>
       val entryPaths = sources(entries)
       if (entryPaths.isEmpty) None
       else Some(finish(applyMappings(readRoot(root, entryPaths), m.mappings,
         groupVersionOf(root)), Seq(groupKey(root))))
-    }
-    if (reads.nonEmpty) reads.reduce(_.unionByName(_, allowMissingColumns = true))
-    else m.schema match {
-      // A partitioned DDL create writes NO files (partitionBy of an
-      // empty frame emits nothing) — an empty frame with the
-      // recorded schema keeps first-write DML (MERGE-as-insert,
-      // UPDATE no-op) working on the fresh table.
-      case Some(sch) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(dirs.map(d => new Path(path, d).toString): _*)
-    }
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** MERGE INTO (copy-on-write upsert): rows of `source` replace

@@ -167,32 +167,39 @@ object Glue {
     * already knows from the commit log, partition discovery is
     * skipped, and the whole multi-group snapshot reads as a SINGLE
     * HadoopFsRelation scan (pushdown, pruning, vectorized, partition
-    * pruning against the supplied spec). The data schema is merged
-    * from the parquet footers in ONE distributed job (the same
-    * mergeSchema mechanics, but once for the table instead of once
-    * per file group). None when the leaves hold no parquet footers
-    * (an empty partitioned create) — the caller falls back.
+    * pruning against the supplied spec). `fileSchema` is the caller's
+    * merged footer schema; no inference runs.
     */
   def partitionedParquetDataFrame(
       spark: org.apache.spark.sql.SparkSession,
       leaves: Seq[(Seq[Option[String]], org.apache.hadoop.fs.Path)],
       partitionSchema: org.apache.spark.sql.types.StructType,
-      mergedHint: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.types.StructType)] = {
+      fileSchema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.types.StructType
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val index = explicitPartitionIndex(classic, leaves, partitionSchema, None)
-    val fmt = new ParquetFileFormat
-    val opts = Map("mergeSchema" -> "true")
-    // `mergedHint` (a caller-side cache of this very computation for
-    // the same immutable snapshot) skips the footer-merge job.
-    mergedHint.orElse(fmt.inferSchema(classic, opts, index.allFiles())).map { merged =>
-      val dataSchema = StructType(
-        merged.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
-      (classic.baseRelationToDataFrame(HadoopFsRelation(
-        index, partitionSchema, dataSchema, None, fmt, opts)(classic)), merged)
+    val dataSchema = StructType(
+      fileSchema.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
+    val index = explicitPartitionIndex(classic, leaves, partitionSchema, Some(dataSchema))
+    classic.baseRelationToDataFrame(HadoopFsRelation(
+      index, partitionSchema, dataSchema, None, new ParquetFileFormat, Map.empty)(classic))
+  }
+
+  /** `schemas` (at least one) merged left to right as Spark's parquet
+    * schema merge merges its files' footers (`StructType.merge` under
+    * the session's case sensitivity): a column takes the position and
+    * metadata of its first appearance. None when two types cannot
+    * merge: the only errors `merge` raises (`CANNOT_MERGE_*`, decimal
+    * scale) are that.
+    */
+  def mergeSchemas(spark: org.apache.spark.sql.SparkSession,
+      schemas: Seq[org.apache.spark.sql.types.StructType])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    try Some(schemas.reduce(_.merge(_, caseSensitive)))
+    catch {
+      case _: org.apache.spark.SparkThrowable => None
     }
   }
 
@@ -225,39 +232,16 @@ object Glue {
     */
   def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
       roots: Seq[org.apache.hadoop.fs.Path]): org.apache.spark.sql.types.StructType = {
-    import org.apache.hadoop.fs.FileStatus
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.errors.{QueryCompilationErrors, QueryExecutionErrors}
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.spark.sql.errors.QueryCompilationErrors
     import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val conf = classic.sessionState.conf
     val files = new InMemoryFileIndex(classic, roots, Map.empty, None,
       FileStatusCache.getOrCreate(classic)).allFiles()
     val fmt = new ParquetFileFormat
-    // The settings mergeSchemasInParallel passes; the converter's
-    // other three keep their defaults there too.
-    val converter = new ParquetToSparkSchemaConverter(
-      assumeBinaryIsString = conf.isParquetBinaryAsString,
-      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
-      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-      nanosAsLong = conf.legacyParquetNanosAsLong,
-      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
-    val hadoopConf = sessionHadoopConf(spark)
-    def footerSchema(f: FileStatus) =
-      try Some(ParquetFileFormat.readSchemaFromFooter(
-        new Footer(f.getPath, ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)),
-        converter))
-      catch {
-        case e: RuntimeException =>
-          if (conf.ignoreCorruptFiles) None
-          else throw QueryExecutionErrors.cannotReadFooterForFileError(f.getPath, e)
-      }
     val schema =
-      if (conf.isParquetSchemaMergingEnabled) fmt.inferSchema(classic, Map.empty, files)
+      if (classic.sessionState.conf.isParquetSchemaMergingEnabled) fmt.inferSchema(classic, Map.empty, files)
       else {
         val sorted = files.sortBy(_.getPath.toString)
         def named(n: String) = sorted.find(_.getPath.getName == n)
@@ -266,9 +250,43 @@ object Glue {
         named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
           .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
           .orElse(sorted.find(f => !summaries(f.getPath.getName)))
-          .flatMap(footerSchema)
+          .flatMap(footerSchema(spark, _))
       }
     schema.getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError(fmt.toString))
+  }
+
+  /** The data schema of ONE parquet file's footer, converted as
+    * Spark's inference converts it: the Spark row metadata wins, else
+    * `ParquetToSparkSchemaConverter` with the settings
+    * `mergeSchemasInParallel` passes (nanosAsLong included). None only
+    * for a corrupt footer under `spark.sql.files.ignoreCorruptFiles`.
+    */
+  def footerSchema(spark: org.apache.spark.sql.SparkSession,
+      f: org.apache.hadoop.fs.FileStatus): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.errors.QueryExecutionErrors
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    // The settings mergeSchemasInParallel passes; the converter's
+    // other three keep their defaults there too.
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    try Some(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(f.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, sessionHadoopConf(spark)),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+      converter))
+    catch {
+      case e: RuntimeException =>
+        if (conf.ignoreCorruptFiles) None
+        else throw QueryExecutionErrors.cannotReadFooterForFileError(f.getPath, e)
+    }
   }
 
   private def explicitPartitionIndex(
@@ -292,8 +310,7 @@ object Glue {
       })
       PartitionPath(row, dir)
     }
-    new InMemoryFileIndex(classic, paths.map(_.path),
-      Map("mergeSchema" -> "true"), dataSchema,
+    new InMemoryFileIndex(classic, paths.map(_.path), Map.empty, dataSchema,
       FileStatusCache.getOrCreate(classic),
       Some(PartitionSpec(partitionSchema, paths)), None)
   }

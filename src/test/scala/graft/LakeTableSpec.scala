@@ -2116,6 +2116,11 @@ class LakeTableSpec extends AnyFunSuite {
     assert(!n.queryExecution.executedPlan.toString.contains("GraftView"))
     val expected = (0 until 2000).filter(_ % 10 == 3).map(_ * 1.5).sum
     assert(n.collect().map(_.getDouble(0)).toSeq === Seq(expected))
+    // the rule is the only serving path: a view table has no scan
+    val noScan = intercept[IllegalStateException](
+      new graft.sources.GraftViewTable("v", "SELECT 1", new org.apache.spark.sql.types.StructType())
+        .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+    assert(noScan.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"))
     spark.sql("DROP TABLE IF EXISTS graft_cat.db.vi_view2")
     spark.sql("DROP TABLE IF EXISTS graft_cat.db.vi_view")
     spark.sql("DROP TABLE IF EXISTS graft_cat.db.vi_fact")

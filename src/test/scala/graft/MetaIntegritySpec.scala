@@ -84,14 +84,15 @@ class MetaIntegritySpec extends AnyFunSuite {
   }
 
   test("re-create of a PARTITIONED table purges the file-schema cache too") {
-    // The partitioned single-scan read caches its footer-merged file
-    // schema under a path-prefixed key; the invalidation used a
-    // different separator than construction, so this purge was a
-    // silent no-op and only LRU eviction saved us.
+    // The partitioned single-scan read once cached its footer-merged
+    // file schema under a path-prefixed key that a re-create had to
+    // purge. Group footer schemas are now keyed by group root, which a
+    // new generation never reuses; the re-create must still read the
+    // new generation's schema.
     val p = freshPath("recreate_part")
     sources.LakeTable.create(spark, p,
       Seq((1L, 10L, "p1"), (2L, 20L, "p2")).toDF("k", "a", "pt"), Seq("pt"))
-    // warm the fileSchemaCache entry via the single-scan read
+    // warm the schema caches via the single-scan read
     assert(sources.LakeTable.read(spark, p).columns.sorted.toSeq == Seq("a", "k", "pt"))
     sources.LakeTable.create(spark, p,
       Seq((1L, "x", "p1")).toDF("k", "b", "pt"), Seq("pt"))

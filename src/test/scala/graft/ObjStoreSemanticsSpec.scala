@@ -202,9 +202,20 @@ class NoReplaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   // no val: the super constructor calls getUri before vals initialize
   override def getUri: java.net.URI = java.net.URI.create("graftnr:///")
 
+  // HDFS refuses an existing target atomically. A file moves by a hard
+  // link (link(2) fails when the target exists) and an unlink of the
+  // source, so two racers renaming onto one commit file cannot both
+  // succeed; an exists() check before the rename would let them.
   override def rename(src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean =
-    if (exists(dst)) false else super.rename(src, dst)
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    def local(p: org.apache.hadoop.fs.Path) =
+      java.nio.file.Paths.get(makeQualified(p).toUri.getPath)
+    if (!exists(src)) false
+    else if (getFileStatus(src).isDirectory) !exists(dst) && super.rename(src, dst)
+    else
+      try { java.nio.file.Files.createLink(local(dst), local(src)); delete(src, false) }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  }
 
   // RawLocal's DeprecatedRawLocalFileStatus loads permissions lazily
   // via `new java.io.File(path.toUri)`, which requires a file:// URI —

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, Row}
 import org.apache.spark.sql.graftglue.Glue
 import org.apache.spark.sql.types._
@@ -24,15 +21,8 @@ class ParquetSchemaSpec extends AnyFunSuite {
     p.toString
   }
 
-  /** Jobs started while `body` runs, counted by a SparkListener. */
-  private def jobsDuring(body: => Unit): Int = {
-    val started = new AtomicInteger
-    SharedSpark.listening(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!SharedSpark.jobGroup(e).contains(SharedSpark.BarrierGroup)) started.incrementAndGet()
-    })(body)
-    started.get
-  }
+  /** Jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = SharedSpark.jobsDuring(body).size
 
   test("every table loader and both stream sources start 0 jobs before their first action") {
     assert(jobsDuring(spark.read.parquet(s"$sf01/orders.parquet")) >= 1,

@@ -52,4 +52,14 @@ object SharedSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** The jobs `body` started (the barrier job left out). */
+  def jobsDuring(body: => Any): Seq[SparkListenerJobStart] = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!jobGroup(e).contains(BarrierGroup)) started.add(e)
+    })(body)
+    started.toArray(Array.empty[SparkListenerJobStart]).toSeq
+  }
 }
